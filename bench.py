@@ -39,6 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from sentinela_py_spark.barrier import barrier, barrier_eager  # noqa: E402
 from sentinela_py_spark.plans import QUERIES  # noqa: E402
 from sentinela_py_spark.plans.registry import ARMS, _ensure_loaded  # noqa: E402
 from sentinela_py_spark.session import build_session  # noqa: E402
@@ -267,8 +268,7 @@ def _composed_ingest_arm(
         import shutil
         import tempfile
 
-        from sentinela_py_spark.functions.bloom import bloom_build
-        from sentinela_py_spark.functions.text_stats import word_shingles
+        from sentinela_py_spark.functions.bloom import eval_gram_bloom
         from sentinela_py_spark.plans.textops import qr_frozen_model
         from sentinela_py_spark.streaming.pipeline import (
             composed_ingest_batch,
@@ -323,15 +323,7 @@ def _composed_ingest_arm(
                 .select("doc_id", F.col("payload").alias("clip"), "text", "embedding")
             )
         is_eval = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) < "1a"
-        grams = (
-            d.filter(is_eval)
-            .select(
-                F.explode(
-                    F.array_distinct(word_shingles(F.col("text"), k=5))
-                ).alias("key")
-            )
-        )
-        bloom = bloom_build(grams).localCheckpoint(eager=True)
+        bloom = eval_gram_bloom(d.filter(is_eval))
         key = (spark.sparkContext.applicationId, sf_dir)
         kw = {}
         if trim_quality:
@@ -363,7 +355,7 @@ def _composed_ingest_arm(
                 cents = kmeans_centroids_local(
                     e, N_CELLS, iters=KMEANS_ITERS, dim=EMB_DIM
                 )
-                resid = ivf_residuals(e, cents).localCheckpoint(eager=False)
+                resid = ivf_residuals(e, cents).transform(barrier)
                 _BOOKS[key] = (
                     cents,
                     pq_train_codebooks_local(
@@ -391,7 +383,7 @@ def _composed_ingest_arm(
                 kw["index_dir"] = os.path.join(state, "index")
             out = composed_ingest_batch(
                 batch, bloom, 0, state, threshold=0.8, **kw
-            ).localCheckpoint(eager=True)
+            ).transform(barrier_eager)
             if ann:
                 # the self-bounding maintenance cadence's last step:
                 # fold the epoch into the base (priced inside the arm)
@@ -430,8 +422,8 @@ def _image_ingest_screen_arm(spark, sf_dir):
     )
     state = tempfile.mkdtemp(prefix="bench-imgdedup-")
     try:
-        return image_dedup_batch_against_corpus(imgs, 0, state).localCheckpoint(
-            eager=True
+        return image_dedup_batch_against_corpus(imgs, 0, state).transform(
+            barrier_eager
         )
     finally:
         shutil.rmtree(state, ignore_errors=True)

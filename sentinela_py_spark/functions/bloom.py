@@ -26,6 +26,9 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sentinela_py_spark.barrier import barrier_eager
+from sentinela_py_spark.functions.text_stats import word_shingles
+
 __all__ = [
     "BLOOM_BITS",
     "BLOOM_K",
@@ -34,6 +37,7 @@ __all__ = [
     "plan_bloom_config",
     "bloom_build",
     "bloom_contains",
+    "eval_gram_bloom",
 ]
 
 BLOOM_BITS = 1 << 16  # 65,536 bits = 2,048 32-bit words — demo-sized (see module note)
@@ -148,6 +152,26 @@ def bloom_build(
             F.array_sort(F.collect_list(F.struct("word", "mask")))
         ).alias("bloom")
     )
+
+
+def eval_gram_bloom(
+    eval_docs: DataFrame,
+    text_col: str = "text",
+    n_hashes: int | None = None,
+    m_bits: int | None = None,
+) -> DataFrame:
+    """The decontamination screen's filter: the distinct word 5-grams of
+    ``eval_docs`` through `bloom_build`, materialized behind an eager
+    barrier so every micro-batch probes the one built row. ``None``
+    geometry means the library defaults, as on the probe side."""
+    keys = eval_docs.select(
+        F.explode(F.array_distinct(word_shingles(F.col(text_col), k=5))).alias("key")
+    )
+    return bloom_build(
+        keys,
+        n_hashes=BLOOM_K if n_hashes is None else n_hashes,
+        m_bits=BLOOM_BITS if m_bits is None else m_bits,
+    ).transform(barrier_eager)
 
 
 def bloom_contains(

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sentinela_py_spark.barrier import barrier, barrier_eager
+from sentinela_py_spark.barrier import barrier
 
 from sentinela_py_spark.operators.dedup import hamming_band_pairs, signature_bands
 from sentinela_py_spark.operators.multimodal import (
@@ -1305,8 +1305,7 @@ def _mm_ingest_state_dir(spark: SparkSession, sf_dir: str) -> str:
     import hashlib
     import tempfile
 
-    from sentinela_py_spark.functions.bloom import bloom_build
-    from sentinela_py_spark.functions.text_stats import word_shingles
+    from sentinela_py_spark.functions.bloom import eval_gram_bloom
     from sentinela_py_spark.operators.multimodal import documents_to_paired_rows
     from sentinela_py_spark.plans import simops
     from sentinela_py_spark.streaming.pipeline import composed_ingest_batch
@@ -1355,13 +1354,9 @@ def _mm_ingest_state_dir(spark: SparkSession, sf_dir: str) -> str:
         )
         .drop("__base", "__succ", "__succ_emb")
     )
-    eval_grams = (
+    bloom_row = eval_gram_bloom(
         d.filter((F.col("doc_id") % 16 == 5) & (F.length("text") > 0))
-        .select(
-            F.explode(F.array_distinct(word_shingles(F.col("text"), k=5))).alias("key")
-        )
     )
-    bloom_row = bloom_build(eval_grams).transform(barrier_eager)
     from sentinela_py_spark.plans.simops import NEARDUP_COS
 
     composed_ingest_batch(

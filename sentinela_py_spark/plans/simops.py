@@ -1740,21 +1740,23 @@ _MEMO_LOCK = _threading.RLock()
 
 
 def clear_index_memos() -> None:
-    """Evict every module-level index memo (trained codebooks, the
-    encoded IVF index, and plans.curation's memoized pool) and delete
-    the temp-dir parquet stores this process wrote. Memos pin DataFrames
+    """Evict every module-level memo (trained codebooks, the encoded IVF
+    index, the quality model, the curated pool, and the multimodal and
+    funnel ingest state roots) and delete the temp-dir parquet stores
+    this process wrote, the state roots among them. Memos pin DataFrames
     under stopped sessions' applicationIds for the process lifetime
     otherwise — call on session teardown (the test fixture does) or
     after regenerating fixture data in place."""
     import shutil
 
-    from sentinela_py_spark.plans import curation, funnelops, textops
+    from sentinela_py_spark.plans import curation, funnelops, mmops, textops
 
     _TRAINED_CODEBOOKS.clear()
     _IVF_INDEX.clear()
     curation._CURATED_POOL.clear()
     textops._QR_MODEL.clear()
     funnelops._FUNNEL_STATE.clear()
+    mmops._MM_STATE.clear()
     while _ANN_STORES:
         shutil.rmtree(_ANN_STORES.pop(), ignore_errors=True)
 

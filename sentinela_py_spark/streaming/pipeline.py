@@ -39,6 +39,43 @@ def read_news_stream(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.schema(NEWS_DOCUMENT).json(path)
 
 
+def _file_stream(
+    spark: SparkSession, source_path: str, schema=None, source_format: str = "json"
+) -> DataFrame:
+    """File source that reads one file per micro-batch: json lines, or
+    parquet for binary payloads (which don't ride JSON)."""
+    reader = spark.readStream
+    if schema is not None:
+        reader = reader.schema(schema)
+    reader = reader.option("maxFilesPerTrigger", 1)
+    if source_format == "parquet":
+        return reader.parquet(source_path)
+    return reader.json(source_path)
+
+
+def _start_stream(
+    stream: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    name: str,
+    trigger_seconds: int | None = None,
+):
+    """Start ``foreachBatch(process)`` over ``stream``, checkpointed under
+    ``checkpoint_dir/name``. ``trigger_seconds=None`` drains what is there
+    and stops (availableNow, the reference's ``interval <= 0`` single-pass
+    mode — app.py:482-484); otherwise a processing-time trigger polls like
+    the reference worker."""
+    writer = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", os.path.join(checkpoint_dir, name))
+    )
+    if trigger_seconds is None:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
+
+
 def enrich_batch(
     batch: DataFrame,
     catalog_entries: Iterable[Mapping[str, Any]],
@@ -77,26 +114,17 @@ def run_enrichment_stream(
     sink: Callable[[DataFrame, int], None],
     trigger_seconds: int | None = None,
 ):
-    """Wire source → enrich → foreachBatch(sink) with checkpointing.
-
-    ``trigger_seconds=None`` uses availableNow (drain-and-stop, the
-    reference's `interval <= 0` single-pass mode — app.py:482-484);
-    otherwise a processing-time trigger mirrors the polling worker."""
+    """Wire source → enrich → foreachBatch(sink) with checkpointing
+    (trigger modes on `_start_stream`)."""
     catalog_entries = list(catalog_entries)
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         sink(enrich_batch(batch, catalog_entries), epoch_id)
 
-    writer = (
-        read_news_stream(spark, source_path)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "enrich"))
+    return _start_stream(
+        read_news_stream(spark, source_path), process, checkpoint_dir, "enrich",
+        trigger_seconds,
     )
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def run_extraction_stream(
@@ -132,16 +160,10 @@ def run_extraction_stream(
             epoch_id,
         )
 
-    writer = (
-        read_news_stream(spark, source_path)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "extract"))
+    return _start_stream(
+        read_news_stream(spark, source_path), process, checkpoint_dir, "extract",
+        trigger_seconds,
     )
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def windowed_event_counts(
@@ -228,55 +250,33 @@ def stateful_url_dedup(stream: DataFrame, ttl_minutes: int = 60) -> DataFrame:
 
 
 def _parallel_writes(*thunks, sink: "_DeferredWrites | None" = None) -> None:
-    """Run a screen's end-of-batch store writes concurrently (r14
-    optimization, guide §2.6 — overlap independent jobs): the epoch
-    writes target DISJOINT store roots and read only frames the screen
-    has already eagerly checkpointed, so they share no state and their
-    relative order never mattered (each is an idempotent epoch-keyed
-    overwrite; a crash between writes leaves the same
-    partially-written-epoch state sequential writes could, and replay
-    overwrites it either way). Running them from a small driver pool
-    lets one write's task tail back-fill with the next write's tasks
-    instead of serializing ~3 driver-blocked jobs per screen.
-    Exceptions propagate (first one wins, after all writes settle).
+    """Run a screen's end-of-batch store writes concurrently. The writes
+    target disjoint store roots and read only frames the screen has
+    already eagerly checkpointed, so their order does not matter: each is
+    an idempotent epoch-keyed overwrite, and replay overwrites a
+    partially written epoch either way. Overlapping them lets one write's
+    task tail back-fill with the next write's tasks.
 
-    ``sink`` (r15, r14 verdict #4 — cross-SCREEN overlap): when the
-    caller is a screen running inside `composed_ingest_batch`, the
-    writes are handed to the batch's ONE shared bounded pool and the
-    screen returns immediately — screen N's store writes then execute
-    while screen N+1's compute blocks the driver thread, and the batch
-    drains every future before it returns (so "batch returned" still
-    means "all state written", and a write failure still fails the
-    batch before its offsets commit)."""
-    if sink is not None:
-        sink.submit(*thunks)
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        for f in [pool.submit(t) for t in thunks]:
-            f.result()
+    With ``sink`` (a screen inside `composed_ingest_batch`) the writes go
+    to the batch's shared pool and this returns at once, so they overlap
+    the next screen's compute. Without it they run in a pool of their own
+    that is drained before returning. Either way a failed write raises."""
+    writes = sink if sink is not None else _DeferredWrites(len(thunks))
+    writes.submit(*thunks)
+    if sink is None:
+        writes.drain()
 
 
 class _DeferredWrites:
-    """The shared bounded write pool of ONE composed-ingest batch (r15,
-    r14 verdict #4 / "what's wrong" #4 — one bounded pool instead of a
-    nest of per-call-site pools): screens submit their checkpoint-backed
-    epoch writes here instead of blocking on them, so a screen's write
-    tail overlaps the NEXT screen's compute (guide §2.6 — concurrent
-    jobs back-fill the executors the current job's stragglers free; job
-    descriptions are thread-local so the UI stays labeled per write).
-
-    Replay/crash semantics are unchanged from the r14 per-screen pools:
-    every deferred write is an idempotent epoch-keyed overwrite over an
-    eagerly-checkpointed frame (or a map-cheap join of checkpointed
-    frames) targeting a store root no other write or read of the SAME
-    batch touches; the un-checkpointed overflow audits stay inline and
-    sequential inside their screens, BEFORE the screen's writes are
-    enqueued, exactly as before. ``drain()`` re-raises the first write
-    failure after all futures settle — `composed_ingest_batch` drains in
-    a ``finally`` before returning, so foreachBatch never commits
-    offsets over a missing write."""
+    """A bounded pool of store writes. `composed_ingest_batch` makes one
+    per batch and every screen submits its checkpoint-backed epoch writes
+    to it, so a screen's write tail overlaps the next screen's compute.
+    Each write is an idempotent epoch-keyed overwrite of a store root no
+    other write or read of the same batch touches; the un-checkpointed
+    overflow audits stay inline in their screens, before the writes are
+    submitted. ``drain()`` waits for every write and re-raises the first
+    failure, so a batch that drains before returning never lets
+    foreachBatch commit offsets over a missing write."""
 
     def __init__(self, max_workers: int = 3):
         from concurrent.futures import ThreadPoolExecutor
@@ -307,7 +307,7 @@ def _read_band_store(spark: SparkSession, bands_dir: str, exclude_epoch: int):
     state dir can live on any Hadoop-compatible filesystem (HDFS/S3/…).
     Returns None when the store doesn't exist yet.
 
-    r13: delegates to `streaming.stores.read_epoch_store`, whose
+    Delegates to `streaming.stores.read_epoch_store`, whose
     effective-epoch column (``coalesce(src_epoch, partition epoch)``)
     keeps this exclusion exact even after `compact_epoch_store` folded
     old epochs into the ``epoch=-1`` base — a replayed folded epoch
@@ -322,7 +322,7 @@ def _screen_input(
     """The eager barrier every screen opens with. ``ids_collapsed=False``
     (standalone use): the deterministic `_collapse_duplicate_ids`
     election runs first — one groupBy shuffle of the batch. ``True``
-    (composed use, r11): the caller guarantees unique ids — in
+    (composed use): the caller guarantees unique ids — in
     `composed_ingest_batch` the FIRST screen's election is the
     pipeline's election and every screen preserves uniqueness — so the
     barrier is a plain checkpoint and the redundant per-screen collapse
@@ -339,13 +339,13 @@ def _screen_input(
     ``SENTINELA_CHECK_INVARIANTS=1`` to verify it at runtime (debug
     harnesses / new composition work): the guard costs one count +
     countDistinct pass over the already-checkpointed batch and raises on
-    the first duplicate id (r11 ADVICE)."""
+    the first duplicate id."""
     if ids_collapsed:
         out = renamed.transform(barrier_eager)
         if os.environ.get("SENTINELA_CHECK_INVARIANTS"):
             # count(lit(1)) not count(id): both count(id) and
             # countDistinct skip NULLs, so NULL-id duplicates would slip
-            # the guard (r12 ADVICE); the row count vs distinct-non-null
+            # the guard; the row count vs distinct-non-null
             # comparison catches NULL ids AND duplicates in one pass.
             n, nd = out.agg(
                 F.count(F.lit(1)), F.countDistinct(id_field)
@@ -369,9 +369,7 @@ def _collapse_duplicate_ids(renamed: DataFrame, id_field: str, content_key) -> D
     NOT dropDuplicates' partition-order pick. A checkpoint replay of a
     batch carrying one id with two payloads must write the same
     accepted/rejected/store content as the first attempt or the
-    epoch-overwrite replay guarantee is hollow (r5/r6 ADVICE — the fix
-    first landed on the decontamination screen, then was factored here
-    for the MinHash and embedding screens). Columns other than the id
+    epoch-overwrite replay guarantee is hollow. Columns other than the id
     ride through untouched, in their original order."""
     others = [c for c in renamed.columns if c != id_field]
     surv_key = F.struct(
@@ -580,10 +578,10 @@ def image_dedup_batch_against_corpus(
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
     """One micro-batch of IMAGE near-dup rejection at ingest — the
-    streaming twin of `plans.mmops.q_image_neardup` (r12): a LAION-style
+    streaming twin of `plans.mmops.q_image_neardup`: a LAION-style
     multimodal lake dedups arriving images against the accepted corpus
     BY PERCEPTUAL HASH before any text screen runs. A thin binding of
-    `signature_dedup_batch_against_corpus` (r13 — the generic screen
+    `signature_dedup_batch_against_corpus` (the generic screen
     shared with the audio twin) to the dHash signer: ONE Arrow
     decode+dHash pass (`operators.multimodal.image_dhash`) yields a
     64-bit signature + decoded-pixel md5 per image, and the generic
@@ -624,7 +622,7 @@ def audio_dedup_batch_against_corpus(
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
     """One micro-batch of AUDIO near-dup rejection at ingest — the
-    streaming twin of `plans.mmops.q_audio_neardup` (r13): arriving
+    streaming twin of `plans.mmops.q_audio_neardup`: arriving
     clips are fingerprinted (`operators.multimodal.audio_fingerprint` —
     decode_wav → 64 gain-invariant frame-energy sign bits + decoded-
     sample md5) and screened by the same generic signature machinery as
@@ -667,8 +665,8 @@ def video_dedup_batch_against_corpus(
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
     """One micro-batch of VIDEO near-dup rejection at ingest — the
-    streaming twin of `plans.mmops.q_signature_neardup`'s video arm
-    (r14): arriving frame streams are demuxed and per-frame dHashed
+    streaming twin of `plans.mmops.q_signature_neardup`'s video arm:
+    arriving frame streams are demuxed and per-frame dHashed
     into one WIDE array<bigint> signature
     (`operators.multimodal.video_dhash` — word f = sampled frame f's
     64-bit hash, plus the sampled-planes md5), and the generic screen
@@ -720,8 +718,8 @@ def signature_dedup_batch_against_corpus(
     band_bits: int | None = None,
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
-    """The GENERIC perceptual-signature near-dup screen (r13 — one body
-    for the image and audio twins), with the store/replay discipline of
+    """The GENERIC perceptual-signature near-dup screen (one body for
+    the image, audio and video twins), with the store/replay discipline of
     `dedup_batch_against_corpus`. ``signer`` maps a (doc_id, payload)
     frame to (doc_id, sig: long, content_md5) — one Arrow pass, NULL
     sig rows for undecodable payloads.
@@ -755,15 +753,13 @@ def signature_dedup_batch_against_corpus(
        store read excludes the live epoch, so a checkpoint-replayed
        batch reproduces its first attempt — across compactions too.
 
-    ``n_bands``/``band_bits`` (r14) default to the 64-bit deployment
+    ``n_bands``/``band_bits`` default to the 64-bit deployment
     geometry (4×16); a WIDE signer (array<bigint> ``sig`` — e.g. a
     256-bit dHash or per-frame video signature) must pass its own
     geometry (e.g. 4×64), which the shared `signature_bands` wide
     dispatch then slices — the 4×16 default on a wide signature would
     band only the low word and silently lose cross-word recall, so the
     geometry is validated against the signature type up front."""
-    from pyspark.sql.types import ArrayType
-
     from sentinela_py_spark.operators.dedup import (
         connected_components,
         hamming_band_pairs,
@@ -810,7 +806,7 @@ def signature_dedup_batch_against_corpus(
     # 3. within-batch components over the Hamming-refined band pairs
     # (wide signatures validate band coverage on the data — one
     # O(1)-row aggregate per batch; the never-silent guard against a
-    # wide signer banded at a narrow geometry, r14)
+    # wide signer banded at a narrow geometry)
     pairs, overflow = hamming_band_pairs(
         rep_sigs.select("doc_id", "sig"),
         "sig",
@@ -913,38 +909,25 @@ def run_incremental_image_dedup_stream(
     schema=None,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    max_hamming: int = 3,
-    max_bucket_size: int | None = 64,
 ):
     """Streaming IMAGE near-dup rejection at ingest: every micro-batch
     of (id, binary payload) rows is perceptually hashed and joined
     against the accumulated signature index of everything already
     accepted — batch semantics, replay safety, and state layout on
-    `image_dedup_batch_against_corpus`. The source is a PARQUET stream
-    (binary payloads don't ride JSON); state is O(corpus × 4 bands) of
+    `image_dedup_batch_against_corpus`, run at its default Hamming
+    radius and bucket cap. The source is a PARQUET stream (binary
+    payloads don't ride JSON); state is O(corpus × 4 bands) of
     fixed-width rows — at multimodal-lake scale the signature store is
     a vanishing fraction of the pixels it indexes."""
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         image_dedup_batch_against_corpus(
-            batch,
-            epoch_id,
-            state_dir,
-            id_col,
-            payload_col,
-            max_hamming,
-            max_bucket_size,
+            batch, epoch_id, state_dir, id_col, payload_col
         )
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    stream = reader.option("maxFilesPerTrigger", 1).parquet(source_path)
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "imgdedup"))
-        .trigger(availableNow=True)
-        .start()
+    return _start_stream(
+        _file_stream(spark, source_path, schema, "parquet"),
+        process, checkpoint_dir, "imgdedup",
     )
 
 
@@ -956,38 +939,23 @@ def run_incremental_audio_dedup_stream(
     schema=None,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    max_hamming: int = 3,
-    max_bucket_size: int | None = 64,
 ):
-    """Streaming AUDIO near-dup rejection at ingest (r13): every
-    micro-batch of (id, binary RIFF/WAVE payload) rows is fingerprinted
-    and joined against the accumulated signature index of everything
-    already accepted — batch semantics, replay safety, and state layout
-    on `audio_dedup_batch_against_corpus` (the generic signature screen
-    under the audio signer). Parquet source, same rationale as the
-    image stream; state is O(corpus × 4 bands) of fixed-width rows —
-    a vanishing fraction of the samples it indexes."""
+    """Streaming AUDIO near-dup rejection at ingest: every micro-batch
+    of (id, binary RIFF/WAVE payload) rows is fingerprinted and joined
+    against the accumulated signature index of everything already
+    accepted — batch semantics, replay safety, and state layout on
+    `audio_dedup_batch_against_corpus` (the generic signature screen
+    under the audio signer), run at its default Hamming radius and
+    bucket cap. Parquet source, same rationale as the image stream."""
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         audio_dedup_batch_against_corpus(
-            batch,
-            epoch_id,
-            state_dir,
-            id_col,
-            payload_col,
-            max_hamming,
-            max_bucket_size,
+            batch, epoch_id, state_dir, id_col, payload_col
         )
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    stream = reader.option("maxFilesPerTrigger", 1).parquet(source_path)
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "auddedup"))
-        .trigger(availableNow=True)
-        .start()
+    return _start_stream(
+        _file_stream(spark, source_path, schema, "parquet"),
+        process, checkpoint_dir, "auddedup",
     )
 
 
@@ -999,7 +967,6 @@ def run_incremental_dedup_stream(
     schema=None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_files_per_trigger: int = 1,
     max_bucket_size: int | None = None,
 ):
     """Streaming near-dup REJECTION AT INGEST: every micro-batch of
@@ -1020,15 +987,8 @@ def run_incremental_dedup_stream(
             batch, epoch_id, state_dir, id_col, text_col, max_bucket_size
         )
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    stream = reader.option("maxFilesPerTrigger", max_files_per_trigger).json(source_path)
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "dedup"))
-        .trigger(availableNow=True)
-        .start()
+    return _start_stream(
+        _file_stream(spark, source_path, schema), process, checkpoint_dir, "dedup"
     )
 
 
@@ -1147,7 +1107,7 @@ def embedding_dedup_batch_against_corpus(
         # rebalance=False: a micro-batch's capped frame is byte-small and
         # feeds one bounded probe join — the extra round-robin Exchange
         # the registered self-joins need (AQE byte-coalescing, see
-        # cap_buckets) is pure per-epoch overhead here (r4 ADVICE).
+        # cap_buckets) is pure per-epoch overhead here.
         store, store_overflow = cap_buckets(
             store, ["bucket"], max_bucket_size, ["vec_id"], rebalance=False
         )
@@ -1269,7 +1229,6 @@ def run_embedding_dedup_stream(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float | None = None,
-    max_files_per_trigger: int = 1,
     max_bucket_size: int | None = None,
 ):
     """Streaming embedding near-dup rejection at ingest: every micro-batch
@@ -1290,15 +1249,8 @@ def run_embedding_dedup_stream(
             batch, epoch_id, state_dir, id_col, vec_col, threshold, max_bucket_size
         )
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    stream = reader.option("maxFilesPerTrigger", max_files_per_trigger).json(source_path)
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "vecdedup"))
-        .trigger(availableNow=True)
-        .start()
+    return _start_stream(
+        _file_stream(spark, source_path, schema), process, checkpoint_dir, "vecdedup"
     )
 
 
@@ -1347,9 +1299,9 @@ def decontamination_screen_batch(
     # Deterministic in-batch id collapse (min md5(text) per id, ties
     # among identical texts broken by the row's remaining columns) — see
     # _collapse_duplicate_ids, the shared survivor election of all three
-    # screens (r5 ADVICE). Non-text columns (e.g. the embedding when this
+    # screens. Non-text columns (e.g. the embedding when this
     # screen runs inside `composed_ingest_batch`) ride through untouched.
-    # ids_collapsed=True (r13): when the image screen runs AHEAD of this
+    # ids_collapsed=True: when the image screen runs AHEAD of this
     # one in the composed chain, ITS election already made ids unique —
     # skip re-paying the collapse shuffle, same barrier-budget fold as
     # the downstream screens.
@@ -1361,8 +1313,8 @@ def decontamination_screen_batch(
         "doc_id",
         F.explode(F.array_distinct(word_shingles(F.col("text"), k=5))).alias("g"),
     )
-    # eager checkpoint BEFORE the writes + left_anti reuse (r14, the
-    # sibling screens' pattern — this was the ONE screen missing it):
+    # eager checkpoint BEFORE the writes + left_anti reuse (the sibling
+    # screens' pattern):
     # `hits` has three consumers (flagged write, accepted write, the
     # returned frame the next screen checkpoints), and without the
     # barrier the gram explode + Bloom probe — the screen's whole cost —
@@ -1438,7 +1390,7 @@ def _fuzzy_verified(
     b: DataFrame, cand: DataFrame, artifacts: dict, jaccard: float
 ) -> DataFrame:
     """The fuzzy screen's Jaccard-verify stage, CANDIDATE-ONLY
-    end-to-end (r11): the 3-gram shingle explode + distinct + per-doc
+    end-to-end: the 3-gram shingle explode + distinct + per-doc
     count run ONLY over docs that banded against the eval index — a
     left_semi on ``cand``'s doc_ids FIRST, so a clean batch (cand
     empty, the common case) pays the banding pass and nothing else.
@@ -1491,7 +1443,7 @@ def fuzzy_decon_screen_batch(
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
     """One micro-batch of FUZZY train/eval decontamination at ingest —
-    the streaming twin of `q_decontamination`'s fuzzy arm (r10):
+    the streaming twin of `q_decontamination`'s fuzzy arm:
     DOCUMENT-level, Jaccard-verified eval-copy quarantine. Under an
     FP-disciplined exact screen (``min_hits`` raised so one stray
     shared gram cannot quarantine a clean doc — the deployment posture
@@ -1507,8 +1459,7 @@ def fuzzy_decon_screen_batch(
     false-positive rate; the ENTIRE verify stage (shingle explode,
     distinct, per-doc count, eval join) runs only on the collision
     candidates, which are near-empty on clean batches — a clean batch
-    pays the signature/banding pass and nothing else (r11; the per-doc
-    shingle count previously windowed over the whole batch).
+    pays the signature/banding pass and nothing else.
 
     Scale shape: the per-batch cost is one signature pass over the
     batch + a broadcast band join + a candidate-only verify — no
@@ -1539,7 +1490,7 @@ def fuzzy_decon_screen_batch(
     verified = _fuzzy_verified(b, cand, artifacts, jaccard)
     # eager checkpoint BEFORE the write + left_anti reuse — without it
     # the bands-join + Jaccard-verify lineage executes once per consumer
-    # (the sibling screens' pattern; r10 ADVICE)
+    # (the sibling screens' pattern)
     flagged = verified.groupBy("doc_id").agg(
         F.count_distinct("e_doc").alias("n_eval_docs"),
         F.round(F.max("jac"), 6).alias("max_jaccard"),
@@ -1565,35 +1516,24 @@ def run_decontamination_stream(
     schema=None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_files_per_trigger: int = 1,
     min_hits: int = 1,
     m_bits: int | None = None,
     n_hashes: int | None = None,
 ):
     """Streaming train/eval decontamination: the eval split's 5-gram
-    Bloom filter is built ONCE (the amortized one-shot cost
-    q_decontamination's bench note prices) and every incoming micro-batch
-    probes it map-only — the third ingest screen beside the MinHash and
-    embedding dedup streams, closing the loop on the "runs on every
-    ingest batch" deployment claim with running code.
+    Bloom filter is built ONCE (`functions.bloom.eval_gram_bloom`) and
+    every incoming micro-batch probes it map-only — the third ingest
+    screen beside the MinHash and embedding dedup streams, closing the
+    loop on the "runs on every ingest batch" deployment claim with
+    running code.
 
     ``m_bits``/``n_hashes`` size the filter (None → library defaults;
     compute them with `functions.bloom.plan_bloom_config` from the eval
     gram count and FP target) — build and probe share the ONE geometry
     here, the only safe way to dial it."""
-    from sentinela_py_spark.functions.bloom import BLOOM_BITS, BLOOM_K, bloom_build
-    from sentinela_py_spark.functions.text_stats import word_shingles
+    from sentinela_py_spark.functions.bloom import eval_gram_bloom
 
-    m_bits = BLOOM_BITS if m_bits is None else m_bits
-    n_hashes = BLOOM_K if n_hashes is None else n_hashes
-    eval_grams = eval_docs.select(
-        F.explode(
-            F.array_distinct(word_shingles(F.col(text_col), k=5))
-        ).alias("key")
-    )
-    bloom_row = bloom_build(
-        eval_grams, n_hashes=n_hashes, m_bits=m_bits
-    ).transform(barrier_eager)
+    bloom_row = eval_gram_bloom(eval_docs, text_col, n_hashes=n_hashes, m_bits=m_bits)
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         decontamination_screen_batch(
@@ -1601,15 +1541,8 @@ def run_decontamination_stream(
             m_bits=m_bits, n_hashes=n_hashes,
         )
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    stream = reader.option("maxFilesPerTrigger", max_files_per_trigger).json(source_path)
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "decon"))
-        .trigger(availableNow=True)
-        .start()
+    return _start_stream(
+        _file_stream(spark, source_path, schema), process, checkpoint_dir, "decon"
     )
 
 
@@ -1678,7 +1611,7 @@ def quality_screen_batch(
         id_col,
         "quality",
         "svm_score",
-        # word-LM likelihood (r12): recorded beside the gate's scores as
+        # word-LM likelihood: recorded beside the gate's scores as
         # reviewable evidence (the CCNet-style signal an operator reads
         # off a rejection); the keep verdict itself is unchanged —
         # re-gating on a new signal is a model rotation, not a patch
@@ -1700,8 +1633,7 @@ def quality_screen_batch(
     )
 
 
-# Cross-modal consistency threshold (CLIP-score shape, r14 — r13
-# verdict #5): keep a paired row only when its two modality vectors
+# Cross-modal consistency threshold (CLIP-score shape): keep a paired row only when its two modality vectors
 # agree at rounded cosine >= this. LAION-style lakes run exactly this
 # screen (CLIP similarity >= 0.28 there) after image dedup; the value
 # here sits in the same band as NEARDUP_COS so the synthetic embedding
@@ -1762,9 +1694,8 @@ def clip_score_screen_batch(
     min_cos: float = CLIP_SCORE_MIN,
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
-    """One micro-batch of the CROSS-MODAL CONSISTENCY screen (r14, r13
-    verdict #5 — the other load-bearing LAION screen beside image
-    dedup): drop paired rows whose image-side and caption-side vectors
+    """One micro-batch of the CROSS-MODAL CONSISTENCY screen (the
+    other load-bearing LAION screen beside image dedup): drop paired rows whose image-side and caption-side vectors
     disagree (rounded cosine < ``min_cos``). Perceptual dedup catches
     "same image again"; THIS screen catches "wrong caption for this
     image" — scraped alt-text that describes the page, not the picture
@@ -1808,6 +1739,23 @@ INGEST_FUNNEL_STAGES = (
 )
 
 
+# The stores `ingest_funnel` counts: (column alias, path under the state
+# root), in the order the funnel joins them.
+_FUNNEL_STORES = (
+    ("n_dec", "decontam/accepted"),
+    ("n_fla", "decontam/flagged"),
+    ("n_img", "image/accepted"),
+    ("n_imgrej", "image/rejected"),
+    ("n_aud", "audio/accepted"),
+    ("n_audrej", "audio/rejected"),
+    ("n_clip", "clipscore/rejected"),
+    ("n_fz", "fuzzy/flagged"),
+    ("n_qrej", "quality/rejected"),
+    ("n_mh", "minhash/accepted"),
+    ("n_acc", "accepted"),
+)
+
+
 def ingest_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
     """(epoch, stage_idx, stage, n_docs) — the PER-EPOCH retention
     datacard of a composed-ingest deployment, derived purely from the
@@ -1823,15 +1771,15 @@ def ingest_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
     monotone and complete):
 
     - ``arrived``: what reached the first armed screen — image accepted
-      + rejected when the image screen is armed (r13: the LAION-order
-      head of the chain), else decontam accepted + flagged (the
+      + rejected when the image screen is armed (the LAION-order head
+      of the chain), else decontam accepted + flagged (the
       post-trim batch);
-    - ``image_dedup`` (r13): the image screen's survivors — the rows
+    - ``image_dedup``: the image screen's survivors — the rows
       whose captions were allowed to enter the text chain at all;
-    - ``audio_dedup`` (r14): the audio screen's survivors — same
+    - ``audio_dedup``: the audio screen's survivors — same
       LAION-order position for clip-carrying rows (image first, audio
       second, both ahead of every text screen);
-    - ``clip_gated`` (r14): minus the cross-modal consistency screen's
+    - ``clip_gated``: minus the cross-modal consistency screen's
       rejections (stateless — stores only its rejected rows, like the
       fuzzy/quality screens);
     - ``decontaminated``: the Bloom screen's survivors;
@@ -1849,7 +1797,7 @@ def ingest_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
 
     def _counts(sub: str) -> DataFrame | None:
         # read_epoch_store's effective epoch keeps per-epoch attribution
-        # exact after compaction (folded rows carry src_epoch — r13)
+        # exact after compaction (folded rows carry src_epoch)
         try:
             df = read_epoch_store(spark, os.path.join(state_dir, sub))
         except Exception:  # noqa: BLE001 — screen not armed / no epochs yet
@@ -1858,23 +1806,13 @@ def ingest_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
             return None
         return df.groupBy("epoch").agg(F.count("*").alias("n"))
 
-    dec = _counts(os.path.join("decontam", "accepted"))
-    if dec is None:
+    counts = {alias: _counts(sub) for alias, sub in _FUNNEL_STORES}
+    if counts["n_dec"] is None:
         raise ValueError(f"no composed-ingest state under {state_dir!r}")
-    img = _counts(os.path.join("image", "accepted"))
-    imgrej = _counts(os.path.join("image", "rejected"))
-    aud = _counts(os.path.join("audio", "accepted"))
-    audrej = _counts(os.path.join("audio", "rejected"))
-    cliprej = _counts(os.path.join("clipscore", "rejected"))
-    fla = _counts(os.path.join("decontam", "flagged"))
-    fzrej = _counts(os.path.join("fuzzy", "flagged"))
-    qrej = _counts(os.path.join("quality", "rejected"))
-    mh = _counts(os.path.join("minhash", "accepted"))
-    acc = _counts("accepted")
 
-    # all epochs ever seen (dec always exists: the first screen writes
-    # accepted for every epoch, even empty)
-    epochs = dec.select("epoch").distinct()
+    # all epochs ever seen (the decontam screen writes accepted for every
+    # epoch, even empty)
+    epochs = counts["n_dec"].select("epoch").distinct()
 
     def _n(cdf: DataFrame | None, alias: str) -> DataFrame:
         if cdf is None:
@@ -1883,19 +1821,10 @@ def ingest_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
             "epoch", F.coalesce("n", F.lit(0)).alias(alias)
         )
 
-    wide = (
-        _n(dec, "n_dec")
-        .join(_n(fla, "n_fla"), "epoch")
-        .join(_n(img, "n_img"), "epoch")
-        .join(_n(imgrej, "n_imgrej"), "epoch")
-        .join(_n(aud, "n_aud"), "epoch")
-        .join(_n(audrej, "n_audrej"), "epoch")
-        .join(_n(cliprej, "n_clip"), "epoch")
-        .join(_n(fzrej, "n_fz"), "epoch")
-        .join(_n(qrej, "n_qrej"), "epoch")
-        .join(_n(mh, "n_mh"), "epoch")
-        .join(_n(acc, "n_acc"), "epoch")
-    )
+    wide = None
+    for alias, _ in _FUNNEL_STORES:
+        part = _n(counts[alias], alias)
+        wide = part if wide is None else wide.join(part, "epoch")
     # Subtractive screens (fuzzy/quality) are stateless — a missing
     # store means zero rejections, so the _n(None)=0 coalesce IS the
     # previous-stage fallback. The survivor-count stages (text_dedup,
@@ -1904,7 +1833,7 @@ def ingest_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
     # (not a raw 0) so the funnel stays monotone and complete — the
     # invariant the alerting contract advertises.
     quality_gated = F.col("n_dec") - F.col("n_fz") - F.col("n_qrej")
-    text_dedup = F.col("n_mh") if mh is not None else quality_gated
+    text_dedup = F.col("n_mh") if counts["n_mh"] is not None else quality_gated
     # media screens armed → 'arrived' is what reached the FIRST armed
     # screen's door, 'image_dedup'/'audio_dedup' each screen's
     # survivors; unarmed → each collapses to the NEXT screen's door
@@ -1913,17 +1842,17 @@ def ingest_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
     # The arming test is PER-EPOCH (accepted + rejected > 0, never
     # satisfied by the coalesced zeros of an epoch the screen didn't
     # run), so a stream that gained a media screen mid-life reports
-    # every epoch monotonically (r13; audio r14 — the LAION order is
-    # image → audio → text chain).
+    # every epoch monotonically (the LAION order is image → audio →
+    # text chain).
     dec_door = F.col("n_dec") + F.col("n_fla")
-    # the clip screen (r14) sits between media dedup and decontam: its
+    # the clip screen sits between media dedup and decontam: its
     # survivors ARE the decontam door, so clip_gated = dec_door and the
     # clip DOOR (what reached it) = dec_door + its rejections — the
     # subtractive-screen accounting fuzzy/quality use, with n_clip = 0
     # (coalesced) when the screen never ran
     clip_door = dec_door + F.col("n_clip")
     clip_gated = dec_door
-    if aud is not None:
+    if counts["n_aud"] is not None:
         aud_armed = (F.col("n_aud") + F.col("n_audrej")) > 0
         aud_door = F.when(aud_armed, F.col("n_aud") + F.col("n_audrej")).otherwise(
             clip_door
@@ -1931,7 +1860,7 @@ def ingest_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
         audio_dedup = F.when(aud_armed, F.col("n_aud")).otherwise(clip_door)
     else:
         aud_door = audio_dedup = clip_door
-    if img is not None:
+    if counts["n_img"] is not None:
         img_armed = (F.col("n_img") + F.col("n_imgrej")) > 0
         arrived = F.when(img_armed, F.col("n_img") + F.col("n_imgrej")).otherwise(
             aud_door
@@ -1948,13 +1877,12 @@ def ingest_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
         "fuzzy_gated": F.col("n_dec") - F.col("n_fz"),
         "quality_gated": quality_gated,
         "text_dedup": text_dedup,
-        "accepted": F.col("n_acc") if acc is not None else text_dedup,
+        "accepted": F.col("n_acc") if counts["n_acc"] is not None else text_dedup,
     }
-    # unpivot via ONE array-explode instead of a per-stage union (r14):
-    # the union shape re-derived the whole store-join frame once per
-    # stage (9 stages × ~10 joins — census read 95 BroadcastHashJoins
-    # for a fixture reader); exploding a struct array computes `wide`
-    # once and emits the 9 stage rows per epoch in a single pass
+    # unpivot via ONE array-explode rather than a per-stage union, which
+    # would re-derive the whole store-join frame once per stage:
+    # exploding a struct array computes `wide` once and emits the 9
+    # stage rows per epoch in a single pass
     stage_structs = F.array(
         *[
             F.struct(
@@ -1992,53 +1920,42 @@ def composed_ingest_batch(
     trim_repeats: dict | None = None,
     fuzzy_eval: dict | None = None,
     image_payload_col: str | None = None,
-    image_max_hamming: int = 3,
-    image_bucket_size: int | None = 64,
     audio_payload_col: str | None = None,
-    audio_max_hamming: int = 3,
-    audio_bucket_size: int | None = 64,
     clip_vec_col: str | None = None,
-    clip_min_cos: float | None = None,
 ) -> DataFrame:
     """One micro-batch of the COMPOSED ingest pipeline — the streaming
-    twin of `plans.curation._curated_pool`'s batch composition: the three
-    ingest screens chained in ONE foreachBatch body, each seeing only the
+    twin of `plans.curation._curated_pool`'s batch composition: every
+    armed screen chained in ONE foreachBatch body, each seeing only the
     previous screen's survivors:
 
-        [optional] image near-dup screen (r13, r12 verdict #2 — the
-        LAION order: a multimodal lake ingests PAIRED (image, caption)
-        rows and dedups IMAGES FIRST, so a perceptual duplicate's
-        caption never reaches the text screens or their stores; pass
-        ``image_payload_col`` to arm it — the screen is
-        `image_dedup_batch_against_corpus` under ``image/``, and its
-        duplicate-id election doubles as the pipeline's, so the text
-        chain opens with plain barriers)
-      → [optional] audio near-dup screen (r14, r13 verdict #3 — the
-        same LAION-order position for clip-carrying rows: a gain-
-        shifted or re-encoded copy of an accepted clip dies HERE, its
-        caption never entering the band store or vector index; pass
-        ``audio_payload_col`` to arm it — the screen is
-        `audio_dedup_batch_against_corpus` under ``audio/``; when it is
-        the FIRST armed screen its election doubles as the pipeline's)
-      → [optional] cross-modal consistency screen (r14, r13 verdict #5
-        — the LAION CLIP-score position: AFTER media dedup, before any
-        text screen, so a mis-captioned pair's caption never enters the
-        band store or vector index; pass ``clip_vec_col`` naming the
-        row's IMAGE-side vector column to arm it — the caption-side
-        vector is ``vec_col``, the screen is `clip_score_screen_batch`
-        under ``clipscore/``, stateless and map-only)
+        [optional] image near-dup screen (the LAION order: a multimodal
+        lake ingests PAIRED (image, caption) rows and dedups IMAGES
+        FIRST, so a perceptual duplicate's caption never reaches the
+        text screens or their stores; pass ``image_payload_col`` to arm
+        it — `image_dedup_batch_against_corpus` under ``image/`` at its
+        default Hamming radius and bucket cap)
+      → [optional] audio near-dup screen (the same position for
+        clip-carrying rows; pass ``audio_payload_col`` to arm it —
+        `audio_dedup_batch_against_corpus` under ``audio/``, defaults
+        likewise)
+      → [optional] cross-modal consistency screen (after media dedup,
+        before any text screen, so a mis-captioned pair's caption never
+        enters the band store or vector index; pass ``clip_vec_col``
+        naming the row's IMAGE-side vector column to arm it — the
+        caption-side vector is ``vec_col``, the screen is
+        `clip_score_screen_batch` under ``clipscore/`` at
+        `CLIP_SCORE_MIN`, stateless and map-only)
       → [optional] repetition trim   (WITHIN-doc repeated-passage cut —
         a doc-local NORMALIZER, not a screen: pass ``trim_repeats``
         kwargs for `operators.dedup.remove_intra_doc_repeats`, e.g.
-        ``{"k": 3, "min_span_words": 12}``; runs FIRST so every
-        downstream signature, gram, and store is computed from the
-        text that will actually be kept — the byte-identical-admission
-        contract holds because the trim applies BEFORE admission)
+        ``{"k": 3, "min_span_words": 12}``; runs before every text
+        screen so each downstream signature, gram, and store is computed
+        from the text that will actually be kept)
       → train/eval decontamination   (5-gram Bloom probe — map-only)
-      → [optional] fuzzy eval-copy screen (r10: MinHash bands vs the
-        FROZEN eval band index, whole-doc-Jaccard-verified — quarantines
-        the lightly-EDITED eval copy a min_hits-disciplined Bloom
-        screen passes; pass ``fuzzy_eval`` from `fuzzy_eval_artifacts`)
+      → [optional] fuzzy eval-copy screen (MinHash bands vs the FROZEN
+        eval band index, whole-doc-Jaccard-verified — quarantines the
+        lightly-EDITED eval copy a min_hits-disciplined Bloom screen
+        passes; pass ``fuzzy_eval`` from `fuzzy_eval_artifacts`)
       → [optional] quality screen    (rule + FROZEN-model gate — pass
         ``quality_model`` from `plans.textops.qr_frozen_model`)
       → MinHash near-dup rejection   (text; vs batch + the band store)
@@ -2047,236 +1964,145 @@ def composed_ingest_batch(
         survivors into the cell-partitioned search tree — pass
         ``index_dir`` + ``centroids`` + ``books`` to arm it)
 
-    Decontamination runs FIRST: it is the cheapest screen (a broadcast
-    Bloom probe, no persistent state) and — more importantly — running
-    it ahead of the dedup screens keeps contaminated content out of the
-    band store and vector index entirely, so a contaminated doc can
-    never become a dedup survivor that later clean near-dups are
-    rejected against. The quality screen slots SECOND for the same
-    store-hygiene reason: junk the model would reject must never enter
-    the band store or vector index, where it could win a near-dup
-    election against a clean copy arriving later. Each screen keeps its
-    OWN documented state layout under a subdir (``decontam/``,
-    ``quality/``, ``minhash/``, ``embedding/``); the stores accumulate
-    only rows that survived every screen before them.
-    Final survivors — the embedding screen's accepted frame, carrying
-    every input column — land in ``accepted/epoch=N``; per-screen
-    reasons stay queryable in the screens' own ``flagged``/``rejected``
-    state.
+    Decontamination is the first text screen: it is the cheapest (a
+    broadcast Bloom probe, no persistent state) and running it ahead of
+    the dedup screens keeps contaminated content out of the band store
+    and vector index, so a contaminated doc can never become a dedup
+    survivor that later clean near-dups are rejected against. The
+    quality screen follows for the same store-hygiene reason. Each
+    screen keeps its own state layout under a subdir (``decontam/``,
+    ``quality/``, ``minhash/``, ``embedding/``, ...); the stores
+    accumulate only rows that survived every screen before them. Final
+    survivors — the embedding screen's accepted frame, carrying every
+    input column — land in ``accepted/epoch=N``.
 
-    Plan shape: no Exchange beyond the three screens' own — the chain is
-    pure DataFrame handoff (each screen's accepted frame feeds the next;
-    no re-read, no reconciliation join). Barrier budget (r11 audit): each
-    screen opens with ONE eager checkpoint of its input; in composed mode
-    the downstream screens' checkpoints are plain barriers — the
-    redundant per-screen `_collapse_duplicate_ids` shuffle is folded away
-    (``ids_collapsed=True``; the decontam screen's election is the
-    pipeline's election and every screen preserves id uniqueness), so a
-    six-screen epoch pays one collapse shuffle, not four. Replay safety
-    is inherited:
-    every screen's write is an epoch-keyed overwrite and every store
-    read excludes the current epoch, so a checkpoint-replayed batch
-    reproduces its first attempt — including the composed ``accepted``
-    (test-pinned). The trim stage preserves all of this: it is a pure
-    per-document function of the batch row (no store, no epoch state),
-    so a replayed batch trims identically."""
-    # r15 (r14 verdict #4): ONE bounded write pool per batch — each
-    # screen defers its checkpoint-backed epoch writes here, so screen
-    # N's write tail overlaps screen N+1's compute; the finally-drain
-    # below guarantees every write landed (or raised) before this batch
-    # returns, keeping the foreachBatch offset-commit contract and the
-    # replay tests' "batch returned => state complete" reading intact.
+    Plan shape: the chain is pure DataFrame handoff (no re-read, no
+    reconciliation join). Each screen opens with ONE eager checkpoint of
+    its input; only the first screen runs the `_collapse_duplicate_ids`
+    election, and every later screen opens with a plain barrier
+    (``ids_collapsed=True``) because every screen preserves id
+    uniqueness. Every screen's write is an epoch-keyed overwrite and
+    every store read excludes the current epoch, so a replayed batch
+    reproduces its first attempt, including the composed ``accepted``.
+
+    The screens submit their store writes to one bounded pool
+    (`_DeferredWrites`), so screen N's writes overlap screen N+1's
+    compute. The pool is drained in a ``finally`` around the whole
+    chain, the final ``accepted`` write and index append included: when
+    this returns every write has landed, and a failed write raises, so
+    foreachBatch never commits offsets over a missing write."""
     sink = _DeferredWrites()
     try:
-        return _composed_ingest_screens(
+        ids_elected = False
+        if image_payload_col is not None:
+            # the image screen's in-batch election makes ids unique for
+            # the whole chain
+            batch = image_dedup_batch_against_corpus(
+                batch,
+                epoch_id,
+                os.path.join(state_dir, "image"),
+                id_col=id_col,
+                payload_col=image_payload_col,
+                write_sink=sink,
+            )
+            ids_elected = True
+        if audio_payload_col is not None:
+            # after the image screen ids are unique already; first in the
+            # chain, this screen elects
+            batch = audio_dedup_batch_against_corpus(
+                batch,
+                epoch_id,
+                os.path.join(state_dir, "audio"),
+                id_col=id_col,
+                payload_col=audio_payload_col,
+                ids_collapsed=ids_elected,
+                write_sink=sink,
+            )
+            ids_elected = True
+        if clip_vec_col is not None:
+            # stateless and row-wise: it neither needs nor performs an
+            # id election
+            batch = clip_score_screen_batch(
+                batch,
+                epoch_id,
+                os.path.join(state_dir, "clipscore"),
+                id_col=id_col,
+                image_vec_col=clip_vec_col,
+                text_vec_col=vec_col,
+                write_sink=sink,
+            )
+        if trim_repeats is not None:
+            from sentinela_py_spark.operators.dedup import remove_intra_doc_repeats
+
+            batch = remove_intra_doc_repeats(
+                batch, id_col=id_col, text_col=text_col, **trim_repeats
+            )
+        a1 = decontamination_screen_batch(
             batch,
             bloom_row,
             epoch_id,
-            state_dir,
-            id_col,
-            text_col,
-            vec_col,
-            threshold,
-            min_hits,
-            max_bucket_size,
-            m_bits,
-            n_hashes,
-            index_dir,
-            centroids,
-            books,
-            quality_model,
-            trim_repeats,
-            fuzzy_eval,
-            image_payload_col,
-            image_max_hamming,
-            image_bucket_size,
-            audio_payload_col,
-            audio_max_hamming,
-            audio_bucket_size,
-            clip_vec_col,
-            clip_min_cos,
-            sink,
-        )
-    finally:
-        sink.drain()
-
-
-def _composed_ingest_screens(
-    batch,
-    bloom_row,
-    epoch_id,
-    state_dir,
-    id_col,
-    text_col,
-    vec_col,
-    threshold,
-    min_hits,
-    max_bucket_size,
-    m_bits,
-    n_hashes,
-    index_dir,
-    centroids,
-    books,
-    quality_model,
-    trim_repeats,
-    fuzzy_eval,
-    image_payload_col,
-    image_max_hamming,
-    image_bucket_size,
-    audio_payload_col,
-    audio_max_hamming,
-    audio_bucket_size,
-    clip_vec_col,
-    clip_min_cos,
-    sink,
-) -> DataFrame:
-    """The screen chain body of `composed_ingest_batch` (split out so the
-    caller's finally-drain wraps the WHOLE chain including the final
-    accepted write and index append)."""
-    ids_elected = False
-    if image_payload_col is not None:
-        # LAION order (r13): image dedup FIRST — a perceptual duplicate
-        # is dropped before any text work, and its caption never enters
-        # the band store or vector index. The screen's in-batch election
-        # (min doc_id per decoded-pixel md5 group, then the id collapse
-        # inside _screen_input) makes ids unique for the whole chain.
-        batch = image_dedup_batch_against_corpus(
-            batch,
-            epoch_id,
-            os.path.join(state_dir, "image"),
+            os.path.join(state_dir, "decontam"),
             id_col=id_col,
-            payload_col=image_payload_col,
-            max_hamming=image_max_hamming,
-            max_bucket_size=image_bucket_size,
-            write_sink=sink,
-        )
-        ids_elected = True
-    if audio_payload_col is not None:
-        # audio beside image (r14): the clip twin of the stage above —
-        # on rows that carry both modalities the image screen's
-        # election already made ids unique (ids_collapsed), so this
-        # screen opens with a plain barrier; standalone it elects.
-        batch = audio_dedup_batch_against_corpus(
-            batch,
-            epoch_id,
-            os.path.join(state_dir, "audio"),
-            id_col=id_col,
-            payload_col=audio_payload_col,
-            max_hamming=audio_max_hamming,
-            max_bucket_size=audio_bucket_size,
+            text_col=text_col,
+            min_hits=min_hits,
+            m_bits=m_bits,
+            n_hashes=n_hashes,
             ids_collapsed=ids_elected,
             write_sink=sink,
         )
-        ids_elected = True
-    if clip_vec_col is not None:
-        # cross-modal consistency (r14): stateless and map-only, so it
-        # neither needs nor performs an id election — it slots between
-        # media dedup and the text chain purely for store hygiene (a
-        # mis-captioned pair must never win a text-dedup election)
-        batch = clip_score_screen_batch(
-            batch,
-            epoch_id,
-            os.path.join(state_dir, "clipscore"),
-            id_col=id_col,
-            image_vec_col=clip_vec_col,
-            text_vec_col=vec_col,
-            min_cos=CLIP_SCORE_MIN if clip_min_cos is None else clip_min_cos,
-            write_sink=sink,
-        )
-    if trim_repeats is not None:
-        from sentinela_py_spark.operators.dedup import remove_intra_doc_repeats
-
-        batch = remove_intra_doc_repeats(
-            batch, id_col=id_col, text_col=text_col, **trim_repeats
-        )
-    a1 = decontamination_screen_batch(
-        batch,
-        bloom_row,
-        epoch_id,
-        os.path.join(state_dir, "decontam"),
-        id_col=id_col,
-        text_col=text_col,
-        min_hits=min_hits,
-        m_bits=m_bits,
-        n_hashes=n_hashes,
-        ids_collapsed=ids_elected,
-        write_sink=sink,
-    )
-    if fuzzy_eval is not None:
-        # fuzzy eval-copy screen (r10): same hygiene slot as the exact
-        # screen — an EDITED eval copy must never reach the dedup stores.
-        # ids_collapsed: the decontam screen's election already made ids
-        # unique, so downstream screens open with a plain barrier instead
-        # of re-paying the collapse shuffle (r11 — see _screen_input).
-        a1 = fuzzy_decon_screen_batch(
+        if fuzzy_eval is not None:
+            a1 = fuzzy_decon_screen_batch(
+                a1,
+                fuzzy_eval,
+                epoch_id,
+                os.path.join(state_dir, "fuzzy"),
+                id_col=id_col,
+                text_col=text_col,
+                ids_collapsed=True,
+                write_sink=sink,
+            )
+        if quality_model is not None:
+            a1 = quality_screen_batch(
+                a1,
+                quality_model,
+                epoch_id,
+                os.path.join(state_dir, "quality"),
+                id_col=id_col,
+                text_col=text_col,
+                write_sink=sink,
+            )
+        a2 = dedup_batch_against_corpus(
             a1,
-            fuzzy_eval,
             epoch_id,
-            os.path.join(state_dir, "fuzzy"),
+            os.path.join(state_dir, "minhash"),
             id_col=id_col,
             text_col=text_col,
+            max_bucket_size=max_bucket_size,
             ids_collapsed=True,
             write_sink=sink,
         )
-    if quality_model is not None:
-        a1 = quality_screen_batch(
-            a1,
-            quality_model,
+        final = embedding_dedup_batch_against_corpus(
+            a2,
             epoch_id,
-            os.path.join(state_dir, "quality"),
+            os.path.join(state_dir, "embedding"),
             id_col=id_col,
-            text_col=text_col,
+            vec_col=vec_col,
+            threshold=threshold,
+            max_bucket_size=max_bucket_size,
+            ids_collapsed=True,
             write_sink=sink,
-        )
-    a2 = dedup_batch_against_corpus(
-        a1,
-        epoch_id,
-        os.path.join(state_dir, "minhash"),
-        id_col=id_col,
-        text_col=text_col,
-        max_bucket_size=max_bucket_size,
-        ids_collapsed=True,
-        write_sink=sink,
-    )
-    final = embedding_dedup_batch_against_corpus(
-        a2,
-        epoch_id,
-        os.path.join(state_dir, "embedding"),
-        id_col=id_col,
-        vec_col=vec_col,
-        threshold=threshold,
-        max_bucket_size=max_bucket_size,
-        ids_collapsed=True,
-        write_sink=sink,
-    )  # backed by the screen's own eager checkpoint
-    write_epoch_partition(final, os.path.join(state_dir, "accepted"), epoch_id)
-    if index_dir is not None:
-        # index what survived EVERY screen: the searchable vector tree
-        # can never serve content the curation chain rejected
-        ann_index_append_batch(
-            final, epoch_id, index_dir, centroids, books, id_col=id_col, vec_col=vec_col
-        )
-    return final
+        )  # backed by the screen's own eager checkpoint
+        write_epoch_partition(final, os.path.join(state_dir, "accepted"), epoch_id)
+        if index_dir is not None:
+            # index what survived EVERY screen: the searchable vector tree
+            # can never serve content the curation chain rejected
+            ann_index_append_batch(
+                final, epoch_id, index_dir, centroids, books,
+                id_col=id_col, vec_col=vec_col,
+            )
+        return final
+    finally:
+        sink.drain()
 
 
 def run_composed_ingest_stream(
@@ -2290,7 +2116,6 @@ def run_composed_ingest_stream(
     text_col: str = "text",
     vec_col: str = "embedding",
     threshold: float | None = None,
-    max_files_per_trigger: int = 1,
     min_hits: int = 1,
     max_bucket_size: int | None = None,
     m_bits: int | None = None,
@@ -2309,15 +2134,16 @@ def run_composed_ingest_stream(
 ):
     """The composed streaming-ingest flagship: ONE stream of
     (id, text, embedding) rows — or, with ``image_payload_col`` /
-    ``audio_payload_col`` (r14), of PAIRED (id, media payload(s),
-    caption text, embedding) rows, the LAION / LAION-A lake shape —
-    runs every armed screen per micro-batch
-    (`composed_ingest_batch`), image then audio dedup first — the shape a
-    training-data lake actually deploys (one firehose, every screen,
-    one checkpoint) rather than parallel single-screen streams with
-    divergent progress. The eval Bloom filter is built ONCE up front (eager
-    localCheckpoint, exactly as `run_decontamination_stream`); geometry
-    is threaded through build and probe. Pass ``index_dir`` +
+    ``audio_payload_col``, of PAIRED (id, media payload(s), caption
+    text, embedding) rows, the LAION / LAION-A lake shape, read from
+    parquet with ``source_format="parquet"`` — runs every armed screen
+    per micro-batch (`composed_ingest_batch`), one file per batch — the
+    shape a training-data lake actually deploys (one firehose, every
+    screen, one checkpoint) rather than parallel single-screen streams
+    with divergent progress. The eval Bloom filter is built ONCE up
+    front (`functions.bloom.eval_gram_bloom`, as in
+    `run_decontamination_stream`); geometry is threaded through build
+    and probe. Pass ``index_dir`` +
     ``centroids`` + ``books`` to arm the ANN index-maintenance tail:
     each micro-batch's survivors are frozen-codebook-encoded and
     appended to the searchable tree (`ann_index_append_batch`). Pass
@@ -2330,7 +2156,7 @@ def run_composed_ingest_stream(
     a stage-0 normalizer — doc-local, so it respects every contract the
     cross-doc cut (below) breaks.
 
-    Pass ``compact_every=K`` (r13) to fold every screen store's old
+    Pass ``compact_every=K`` to fold every screen store's old
     epochs into its ``epoch=-1`` base after each K-th epoch
     (`streaming.stores.compact_ingest_state`) — the self-bounding shape
     that keeps per-store file counts O(K) at production epoch counts
@@ -2364,24 +2190,12 @@ def run_composed_ingest_stream(
     itself (no store, no arrival order), it runs BEFORE any signature
     is computed, and a replayed batch trims identically — every
     argument above is about corpus-coupled state, none applies."""
-    from sentinela_py_spark.functions.bloom import BLOOM_BITS, BLOOM_K, bloom_build
-    from sentinela_py_spark.functions.text_stats import word_shingles
+    from sentinela_py_spark.functions.bloom import eval_gram_bloom
 
-    m_bits = BLOOM_BITS if m_bits is None else m_bits
-    n_hashes = BLOOM_K if n_hashes is None else n_hashes
-    eval_grams = eval_docs.select(
-        F.explode(F.array_distinct(word_shingles(F.col(text_col), k=5))).alias("key")
-    )
-    bloom_row = bloom_build(
-        eval_grams, n_hashes=n_hashes, m_bits=m_bits
-    ).transform(barrier_eager)
-    # fuzzy screen (r10): eval-side band index + shingle frame built
-    # ONCE from the same eval split, frozen for the stream's lifetime
-    fz = (
-        fuzzy_eval_artifacts(eval_docs, id_col=id_col, text_col=text_col)
-        if fuzzy
-        else None
-    )
+    bloom_row = eval_gram_bloom(eval_docs, text_col, n_hashes=n_hashes, m_bits=m_bits)
+    # fuzzy screen: eval-side band index + shingle frame built ONCE from
+    # the same eval split, frozen for the stream's lifetime
+    fz = fuzzy_eval_artifacts(eval_docs, id_col, text_col) if fuzzy else None
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         composed_ingest_batch(
@@ -2394,10 +2208,10 @@ def run_composed_ingest_stream(
             fuzzy_eval=fz, image_payload_col=image_payload_col,
             audio_payload_col=audio_payload_col, clip_vec_col=clip_vec_col,
         )
-        # self-bounding screen-store maintenance (r13, r12 verdict #3):
-        # fold every store's old epochs into its base on the cadence,
-        # INSIDE the foreachBatch (serialized with the writes, so the
-        # root swap never races its own writer); keep_latest=1 leaves
+        # self-bounding screen-store maintenance: fold every store's old
+        # epochs into its base on the cadence, INSIDE the foreachBatch
+        # (serialized with the writes, so the root swap never races its
+        # own writer); keep_latest=1 leaves
         # the just-written epoch live — the only epoch a checkpointed
         # stream can still legitimately replay with a write. The armed
         # ANN tree compacts itself via its own cell-clustered compactor
@@ -2407,22 +2221,9 @@ def run_composed_ingest_stream(
 
             compact_ingest_state(batch.sparkSession, state_dir, keep_latest=1)
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    # parquet for paired-image streams: binary payloads don't ride JSON
-    # (same rationale as run_incremental_image_dedup_stream)
-    stream = (
-        reader.parquet(source_path)
-        if source_format == "parquet"
-        else reader.json(source_path)
-    )
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "composed"))
-        .trigger(availableNow=True)
-        .start()
+    return _start_stream(
+        _file_stream(spark, source_path, schema, source_format),
+        process, checkpoint_dir, "composed",
     )
 
 
@@ -2523,7 +2324,6 @@ def run_ann_index_maintenance_stream(
     schema=None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_files_per_trigger: int = 1,
     compact_every: int | None = None,
 ):
     """Incremental vector-index ingest: every micro-batch encodes against
@@ -2553,13 +2353,6 @@ def run_ann_index_maintenance_stream(
         if compact_every is not None and (epoch_id + 1) % compact_every == 0:
             compact_ann_index_tree(batch.sparkSession, index_dir)
 
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    stream = reader.option("maxFilesPerTrigger", max_files_per_trigger).json(source_path)
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "annindex"))
-        .trigger(availableNow=True)
-        .start()
+    return _start_stream(
+        _file_stream(spark, source_path, schema), process, checkpoint_dir, "annindex"
     )

@@ -178,6 +178,28 @@ def test_composed_replay_reproduces_first_attempt(spark, tmp_path):
     assert {d for d, _, _ in first} == ACCEPT_IDS
 
 
+def test_failed_deferred_write_fails_the_batch(spark, tmp_path, monkeypatch):
+    """A screen's store write that fails on the shared write pool must
+    fail the whole batch, so foreachBatch never commits offsets over a
+    missing write."""
+    from sentinela_py_spark.streaming import pipeline
+
+    real_write = pipeline.write_epoch_partition
+    minhash_accepted = os.path.join("minhash", "accepted")
+
+    def failing_write(df, path, epoch_id):
+        if path.endswith(minhash_accepted):
+            raise OSError("minhash store unavailable")
+        return real_write(df, path, epoch_id)
+
+    monkeypatch.setattr(pipeline, "write_epoch_partition", failing_write)
+    with pytest.raises(OSError, match="minhash store unavailable"):
+        composed_ingest_batch(
+            _df(spark, BATCH1), _bloom_row(spark), 0, str(tmp_path / "state"),
+            threshold=THRESHOLD,
+        )
+
+
 def test_composed_index_tail_serves_only_survivors(spark, tmp_path):
     """The optional fourth stage: arming the ANN index-maintenance tail
     makes every micro-batch's SURVIVORS searchable (frozen-codebook

@@ -264,3 +264,31 @@ def test_miscaption_family_dies_at_the_clip_screen(spark, routing):
         if stage == "clip" and not (d < BRIGHT_ID_OFFSET and d % 16 == 11)
     }
     assert others == set()
+
+
+def test_clear_index_memos_empties_every_memo(monkeypatch):
+    """clear_index_memos deletes every temp store it registered, the
+    multimodal state root among them, so no memo may survive it pointing
+    at a deleted directory."""
+    from sentinela_py_spark.plans import curation, funnelops, mmops, simops, textops
+
+    memos = [
+        textops._QR_MODEL,
+        curation._CURATED_POOL,
+        simops._TRAINED_CODEBOOKS,
+        simops._IVF_INDEX,
+        mmops._MM_STATE,
+        funnelops._FUNNEL_STATE,
+    ]
+    saved = [dict(m) for m in memos]
+    # keep the session's own stores on disk: clear only an empty list
+    monkeypatch.setattr(simops, "_ANN_STORES", [])
+    try:
+        for m in memos:
+            m[("sentinel-app", "sentinel-sf")] = "sentinel"
+        simops.clear_index_memos()
+        assert [len(m) for m in memos] == [0] * len(memos)
+    finally:
+        for m, before in zip(memos, saved):
+            m.clear()
+            m.update(before)

@@ -1,9 +1,9 @@
-"""Time individual registered queries / bench arms with the bench's exact
-methodology (min-of-N wall time of build + full toPandas materialization)
-without paying for the whole bench run.
+"""Time individual registered queries / bench arms with the bench's own
+timing (`bench._time_df`: wall time of build + full toPandas
+materialization) without paying for the whole bench run.
 
-Usage: python tools/r15_time.py q_dedup_groups q_signature_neardup ...
-       python tools/r15_time.py q_dedup_groups.labels      # one bench arm
+Usage: python tools/time_queries.py q_dedup_groups q_signature_neardup ...
+       python tools/time_queries.py q_dedup_groups.labels      # one bench arm
 Env:   R14_SF_DIR (default /root/testdata/sf0.1), R14_REPS (default 3)
 """
 
@@ -12,7 +12,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, ".")
 
@@ -25,10 +24,10 @@ def main() -> None:
     sf_dir = os.environ.get("R14_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("R14_REPS", "3"))
     bench._ensure_loaded()
-    spark = build_session(app_name="r15-time")
+    spark = build_session(app_name="time-queries")
     # Same warmup as bench.py.
     QUERIES["q_pricing_summary"].spark(spark, sf_dir).collect()
-    out: dict[str, list[float]] = {}
+    out: dict[str, list[float | None]] = {}
     for name in sys.argv[1:]:
         if "." in name:
             q, arm = name.split(".", 1)
@@ -38,11 +37,14 @@ def main() -> None:
             make = lambda: QUERIES[name].spark(spark, sf_dir)  # noqa: E731
         times = []
         for _ in range(reps):
-            t0 = time.perf_counter()
-            make().toPandas()
-            times.append(round(time.perf_counter() - t0, 3))
+            t, err = bench._time_df(make, reps=1)
+            times.append(t)
+            if err:
+                print(f"{name}: {err}", flush=True)
+                break
         out[name] = times
-        print(f"{name}: min={min(times)} reps={times}", flush=True)
+        best = min((t for t in times if t is not None), default=None)
+        print(f"{name}: min={best} reps={times}", flush=True)
     print(json.dumps(out))
     spark.stop()
 
