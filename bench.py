@@ -18,14 +18,6 @@ comparison honest (r3 judge findings):
   within the session (JVM heap state, GC pressure from earlier queries)
   shows up as calibration spread, separating session variance from plan
   regression.
-
-Round-4 adjudication of the r3 watch-items (measured with this harness,
-sf0.1, min-of-3):
-- q_price_percentiles: 1.34 s vs r1 1.094 s → 1.22×, UNDER the 2× gate;
-  the exact arm alone (0.86 s) is FASTER than r1's whole query — the r3
-  2.04× was the added histogram arm plus ambient variance, confirmed.
-- q_simhash_pairs: 2.07 s vs r1 1.828 s → 1.13× — the r3 1.79× was
-  ambient (plan untouched since r2), confirmed; no rework needed.
 """
 
 from __future__ import annotations
@@ -39,106 +31,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from sentinela_py_spark.barrier import barrier, barrier_eager  # noqa: E402
+from sentinela_py_spark.barrier import barrier_eager  # noqa: E402
 from sentinela_py_spark.plans import QUERIES  # noqa: E402
 from sentinela_py_spark.plans.registry import ARMS, _ensure_loaded  # noqa: E402
 from sentinela_py_spark.session import build_session  # noqa: E402
 
-# Fold map vs BENCH_r01 names (registry consolidated in round 2 so every
-# registered query fits the driver's 50-entry correctness window):
-#   q_topk_orders            -> q_period_scan (top-k merged into the scan)
-#   q_customer_intersect     -> q_customer_setops
-#   q_view_click_attribution -> q_click_attribution (outer form, + anti arm)
-#   q_dedup_exact            -> q_dedup_digests (+ fingerprint arm)
-#   q_text_quality, q_lang_id -> q_text_profile (single-pass composite)
-#   q_media_features         -> q_media_decode (REAL binary-PPM decode)
-# Round-2 folds (frees slots for q_pii_redaction + q_sequence_packing):
-#   q_customers_without_orders + q_customers_with_urgent_orders -> q_customer_existence
-#   q_hourly_event_buckets + q_sliding_event_buckets -> q_event_buckets
-#   q_token_entropy          -> q_quality_rules (+ Gopher repetition arms)
-#   q_media_decode           += RIFF/WAVE audio arm (decode_wav driver signal)
-# Round-4 folds (frees the slot for q_bpe_encode):
-#   q_region_head_nation     -> q_revenue_per_nation (region_head column;
-#                               broadcast self-join, zero extra shuffles)
-#   q_ann_ivf_topk           += pq arm (the composed IVF-PQ layout)
-# Round-6 arm additions (no slot changes):
-#   q_ngram_jaccard_pairs    += span arm (substring-level shared-passage
-#                               dedup, operators/dedup.shared_span_pairs
-#                               — Lee-et-al repeated-substring removal);
-#                               the r1-comparable work is the `jaccard`
-#                               arm row, the headline number now carries
-#                               both arms
-#   q_ann_ivf_topk           pq arm retrained on RESIDUALS (vec − cell
-#                               centroid, FAISS IVFPQ) and served from
-#                               the PERSISTED cell-partitioned parquet
-#                               index; KMEANS_ITERS 2 → 8 re-prices the
-#                               `training` arm
-# Round-5 arm additions (no slot changes):
-#   q_ann_ivf_topk           += trained + nprobe2 arms; pq arm retrained
-#                               (k-means codebooks); `training` arm times
-#                               one full un-memoized codebook training —
-#                               search arms reuse the per-corpus memo, so
-#                               their rows are search-only cost
-#   q_sequence_packing       += curated arm (the composed dedup →
-#                               decontaminate → quality → mix → pack
-#                               pipeline; all_docs = the r4 behavior)
-# Round-10 additions (no slot changes):
-#   q_sequence_packing       += funnel arm (the curation datacard over
-#                               the same memoized build — 8 count rows)
-#   q_curated_corpus         += lang_top/domain_cap/token_budget arm
-#                               rows (dedicated pricing; shed-first)
-#   q_mixture_sample         += dsir_fast arm (xxhash64 gram hashing)
-#   composed_ingest          EXTRA_ARMS group: one real corpus batch
-#                               through the streaming screens, base vs
-#                               trim+quality-armed (r9 verdict #6)
-#   `comparable` sub-object: per-query r1-comparable values resolved
-#                               from COMPARABLE_ARM (r9 verdict #1)
-# Round-11 additions:
-#   q_ann_ivf_topk           += hardneg arm (hard-negative mining over
-#                               the ADC refine stream)
-#   q_quality_rules          += ppl_hist arm (histogram-sketch tertile
-#                               cutoffs, the exact percentile's
-#                               fixed-memory twin)
-#   composed_ingest          += screens_fuzzy arm (prices the sixth,
-#                               fuzzy eval-copy screen per epoch)
-# Round-11 folds (SURVEY §8 fold map executed — frees 4 registry slots;
-# every folded workload keeps a dedicated r1-comparable ARM row):
-#   q_simhash_pairs          -> q_minhash_pairs `simhash` arm
-#   q_haversine_supplier_nation -> q_revenue_per_nation `distance` arm
-#   q_date_parts             -> q_datetime_parse_cascade `parts` arm
-#   q_media_metadata         -> q_media_decode `metadata` arm
-# Round-13 additions:
-#   q_audio_neardup          NEW registered query (longtail-priced):
-#                               frame-energy fingerprint dedup
-#   composed_ingest          += screens_image arm (paired-row LAION-order
-#                               flagship: image dedup ahead of the text
-#                               screens; delta vs `screens` prices it)
-#   q_image_neardup          geometry: 64-bit dHash, 4×16-bit bands
-#                               (r12 verdict #1 — same algebra, wider
-#                               keyspace; raw headline comparable)
-# Round-14 fold (SURVEY §8): q_image_neardup + q_audio_neardup →
-#   q_signature_neardup      method-tagged arms `image` (≙ old
-#                               all_pairs), `image_probe` (≙ old
-#                               corpus_probe), `audio` (≙ old
-#                               q_audio_neardup row), + NEW `image_wide`
-#                               (256-bit wide dHash at the aligned 4×64
-#                               plan_hamming_config geometry — the wide-
-#                               signature path, r13 verdict #1); the
-#                               headline row prices the whole union
-# Round-14 additions:
-#   q_clip_score             NEW registered query in the freed slot
-#                               (longtail-priced): cross-modal
-#                               consistency verdicts, map-only
-#   composed_ingest          += screens_audio arm (audio dedup in the
-#                               media head; delta vs `screens` prices
-#                               it) and screens_clip arm (the
-#                               CLIP-score stage; near-free map-only)
-# Round-15 restoration (r14 verdict #1): q_image_neardup and
-#   q_audio_neardup re-registered under their ORIGINAL names/oracles as
-#   thin views over the fused q_signature_neardup arm builders — the
-#   r14 fold had removed two declared names from the checked surface.
-#   Both are ADDED headline rows; q_signature_neardup's row and arms
-#   are unchanged, so the r14-comparable surface is intact.
+# How the headline roster and its arms grew and folded, round by round,
+# is recorded in BENCH_NOTES.md.
 HEADLINE = [
     # relational core
     "q_pricing_summary",
@@ -158,13 +57,7 @@ HEADLINE = [
     "q_decontamination",
     "q_ngram_jaccard_pairs",
     "q_minhash_pairs",
-    "q_signature_neardup",  # r12-14: perceptual-hash image+audio dedup (folded)
-    # r15 roster restoration (r14 verdict #1): the two pre-fold names,
-    # re-registered as thin oracle-checked views over the fused family's
-    # arm builders — ADDED rows (the bench contract allows additions;
-    # q_signature_neardup keeps pricing the whole union unchanged).
-    "q_image_neardup",
-    "q_audio_neardup",
+    "q_signature_neardup",  # perceptual-hash near-dup: image, audio, video
     "q_text_profile",
     "q_pii_redaction",
     "q_embedding_neardup",
@@ -343,25 +236,9 @@ def _composed_ingest_arm(
             if key not in _BOOKS:
                 # offline codebook training (frozen-codebook contract;
                 # the build cost is priced by q_ann_ivf_topk.training)
-                from sentinela_py_spark.functions.kmeans import (
-                    KMEANS_ITERS,
-                    ivf_residuals,
-                    kmeans_centroids_local,
-                    pq_train_codebooks_local,
-                )
-                from sentinela_py_spark.functions.vectors import PQ_K, PQ_M
-                from sentinela_py_spark.plans.simops import EMB_DIM, N_CELLS
+                from sentinela_py_spark.plans.simops import _train_codebooks
 
-                cents = kmeans_centroids_local(
-                    e, N_CELLS, iters=KMEANS_ITERS, dim=EMB_DIM
-                )
-                resid = ivf_residuals(e, cents).transform(barrier)
-                _BOOKS[key] = (
-                    cents,
-                    pq_train_codebooks_local(
-                        resid, m=PQ_M, k=PQ_K, iters=KMEANS_ITERS, dim=EMB_DIM
-                    ),
-                )
+                _BOOKS[key] = _train_codebooks(e)
             kw["centroids"], kw["books"] = _BOOKS[key]
         if clip:
             # paired-vector rows (r14): the registered fixture's planted

@@ -40,6 +40,7 @@ from sentinela_py_spark.operators.sampling import (
     temperature_rates,
 )
 from sentinela_py_spark.plans.dedupops import _band_sql, _minhash_sig_sql
+from sentinela_py_spark.plans.memo import memo
 from sentinela_py_spark.plans.simops import SEMDEDUP_EPS_HI, semantic_retention_sql
 from sentinela_py_spark.plans.textops import (
     MAX_GRAM_OCC,
@@ -883,24 +884,21 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The curated pool is a pure function of the corpus and, like a real
-# curation run, is MATERIALIZED once (dedup labels, decontamination
-# verdicts, and sample membership are written artifacts, not per-query
-# recomputation — the connected-components fixpoint alone is an
-# iterative job). One build per (session, sf_dir) caches the pool AND
-# the stage frames (r10: the funnel arm reads the same build — the
-# datacard is a byproduct of the run, never a second pipeline); the
-# bench's `curated_build` arm prices the full un-memoized pipeline.
-_CURATED_POOL: dict[tuple[str, str], tuple[DataFrame, dict]] = {}
-
-
 def _curated_build(d: DataFrame, sf_dir: str) -> tuple[DataFrame, dict]:
-    key = (d.sparkSession.sparkContext.applicationId, sf_dir)
-    if key not in _CURATED_POOL:
+    """The curated pool and its stage frames, built once per session and
+    sf_dir. Like a real curation run, the pool is materialized once:
+    dedup labels, decontamination verdicts and sample membership are
+    written artifacts, not per-query recomputation. The funnel arm reads
+    the stage frames of the same build, so the datacard is a byproduct of
+    the run, never a second pipeline. The bench's `curated_build` arm
+    prices the full un-memoized pipeline."""
+
+    def build() -> tuple[DataFrame, dict]:
         stages: dict[str, DataFrame] = {}
         pool = _curated_pool(d, stages=stages).transform(barrier)
-        _CURATED_POOL[key] = (pool, stages)
-    return _CURATED_POOL[key]
+        return pool, stages
+
+    return memo("curated_pool", d.sparkSession, sf_dir, build)
 
 
 def _curated_pool_cached(d: DataFrame, sf_dir: str) -> DataFrame:

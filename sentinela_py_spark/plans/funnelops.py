@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from sentinela_py_spark.barrier import barrier_eager
 
+from sentinela_py_spark.plans.memo import memo, temp_tree
 from sentinela_py_spark.plans.registry import register
 from sentinela_py_spark.tables import load_table
 
@@ -81,28 +82,17 @@ _P_GATED = f"{_P_DEC} AND NOT (epoch = 0 AND {_H.format(i=3)} < '2')"
 _P_MH = f"{_P_GATED} AND {_H.format(i=4)} >= '4'"
 _P_ACC = f"{_P_MH} AND {_H.format(i=5)} >= '2'"
 
-# Fixture state trees written by this process, keyed per (appId, sf_dir)
-# — removed by plans.simops.clear_index_memos with the other stores.
-_FUNNEL_STATE: dict[tuple[str, str], str] = {}
-
 
 def _funnel_state_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per session × sf_dir) the fixture composed-ingest
     state tree under a temp root and return its path. Layout matches
     `composed_ingest_batch`'s documented store layout; membership is
     the md5-digit predicates above."""
-    import hashlib
-    import tempfile
+    return memo("funnel", spark, sf_dir, lambda: _write_funnel_state(spark, sf_dir))
 
-    from sentinela_py_spark.plans import simops
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _FUNNEL_STATE:
-        return _FUNNEL_STATE[key]
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sentinela-funnel-{key[0]}-{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+def _write_funnel_state(spark: SparkSession, sf_dir: str) -> str:
+    root = temp_tree("funnel", spark, sf_dir)
 
     def hx(i: int):
         return F.substring(F.md5(F.col("doc_id").cast("string")), i, 1)
@@ -154,8 +144,6 @@ def _funnel_state_dir(spark: SparkSession, sf_dir: str) -> str:
         df.select("doc_id", "epoch").write.mode("overwrite").partitionBy(
             "epoch"
         ).parquet(os.path.join(root, sub))
-    simops.register_temp_store(root)  # cleaned with the other temp stores
-    _FUNNEL_STATE[key] = root
     return root
 
 

@@ -63,6 +63,7 @@ from sentinela_py_spark.operators.multimodal import (
     WIDE_DHASH_COLS,
     WIDE_DHASH_ROWS,
 )
+from sentinela_py_spark.plans.memo import memo, temp_tree
 from sentinela_py_spark.plans.registry import register, register_arms, sorted_arm
 from sentinela_py_spark.tables import load_table
 
@@ -330,6 +331,29 @@ def _video_word_sql(f: int) -> str:
     return " + ".join(terms)
 
 
+def _dhash_sql_parts() -> tuple[list[str], str]:
+    """(gray column defs, signed-64-bit dHash sum) — the decode-
+    equivalent grid/hash SQL shared by the q_signature_neardup and
+    q_multimodal_ingest oracles (one generator, so the two replay one
+    definition)."""
+    gray_cols = []
+    for y in range(DHASH_ROWS):
+        for x in range(DHASH_COLS):
+            off = f"((({y} * h) // {DHASH_ROWS}) * w + (({x} * w) // {DHASH_COLS})) * 3"
+            g = " + ".join(f"ascii(pix[{off} + {i}])" for i in (1, 2, 3))
+            gray_cols.append(f"{g} AS g_{y}_{x}")
+    bit_terms = []
+    for y in range(DHASH_ROWS):
+        for x in range(DHASH_COLS - 1):
+            pos = y * 8 + x
+            val = -(1 << 63) if pos == 63 else 1 << pos
+            bit_terms.append(
+                f"(CASE WHEN g_{y}_{x} < g_{y}_{x + 1} "
+                f"THEN CAST({val} AS BIGINT) ELSE 0 END)"
+            )
+    return gray_cols, " + ".join(bit_terms)
+
+
 def _signature_neardup_sql() -> str:
     """DuckDB replay of the FULL perceptual-signature near-dup family
     (r14 §8 fold of q_image_neardup + q_audio_neardup, per the r13
@@ -369,22 +393,7 @@ def _signature_neardup_sql() -> str:
     cs1 = _CHARSET_PLUS1.replace("'", "''")
     w_sql = f"(bid % {IMG_DEDUP_W_MOD} + {IMG_DEDUP_MIN})"
     h_sql = f"(bid % {IMG_DEDUP_H_MOD} + {IMG_DEDUP_MIN})"
-    gray_cols = []
-    for y in range(DHASH_ROWS):
-        for x in range(DHASH_COLS):
-            off = f"((({y} * h) // {DHASH_ROWS}) * w + (({x} * w) // {DHASH_COLS})) * 3"
-            g = " + ".join(f"ascii(pix[{off} + {i}])" for i in (1, 2, 3))
-            gray_cols.append(f"{g} AS g_{y}_{x}")
-    bit_terms = []
-    for y in range(DHASH_ROWS):
-        for x in range(DHASH_COLS - 1):
-            pos = y * 8 + x
-            val = -(1 << 63) if pos == 63 else 1 << pos
-            bit_terms.append(
-                f"(CASE WHEN g_{y}_{x} < g_{y}_{x + 1} "
-                f"THEN CAST({val} AS BIGINT) ELSE 0 END)"
-            )
-    bits = " + ".join(bit_terms)
+    gray_cols, bits = _dhash_sql_parts()
     band_list = ",".join(str(i) for i in range(DHASH_BANDS))
     bmask = (1 << DHASH_BAND_BITS) - 1
     probe_ham = "bit_count(xor(b.dhash, s.c_dhash))"
@@ -958,289 +967,6 @@ register_arms(
 )
 
 
-# ---------------------------------------------------------------------------
-# Roster restoration (r15, r14 verdict #1): the r14 fold removed the
-# q_image_neardup / q_audio_neardup names from the driver's checked
-# surface. The fused q_signature_neardup keeps the machinery; the two
-# original names re-register below as THIN views over the same arm
-# builders, each with its original pre-fold DuckDB oracle verbatim, so
-# the roster shows every declared name again with nothing dropped.
-# Marginal cost: one narrow decode+hash pass per query invocation (the
-# intra-query localCheckpoint still shares it across a query's own
-# arms; sharing it ACROSS queries would be cross-run result caching,
-# which the bench contract forbids).
-# ---------------------------------------------------------------------------
-
-
-def _image_neardup_sql() -> str:
-    """DuckDB replay of the FULL image near-dup algebra: payload build
-    (incl. both planted variant families) → decode-equivalent gray grid
-    → 64-bit dHash → 4×16-bit banding → doc_id-ordered bucket cap →
-    band self-join → Hamming ≤ 3 refine (all_pairs arm), PLUS the
-    corpus_probe arm replaying the streaming screen's cross-corpus
-    probe: md5-split corpus half pre-aggregated to one row per (band,
-    bsig, dhash), probe half joined on the band slice and verified at
-    true Hamming, the match picked ATOMICALLY as the lexicographic-min
-    (hamming, corpus_doc) pair (r13 ADVICE — independent MIN aggregates
-    could report a doc_b that did not achieve the reported hamming).
-    The gray grid reads the pixel plane at the same nearest-neighbor
-    offsets the Python decoder samples, so the hash — and therefore
-    every pair — is value-checked end-to-end. Bit 63's term is the
-    two's-complement constant −2^63 (emitted LAST in the sum, so every
-    positive partial sum stays under 2^63), matching `dhash64_of`'s
-    signed wrap; band slicing masks after the arithmetic shift, which
-    reads the same bit pattern on both engines."""
-    cs = _CHARSET.replace("'", "''")
-    cs1 = _CHARSET_PLUS1.replace("'", "''")
-    w_sql = f"(bid % {IMG_DEDUP_W_MOD} + {IMG_DEDUP_MIN})"
-    h_sql = f"(bid % {IMG_DEDUP_H_MOD} + {IMG_DEDUP_MIN})"
-    gray_cols = []
-    for y in range(DHASH_ROWS):
-        for x in range(DHASH_COLS):
-            off = f"((({y} * h) // {DHASH_ROWS}) * w + (({x} * w) // {DHASH_COLS})) * 3"
-            g = " + ".join(f"ascii(pix[{off} + {i}])" for i in (1, 2, 3))
-            gray_cols.append(f"{g} AS g_{y}_{x}")
-    bit_terms = []
-    for y in range(DHASH_ROWS):
-        for x in range(DHASH_COLS - 1):
-            pos = y * 8 + x
-            val = -(1 << 63) if pos == 63 else 1 << pos
-            bit_terms.append(
-                f"(CASE WHEN g_{y}_{x} < g_{y}_{x + 1} "
-                f"THEN CAST({val} AS BIGINT) ELSE 0 END)"
-            )
-    bits = " + ".join(bit_terms)
-    band_list = ",".join(str(i) for i in range(DHASH_BANDS))
-    bmask = (1 << DHASH_BAND_BITS) - 1
-    probe_ham = "bit_count(xor(b.dhash, s.c_dhash))"
-    nl = ",\n             "
-    return f"""
-    WITH imgsrc AS (
-      -- explicit BIGINT cast for documentation parity with the other
-      -- oracles (DuckDB widens set-op columns across all branches)
-      SELECT doc_id AS bid, text AS t, CAST(0 AS BIGINT) AS shift FROM documents
-      WHERE length(text) > 0
-      UNION ALL
-      SELECT doc_id, translate(text, '{cs}', '{cs1}'), {BRIGHT_ID_OFFSET}
-      FROM documents WHERE doc_id % 16 = 0 AND length(text) > 0
-      UNION ALL
-      SELECT doc_id, translate(text, '{_VOWELS}', '{_VOWELS_PLUS1}'), {NOISE_ID_OFFSET}
-      FROM documents WHERE doc_id % 16 = 1 AND length(text) > 0
-    ),
-    imgs AS (
-      SELECT bid + shift AS doc_id,
-             CAST({w_sql} AS INT) AS w,
-             CAST({h_sql} AS INT) AS h,
-             rpad(t, CAST({w_sql} * {h_sql} * 3 AS INT), t) AS pix
-      FROM imgsrc
-    ),
-    grays AS (
-      SELECT doc_id, pix,
-             {nl.join(gray_cols)}
-      FROM imgs
-    ),
-    sh AS (
-      SELECT doc_id, CAST({bits} AS BIGINT) AS dhash, md5(pix) AS pmd5
-      FROM grays
-    ),
-    bands AS (
-      SELECT doc_id, dhash, pmd5, band,
-             (dhash >> (band * {DHASH_BAND_BITS})) & {bmask} AS bsig
-      FROM sh CROSS JOIN (SELECT UNNEST([{band_list}]) AS band)
-    ),
-    capped AS (
-      SELECT doc_id, dhash, pmd5, band, bsig FROM (
-        SELECT *, row_number() OVER (PARTITION BY band, bsig ORDER BY doc_id) AS rn
-        FROM bands
-      ) WHERE rn <= {IMG_NEARDUP_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             a.dhash AS sa, b.dhash AS sb, a.pmd5 AS ma, b.pmd5 AS mb
-      FROM capped a JOIN capped b
-        ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id
-    ),
-    img_store AS (
-      SELECT band, bsig, dhash AS c_dhash, MIN(doc_id) AS corpus_doc
-      FROM bands WHERE {_IMG_SPLIT_SQL.format(d='doc_id')}
-      GROUP BY 1, 2, 3
-    ),
-    img_probe AS (
-      SELECT doc_a, doc_b, hamming FROM (
-        SELECT b.doc_id AS doc_a, s.corpus_doc AS doc_b,
-               CAST({probe_ham} AS BIGINT) AS hamming,
-               row_number() OVER (
-                 PARTITION BY b.doc_id
-                 ORDER BY {probe_ham}, s.corpus_doc
-               ) AS rn
-        FROM bands b JOIN img_store s USING (band, bsig)
-        WHERE NOT ({_IMG_SPLIT_SQL.format(d='b.doc_id')})
-          AND {probe_ham} <= {IMG_NEARDUP_MAX_HAMMING}
-      ) WHERE rn = 1
-    )
-    SELECT 'all_pairs' AS method, doc_a, doc_b,
-           CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming,
-           (ma = mb) AS exact_dup
-    FROM cand
-    WHERE bit_count(xor(sa, sb)) <= {IMG_NEARDUP_MAX_HAMMING}
-    UNION ALL
-    SELECT 'corpus_probe' AS method, doc_a, doc_b, hamming,
-           CAST(NULL AS BOOLEAN) AS exact_dup
-    FROM img_probe
-    ORDER BY method, doc_a, doc_b
-    """
-
-
-def _audio_neardup_sql() -> str:
-    """DuckDB replay of the FULL audio near-dup algebra: sample build
-    (the text bytes ARE the PCM data — incl. all three planted variant
-    families and the length gate) → 65 nearest-neighbor frame bounds →
-    integer frame energies (char-split + ascii sum) → cross-multiplied
-    mean-comparison sign bits (bit 63 as the two's-complement constant,
-    matching `afp64_of`'s signed wrap) → 4×16-bit banding →
-    doc_id-ordered bucket cap → band self-join → Hamming ≤ 3 refine.
-    The Spark side genuinely parses the RIFF containers it built
-    (decode_wav chunk walk inside Arrow mapInPandas); the oracle goes
-    straight to the sample bytes — if the decoder mangled one byte, the
-    fingerprints (and this oracle) would diverge."""
-    cs = _CHARSET.replace("'", "''")
-    cs1 = _CHARSET_PLUS1.replace("'", "''")
-    nf = AFP_FRAMES
-    gate = f"length(text) >= {AFP_MIN_SAMPLES}"
-    bitval = (
-        "CASE WHEN a.f = 63 THEN CAST(-9223372036854775808 AS BIGINT) "
-        "ELSE (CAST(1 AS BIGINT) << a.f) END"
-    )
-    return f"""
-    WITH wavsrc AS (
-      -- DuckDB widens set-op columns to the max type across branches,
-      -- so the BIGINT offsets below type `shift` regardless; the cast
-      -- states the intent where the column is introduced (r13 ADVICE:
-      -- keep both oracles on the same explicit-cast style)
-      SELECT doc_id AS bid, text AS t, CAST(0 AS BIGINT) AS shift
-      FROM documents WHERE {gate}
-      UNION ALL
-      SELECT doc_id, text, {AFP_RATE_ID_OFFSET}
-      FROM documents WHERE doc_id % 16 = 0 AND {gate}
-      UNION ALL
-      SELECT doc_id, translate(text, '{cs}', '{cs1}'), {AFP_GAIN_ID_OFFSET}
-      FROM documents WHERE doc_id % 16 = 1 AND {gate}
-      UNION ALL
-      SELECT doc_id, translate(text, '{_VOWELS}', '{_VOWELS_PLUS1}'), {AFP_NOISE_ID_OFFSET}
-      FROM documents WHERE doc_id % 16 = 2 AND {gate}
-    ),
-    wavs AS (
-      SELECT bid + shift AS doc_id, t, length(t) AS n, md5(t) AS dmd5
-      FROM wavsrc
-    ),
-    frames AS (
-      SELECT doc_id, f,
-             ((f + 1) * n) // {nf} - (f * n) // {nf} AS flen,
-             CAST(list_sum(list_transform(
-               string_split(substr(t, (f * n) // {nf} + 1,
-                                   ((f + 1) * n) // {nf} - (f * n) // {nf}), ''),
-               x -> ascii(x))) AS BIGINT) AS fe
-      FROM wavs CROSS JOIN (SELECT UNNEST(range({nf})) AS f)
-    ),
-    sigs AS (
-      SELECT a.doc_id,
-             CAST(SUM(CASE WHEN a.fe * b.flen < b.fe * a.flen
-                           THEN {bitval} ELSE 0 END) AS BIGINT) AS afp
-      FROM frames a JOIN frames b ON b.doc_id = a.doc_id AND b.f = a.f + 1
-      GROUP BY a.doc_id
-    ),
-    sh AS (
-      SELECT s.doc_id, s.afp, w.dmd5 FROM sigs s JOIN wavs w USING (doc_id)
-    ),
-    bands AS (
-      SELECT doc_id, afp, dmd5, band,
-             (afp >> (band * {DHASH_BAND_BITS})) & {(1 << DHASH_BAND_BITS) - 1} AS bsig
-      FROM sh CROSS JOIN (SELECT UNNEST([0,1,2,3]) AS band)
-    ),
-    capped AS (
-      SELECT doc_id, afp, dmd5, band, bsig FROM (
-        SELECT *, row_number() OVER (PARTITION BY band, bsig ORDER BY doc_id) AS rn
-        FROM bands
-      ) WHERE rn <= {AUD_NEARDUP_BUCKET_CAP}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             a.afp AS sa, b.afp AS sb, a.dmd5 AS ma, b.dmd5 AS mb
-      FROM capped a JOIN capped b
-        ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id
-    )
-    SELECT doc_a, doc_b,
-           CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming,
-           (ma = mb) AS exact_dup
-    FROM cand
-    WHERE bit_count(xor(sa, sb)) <= {AUD_NEARDUP_MAX_HAMMING}
-    ORDER BY doc_a, doc_b
-    """
-
-
-@register(
-    "q_image_neardup",
-    oracle=_image_neardup_sql(),
-    survey_ref=(
-        "multimodal dedup (r12; name restored r15 per the r14 verdict — the "
-        "r14 fold removed this declared name from the checked surface): "
-        "perceptual-hash image near-dup — decode_ppm → 9×8 gray grid → "
-        "64-bit dHash → the shared Hamming-band LSH self-join with the "
-        "doc_id-ordered hot-bucket cap armed and oracle-replayed, + the "
-        "corpus_probe arm (the streaming screen's cross-corpus probe "
-        "algebra). Same algebra as q_signature_neardup's `image`/"
-        "`image_probe` arms under the original pre-fold method tags"
-    ),
-    tags=("multimodal", "dedup", "sketch", "pandas-udf"),
-)
-def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-duplicate pairs by perceptual hash — the ORIGINAL
-    (pre-fold) registered surface, restored r15 (r14 verdict #1): the
-    r14 signature-family fold kept the algebra under q_signature_neardup
-    but dropped this declared name from the oracle-checked roster. This
-    is a thin view over the SAME arm builders (`_image_all_pairs` /
-    `_image_corpus_probe` over one checkpointed `_image_sigs` pass),
-    re-tagged with the pre-fold method names (`all_pairs` ≙ `image`,
-    `corpus_probe` ≙ `image_probe`) and checked by the original pre-fold
-    DuckDB oracle verbatim. See q_signature_neardup for the full
-    algebra/scale notes."""
-    sigs = _image_sigs(spark, sf_dir)
-    return (
-        _image_all_pairs(sigs, method="all_pairs")
-        .unionByName(_image_corpus_probe(sigs, method="corpus_probe"))
-        .orderBy("method", "doc_a", "doc_b")
-    )
-
-
-@register(
-    "q_audio_neardup",
-    oracle=_audio_neardup_sql(),
-    survey_ref=(
-        "multimodal dedup (r13; name restored r15 per the r14 verdict — the "
-        "r14 fold removed this declared name from the checked surface): "
-        "audio fingerprint near-dup — decode_wav chunk walk → 65 integer "
-        "frame energies → 64 cross-multiplied mean-comparison sign bits → "
-        "the shared Hamming-band LSH self-join at the 4×16-bit geometry. "
-        "Same algebra as q_signature_neardup's `audio` arm without the "
-        "method tag (the original pre-fold schema)"
-    ),
-    tags=("multimodal", "dedup", "sketch", "pandas-udf"),
-)
-def q_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio near-duplicate pairs by frame-energy fingerprint — the
-    ORIGINAL (pre-fold) registered surface, restored r15 (r14 verdict
-    #1), a thin view over the fused family's `_audio_pairs` builder with
-    the method tag dropped (the pre-fold schema: doc_a, doc_b, hamming,
-    exact_dup), checked by the original pre-fold DuckDB oracle verbatim.
-    See q_signature_neardup for the full algebra/scale notes."""
-    return (
-        _audio_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b", "hamming", "exact_dup")
-        .orderBy("doc_a", "doc_b")
-    )
-
-
-
 @register(
     "q_media_frames",
     oracle=f"""
@@ -1283,40 +1009,31 @@ def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly the image survivors.
 # ---------------------------------------------------------------------------
 
-_MM_STATE: dict[tuple[str, str], str] = {}
-
 
 def _mm_ingest_state_dir(spark: SparkSession, sf_dir: str) -> str:
     """Run the composed paired-row batch ONCE per session × sf_dir into
-    a temp state root and return it (the `_funnel_state_dir` memo
-    pattern; cleaned with the other temp stores). ALL FOUR screens are
-    armed: the image screen (head of the chain), the decontamination
-    screen against a REAL held-out split (every 16th-plus-five doc's
-    text is eval content — its own caption in the corpus is exactly the
-    verbatim leak the screen exists to catch), the MinHash caption
-    screen, and the EMBEDDING screen at the real NEARDUP_COS threshold
-    over each row's BASE document vector: the embdup family (new
-    pixels, new words, same semantic vector) flows through image AND
-    text and dies at the vector stage, and genuine base near-dup
-    vectors fall to the same within-batch election the streaming screen
-    runs. What this query value-checks is the part no registered query
-    covered: the LAION-ORDER ROUTING — which screen takes each row when
-    every real screen is chained."""
-    import hashlib
-    import tempfile
+    a temp state root and return it. ALL FOUR screens are armed: the
+    image screen (head of the chain), the decontamination screen against
+    a REAL held-out split (every 16th-plus-five doc's text is eval
+    content — its own caption in the corpus is exactly the verbatim leak
+    the screen exists to catch), the MinHash caption screen, and the
+    EMBEDDING screen at the real NEARDUP_COS threshold over each row's
+    BASE document vector: the embdup family (new pixels, new words, same
+    semantic vector) flows through image AND text and dies at the vector
+    stage, and genuine base near-dup vectors fall to the same within-
+    batch election the streaming screen runs. What this query value-
+    checks is the part no registered query covered: the LAION-ORDER
+    ROUTING — which screen takes each row when every real screen is
+    chained."""
+    return memo("mmingest", spark, sf_dir, lambda: _write_mm_ingest_state(spark, sf_dir))
 
+
+def _write_mm_ingest_state(spark: SparkSession, sf_dir: str) -> str:
     from sentinela_py_spark.functions.bloom import eval_gram_bloom
     from sentinela_py_spark.operators.multimodal import documents_to_paired_rows
-    from sentinela_py_spark.plans import simops
     from sentinela_py_spark.streaming.pipeline import composed_ingest_batch
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _MM_STATE:
-        return _MM_STATE[key]
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"sentinela-mmingest-{key[0]}-{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
-    )
+    root = temp_tree("mmingest", spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     # every row carries its BASE doc's vector (doc_id mod 1e9 strips the
     # family offsets) — which is exactly what plants the embdup family's
@@ -1371,31 +1088,7 @@ def _mm_ingest_state_dir(spark: SparkSession, sf_dir: str) -> str:
         image_payload_col="payload",
         clip_vec_col="image_embedding",
     )
-    simops.register_temp_store(root)
-    _MM_STATE[key] = root
     return root
-
-
-def _dhash_sql_parts() -> tuple[list[str], str]:
-    """(gray column defs, signed-64-bit dHash sum) — the decode-
-    equivalent grid/hash SQL shared by q_image_neardup and the composed
-    ingest oracle (one generator, so the two replay one definition)."""
-    gray_cols = []
-    for y in range(DHASH_ROWS):
-        for x in range(DHASH_COLS):
-            off = f"((({y} * h) // {DHASH_ROWS}) * w + (({x} * w) // {DHASH_COLS})) * 3"
-            g = " + ".join(f"ascii(pix[{off} + {i}])" for i in (1, 2, 3))
-            gray_cols.append(f"{g} AS g_{y}_{x}")
-    bit_terms = []
-    for y in range(DHASH_ROWS):
-        for x in range(DHASH_COLS - 1):
-            pos = y * 8 + x
-            val = -(1 << 63) if pos == 63 else 1 << pos
-            bit_terms.append(
-                f"(CASE WHEN g_{y}_{x} < g_{y}_{x + 1} "
-                f"THEN CAST({val} AS BIGINT) ELSE 0 END)"
-            )
-    return gray_cols, " + ".join(bit_terms)
 
 
 def _mm_ingest_sql() -> str:
@@ -1480,7 +1173,7 @@ def _mm_ingest_sql() -> str:
       -- (r13 ADVICE — the old comment claimed first-branch typing),
       -- so the 3e9 repost offset makes the column BIGINT either way;
       -- the explicit cast just states the intended type where the
-      -- column is introduced (same style as _audio_neardup_sql)
+      -- column is introduced (same style as _signature_neardup_sql)
       SELECT doc_id AS bid, text AS t, text AS cap, CAST(0 AS BIGINT) AS shift
       FROM docs
       UNION ALL

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sentinela_py_spark.operators.scale import DEFAULT_MAX_BUCKET_SIZE
+from sentinela_py_spark.plans.memo import clear_index_memos, memo, temp_tree  # noqa: F401
 from sentinela_py_spark.plans.registry import (
     method_arm as _method_arm,
     register,
@@ -1716,65 +1717,6 @@ def _ivf_flat_arm(
     return _ivf_search(q, c, method, sort=sort)
 
 
-# Trained codebooks are a pure function of the corpus (deterministic
-# init, fixed iterations), so one training per (session, sf_dir) serves
-# every arm, bench rep, and correctness run — deployment semantics:
-# FAISS trains a codebook once and serves searches against it. The bench
-# `training` arm calls _train_codebooks directly, bypassing this memo,
-# so training cost stays a measured number instead of vanishing into the
-# first rep. Keyed by (applicationId, sf_dir) like _IVF_INDEX — an
-# sf_dir-only key served stale codebooks when fixture data was
-# regenerated at the same path within one process (r5 ADVICE).
-_TRAINED_CODEBOOKS: dict[tuple[str, str], tuple[list, list]] = {}
-
-# Guards the check-then-insert of BOTH index memos (r15, r14 ADVICE #2):
-# call sites historically populated them serially before any driver
-# threading started, but that invariant was implicit — two codebook-
-# consuming arms racing through `_concurrent` would double-train (wasted
-# jobs, divergent cached frames). One lock per process is enough: memo
-# population is rare (once per session × corpus) and the held work is
-# driver-side training, which was never parallel anyway.
-import threading as _threading
-
-_MEMO_LOCK = _threading.RLock()
-
-
-def clear_index_memos() -> None:
-    """Evict every module-level memo (trained codebooks, the encoded IVF
-    index, the quality model, the curated pool, and the multimodal and
-    funnel ingest state roots) and delete the temp-dir parquet stores
-    this process wrote, the state roots among them. Memos pin DataFrames
-    under stopped sessions' applicationIds for the process lifetime
-    otherwise — call on session teardown (the test fixture does) or
-    after regenerating fixture data in place."""
-    import shutil
-
-    from sentinela_py_spark.plans import curation, funnelops, mmops, textops
-
-    _TRAINED_CODEBOOKS.clear()
-    _IVF_INDEX.clear()
-    curation._CURATED_POOL.clear()
-    textops._QR_MODEL.clear()
-    funnelops._FUNNEL_STATE.clear()
-    mmops._MM_STATE.clear()
-    while _ANN_STORES:
-        shutil.rmtree(_ANN_STORES.pop(), ignore_errors=True)
-
-
-# Paths of persisted-index stores written by THIS process (appId-scoped
-# names, so no cross-process collision) — removed by clear_index_memos.
-_ANN_STORES: list[str] = []
-
-
-def register_temp_store(path: str) -> None:
-    """Register a temp store tree written by this process for removal at
-    `clear_index_memos` time. The ONE public hook for modules that lay
-    down fixture/index state under the session's lifetime
-    (plans.funnelops' fixture state tree uses it) — callers must not
-    reach into the private `_ANN_STORES` list (r11 judge finding #2)."""
-    _ANN_STORES.append(path)
-
-
 def _train_codebooks(e: DataFrame) -> tuple[list, list]:
     """One full un-memoized training run: IVF centroids (cosine k-means),
     then PQ codewords trained on the RESIDUALS ``vec − centroid(cell)``
@@ -1802,120 +1744,102 @@ def _train_codebooks(e: DataFrame) -> tuple[list, list]:
 
 
 def _trained_codebooks(e: DataFrame, sf_dir: str) -> tuple[list, list]:
-    key = (e.sparkSession.sparkContext.applicationId, sf_dir)
-    if key not in _TRAINED_CODEBOOKS:
-        with _MEMO_LOCK:
-            if key not in _TRAINED_CODEBOOKS:
-                _TRAINED_CODEBOOKS[key] = _train_codebooks(e)
-    return _TRAINED_CODEBOOKS[key]
-
-
-# The stored ANN index, as a real vector lake lays it out: cell
-# assignments and PQ codes are computed at WRITE time and read back by
-# every search — re-deriving them per query is a demo artifact, not the
-# deployment plan. One lazy localCheckpoint per (session, sf_dir) for
-# each index frame; the first action pays the build (the bench `training`
-# arm prices the full offline path explicitly), later searches read it.
-_IVF_INDEX: dict[tuple[str, str], dict[str, DataFrame]] = {}
+    """The IVF centroids and residual-PQ codebooks of this corpus,
+    trained once per session and sf_dir. Training is deterministic
+    (fixed init, fixed iterations), so one training serves every arm,
+    bench rep and correctness run, the way FAISS trains a codebook once
+    and serves searches against it. The bench `training` arm calls
+    `_train_codebooks` directly so its cost stays measured."""
+    return memo("codebooks", e.sparkSession, sf_dir, lambda: _train_codebooks(e))
 
 
 def _ivf_index(e: DataFrame, sf_dir: str) -> dict[str, DataFrame]:
+    """The stored ANN index, built once per session and sf_dir, laid out
+    the way a vector lake stores it: cell assignments and PQ codes are
+    computed at write time and read back by every search. Each index
+    frame is one lazy barrier, so the first action pays the build; the
+    bench `training` arm prices the full offline path explicitly."""
+    return memo("ivf_index", e.sparkSession, sf_dir, lambda: _build_ivf_index(e, sf_dir))
+
+
+def _build_ivf_index(e: DataFrame, sf_dir: str) -> dict[str, DataFrame]:
     from sentinela_py_spark.functions.kmeans import pq_stitch_codewords
-    from sentinela_py_spark.functions.vectors import pq_residual_codes
+    from sentinela_py_spark.functions.litutil import fast_lit
+    from sentinela_py_spark.functions.vectors import (
+        pq_codes_reconstruct,
+        pq_residual_codes,
+        read_ann_index,
+        write_ann_index,
+    )
 
     spark = e.sparkSession
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _IVF_INDEX:
-        return _IVF_INDEX[key]
-    with _MEMO_LOCK:
-        if key in _IVF_INDEX:
-            return _IVF_INDEX[key]
-        cents, books = _trained_codebooks(e, sf_dir)
-        cand, _a1 = capped_cell_candidates(
-            ivf_assign(e).filter(F.col("vec_id") >= N_QUERY_VECTORS)
-        )
-        t_assigned = assign_cells_literal(e, cents).transform(barrier)
-        # Capped corpus-candidate view under the trained codebook,
-        # derived ONCE from the checkpointed assignment and shared by
-        # the trained + nprobe2 arms (r15, r14 verdict #3: each arm
-        # previously re-ran the cap window over its own t_assigned scan
-        # — one Exchange+Window pair per arm for identical rows).
-        t_cand, _a2 = capped_cell_candidates(
-            t_assigned.filter(F.col("vec_id") >= N_QUERY_VECTORS)
-        )
-        from sentinela_py_spark.functions.litutil import fast_lit
+    cents, books = _trained_codebooks(e, sf_dir)
+    cand, _a1 = capped_cell_candidates(
+        ivf_assign(e).filter(F.col("vec_id") >= N_QUERY_VECTORS)
+    )
+    t_assigned = assign_cells_literal(e, cents).transform(barrier)
+    # Capped corpus-candidate view under the trained codebook,
+    # derived ONCE from the checkpointed assignment and shared by
+    # the trained + nprobe2 arms, so neither re-runs the cap window
+    # over its own t_assigned scan.
+    t_cand, _a2 = capped_cell_candidates(
+        t_assigned.filter(F.col("vec_id") >= N_QUERY_VECTORS)
+    )
+    seed_vecs = fast_lit([[float(x) for x in v] for v in pq_stitch_codewords(books)], 2)
+    cent_lit = fast_lit([[float(x) for x in v] for _, v in sorted(cents)], 2)
+    t_for_pq, _a3 = capped_cell_candidates(t_assigned)  # cap BEFORE encode
+    # RESIDUAL encode (FAISS IVFPQ), stored in its MINIMAL form: the
+    # M-int codes of PQ(vec − centroid) against codewords trained on
+    # residuals (_train_codebooks), beside the raw vector (the refine
+    # pass's cold column). The reconstruction deq = centroid +
+    # codeword(code) is NOT persisted — at deployment scale a stored
+    # deq column is a second copy of the corpus; searches that want
+    # it derive it read-side by pure lookup (pq_codes_reconstruct,
+    # bit-identical to the write-time fused form — test-pinned).
+    row_cent = F.element_at(cent_lit, (F.col("cell_id") + 1).cast("int"))
+    pq_cand = t_for_pq.select(
+        "vec_id",
+        "embedding",
+        "cell_id",
+        pq_residual_codes(
+            F.col("embedding"), row_cent, seed_vecs, PQ_M, EMB_DIM
+        ).alias("codes"),
+    )
+    # The PQ index frame is PERSISTED through the real lake layout —
+    # `vectors.write_ann_index` (parquet partitioned by cell_id) —
+    # and read back for every search, so the registered/benched pq
+    # arm runs the DEPLOYMENT plan: a partition-pruned parquet scan
+    # of the probed cells, not an in-memory checkpoint. Doubles
+    # round-trip parquet bit-exactly, so oracle parity is unaffected.
+    store = temp_tree("ann", spark, sf_dir)
+    write_ann_index(pq_cand, store)
 
-        seed_vecs = fast_lit([[float(x) for x in v] for v in pq_stitch_codewords(books)], 2)
-        cent_lit = fast_lit([[float(x) for x in v] for _, v in sorted(cents)], 2)
-        t_for_pq, _a3 = capped_cell_candidates(t_assigned)  # cap BEFORE encode
-        # RESIDUAL encode (FAISS IVFPQ), stored in its MINIMAL form: the
-        # M-int codes of PQ(vec − centroid) against codewords trained on
-        # residuals (_train_codebooks), beside the raw vector (the refine
-        # pass's cold column). The reconstruction deq = centroid +
-        # codeword(code) is NOT persisted — at deployment scale a stored
-        # deq column is a second copy of the corpus; searches that want
-        # it derive it read-side by pure lookup (pq_codes_reconstruct,
-        # bit-identical to the write-time fused form — test-pinned).
-        row_cent = F.element_at(cent_lit, (F.col("cell_id") + 1).cast("int"))
-        pq_cand = t_for_pq.select(
-            "vec_id",
-            "embedding",
-            "cell_id",
-            pq_residual_codes(
-                F.col("embedding"), row_cent, seed_vecs, PQ_M, EMB_DIM
-            ).alias("codes"),
-        )
-        # The PQ index frame is PERSISTED through the real lake layout —
-        # `vectors.write_ann_index` (parquet partitioned by cell_id) —
-        # and read back for every search, so the registered/benched pq
-        # arm runs the DEPLOYMENT plan: a partition-pruned parquet scan
-        # of the probed cells, not an in-memory checkpoint (r5 judge
-        # item: the stored path was pytest-only). Doubles round-trip
-        # parquet bit-exactly, so oracle parity is unaffected.
-        import hashlib as _hl
-        import os as _os
-        import tempfile
-
-        from sentinela_py_spark.functions.vectors import (
-            read_ann_index,
-            write_ann_index,
-        )
-
-        store = _os.path.join(
-            tempfile.gettempdir(),
-            f"sentinela-ann-{key[0]}-{_hl.md5(sf_dir.encode()).hexdigest()[:8]}",
-        )
-        write_ann_index(pq_cand, store)
-        _ANN_STORES.append(store)
-        from sentinela_py_spark.functions.vectors import pq_codes_reconstruct
-
-        # the pq (reconstruct-coarse) arm derives deq from the stored
-        # codes as a map-side lookup riding the scan
-        pq_view = read_ann_index(spark, store).withColumn(
-            "deq",
-            pq_codes_reconstruct(
-                F.col("codes"),
-                F.element_at(cent_lit, (F.col("cell_id") + 1).cast("int")),
-                seed_vecs,
-                PQ_M,
-                EMB_DIM,
-            ),
-        )
-        _IVF_INDEX[key] = {
-            "cand": cand.transform(barrier),
-            "t_assigned": t_assigned,
-            "t_cand": t_cand.transform(barrier),
-            "pq_cand": pq_view,
-            # the adc arm's TWO independent reads of the same store
-            # (codes-only coarse scan, vector-fetch refine scan) — two
-            # frames so each scan prunes its own columns; opened once
-            # here so per-search cost excludes file listing, like every
-            # other arm's memoized input
-            "adc_codes": read_ann_index(spark, store),
-            "adc_vecs": read_ann_index(spark, store),
-            "store": store,
-        }
-    return _IVF_INDEX[key]
+    # the pq (reconstruct-coarse) arm derives deq from the stored
+    # codes as a map-side lookup riding the scan
+    pq_view = read_ann_index(spark, store).withColumn(
+        "deq",
+        pq_codes_reconstruct(
+            F.col("codes"),
+            F.element_at(cent_lit, (F.col("cell_id") + 1).cast("int")),
+            seed_vecs,
+            PQ_M,
+            EMB_DIM,
+        ),
+    )
+    return {
+        "cand": cand.transform(barrier),
+        "t_assigned": t_assigned,
+        "t_cand": t_cand.transform(barrier),
+        "pq_cand": pq_view,
+        # the adc arm's TWO independent reads of the same store
+        # (codes-only coarse scan, vector-fetch refine scan) — two
+        # frames so each scan prunes its own columns; opened once
+        # here so per-search cost excludes file listing, like every
+        # other arm's memoized input
+        "adc_codes": read_ann_index(spark, store),
+        "adc_vecs": read_ann_index(spark, store),
+        "store": store,
+    }
 
 
 def _ivf_training_probe(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,6 +31,7 @@ from sentinela_py_spark.functions.text_stats import (
     winnow_fingerprint,
     word_shingles,
 )
+from sentinela_py_spark.plans.memo import memo
 from sentinela_py_spark.plans.registry import (
     method_arm as _method_arm,
     register,
@@ -1532,9 +1533,9 @@ def q_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     6dp-rounded rule columns centered/scaled toward unit range + bias +
     NULL-coalesced char-LM score (97% label agreement, keeps ~75% of
     the driver corpus — a real filter, not keep-all).
-    The trained weights are MEMOIZED per (applicationId, sf_dir) — the
-    `_TRAINED_CODEBOOKS` deployment semantics: a quality model trains
-    once and scores every batch after — so the registered query prices
+    The trained weights are memoized per session and sf_dir
+    (`_qr_model_weights`): a quality model trains once and scores every
+    batch after, as a deployment does — so the registered query prices
     as the feature pipeline + a literal-weight projection; the bench
     `model` arm calls training directly (memo bypassed) so its cost
     stays a measured number. The oracle replays the ENTIRE descent via
@@ -1982,19 +1983,13 @@ def qr_model_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-# Trained quality-model weights are a pure function of the corpus
-# (deterministic descent, fixed schedule), so one training per
-# (applicationId, sf_dir) serves every bench rep and correctness run —
-# the _TRAINED_CODEBOOKS deployment semantics. Evicted by
-# plans.simops.clear_index_memos alongside the other memos.
-_QR_MODEL: dict[tuple[str, str], list[float]] = {}
-
-
 def _qr_model_weights(spark: SparkSession, sf_dir: str) -> list[float]:
+    """The quality model's SVM weights, trained once per session and
+    sf_dir. Training is deterministic (fixed descent schedule), so one
+    training serves every bench rep and correctness run."""
     from sentinela_py_spark.functions.linear_model import svm_weights
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _QR_MODEL:
+    def build() -> list[float]:
         d = ensure_min_partitions(load_table(spark, sf_dir, "documents"))
         # the training view coalesces the (bytes-tiny: ~80 B/doc)
         # checkpointed feature frame so each of the ITERS aggregate jobs
@@ -2002,8 +1997,9 @@ def _qr_model_weights(spark: SparkSession, sf_dir: str) -> list[float]:
         # docs drop the coalesce — the per-job overhead is then
         # negligible next to the scan and the tree-aggregate wants the
         # parallelism
-        _QR_MODEL[key] = svm_weights(_qr_trainable(d).coalesce(4), _QR_FEATS)
-    return _QR_MODEL[key]
+        return svm_weights(_qr_trainable(d).coalesce(4), _QR_FEATS)
+
+    return memo("qr_model", spark, sf_dir, build)
 
 
 def _qr_unigram(d: DataFrame) -> DataFrame:

@@ -578,7 +578,8 @@ def image_dedup_batch_against_corpus(
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
     """One micro-batch of IMAGE near-dup rejection at ingest — the
-    streaming twin of `plans.mmops.q_image_neardup`: a LAION-style
+    streaming twin of the `image` and `image_probe` arms of
+    `plans.mmops.q_signature_neardup`: a LAION-style
     multimodal lake dedups arriving images against the accepted corpus
     BY PERCEPTUAL HASH before any text screen runs. A thin binding of
     `signature_dedup_batch_against_corpus` (the generic screen
@@ -622,7 +623,8 @@ def audio_dedup_batch_against_corpus(
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
     """One micro-batch of AUDIO near-dup rejection at ingest — the
-    streaming twin of `plans.mmops.q_audio_neardup`: arriving
+    streaming twin of the `audio` arm of
+    `plans.mmops.q_signature_neardup`: arriving
     clips are fingerprinted (`operators.multimodal.audio_fingerprint` —
     decode_wav → 64 gain-invariant frame-energy sign bits + decoded-
     sample md5) and screened by the same generic signature machinery as

@@ -222,8 +222,8 @@ def _gain(wav: bytes) -> bytes:
 
 
 class TestAudioDedupScreenAtIngest:
-    """Streaming twin of q_audio_neardup (r13): perceptual near-dup
-    rejection at ingest through the GENERIC signature screen
+    """Streaming twin of q_signature_neardup's `audio` arm: perceptual
+    near-dup rejection at ingest through the GENERIC signature screen
     (`signature_dedup_batch_against_corpus` — one body shared with the
     image screen) under the audio signer. Pins the same contracts as
     the image suite: exact-copy collapse, within-batch components,

@@ -351,8 +351,8 @@ def _brighten(ppm: bytes) -> bytes:
 
 
 class TestImageDedupScreenAtIngest:
-    """Streaming twin of q_image_neardup (r12): perceptual near-dup
-    rejection at ingest with the shared screen contracts — exact-copy
+    """Streaming twin of q_signature_neardup's `image` and `image_probe`
+    arms: perceptual near-dup rejection at ingest with the shared screen contracts — exact-copy
     collapse, within-batch components, cross-corpus probe against the
     persistent signature store, epoch-keyed replay determinism."""
 

@@ -11,6 +11,9 @@ job; these pin the SEMANTICS."""
 
 from __future__ import annotations
 
+import os
+from types import SimpleNamespace
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -267,28 +270,20 @@ def test_miscaption_family_dies_at_the_clip_screen(spark, routing):
 
 
 def test_clear_index_memos_empties_every_memo(monkeypatch):
-    """clear_index_memos deletes every temp store it registered, the
+    """clear_index_memos deletes every temp tree it registered, the
     multimodal state root among them, so no memo may survive it pointing
     at a deleted directory."""
-    from sentinela_py_spark.plans import curation, funnelops, mmops, simops, textops
+    from sentinela_py_spark.plans import memo as memo_mod
+    from sentinela_py_spark.plans.simops import clear_index_memos
 
-    memos = [
-        textops._QR_MODEL,
-        curation._CURATED_POOL,
-        simops._TRAINED_CODEBOOKS,
-        simops._IVF_INDEX,
-        mmops._MM_STATE,
-        funnelops._FUNNEL_STATE,
-    ]
-    saved = [dict(m) for m in memos]
-    # keep the session's own stores on disk: clear only an empty list
-    monkeypatch.setattr(simops, "_ANN_STORES", [])
-    try:
-        for m in memos:
-            m[("sentinel-app", "sentinel-sf")] = "sentinel"
-        simops.clear_index_memos()
-        assert [len(m) for m in memos] == [0] * len(memos)
-    finally:
-        for m, before in zip(memos, saved):
-            m.clear()
-            m.update(before)
+    # empty state of our own, so the session's memos and trees survive
+    monkeypatch.setattr(memo_mod, "_MEMO", {})
+    monkeypatch.setattr(memo_mod, "_TREES", set())
+    app = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="sentinel-app"))
+    for name in ("qr_model", "curated_pool", "codebooks", "ivf_index", "funnel", "mmingest"):
+        memo_mod.memo(name, app, "sentinel-sf", lambda: "sentinel")
+    tree = memo_mod.temp_tree("mmingest", app, "sentinel-sf")
+    os.makedirs(tree, exist_ok=True)
+    clear_index_memos()
+    assert memo_mod._MEMO == {}
+    assert not os.path.exists(tree)
