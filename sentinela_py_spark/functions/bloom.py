@@ -156,7 +156,6 @@ def bloom_build(
 
 def eval_gram_bloom(
     eval_docs: DataFrame,
-    text_col: str = "text",
     n_hashes: int | None = None,
     m_bits: int | None = None,
 ) -> DataFrame:
@@ -165,7 +164,7 @@ def eval_gram_bloom(
     barrier so every micro-batch probes the one built row. ``None``
     geometry means the library defaults, as on the probe side."""
     keys = eval_docs.select(
-        F.explode(F.array_distinct(word_shingles(F.col(text_col), k=5))).alias("key")
+        F.explode(F.array_distinct(word_shingles(F.col("text"), k=5))).alias("key")
     )
     return bloom_build(
         keys,

@@ -1,4 +1,4 @@
-"""Canonical-JSON SHA-256 hashing (M14) and hash-gated idempotency (F6).
+"""Canonical-JSON SHA-256 hashing (M14).
 
 The reference computes idempotency hashes as SHA-256 over
 ``json.dumps(payload, ensure_ascii=False, sort_keys=True)``
@@ -56,25 +56,6 @@ def canonical_sha256_udf(col: pd.Series) -> pd.Series:
     return col.map(lambda v: None if v is None else canonical_sha256(_to_plain(v)))
 
 
-def with_payload_hash(df: DataFrame, payload_col: Column, out_col: str = "payload_hash") -> DataFrame:
+def with_payload_hash(df: DataFrame, payload_col: Column) -> DataFrame:
     """Attach the canonical digest of a (possibly nested) payload column."""
-    return df.withColumn(out_col, canonical_sha256_udf(payload_col))
-
-
-def filter_changed(
-    df: DataFrame,
-    new_hash_col: str = "payload_hash",
-    stored_hash_col: str = "cities_extraction.hash",
-    force: bool = False,
-    only_missing: bool = False,
-) -> DataFrame:
-    """Hash-gated idempotent recompute (reference
-    city_extraction_job.py:145-167): skip rows whose stored hash equals the
-    newly computed one, unless ``force``; ``only_missing`` keeps only rows
-    that have no stored hash at all."""
-    stored = F.col(stored_hash_col)
-    if only_missing:
-        return df.filter(stored.isNull() | (stored == ""))
-    if force:
-        return df
-    return df.filter(stored.isNull() | (stored == "") | (stored != F.col(new_hash_col)))
+    return df.withColumn("payload_hash", canonical_sha256_udf(payload_col))

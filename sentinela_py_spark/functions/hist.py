@@ -2,7 +2,7 @@
 path, factored out of q_price_percentiles (r11) so the CCNet perplexity
 tertiles reuse ONE definition instead of a second copy of the algebra.
 
-State is ``bins`` longs per group versus the exact quantile's
+State is ``HIST_BINS`` longs per group versus the exact quantile's
 distinct-value→count map (Spark's exact `percentile` buffers that map
 per group and funnels the dominant group through a single
 final-aggregation task — the skew bound the ppl-tertile site documents).
@@ -21,9 +21,9 @@ from pyspark.sql import functions as F
 HIST_BINS = 64
 
 
-def _width(bins: int):
+def _width():
     return F.when(
-        F.col("hi") > F.col("lo"), (F.col("hi") - F.col("lo")) / bins
+        F.col("hi") > F.col("lo"), (F.col("hi") - F.col("lo")) / HIST_BINS
     ).otherwise(F.lit(1.0))
 
 
@@ -33,20 +33,18 @@ def hist_quantile_est(
     val_col: str,
     stats: DataFrame,
     qs: dict[str, float],
-    bins: int = HIST_BINS,
-    dp: int = 4,
 ) -> DataFrame:
-    """``bins``-bin equi-width histogram estimate of the ``qs`` quantiles
+    """``HIST_BINS``-bin equi-width histogram estimate of the ``qs`` quantiles
     of ``val_col`` per ``group_cols`` group. ``stats`` carries the
     per-group ``lo``/``hi`` (ride them on the caller's existing exact
     aggregation — the histogram then costs ONE extra scan, the bin
     counts). NULL values are excluded (matching exact `percentile` /
     `quantile_cont` semantics); a group with no non-null values gets
     NULL estimates (the cums guard — element_at(counts, 0) would throw
-    otherwise). Returns group_cols + one rounded-``dp`` column per qs
+    otherwise). Returns group_cols + one 4-decimal column per qs
     entry."""
     spark = values.sparkSession
-    width = _width(bins)
+    width = _width()
     binned = (
         values.filter(F.col(val_col).isNotNull())
         .join(F.broadcast(stats), group_cols)
@@ -54,13 +52,13 @@ def hist_quantile_est(
             *group_cols,
             F.least(
                 F.floor((F.col(val_col) - F.col("lo")) / width),
-                F.lit(bins - 1),
+                F.lit(HIST_BINS - 1),
             ).cast("int").alias("bin"),
         )
         .groupBy(*group_cols, "bin")
         .agg(F.count("*").alias("cnt"))
     )
-    bin_ids = spark.range(bins).select(F.col("id").cast("int").alias("bin"))
+    bin_ids = spark.range(HIST_BINS).select(F.col("id").cast("int").alias("bin"))
     dense = (
         stats.crossJoin(F.broadcast(bin_ids))
         .join(binned, [*group_cols, "bin"], "left")
@@ -74,7 +72,7 @@ def hist_quantile_est(
         ).alias("counts")
     )
     cums = F.transform(
-        F.sequence(F.lit(1), F.lit(bins)),
+        F.sequence(F.lit(1), F.lit(HIST_BINS)),
         lambda i: F.aggregate(
             F.slice(F.col("counts"), F.lit(1), i),
             F.lit(0).cast("long"),
@@ -83,7 +81,7 @@ def hist_quantile_est(
     )
 
     def est(q: float) -> F.Column:
-        total = F.element_at(F.col("cums"), bins)
+        total = F.element_at(F.col("cums"), HIST_BINS)
         r = F.greatest(
             F.ceil(F.lit(q) * total).cast("long"), F.lit(1).cast("long")
         )
@@ -110,8 +108,8 @@ def hist_quantile_est(
         # so the algebra stays identical across engines.
         return F.when(
             total > 0,
-            F.when(F.col("hi") > F.col("lo"), F.round(raw, dp)).otherwise(
-                F.round(F.col("lo"), dp)
+            F.when(F.col("hi") > F.col("lo"), F.round(raw, 4)).otherwise(
+                F.round(F.col("lo"), 4)
             ),
         )
 
@@ -126,7 +124,6 @@ def hist_cums_sql(
     src: str,
     group_col: str,
     val_col: str,
-    bins: int = HIST_BINS,
     prefix: str = "",
 ) -> str:
     """DuckDB CTE chain ``{p}stats/{p}binned/{p}hist/{p}cums`` mirroring
@@ -142,8 +139,8 @@ def hist_cums_sql(
     {p}binned AS (
       SELECT v.{group_col},
              CAST(LEAST(FLOOR((v.{val_col} - s.lo) /
-               (CASE WHEN s.hi > s.lo THEN (s.hi - s.lo) / {bins}.0 ELSE 1.0 END)),
-               {bins - 1}) AS INT) AS bin,
+               (CASE WHEN s.hi > s.lo THEN (s.hi - s.lo) / {HIST_BINS}.0 ELSE 1.0 END)),
+               {HIST_BINS - 1}) AS INT) AS bin,
              COUNT(*) AS cnt
       FROM {src} v JOIN {p}stats s USING ({group_col})
       WHERE v.{val_col} IS NOT NULL
@@ -155,34 +152,33 @@ def hist_cums_sql(
       FROM (
         SELECT s.{group_col}, g.i AS bin, COALESCE(b.cnt, 0) AS cnt
         FROM {p}stats s
-        CROSS JOIN (SELECT UNNEST(generate_series(0, {bins - 1})) AS i) g
+        CROSS JOIN (SELECT UNNEST(generate_series(0, {HIST_BINS - 1})) AS i) g
         LEFT JOIN {p}binned b ON b.{group_col} = s.{group_col} AND b.bin = g.i
       ) d GROUP BY 1
     ),
     {p}cums AS (
       SELECT {group_col}, counts,
-             list_transform(generate_series(1, {bins}),
+             list_transform(generate_series(1, {HIST_BINS}),
                             i -> CAST(list_sum(counts[1:i]) AS BIGINT)) AS cums
       FROM {p}hist
     )"""
 
 
-def hist_est_sql(q: float, bins: int = HIST_BINS, dp: int = 4, stats_alias: str = "s") -> str:
+def hist_est_sql(q: float) -> str:
     """The per-quantile estimate expression over a joined ``{p}cums`` ×
     ``{p}stats`` row (``counts``/``cums`` columns in scope, lo/hi via
-    ``stats_alias``) — the SQL twin of `hist_quantile_est`'s ``est``,
+    alias ``s``) — the SQL twin of `hist_quantile_est`'s ``est``,
     including the empty-group NULL guard and the degenerate-group
     (hi == lo → lo) short-circuit."""
-    s = stats_alias
-    r = f"GREATEST(CAST(CEIL({q!r} * cums[{bins}]) AS BIGINT), 1)"
+    r = f"GREATEST(CAST(CEIL({q!r} * cums[{HIST_BINS}]) AS BIGINT), 1)"
     pos = f"list_position(list_transform(cums, c -> c >= {r}), true)"
     cb = f"(CASE WHEN {pos} = 1 THEN 0 ELSE cums[{pos} - 1] END)"
-    width = f"(CASE WHEN {s}.hi > {s}.lo THEN ({s}.hi - {s}.lo) / {bins}.0 ELSE 1.0 END)"
+    width = f"(CASE WHEN s.hi > s.lo THEN (s.hi - s.lo) / {HIST_BINS}.0 ELSE 1.0 END)"
     return (
-        f"(CASE WHEN cums[{bins}] > 0 THEN "
-        f"CASE WHEN {s}.hi > {s}.lo THEN "
-        f"ROUND({s}.lo + {width} * (CAST({pos} - 1 AS DOUBLE)"
-        f" + CAST({r} - {cb} AS DOUBLE) / CAST(counts[{pos}] AS DOUBLE)), {dp})"
-        f" ELSE ROUND({s}.lo, {dp}) END"
+        f"(CASE WHEN cums[{HIST_BINS}] > 0 THEN "
+        "CASE WHEN s.hi > s.lo THEN "
+        f"ROUND(s.lo + {width} * (CAST({pos} - 1 AS DOUBLE)"
+        f" + CAST({r} - {cb} AS DOUBLE) / CAST(counts[{pos}] AS DOUBLE)), 4)"
+        " ELSE ROUND(s.lo, 4) END"
         f" ELSE NULL END)"
     )

@@ -77,18 +77,16 @@ def _quant(x) -> F.Column:
     return F.floor(x.cast("double") * KMEANS_SCALE + F.lit(0.5)).cast("long")
 
 
-def kmeans_seed_centroids(
-    e: DataFrame, k: int, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def kmeans_seed_centroids(e: DataFrame, k: int) -> DataFrame:
     """(cell_id, centroid): deterministic init — the k corpus vectors with
     the smallest md5(id) digests, numbered 0..k-1 in digest order. The
     global sort is a top-k over (16-byte digest, id) — driver-cheap at any
     corpus size; the row_number window runs on the k surviving rows only."""
     seeds = (
         e.select(
-            F.col(id_col).alias("sid"),
-            F.col(vec_col).alias("centroid"),
-            F.md5(F.col(id_col).cast("string")).alias("mk"),
+            F.col("vec_id").alias("sid"),
+            F.col("embedding").alias("centroid"),
+            F.md5(F.col("vec_id").cast("string")).alias("mk"),
         )
         .orderBy("mk", "sid")
         .limit(k)
@@ -139,7 +137,6 @@ def plan_ivf_config(
     n_vectors: int,
     target_cell_size: int,
     nprobe: int = 1,
-    train_rows_per_cell: int = 256,
 ) -> IvfSizing:
     """Compute n_cells and the training-sample size for a corpus instead
     of the 8-cell registry demo constant — completing the planner family
@@ -150,7 +147,7 @@ def plan_ivf_config(
       ``n_cells = round(n / target_cell_size)`` bounds per-query
       candidate work at nprobe·target (FAISS's guideline n_cells ≈ √n is
       this with target = √n);
-    - **training** needs only ~``train_rows_per_cell``·k vectors (k-means
+    - **training** needs only ~256·k vectors (k-means
       quality saturates there — the FAISS default trains on ≤256·k), so
       ``train_frac`` is that over n, the value `kmeans_centroids_local`
       takes;
@@ -160,12 +157,10 @@ def plan_ivf_config(
 
     Example (tests pin it): n=10^9, target 10^4 → 10^5 cells, train on
     ~25.6M vectors (2.6%), a query scans 10^-5 of the corpus per probe."""
-    if min(n_vectors, target_cell_size, nprobe, train_rows_per_cell) <= 0:
-        raise ValueError(
-            "n_vectors, target_cell_size, nprobe and train_rows_per_cell must be positive"
-        )
+    if min(n_vectors, target_cell_size, nprobe) <= 0:
+        raise ValueError("n_vectors, target_cell_size and nprobe must be positive")
     n_cells = max(1, round(n_vectors / target_cell_size))
-    train_rows = min(n_vectors, train_rows_per_cell * n_cells)
+    train_rows = min(n_vectors, 256 * n_cells)
     occupancy = n_vectors / n_cells
     return IvfSizing(
         n_cells=n_cells,
@@ -176,9 +171,7 @@ def plan_ivf_config(
     )
 
 
-def training_sample(
-    e: DataFrame, train_frac: float, id_col: str = "vec_id"
-) -> DataFrame:
+def training_sample(e: DataFrame, train_frac: float) -> DataFrame:
     """Deterministic md5-threshold subsample for codebook TRAINING — the
     FAISS practice at scale: k-means quality saturates around ~256
     vectors per centroid, so training on the full corpus multiplies
@@ -195,10 +188,10 @@ def training_sample(
         raise ValueError(f"train_frac must be in (0, 1], got {train_frac}")
     if train_frac == 1.0:
         return e
-    return e.filter(md5_uniform(id_col) < F.lit(float(train_frac)))
+    return e.filter(md5_uniform("vec_id") < F.lit(float(train_frac)))
 
 
-def training_sample_sql(train_frac: float, id_col: str = "vec_id") -> str:
+def training_sample_sql(train_frac: float) -> str:
     """DuckDB twin of ``training_sample`` as a WHERE predicate — the
     variate renders through the shared `operators.sampling
     .md5_uniform_sql` (one engine-pair-sensitive idiom, one rendering)."""
@@ -206,18 +199,15 @@ def training_sample_sql(train_frac: float, id_col: str = "vec_id") -> str:
 
     if train_frac == 1.0:
         return "TRUE"
-    return f"({md5_uniform_sql(id_col)} < {float(train_frac)!r})"
+    return f"({md5_uniform_sql('vec_id')} < {float(train_frac)!r})"
 
 
 def kmeans_centroids_local(
     e: DataFrame,
     k: int,
     iters: int = KMEANS_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     train_frac: float = 1.0,
-    seeds: list[tuple[int, list[float]]] | None = None,
 ) -> list[tuple[int, list[float]]]:
     """``iters`` Lloyd iterations from the md5-ranked init — every step
     deterministic (module note), so the same chain in DuckDB
@@ -238,25 +228,18 @@ def kmeans_centroids_local(
     (`training_sample`) — the standard subsampled-training setup; the
     returned codebook then ASSIGNS the full corpus as usual. The
     registered demo trains on the whole (tiny) fixture corpus; a 100 TB
-    deployment sizes the sample at ~256·k vectors.
-
-    ``seeds`` injects pre-collected init centroids (rank order, as
-    `kmeans_seed_centroids` returns them) — callers training SEVERAL
-    codebooks share one seed scan (`plans.simops._train_codebooks`)."""
+    deployment sizes the sample at ~256·k vectors."""
     if train_frac < 1.0:
-        e = training_sample(e, train_frac, id_col)
-    if seeds is None:
-        rows = kmeans_seed_centroids(e, k, id_col, vec_col).collect()
-        cents = [(int(r["cell_id"]), [float(x) for x in r["centroid"]]) for r in rows]
-    else:
-        cents = [(int(cid), [float(x) for x in vec]) for cid, vec in seeds[:k]]
+        e = training_sample(e, train_frac)
+    rows = kmeans_seed_centroids(e, k).collect()
+    cents = [(int(r["cell_id"]), [float(x) for x in r["centroid"]]) for r in rows]
     from sentinela_py_spark.plans.simops import assign_cells_literal
 
     for _ in range(iters):
-        assigned = assign_cells_literal(e, cents, id_col=id_col, vec_col=vec_col)
+        assigned = assign_cells_literal(e, cents)
         upd = {
             int(r["cell_id"]): [float(x) for x in r["centroid"]]
-            for r in quantized_mean_centroids(assigned, ["cell_id"], vec_col, dim).collect()
+            for r in quantized_mean_centroids(assigned, ["cell_id"], "embedding", dim).collect()
         }
         cents = [(cid, upd.get(cid, old)) for cid, old in cents]
     return cents
@@ -266,15 +249,13 @@ def kmeans_centroids(
     e: DataFrame,
     k: int,
     iters: int = KMEANS_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
     """(cell_id, centroid) as a lineage-free local DataFrame — the frame
     form of `kmeans_centroids_local` for callers that feed
     `plans.simops.assign_cells` or persist the codebook."""
     return e.sparkSession.createDataFrame(
-        kmeans_centroids_local(e, k, iters, id_col, vec_col, dim),
+        kmeans_centroids_local(e, k, iters, dim=dim),
         "cell_id bigint, centroid array<double>",
     )
 
@@ -282,10 +263,8 @@ def kmeans_centroids(
 def ivf_residuals(
     e: DataFrame,
     cents: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, residual as ``vec_col``, cell_id): each vector minus its
+    """(vec_id, residual as ``embedding``, cell_id): each vector minus its
     assigned trained centroid — the frame FAISS IVFPQ trains and encodes
     product-quantization codewords on (``vec − centroid(cell(vec))``).
     Map-only: the literal-inlined argmax assignment plus one zip_with
@@ -295,16 +274,16 @@ def ivf_residuals(
     oracle-exact (`ivf_residuals_sql`)."""
     from sentinela_py_spark.plans.simops import assign_cells_literal
 
-    assigned = assign_cells_literal(e, cents, id_col=id_col, vec_col=vec_col)
+    assigned = assign_cells_literal(e, cents)
     from sentinela_py_spark.functions.litutil import fast_lit
 
     lit = fast_lit([[float(x) for x in v] for _, v in sorted(cents)], 2)
     c = F.element_at(lit, (F.col("cell_id") + 1).cast("int"))
     return assigned.select(
-        id_col,
+        "vec_id",
         F.zip_with(
-            F.col(vec_col), c, lambda x, cc: x.cast("double") - cc.cast("double")
-        ).alias(vec_col),
+            F.col("embedding"), c, lambda x, cc: x.cast("double") - cc.cast("double")
+        ).alias("embedding"),
         "cell_id",
     )
 
@@ -313,16 +292,14 @@ def ivf_residuals_sql(
     dim: int,
     assigned_rel: str = "tassigned",
     cents_rel: str = "km_cents",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> str:
     """DuckDB twin of ``ivf_residuals`` as a SELECT body (embed as a
     CTE): joins an already-assigned relation (id, vec, cell_id) to the
     trained-centroid relation and subtracts element-wise."""
     return f"""
-      SELECT a.{id_col},
+      SELECT a.vec_id,
              list_transform(generate_series(1, {dim}),
-                            i -> CAST(a.{vec_col}[i] AS DOUBLE) - c.centroid[i]) AS {vec_col},
+                            i -> CAST(a.embedding[i] AS DOUBLE) - c.centroid[i]) AS embedding,
              a.cell_id
       FROM {assigned_rel} a JOIN {cents_rel} c ON a.cell_id = c.cell_id
 """
@@ -343,9 +320,6 @@ def pq_train_codebooks_local(
     k: int,
     iters: int = KMEANS_ITERS,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed_vectors: list[list[float]] | None = None,
 ) -> list[list[list[float]]]:
     """Per-subspace k-means for PRODUCT-QUANTIZATION codewords —
     ``books[mi][j]`` = codeword j of subspace mi (dim/m doubles). The
@@ -361,36 +335,28 @@ def pq_train_codebooks_local(
     All m subspaces train in ONE job per iteration: the corpus explodes
     to (id, m, sub) rows — m× the rows but 1/m the vector width, so the
     scan bytes are unchanged — and the per-(m, cw) integer sums shuffle
-    m·k·(dim/m) = k·dim longs total, same as the IVF loop.
-
-    ``seed_vectors`` injects the k md5-rank-ordered full-dim seeds
-    (skipping this function's own seed scan) — the IVF and PQ trainings
-    share one ranking by construction, so `_train_codebooks` collects it
-    once and feeds both."""
+    m·k·(dim/m) = k·dim longs total, same as the IVF loop."""
     d = dim // m
-    if seed_vectors is None:
-        rows = kmeans_seed_centroids(e, k, id_col, vec_col).collect()
-        seeds = [
-            [float(x) for x in r["centroid"]]
-            for r in sorted(rows, key=lambda r: r["cell_id"])
-        ]
-    else:
-        seeds = [[float(x) for x in vec] for vec in seed_vectors[:k]]
+    rows = kmeans_seed_centroids(e, k).collect()
+    seeds = [
+        [float(x) for x in r["centroid"]]
+        for r in sorted(rows, key=lambda r: r["cell_id"])
+    ]
     books = [[vec[mi * d : (mi + 1) * d] for vec in seeds] for mi in range(m)]
 
     subs = e.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(mi).alias("m"), F.slice(F.col(vec_col), mi * d + 1, d).alias("sub")
+                        F.lit(mi).alias("m"), F.slice(F.col("embedding"), mi * d + 1, d).alias("sub")
                     )
                     for mi in range(m)
                 ]
             )
         ).alias("ms"),
-    ).select(id_col, F.col("ms.m").alias("m"), F.col("ms.sub").alias("sub"))
+    ).select("vec_id", F.col("ms.m").alias("m"), F.col("ms.sub").alias("sub"))
 
     from sentinela_py_spark.functions.litutil import fast_lit
 
@@ -432,8 +398,6 @@ def pq_train_sql(
     iters: int = KMEANS_ITERS,
     dim: int = 64,
     src: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     prefix: str = "pqt",
 ) -> str:
     """DuckDB twin of ``pq_train_codebooks_local`` as chained CTE
@@ -460,13 +424,13 @@ def pq_train_sql(
     )
     parts = [
         f"""{prefix}_subs AS MATERIALIZED (
-      SELECT {id_col} AS vec_id, mi.m, {vec_col}[mi.m*{d}+1 : mi.m*{d}+{d}] AS sub
+      SELECT vec_id, mi.m, embedding[mi.m*{d}+1 : mi.m*{d}+{d}] AS sub
       FROM {src} CROSS JOIN (SELECT UNNEST(generate_series(0, {m - 1})) AS m) mi
     )""",
         f"""{prefix}_cents0 AS MATERIALIZED (
-      SELECT mi.m, r.cw, r.{vec_col}[mi.m*{d}+1 : mi.m*{d}+{d}] AS sub
+      SELECT mi.m, r.cw, r.embedding[mi.m*{d}+1 : mi.m*{d}+{d}] AS sub
       FROM (
-        SELECT {vec_col}, ROW_NUMBER() OVER (ORDER BY md5(CAST({id_col} AS VARCHAR)), {id_col}) - 1 AS cw
+        SELECT embedding, ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cw
         FROM {src}
       ) r CROSS JOIN (SELECT UNNEST(generate_series(0, {m - 1})) AS m) mi
       WHERE r.cw < {k}
@@ -525,9 +489,6 @@ def kmeans_cents_sql(
     k: int,
     iters: int = KMEANS_ITERS,
     dim: int = 64,
-    src: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     prefix: str = "km",
     dot_sql_fmt: str | None = None,
     normsq_sql_fmt: str | None = None,
@@ -543,11 +504,12 @@ def kmeans_cents_sql(
 
     dot = dot_sql_fmt or _DOT_SQL
     normsq = normsq_sql_fmt or _NORMSQ_SQL
+    src = "embeddings"
     if train_frac < 1.0:
-        src = f"(SELECT * FROM {src} WHERE {training_sample_sql(train_frac, id_col)})"
+        src = f"(SELECT * FROM embeddings WHERE {training_sample_sql(train_frac)})"
     s = KMEANS_SCALE
     sums = ", ".join(
-        f"SUM(CAST(floor(CAST({vec_col}[{j + 1}] AS DOUBLE) * {s} + 0.5) AS BIGINT)) AS s{j}"
+        f"SUM(CAST(floor(CAST(embedding[{j + 1}] AS DOUBLE) * {s} + 0.5) AS BIGINT)) AS s{j}"
         for j in range(dim)
     )
     mean = ", ".join(
@@ -555,9 +517,9 @@ def kmeans_cents_sql(
     )
     parts = [
         f"""{prefix}_cents0 AS MATERIALIZED (
-      SELECT cell_id, list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS centroid FROM (
-        SELECT {id_col}, {vec_col},
-               ROW_NUMBER() OVER (ORDER BY md5(CAST({id_col} AS VARCHAR)), {id_col}) - 1 AS cell_id
+      SELECT cell_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS centroid FROM (
+        SELECT vec_id, embedding,
+               ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cell_id
         FROM {src}
       ) WHERE cell_id < {k}
     )"""
@@ -567,15 +529,15 @@ def kmeans_cents_sql(
         # plans.simops._guarded_cos_sql): a zero-norm centroid's cosine is
         # NaN in Spark, NULL in DuckDB — both must rank LAST (−2.0)
         raw = (
-            f"{dot.format(a=f'e.{vec_col}', b='c.centroid')}"
-            f" / (SQRT({normsq.format(a=f'e.{vec_col}')}) * SQRT({normsq.format(a='c.centroid')}))"
+            f"{dot.format(a='e.embedding', b='c.centroid')}"
+            f" / (SQRT({normsq.format(a='e.embedding')}) * SQRT({normsq.format(a='c.centroid')}))"
         )
         cos = f"COALESCE((CASE WHEN isnan({raw}) THEN -2.0 ELSE ROUND({raw}, 6) END), -2.0)"
         parts.append(
             f"""{prefix}_asg{i} AS (
-      SELECT {id_col}, {vec_col}, cell_id FROM (
-        SELECT e.{id_col}, e.{vec_col}, c.cell_id,
-               ROW_NUMBER() OVER (PARTITION BY e.{id_col}
+      SELECT vec_id, embedding, cell_id FROM (
+        SELECT e.vec_id, e.embedding, c.cell_id,
+               ROW_NUMBER() OVER (PARTITION BY e.vec_id
                                   ORDER BY {cos} DESC, c.cell_id) AS rn
         FROM {src} e CROSS JOIN {prefix}_cents{i} c
       ) WHERE rn = 1

@@ -78,15 +78,11 @@ def linear_score(feature_cols: list[str], weights: list[float]) -> Column:
 def svm_weights(
     features: DataFrame,
     feature_cols: list[str],
-    label_col: str = "y",
     iters: int = SVM_ITERS,
-    eta: float = SVM_ETA,
-    decay: float = SVM_DECAY,
-    lam: float = SVM_LAMBDA,
 ) -> list[float]:
     """Train the L2-regularized linear SVM by decaying-step subgradient
     descent; returns the d+1 weights (include a constant 1.0 column for
-    the bias). ``label_col`` must be DOUBLE ±1.0.
+    the bias). The label column ``y`` must be DOUBLE ±1.0.
 
     Per iteration: margin m = y·(w·x) with the CURRENT driver-resident
     weights as literals; every row with m < 1 contributes −y·x_j to
@@ -114,12 +110,12 @@ def svm_weights(
         raise ValueError("svm_weights: empty feature frame")
     w = [0.0] * len(feature_cols)
     for t in range(iters):
-        eta_t = eta / (1.0 + decay * t)
-        margin = F.col(label_col) * linear_score(feature_cols, w)
+        eta_t = SVM_ETA / (1.0 + SVM_DECAY * t)
+        margin = F.col("y") * linear_score(feature_cols, w)
         terms = [
             F.coalesce(
                 F.sum(
-                    F.when(margin < 1.0, (-F.col(label_col)) * F.col(c))
+                    F.when(margin < 1.0, (-F.col("y")) * F.col(c))
                     .otherwise(F.lit(0.0))
                     .cast("decimal(28,15)")
                 ).cast("double"),
@@ -128,7 +124,7 @@ def svm_weights(
             for j, c in enumerate(feature_cols)
         ]
         row = features.agg(*terms).collect()[0]
-        w = [w[j] - eta_t * (lam * w[j] + row[f"g{j}"] / n) for j in range(len(w))]
+        w = [w[j] - eta_t * (SVM_LAMBDA * w[j] + row[f"g{j}"] / n) for j in range(len(w))]
     return w
 
 
@@ -137,10 +133,6 @@ def svm_weights_sql(
     id_expr: str,
     feature_exprs: list[str],
     label_expr: str,
-    iters: int = SVM_ITERS,
-    eta: float = SVM_ETA,
-    decay: float = SVM_DECAY,
-    lam: float = SVM_LAMBDA,
     prefix: str = "svm",
 ) -> str:
     """DuckDB twin of `svm_weights` as a chain of CTE definitions (no
@@ -170,7 +162,7 @@ def svm_weights_sql(
     )""",
     ]
     dot = " + ".join(f"w.w{j} * f.x{j}" for j in range(d))
-    for i in range(iters):
+    for i in range(SVM_ITERS):
         grads = ", ".join(
             f"COALESCE(CAST(SUM(CASE WHEN f.y * ({dot}) < 1"
             f" THEN CAST(-f.y * f.x{j} AS DECIMAL(28,15))"
@@ -188,9 +180,9 @@ def svm_weights_sql(
       FROM {prefix}_feat f CROSS JOIN {prefix}_w{i} w
     )"""
         )
-        eta_t = eta / (1.0 + decay * i)
+        eta_t = SVM_ETA / (1.0 + SVM_DECAY * i)
         updates = ", ".join(
-            f"w.w{j} - {eta_t!r} * ({lam!r} * w.w{j} + g.g{j} / g.n) AS w{j}"
+            f"w.w{j} - {eta_t!r} * ({SVM_LAMBDA!r} * w.w{j} + g.g{j} / g.n) AS w{j}"
             for j in range(d)
         )
         parts.append(
@@ -198,5 +190,5 @@ def svm_weights_sql(
       SELECT {updates} FROM {prefix}_g{i} g CROSS JOIN {prefix}_w{i} w
     )"""
         )
-    parts.append(f"{prefix}_w AS (SELECT * FROM {prefix}_w{iters})")
+    parts.append(f"{prefix}_w AS (SELECT * FROM {prefix}_w{SVM_ITERS})")
     return ",\n    ".join(parts)

@@ -36,11 +36,11 @@ class BatchMetrics:
         return out
 
 
-def observe_ingest(df: DataFrame, name: str = "ingest") -> tuple[DataFrame, BatchMetrics]:
+def observe_ingest(df: DataFrame) -> tuple[DataFrame, BatchMetrics]:
     """Counters over an ingest/enrichment batch: rows seen, rows with an
     empty text/title (the reference's skipped-empty counter, F5), distinct
     portals touched. Extend with operator-specific aggregates as needed."""
-    obs = Observation(name)
+    obs = Observation("ingest")
     observed = df.observe(
         obs,
         F.count(F.lit(1)).alias("seen"),
@@ -52,7 +52,7 @@ def observe_ingest(df: DataFrame, name: str = "ingest") -> tuple[DataFrame, Batc
     return observed, BatchMetrics(observation=obs)
 
 
-def observe_counts(df: DataFrame, name: str = "batch") -> tuple[DataFrame, BatchMetrics]:
+def observe_counts(df: DataFrame) -> tuple[DataFrame, BatchMetrics]:
     """Generic row counter for any stage sink (A7/K9)."""
-    obs = Observation(name)
+    obs = Observation("batch")
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), BatchMetrics(observation=obs)

@@ -57,17 +57,18 @@ def word_shingles(text: Column | str, k: int = 3) -> Column:
     return out
 
 
-def winnow_fingerprint(text: Column | str, k: int = 3, w: int = 4) -> Column:
+def winnow_fingerprint(text: Column | str) -> Column:
     """Winnowing (MOSS-style rolling-hash) document fingerprint: hash the
-    k-gram sequence, take the minimum of every w-wide sliding window, and
-    digest the sorted distinct minima. Local minima are position-stable,
+    k-gram sequence (k = 3), take the minimum of every w-wide (w = 4)
+    sliding window, and digest the sorted distinct minima. Local minima
+    are position-stable,
     so insertions/deletions outside a window leave the rest of the
     fingerprint intact — the property bag-of-words digests lack — while
     the w-window guarantees ≥ one selected hash per w consecutive grams
     (the winnowing coverage bound). Pure column algebra: the rolling
     window is w aligned slices folded with least(), the same
     no-per-element-subscripting shape as ``word_shingles``."""
-    sh = word_shingles(text, k)
+    sh = word_shingles(text, 3)
     h_expr = F.transform(
         sh, lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
     )
@@ -78,9 +79,9 @@ def winnow_fingerprint(text: Column | str, k: int = 3, w: int = 4) -> Column:
     # subtrees inside a single expression, and the w inline copies measured
     # ~5x slower at sf0.1.
     def _body(h: Column) -> Column:
-        n_win = F.greatest(F.size(h) - F.lit(w - 1), F.lit(0))
+        n_win = F.greatest(F.size(h) - F.lit(3), F.lit(0))
         mins = F.slice(h, F.lit(1), n_win)
-        for off in range(1, w):
+        for off in range(1, 4):
             mins = F.zip_with(mins, F.slice(h, F.lit(off + 1), n_win), lambda a, b: F.least(a, b))
         # Standard winnowing for sequences shorter than the window: one
         # window over the whole hash array (min of all hashes), NOT the
@@ -88,7 +89,7 @@ def winnow_fingerprint(text: Column | str, k: int = 3, w: int = 4) -> Column:
         # share one spurious 'duplicate' digest. Truly gram-less docs
         # (< k tokens) still share the empty-selection digest.
         mins = F.when(
-            (F.size(h) > 0) & (F.size(h) < w), F.array(F.array_min(h))
+            (F.size(h) > 0) & (F.size(h) < 4), F.array(F.array_min(h))
         ).otherwise(mins)
         selected = F.array_sort(F.array_distinct(mins))
         return F.md5(F.concat_ws("-", F.transform(selected, lambda x: x.cast("string"))))

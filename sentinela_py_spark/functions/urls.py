@@ -15,14 +15,6 @@ from pyspark.sql import functions as F
 _PAGE_PARAMS = ("page", "paged", "pagina", "pag", "p")
 
 
-def url_host(url: Column) -> Column:
-    return F.parse_url(url, F.lit("HOST"))
-
-
-def url_path(url: Column) -> Column:
-    return F.parse_url(url, F.lit("PATH"))
-
-
 def strip_pagination(url: Column) -> Column:
     """Remove pagination query params and trailing /N, -N, _N page
     suffixes; rstrip trailing slash (scraper.py:375-469 fallback set)."""

@@ -78,12 +78,12 @@ def dequantize_vec(q: Column) -> Column:
     )
 
 
-def quantize_embeddings(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     """Add a `q` struct column (codes/vmin/scale) next to the float
     vector — the write-time projection of the compressed lake layout
     (codes in their own parquet column; float column optional cold
     storage)."""
-    return embeddings.withColumn("q", quantize_vec(F.col(vec_col)))
+    return embeddings.withColumn("q", quantize_vec(F.col("embedding")))
 
 
 def coarse_refine_topk(
@@ -91,8 +91,6 @@ def coarse_refine_topk(
     queries: DataFrame,
     k: int,
     coarse_k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Two-stage ANN: rank candidates per query by cosine on DEQUANTIZED
     int8 codes (the 4×-smaller representation — at scale, the only pass
@@ -102,10 +100,10 @@ def coarse_refine_topk(
     Queries broadcast (small side); the coarse window partitions by
     query id, so per-query state is coarse_k rows. Output:
     (query_id, vec_id, cosine, rnk) — exact scores on the final ranking."""
-    qz = quantize_embeddings(embeddings, vec_col).select(
-        F.col(id_col), F.col(vec_col), dequantize_vec(F.col("q")).alias("deq")
+    qz = quantize_embeddings(embeddings).select(
+        F.col("vec_id"), F.col("embedding"), dequantize_vec(F.col("q")).alias("deq")
     )
-    return _coarse_refine(qz, queries, k, coarse_k, vec_col, id_col)
+    return _coarse_refine(qz, queries, k, coarse_k)
 
 
 def _coarse_refine(
@@ -113,8 +111,6 @@ def _coarse_refine(
     queries: DataFrame,
     k: int,
     coarse_k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Shared coarse→refine ranker over a (id, float vec, `deq` approx
     vec) input — int8 and PQ reconstructions both feed this."""
@@ -124,15 +120,15 @@ def _coarse_refine(
 
     qs = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
         )
     )
     coarse_w = W.partitionBy("query_id").orderBy(
-        F.col("coarse_cos").desc(), F.col(id_col)
+        F.col("coarse_cos").desc(), F.col("vec_id")
     )
     coarse = (
         qz.crossJoin(qs)
-        .filter(F.col(id_col) != F.col("query_id"))
+        .filter(F.col("vec_id") != F.col("query_id"))
         # 6dp rounding before ranking (as everywhere in simops): the
         # (score, id) order is then deterministic across engines and
         # partitionings, so the coarse_k cutoff is oracle-checkable
@@ -140,12 +136,12 @@ def _coarse_refine(
         .withColumn("crnk", F.row_number().over(coarse_w))
         .filter(F.col("crnk") <= coarse_k)
     )
-    exact_w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col(id_col))
+    exact_w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
-        coarse.withColumn("cosine", F.round(cosine(F.col(vec_col), F.col("qvec")), 6))
+        coarse.withColumn("cosine", F.round(cosine(F.col("embedding"), F.col("qvec")), 6))
         .withColumn("rnk", F.row_number().over(exact_w))
         .filter(F.col("rnk") <= k)
-        .select("query_id", F.col(id_col), "cosine", "rnk")
+        .select("query_id", F.col("vec_id"), "cosine", "rnk")
     )
 
 
@@ -167,17 +163,15 @@ PQ_K = 16  # codewords per subspace
 def pq_codebook_seeds(
     embeddings: DataFrame,
     n_codewords: int = PQ_K,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """ONE-row DataFrame holding the codeword seed vectors (the first
     ``n_codewords`` by id, sorted) — broadcast into the encode step the
     same way the IVF centroid row is."""
     return (
-        embeddings.filter(F.col(id_col) < n_codewords)
+        embeddings.filter(F.col("vec_id") < n_codewords)
         .agg(
             F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("cw"), F.col(vec_col).alias("cv")))
+                F.collect_list(F.struct(F.col("vec_id").alias("cw"), F.col("embedding").alias("cv")))
             ).alias("seeds")
         )
     )
@@ -340,27 +334,23 @@ def pq_refine_topk(
     queries: DataFrame,
     k: int,
     coarse_k: int,
-    m: int = PQ_M,
-    n_codewords: int = PQ_K,
     dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Coarse→refine top-k where the coarse representation is the PQ
     reconstruction (M bytes/vector): broadcast the one-row codebook,
     reconstruct map-side, rank coarse_k by approximate cosine, re-rank
     the survivors exactly — the IVF-PQ search shape minus the cell
     routing (compose with the IVF cell join for the full layout)."""
-    seeds_row = F.broadcast(pq_codebook_seeds(embeddings, n_codewords, vec_col, id_col))
+    seeds_row = F.broadcast(pq_codebook_seeds(embeddings))
     qz = (
         embeddings.crossJoin(seeds_row)
         .select(
-            F.col(id_col),
-            F.col(vec_col),
-            pq_reconstruct(F.col(vec_col), F.col("seeds"), m, dim).alias("deq"),
+            F.col("vec_id"),
+            F.col("embedding"),
+            pq_reconstruct(F.col("embedding"), F.col("seeds"), PQ_M, dim).alias("deq"),
         )
     )
-    return _coarse_refine(qz, queries, k, coarse_k, vec_col, id_col)
+    return _coarse_refine(qz, queries, k, coarse_k)
 
 
 def ivf_pq_topk(
@@ -369,13 +359,9 @@ def ivf_pq_topk(
     k: int,
     coarse_k: int,
     n_cells: int = 8,
-    m: int = PQ_M,
-    n_codewords: int = PQ_K,
     dim: int = 64,
     nprobe: int = 1,
-    max_cell_size: int | None = None,
     centroids: list[tuple[int, list[float]]] | None = None,
-    codeword_vecs: list[list[float]] | None = None,
     encoded_corpus: DataFrame | None = None,
 ) -> DataFrame:
     """The full IVF-PQ search layout — cell routing composed with PQ
@@ -410,32 +396,20 @@ def ivf_pq_topk(
     nprobe=2 with coarse_k held at 20; restored at coarse_k=20·nprobe —
     the same coupling FAISS documents for its nprobe/k_factor pair).
 
-    ``max_cell_size`` arms the hot-cell occupancy guard
-    (`plans.simops.capped_cell_candidates`): the corpus side is bounded
-    per cell BEFORE the PQ reconstruction (dropped rows never pay the
-    encode), so one degenerate cell cannot make per-query candidate work
-    unbounded — the same skew class the LSH bucket cap closes. The
-    registered arm defaults it on via `IVF_MAX_CELL_SIZE` (never bites at
-    fixture scale — test-pinned); the default here stays ``None`` so the
-    stage-wise quantization query keeps its cap-free oracle exactly.
-
-    ``centroids`` / ``codeword_vecs`` swap the placeholder codebooks for
-    TRAINED, driver-resident ones (functions/kmeans): centroids as a
-    (cell_id, vector) list inlined via `assign_cells_literal` /
-    `probe_cells_literal` (map-only, no codebook stages — nprobe > 1
-    included), codewords as k stitched full-dim vectors
-    (`pq_stitch_codewords`) riding the same encode algebra.
+    ``centroids`` swaps the placeholder IVF codebook for a TRAINED,
+    driver-resident one (functions/kmeans), a (cell_id, vector) list
+    inlined via `assign_cells_literal` / `probe_cells_literal` (map-only,
+    no codebook stages — nprobe > 1 included).
 
     ``encoded_corpus`` is a PRE-BUILT index frame (vec_id, embedding,
     cell_id, deq) — the stored form a vector lake writes once (cells and
     codes at ingest, not per query); when given, the corpus-side
-    assignment/cap/encode above are skipped and only the query routing +
-    search run (``max_cell_size`` is then the index builder's concern)."""
+    assignment/encode above are skipped and only the query routing +
+    search run."""
     from pyspark.sql import Window as W
 
     from sentinela_py_spark.plans.simops import (  # noqa: F401 — both cell routers
         assign_cells_literal,
-        capped_cell_candidates,
         cosine,
         ivf_assign,
         ivf_probe_cells,
@@ -449,25 +423,13 @@ def ivf_pq_topk(
             if centroids is None
             else assign_cells_literal(embeddings, centroids)
         )
-        assigned, _audit = capped_cell_candidates(assigned, max_cell_size)
-        if codeword_vecs is None:
-            seeds_row = F.broadcast(pq_codebook_seeds(embeddings, n_codewords))
-            cand = assigned.crossJoin(seeds_row).select(
-                "vec_id",
-                "embedding",
-                "cell_id",
-                pq_reconstruct(F.col("embedding"), F.col("seeds"), m, dim).alias("deq"),
-            )
-        else:
-            from sentinela_py_spark.functions.litutil import fast_lit
-
-            seed_vecs = fast_lit([[float(x) for x in v] for v in codeword_vecs], 2)
-            cand = assigned.select(
-                "vec_id",
-                "embedding",
-                "cell_id",
-                pq_reconstruct_vecs(F.col("embedding"), seed_vecs, m, dim).alias("deq"),
-            )
+        seeds_row = F.broadcast(pq_codebook_seeds(embeddings))
+        cand = assigned.crossJoin(seeds_row).select(
+            "vec_id",
+            "embedding",
+            "cell_id",
+            pq_reconstruct(F.col("embedding"), F.col("seeds"), PQ_M, dim).alias("deq"),
+        )
     # nprobe=1 keeps the cheaper argmax assignment (proven equivalent to
     # the probe path's rank-1 cell by test); >1 pays the comparator sort
     # + explode only when the recall dial is actually turned.
@@ -573,16 +535,11 @@ def adc_tables(
 ADC_T2_LITERAL_MAX = 2**18
 
 
-def adc_t2_mode(n_cells: int, m: int = PQ_M, k: int = PQ_K, mode: str = "auto") -> str:
+def adc_t2_mode(n_cells: int, m: int = PQ_M, k: int = PQ_K) -> str:
     """Resolve how `ivf_pq_adc_topk` ships the cell-dependent ADC table:
     ``"literal"`` (inline cells·M·K doubles in the plan) below
     `ADC_T2_LITERAL_MAX` entries, ``"broadcast"`` (a Spark-derived
-    (cell_id, t2c) frame folded through the cell join) above it.
-    Explicit ``mode="literal"``/``"broadcast"`` overrides the guard."""
-    if mode != "auto":
-        if mode not in ("literal", "broadcast"):
-            raise ValueError(f"t2_mode must be auto|literal|broadcast, got {mode!r}")
-        return mode
+    (cell_id, t2c) frame folded through the cell join) above it."""
     return "literal" if n_cells * m * k <= ADC_T2_LITERAL_MAX else "broadcast"
 
 
@@ -599,8 +556,6 @@ def ivf_pq_adc_topk(
     nprobe: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    t2_mode: str = "auto",
-    cent_mode: str = "auto",
     exclude_cos_at_or_above: float | None = None,
 ) -> DataFrame:
     """IVF-PQ search by ASYMMETRIC DISTANCE COMPUTATION —
@@ -642,8 +597,8 @@ def ivf_pq_adc_topk(
     lean on that agreement. Output: (query_id, vec_id, cell_id, cosine,
     rnk) with exact cosines, like `ivf_pq_topk`.
 
-    ``t2_mode`` picks how the cell-dependent table ships (`adc_t2_mode`;
-    default auto-crosses at `ADC_T2_LITERAL_MAX` = cells·M·K entries):
+    The cell-dependent table ships as `adc_t2_mode` picks (it crosses
+    at `ADC_T2_LITERAL_MAX` = cells·M·K entries):
     "literal" inlines t2 in the plan next to the codebooks; "broadcast"
     never materializes t2 on the driver at all — a (cell_id, t2c[m][j])
     frame is DERIVED IN SPARK from a cells-row centroid frame and the
@@ -654,7 +609,7 @@ def ivf_pq_adc_topk(
     x*y``, so both forms score bit-identically (test-pinned). ``t3``
     (M·K) and the per-query LUT stay literal at any cell count.
 
-    ``cent_mode`` governs the remaining cells-sized family the same way
+    The remaining cells-sized family is guarded the same way
     (r10, closing the r9 boundary): ⟨q, centroid⟩ (the cells·dim matrix)
     and ``cn`` = ‖centroid‖² (cells doubles). Its auto guard is the
     ASSIGNMENT-class boundary (`plans.simops.assign_literal_mode`,
@@ -692,8 +647,6 @@ def ivf_pq_adc_topk(
         nprobe=nprobe,
         vec_col=vec_col,
         id_col=id_col,
-        t2_mode=t2_mode,
-        cent_mode=cent_mode,
     )
     return ivf_pq_adc_rank(
         refined, k, id_col=id_col, exclude_cos_at_or_above=exclude_cos_at_or_above
@@ -737,8 +690,6 @@ def ivf_pq_adc_refined(
     nprobe: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    t2_mode: str = "auto",
-    cent_mode: str = "auto",
 ) -> DataFrame:
     """The rank-free front of `ivf_pq_adc_topk`: the codes-only ADC
     coarse pass, then the exact-cosine refine join for the ``coarse_k``
@@ -760,7 +711,7 @@ def ivf_pq_adc_refined(
     )
 
     d = dim // m
-    mode = adc_t2_mode(len(centroids), m, len(books[0]), t2_mode)
+    mode = adc_t2_mode(len(centroids), m, len(books[0]))
     # The query-side centroid family (⟨q, centroid⟩ via the cells·dim
     # matrix and cn = ‖centroid‖², cells doubles) has its own, LATER
     # boundary — the assignment class (cells·dim vs t2's cells·M·K).
@@ -769,7 +720,7 @@ def ivf_pq_adc_refined(
     # after a broadcast cell join, cnb rides the same derived frame —
     # no cells-sized literal remains anywhere in the plan (r9 verdict
     # item #2; bit-identity pinned in TestAdcSearch).
-    cmode = assign_literal_mode(len(centroids), dim, cent_mode)
+    cmode = assign_literal_mode(len(centroids), dim)
     t2, t3, cn = adc_tables(centroids, books, with_t2=(mode == "literal"))
     # one JSON parse per table instead of ~2700 py4j element conversions
     # per search BUILD (fast_lit folds to the identical literal)
@@ -1047,10 +998,6 @@ def rebuild_ann_index_tree(
     path: str,
     centroids: list[tuple[int, list[float]]],
     books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = PQ_M,
-    dim: int = 64,
 ) -> int:
     """Re-encode an index tree against NEW codebooks and swap — the
     offline retrain-rebuild that `ann_index_append_batch`'s frozen-
@@ -1071,12 +1018,12 @@ def rebuild_ann_index_tree(
         raise ValueError(f"not an index tree (no epoch= dirs): {path}")
     prior = tree_compacted_through(path)
     through = max(max(epochs), prior if prior is not None else ANN_TREE_BASE_EPOCH)
-    raw = read_ann_index_tree(spark, path).select(id_col, vec_col)
+    raw = read_ann_index_tree(spark, path).select("vec_id", "embedding")
     tmp = path + ".rebuild-tmp"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
     write_ann_index_tree_base(
-        encode_ann_batch(raw, centroids, books, id_col, vec_col, m, dim), tmp
+        encode_ann_batch(raw, centroids, books), tmp
     )
     _swap_tree_root(path, tmp, through)
     return through

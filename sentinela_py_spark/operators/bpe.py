@@ -70,8 +70,6 @@ def apply_merge(syms: Column, a: str, b: str) -> Column:
 def bpe_train(
     documents: DataFrame,
     n_merges: int,
-    text_col: str = "text",
-    min_pair_count: int = 2,
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Learn up to ``n_merges`` BPE merges from the corpus.
 
@@ -79,11 +77,11 @@ def bpe_train(
     [(rank, left, right, pair_count), ...] — the tokenizer artifact — and
     ``vocab`` is a DataFrame (word, n, syms) holding the final subword
     segmentation of every corpus word. Training stops early when no pair
-    reaches ``min_pair_count``. Deterministic: the winning pair is chosen
-    by (count DESC, left ASC, right ASC)."""
+    occurs at least twice. Deterministic: the winning pair is chosen by
+    (count DESC, left ASC, right ASC)."""
     spark = documents.sparkSession
     vocab = (
-        documents.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        documents.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
         .filter(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count("*").alias("n"))
@@ -110,7 +108,7 @@ def bpe_train(
             .limit(1)
             .collect()
         )
-        if not best or best[0]["cnt"] < min_pair_count:
+        if not best or best[0]["cnt"] < 2:
             break
         a, b, cnt = best[0]["a"], best[0]["b"], int(best[0]["cnt"])
         merges.append((rank, a, b, cnt))

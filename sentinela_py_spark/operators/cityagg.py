@@ -63,14 +63,14 @@ def adjust_context(matches: DataFrame, catalog: DataFrame) -> DataFrame:
     )
 
 
-def aggregate_city_mentions(adjusted: DataFrame, article_col: str = "url") -> DataFrame:
+def aggregate_city_mentions(adjusted: DataFrame) -> DataFrame:
     """Per (article, city): score = Σ adjusted_confidence, occurrence and
     signal counters, full match structs retained (reference
     aggregator.py:92-170). Rows without city_id are excluded here and
     surface as 'missing_candidate' suppressions (collect_unresolved)."""
     return (
         adjusted.filter(F.col("city_id").isNotNull())
-        .groupBy(article_col, "city_id")
+        .groupBy("url", "city_id")
         .agg(
             F.first("city_name").alias("name"),
             F.first("city_uf", ignorenulls=True).alias("uf"),
@@ -109,7 +109,7 @@ def _banded(col: str) -> Column:
     return F.round(F.col(col), SCORE_DECIMALS)
 
 
-def select_primary_city(aggregated: DataFrame, article_col: str = "url") -> DataFrame:
+def select_primary_city(aggregated: DataFrame) -> DataFrame:
     """Rank each article's cities through the reference's 6-stage cascade
     (score → admin_markers → title_boost_sum → fewer context_mismatches →
     occurrences → city_id) and derive the suppression audit.
@@ -117,7 +117,7 @@ def select_primary_city(aggregated: DataFrame, article_col: str = "url") -> Data
     Output adds ``rank`` (1 = primary) and, for rank>1, ``suppression``
     struct {reason, rule} naming the first stage that eliminated the city
     (reference aggregator.py:193-257)."""
-    part = W.partitionBy(article_col)
+    part = W.partitionBy("url")
     ordering = [
         _banded("score").desc(),
         F.col("admin_markers").desc(),
@@ -156,11 +156,11 @@ def select_primary_city(aggregated: DataFrame, article_col: str = "url") -> Data
     )
 
 
-def collect_unresolved(adjusted: DataFrame, article_col: str = "url") -> DataFrame:
+def collect_unresolved(adjusted: DataFrame) -> DataFrame:
     """Matches without a resolved city → 'missing_candidate' suppression
     entries (reference aggregator.py:279-297)."""
     return adjusted.filter(F.col("city_id").isNull()).select(
-        F.col(article_col),
+        F.col("url"),
         F.lit(None).cast("string").alias("city_id"),
         F.col("surface").alias("name"),
         F.col("uf"),

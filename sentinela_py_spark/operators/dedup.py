@@ -198,8 +198,6 @@ def cross_corpus_candidates(
 
 def minhash_candidate_pairs(
     documents: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_hashes: int = N_HASHES,
     n_bands: int = N_BANDS,
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
@@ -215,7 +213,7 @@ def minhash_candidate_pairs(
     # ReusedExchange fires across the alias boundary) — the barrier
     # materializes it once, exactly as q_minhash_pairs already does.
     bands = lsh_band_signatures(
-        minhash_signatures(documents, id_col, text_col, n_hashes), n_hashes, n_bands
+        minhash_signatures(documents, n_hashes=n_hashes), n_hashes, n_bands
     ).transform(barrier)
     pairs, _ = band_candidate_pairs(bands, max_bucket_size)
     return pairs
@@ -224,14 +222,14 @@ def minhash_candidate_pairs(
 SIMHASH_BITS = 32
 
 
-def simhash32(documents: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash32(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash): 32-bit SimHash over whitespace tokens.
 
     Every token votes ±1 per bit of its 32-bit md5-derived hash; bit j of
     the signature is 1 when the vote sum is positive (ties → 0)."""
     toks = (
         ensure_min_partitions(documents)
-        .select(F.col(id_col).alias("doc_id"), F.explode(F.split(text_col, " ")).alias("tok"))
+        .select(F.col("doc_id"), F.explode(F.split("text", " ")).alias("tok"))
         .select("doc_id", hex_prefix_to_long(F.md5("tok"), 8).alias("h32"))
     )
     votes = [
@@ -331,7 +329,6 @@ def signature_bands(
     sig_col: str,
     n_bands: int = 4,
     band_bits: int = 8,
-    id_col: str = "doc_id",
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Explode an integer signature into its ``n_bands`` ``band_bits``-
@@ -364,7 +361,7 @@ def signature_bands(
     semantics carry over word-for-word from the single-word form."""
     band_ids = F.array(*[F.lit(i) for i in range(n_bands)])
     exploded = sigs.select(
-        id_col, sig_col, *carry_cols, F.explode(band_ids).alias("band")
+        "doc_id", sig_col, *carry_cols, F.explode(band_ids).alias("band")
     )
     if is_wide_signature(sigs, sig_col):
         return exploded.withColumn(
@@ -383,7 +380,6 @@ def hamming_band_pairs(
     max_hamming: int,
     n_bands: int = 4,
     band_bits: int = 8,
-    id_col: str = "doc_id",
     max_bucket_size: int | None = None,
     carry_cols: tuple[str, ...] = (),
     validate_coverage: bool = False,
@@ -416,7 +412,7 @@ def hamming_band_pairs(
     survivors only).
 
     ``max_bucket_size`` arms the hot-bucket guard: each (band, slice)
-    bucket keeps its ``cap`` smallest rows BY ``id_col`` — unlike
+    bucket keeps its ``cap`` smallest rows BY ``doc_id`` — unlike
     `cap_buckets`' xxhash64 sample this ordering is replayable by a SQL
     oracle (row_number over doc_id), which is what lets a registered
     query keep the guard armed AND hash-checked. A capped bucket can
@@ -457,12 +453,12 @@ def hamming_band_pairs(
                 f"{band_bits}-bit band coverage (< {1 << coverage} required); "
                 "pairs differing in unbanded bits would be silently lost"
             )
-    bands = signature_bands(sigs, sig_col, n_bands, band_bits, id_col, carry_cols)
+    bands = signature_bands(sigs, sig_col, n_bands, band_bits, carry_cols=carry_cols)
     audit = None
     if max_bucket_size is not None:
         w = Window.partitionBy("band", "bsig")
         ranked = bands.withColumn(
-            "__rn", F.row_number().over(w.orderBy(id_col))
+            "__rn", F.row_number().over(w.orderBy("doc_id"))
         ).withColumn("__sz", F.count("*").over(w))
         audit = (
             ranked.filter(F.col("__sz") > max_bucket_size)
@@ -479,10 +475,10 @@ def hamming_band_pairs(
         b,
         (F.col("a.band") == F.col("b.band"))
         & (F.col("a.bsig") == F.col("b.bsig"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
     ).select(
-        F.col(f"a.{id_col}").alias("doc_a"),
-        F.col(f"b.{id_col}").alias("doc_b"),
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
         F.col(f"a.{sig_col}").alias("sig_a"),
         F.col(f"b.{sig_col}").alias("sig_b"),
         *[F.col(f"a.{c}").alias(f"a_{c}") for c in carry_cols],
@@ -521,7 +517,7 @@ class HammingSizing:
     # emits each colliding pair once (r13 ADVICE: the ordered-pair count
     # was 2x the docstring's claim)
     expected_candidates: float
-    occupancy_ok: bool  # expected_occupancy <= target_occupancy
+    occupancy_ok: bool  # expected_occupancy <= 64
     hash_bits_needed: int  # width at which the target WOULD hold
 
 
@@ -529,7 +525,6 @@ def plan_hamming_config(
     n_items: int,
     hash_bits: int,
     max_hamming: int,
-    target_occupancy: int = 64,
 ) -> HammingSizing:
     """Compute the Hamming-band geometry for a corpus instead of
     defaulting it — the sibling of ``plan_lsh_config`` /
@@ -546,9 +541,9 @@ def plan_hamming_config(
       the minimum band count that guarantees the threshold.
     - **Occupancy** is then a CONSEQUENCE, not a choice: uniform-ish
       hashes give expected bucket size n/2^band_bits and candidate work
-      n_bands · n²/(2·2^band_bits) unordered pairs. When that exceeds ``target_occupancy``
+      n_bands · n²/(2·2^band_bits) unordered pairs. When that exceeds 64
       the honest lever is a WIDER HASH, not more bands:
-      ``hash_bits_needed = n_bands · ceil(log2(n / target))`` is
+      ``hash_bits_needed = n_bands · ceil(log2(n / 64))`` is
       reported so the caller sizes the signature (e.g. a 256-bit pHash)
       rather than silently leaning on the truncation cap.
 
@@ -573,7 +568,7 @@ def plan_hamming_config(
     band_bits = -(-hash_bits // n_bands)
     occupancy = n_items / float(1 << band_bits)
     bits_per_band_needed = max(
-        1, math.ceil(math.log2(max(n_items / max(target_occupancy, 1), 2.0)))
+        1, math.ceil(math.log2(max(n_items / 64, 2.0)))
     )
     return HammingSizing(
         n_bands=n_bands,
@@ -581,17 +576,8 @@ def plan_hamming_config(
         n_buckets_per_band=1 << band_bits,
         expected_occupancy=occupancy,
         expected_candidates=n_bands * n_items * occupancy / 2.0,
-        occupancy_ok=occupancy <= target_occupancy,
+        occupancy_ok=occupancy <= 64,
         hash_bits_needed=n_bands * bits_per_band_needed,
-    )
-
-
-def exact_duplicate_groups(documents: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """md5-exact duplicate groups (first id wins)."""
-    return (
-        documents.groupBy(F.md5(text_col).alias("text_hash"))
-        .agg(F.min(id_col).alias("keep_doc_id"), F.count("*").alias("n_copies"))
-        .filter(F.col("n_copies") > 1)
     )
 
 
@@ -599,7 +585,6 @@ def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
     id_col: str = "doc_id",
-    max_iterations: int = 20,
 ) -> DataFrame:
     """(doc_id, group_id): connected components by iterative min-label
     propagation — the grouping step that turns near-dup PAIRS into dedup
@@ -607,7 +592,9 @@ def connected_components(
     (doc_a, doc_b); vertices absent from any edge stay singletons.
 
     Each sweep sends a vertex's current label to its neighbours and keeps
-    the min; convergence takes O(diameter) sweeps, and near-dup clusters
+    the min, until a sweep leaves Σ(group_id) unchanged — labels only
+    fall, so that is the fixpoint, reached after at most diameter + 1
+    sweeps whatever the graph's shape; near-dup clusters
     are shallow (dozens of docs, diameter ≤ a few), so this terminates in
     2-3 sweeps in practice. ``localCheckpoint`` truncates the growing
     lineage so the plan stays O(1) per sweep at 100 TB (the
@@ -689,7 +676,7 @@ def connected_components(
     p = max(1, min(cap, max(n_vertices // 50_000, (n_sym or 0) // 100_000) + 1))
     sym = sym.coalesce(p)
     labels = seed.select("doc_id", "group_id").coalesce(p)
-    for _ in range(max_iterations - 1):
+    while True:
         prop = (
             labels.join(sym, labels.doc_id == sym.src)
             .select(F.col("dst").alias("doc_id"), F.col("group_id"))
@@ -738,8 +725,6 @@ DEFAULT_MAX_GRAM_DF = 64
 
 def shared_span_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 8,
     min_span_words: int = 12,
     max_gram_df: int | None = DEFAULT_MAX_GRAM_DF,
@@ -788,8 +773,8 @@ def shared_span_pairs(
     grams = (
         ensure_min_partitions(docs)
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(word_shingles(F.col(text_col), k=k)).alias("pos0", "gram"),
+            F.col("doc_id"),
+            F.posexplode(word_shingles(F.col("text"), k=k)).alias("pos0", "gram"),
         )
         .select(
             "doc_id",

@@ -91,9 +91,6 @@ def city_pattern_spans(text: str) -> list[dict]:
 def city_mentions(
     articles: DataFrame,
     engine: NEREngine | None = None,
-    url_col: str = "url",
-    title_col: str = "title",
-    body_col: str = "body",
 ) -> DataFrame:
     """Span extraction pass: combined text (F9) → boilerplate strip (M1)
     → NER city spans (labels LOC/CITY/GPE) ∪ deterministic patterns (M9)
@@ -105,7 +102,7 @@ def city_mentions(
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: dict[str, list] = {k: [] for k in MENTION_SCHEMA.fieldNames()}
-            for url, title, body in zip(pdf[url_col], pdf[title_col], pdf[body_col]):
+            for url, title, body in zip(pdf["url"], pdf["title"], pdf["body"]):
                 combined = "\n".join(p for p in (title, body) if p)
                 text = normalize_article_text(combined)
                 states = sorted(extract_state_mentions(text))
@@ -140,7 +137,7 @@ def city_mentions(
                 yield pd.DataFrame(rows)
 
     return (
-        articles.select(url_col, title_col, body_col)
+        articles.select("url", "title", "body")
         .mapInPandas(extract, MENTION_SCHEMA)
         .withColumn("ner_score", F.col("ner_score").cast("double"))
     )
@@ -156,7 +153,7 @@ def resolve_city_mentions(mentions: DataFrame, name_index: DataFrame) -> DataFra
     )
 
 
-def aggregate_mentions(resolved: DataFrame, url_col: str = "url") -> DataFrame:
+def aggregate_mentions(resolved: DataFrame) -> DataFrame:
     """A1 mention aggregation with key promotion (service.py:205-278,
     §7.3.4): pass 1 groups by the surface key and resolves the best
     city_id seen for that surface; pass 2 re-groups by the promoted key
@@ -164,7 +161,7 @@ def aggregate_mentions(resolved: DataFrame, url_col: str = "url") -> DataFrame:
     First-seen order is preserved via min(start)."""
     surface_key = F.lower(F.trim(F.col("surface")))
     p1 = (
-        resolved.groupBy(F.col(url_col), surface_key.alias("skey"))
+        resolved.groupBy(F.col("url"), surface_key.alias("skey"))
         .agg(
             F.max("resolved_city_id").alias("cid"),
             F.count("*").alias("occurrences"),
@@ -177,7 +174,7 @@ def aggregate_mentions(resolved: DataFrame, url_col: str = "url") -> DataFrame:
     )
     key = F.coalesce(F.col("cid"), F.col("skey"))
     return (
-        p1.groupBy(F.col(url_col), key.alias("mention_key"))
+        p1.groupBy(F.col("url"), key.alias("mention_key"))
         .agg(
             F.max("cid").alias("city_id"),
             F.sum("occurrences").alias("occurrences"),
@@ -187,18 +184,16 @@ def aggregate_mentions(resolved: DataFrame, url_col: str = "url") -> DataFrame:
             F.min("first_seen").alias("first_seen"),
             F.max("confidence").alias("confidence"),
         )
-        .orderBy(url_col, "first_seen")
+        .orderBy("url", "first_seen")
     )
 
 
-def mark_processed(
-    articles: DataFrame, ner_version: str, gazetteer_version: str, url_col: str = "url"
-) -> DataFrame:
+def mark_processed(articles: DataFrame, ner_version: str, gazetteer_version: str) -> DataFrame:
     """Version bookkeeping rows for the upsert sink (T4 reprocessing gate;
     infrastructure/extraction.py:77-113). No wall-clock columns — the
     versions themselves are the idempotency signal (SURVEY §7.3.6)."""
     return articles.select(
-        F.col(url_col),
+        F.col("url"),
         F.lit(True).alias("ner_done"),
         F.lit(ner_version).alias("ner_version"),
         F.lit(gazetteer_version).alias("gazetteer_version"),

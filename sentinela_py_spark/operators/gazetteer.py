@@ -89,9 +89,6 @@ def _ascii_fold(surface: Column) -> Column:
 def resolve_mentions(
     mentions: DataFrame,
     name_index: DataFrame,
-    surface_col: str = "surface",
-    uf_surface_col: str = "uf_surface",
-    context_col: str = "context_states",
 ) -> DataFrame:
     """Resolve each mention row against the gazetteer.
 
@@ -101,7 +98,7 @@ def resolve_mentions(
     unknown_uf | foreign), ``confidence``, ``candidates`` (each with
     score = 1/|candidates|), ``method`` = 'gazetteer'.
     """
-    m = mentions.withColumn("_key", _norm_surface_col(F.col(surface_col)))
+    m = mentions.withColumn("_key", _norm_surface_col(F.col("surface")))
 
     # Broadcast equi-join on normalized name; candidates collected per
     # mention, sorted by city_id for cross-partition determinism.
@@ -117,10 +114,10 @@ def resolve_mentions(
         ).alias("_cands")
     )
 
-    uf_surface = F.upper(F.col(uf_surface_col)) if uf_surface_col in mentions.columns else F.lit(None).cast("string")
+    uf_surface = F.upper(F.col("uf_surface")) if "uf_surface" in mentions.columns else F.lit(None).cast("string")
     context = (
-        F.transform(F.coalesce(F.col(context_col), F.array()), lambda s: F.upper(s))
-        if context_col in mentions.columns
+        F.transform(F.coalesce(F.col("context_states"), F.array()), lambda s: F.upper(s))
+        if "context_states" in mentions.columns
         else F.array().cast("array<string>")
     )
 
@@ -139,7 +136,7 @@ def resolve_mentions(
 
     # Stage 3 — ambiguous-surface whitelist: a lone candidate still needs a
     # UF signal when its surface is on the list.
-    df = grouped.withColumn("_skey", _ascii_fold(F.col(surface_col)))
+    df = grouped.withColumn("_skey", _ascii_fold(F.col("surface")))
     wl_states = F.lit(None).cast("array<string>")
     for key, states in AMBIGUOUS_SURFACES.items():
         wl_states = F.when(F.col("_skey") == key, F.array(*[F.lit(s) for s in states])).otherwise(

@@ -37,7 +37,6 @@ def geo_enrichment(
     articles: DataFrame,
     catalog: DataFrame,
     catalog_entries: Iterable[Mapping[str, Any]],
-    article_col: str = "url",
 ) -> DataFrame:
     """One row per enriched article:
 
@@ -52,13 +51,13 @@ def geo_enrichment(
     adjusted = adjust_context(
         explode_matches(matched), catalog.select("ibge_id", "name", "uf")
     )
-    ranked = select_primary_city(aggregate_city_mentions(adjusted), article_col)
+    ranked = select_primary_city(aggregate_city_mentions(adjusted))
 
     full_cat = with_state_capital(catalog)
     primary = enrich_primary_with_distance(
         ranked.filter(F.col("rank") == 1), full_cat
     ).select(
-        article_col,
+        "url",
         F.struct(
             F.col("city_id"),
             F.col("name"),
@@ -74,7 +73,7 @@ def geo_enrichment(
     )
 
     mentioned = (
-        ranked.groupBy(article_col)
+        ranked.groupBy("url")
         .agg(
             F.array_sort(
                 F.collect_list(
@@ -92,7 +91,7 @@ def geo_enrichment(
     )
 
     eliminated = ranked.filter(F.col("rank") > 1).select(
-        F.col(article_col),
+        F.col("url"),
         F.col("city_id"),
         F.col("name"),
         F.col("uf"),
@@ -102,8 +101,8 @@ def geo_enrichment(
         F.col("suppression.rule").alias("rule"),
     )
     suppressed = (
-        eliminated.unionByName(collect_unresolved(adjusted, article_col))
-        .groupBy(article_col)
+        eliminated.unionByName(collect_unresolved(adjusted))
+        .groupBy("url")
         .agg(
             F.collect_list(
                 F.struct("city_id", "name", "uf", "score", "occurrences", "reason", "rule")
@@ -112,7 +111,7 @@ def geo_enrichment(
     )
 
     return (
-        primary.join(mentioned, article_col, "left")
-        .join(suppressed, article_col, "left")
+        primary.join(mentioned, "url", "left")
+        .join(suppressed, "url", "left")
         .withColumn("suppressed", F.coalesce(F.col("suppressed"), F.array()))
     )

@@ -79,24 +79,22 @@ def _match_udf(catalog_bcast):
 def match_articles(
     articles: DataFrame,
     catalog: Iterable[Mapping[str, Any]],
-    title_col: str = "title",
     body_col: str | None = "body",
-    content_col: str | None = "content",
 ) -> DataFrame:
     """Add a ``matches`` column (array of match structs with signals)."""
     cols = dict(articles.dtypes)
-    title = F.col(title_col) if title_col in cols else F.lit(None).cast("string")
+    title = F.col("title") if "title" in cols else F.lit(None).cast("string")
     body = F.col(body_col) if body_col and body_col in cols else F.lit(None).cast("string")
     content = (
-        F.col(content_col) if content_col and content_col in cols else F.lit(None).cast("string")
+        F.col("content") if "content" in cols else F.lit(None).cast("string")
     )
     sc = articles.sparkSession.sparkContext
     udf = _match_udf(sc.broadcast(tuple(dict(e) for e in catalog)))
     return articles.withColumn("matches", udf(title, body, content))
 
 
-def explode_matches(articles_with_matches: DataFrame, id_col: str = "url") -> DataFrame:
+def explode_matches(articles_with_matches: DataFrame) -> DataFrame:
     """One row per (article, match) — feeds the scoring aggregation."""
     return articles_with_matches.select(
-        F.col(id_col), F.explode("matches").alias("m")
-    ).select(id_col, "m.*")
+        F.col("url"), F.explode("matches").alias("m")
+    ).select("url", "m.*")

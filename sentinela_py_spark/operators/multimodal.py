@@ -472,11 +472,9 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(
-    media: DataFrame, frame_len: int = FRAME_LEN, stride: int = FRAME_STRIDE
-) -> DataFrame:
-    """Frame sampling: slice each payload into fixed `frame_len`-byte
-    frames and keep every `stride`-th one (the video keyframe-sampling
+def sample_frames(media: DataFrame) -> DataFrame:
+    """Frame sampling: slice each payload into fixed `FRAME_LEN`-byte
+    frames and keep every `FRAME_STRIDE`-th one (the video keyframe-sampling
     shape). Output rows are bounded slices, so the explode is safe at any
     payload size; emitted per Arrow batch, never materializing all frames
     of a partition at once."""
@@ -486,9 +484,9 @@ def sample_frames(
             out: dict[str, list] = {"doc_id": [], "frame_idx": [], "frame_bytes": [], "frame_md5": []}
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 raw = bytes(payload)
-                n_frames = -(-len(raw) // frame_len)  # ceil
-                for f in range(0, n_frames, stride):
-                    frame = raw[f * frame_len : (f + 1) * frame_len]
+                n_frames = -(-len(raw) // FRAME_LEN)  # ceil
+                for f in range(0, n_frames, FRAME_STRIDE):
+                    frame = raw[f * FRAME_LEN : (f + 1) * FRAME_LEN]
                     out["doc_id"].append(doc_id)
                     out["frame_idx"].append(f)
                     out["frame_bytes"].append(len(frame))

@@ -98,8 +98,6 @@ def _is_engine(obj: object) -> bool:
 def analyze_articles(
     articles: DataFrame,
     engine: NEREngine | None = None,
-    text_col: str = "body",
-    url_col: str = "url",
 ) -> DataFrame:
     """Run the NER engine over article text: Arrow batches in, one
     ``spans array<struct>`` column out (U1). The engine reference is
@@ -125,7 +123,7 @@ def analyze_articles(
             ]
         )
 
-    return articles.withColumn("spans", run(F.col(text_col)))
+    return articles.withColumn("spans", run(F.col("body")))
 
 
 def _span_struct():
@@ -138,7 +136,6 @@ def person_occurrences(
     articles: DataFrame,
     engine: NEREngine | None = None,
     text_col: str = "body",
-    url_col: str = "url",
 ) -> DataFrame:
     """Person branch of the extraction pipeline: NER spans → canonical
     name (M2) + containing sentence (M3) in one UDF pass, then the
@@ -152,7 +149,7 @@ def person_occurrences(
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: dict[str, list] = {k: [] for k in out_schema.fieldNames()}
-            for url, text in zip(pdf[url_col], pdf[text_col]):
+            for url, text in zip(pdf["url"], pdf[text_col]):
                 text = text or ""
                 for s in eng(text):
                     if s.get("label") != "PER":
@@ -172,7 +169,7 @@ def person_occurrences(
                     rows["confidence"].append(float(s.get("score", 0.0)))
             yield pd.DataFrame(rows)
 
-    partial = articles.select(url_col, text_col).mapInPandas(extract, out_schema)
+    partial = articles.select("url", text_col).mapInPandas(extract, out_schema)
     return partial.select(
         "url",
         F.sha2(F.col("canonical_name"), 256).alias("person_id"),

@@ -53,9 +53,3 @@ def article_city_report(articles: DataFrame, include_without_cities: bool = True
         .otherwise(empty)
         .alias("fontes"),
     )
-
-
-def write_report_csv(report: DataFrame, path: str) -> None:
-    """Write with header; single file for CLI parity (the report is a
-    human-facing export, not a data interchange path)."""
-    report.coalesce(1).write.mode("overwrite").option("header", True).csv(path)

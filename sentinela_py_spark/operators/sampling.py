@@ -155,8 +155,6 @@ def _xx_bucket(gram: Column, buckets: int) -> Column:
 def dsir_log_weights(
     docs: DataFrame,
     target_pred: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     buckets: int = DSIR_BUCKETS,
     gram_hash: str = "md5",
 ) -> DataFrame:
@@ -192,14 +190,14 @@ def dsir_log_weights(
         raise ValueError(f"gram_hash must be md5|xxhash64, got {gram_hash!r}")
     bucket_of = _md5_bucket if gram_hash == "md5" else _xx_bucket
     grams = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.concat(tokens(F.col(text_col)), word_shingles(F.col(text_col), k=2))
+            F.concat(tokens(F.col("text")), word_shingles(F.col("text"), k=2))
         ).alias("gram"),
         target_pred.cast("long").alias("is_t"),
     )
     bc = grams.select(
-        id_col, bucket_of(F.col("gram"), buckets).alias("bucket"), "is_t"
+        "doc_id", bucket_of(F.col("gram"), buckets).alias("bucket"), "is_t"
     ).transform(barrier)  # scanned twice: corpus counts + per-doc counts
     raw = bc.groupBy("bucket").agg(
         F.count("*").alias("nq"), F.sum("is_t").alias("nt")
@@ -216,17 +214,15 @@ def dsir_log_weights(
             6,
         ).alias("lr"),
     )
-    dcnt = bc.groupBy(id_col, "bucket").agg(F.count("*").alias("c"))
-    return dcnt.join(F.broadcast(lr), "bucket").groupBy(id_col).agg(
+    dcnt = bc.groupBy("doc_id", "bucket").agg(F.count("*").alias("c"))
+    return dcnt.join(F.broadcast(lr), "bucket").groupBy("doc_id").agg(
         F.round(
             F.sum((F.col("c") * F.col("lr")).cast("decimal(28,15)")).cast("double"), 6
         ).alias("log_w")
     )
 
 
-def gumbel_topk(
-    weighted: DataFrame, k: int, id_col: str = "doc_id", w_col: str = "log_w"
-) -> DataFrame:
+def gumbel_topk(weighted: DataFrame, k: int) -> DataFrame:
     """Top-``k`` rows under perturbed log-weights — sampling WITHOUT
     replacement ∝ softmax(log_w) via the Gumbel-top-k trick: key =
     −ln(−ln u) + log_w with u the content-keyed md5 uniform (shifted by
@@ -235,12 +231,12 @@ def gumbel_topk(
     break on id after 6dp rounding. The plan is a TakeOrdered top-k —
     never a global sort of the corpus."""
     h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
     ).cast("double")
     u = (h + F.lit(0.5)) / F.lit(_HEX8)
-    key = F.round(F.round(-F.log(-F.log(u)), 6) + F.col(w_col), 6)
+    key = F.round(F.round(-F.log(-F.log(u)), 6) + F.col("log_w"), 6)
     return (
-        weighted.select(id_col, key.alias("gkey"))
-        .orderBy(F.col("gkey").desc(), F.col(id_col))
+        weighted.select("doc_id", key.alias("gkey"))
+        .orderBy(F.col("gkey").desc(), F.col("doc_id"))
         .limit(k)
     )

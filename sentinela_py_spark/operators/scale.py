@@ -46,7 +46,6 @@ def salted_join(
     key: str,
     n_salts: int = 8,
     distinct_cols: list[str] | None = None,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join resilient to a pathologically hot key.
 
@@ -63,7 +62,7 @@ def salted_join(
     s = small.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    out = b.join(s, on=[key, "__salt"], how=how)
+    out = b.join(s, on=[key, "__salt"], how="inner")
     return out.drop("__salt")
 
 
@@ -148,7 +147,6 @@ def cap_buckets(
 def write_partitioned(
     df: DataFrame,
     path: str,
-    partition_cols: list[str] | None = None,
     target_file_rows: int | None = None,
 ) -> None:
     """Persist with hive-style directory partitioning — the physical
@@ -162,8 +160,7 @@ def write_partitioned(
     spray from N tasks) and the writer splits any hot partition's task
     output every ``target_file_rows`` rows via ``maxRecordsPerFile`` —
     right-sized files with no extra pass over the input."""
-    if partition_cols is None:
-        partition_cols = ["portal_name", "published_date"]
+    partition_cols = ["portal_name", "published_date"]
     out = df
     writer_opts: dict[str, str] = {}
     if target_file_rows:

@@ -46,6 +46,7 @@ from sentinela_py_spark.plans.textops import (
     MAX_GRAM_OCC,
     MIN_SPAN_WORDS,
     SPAN_K,
+    _lang_hits_sql,
     qr_chain_sql,
     qr_model_scores,
 )
@@ -204,7 +205,7 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-blocking CC sweeps during construction — build them in
     # parallel threads (r14 optimization, guide §2.6).
     members, sem = _concurrent(
-        lambda: _dg_members(spark, sf_dir).transform(barrier),
+        lambda: _dg_members(load_table(spark, sf_dir, "documents")).transform(barrier),
         lambda: _semantic_arms(spark, sf_dir),
     )
     return (
@@ -215,10 +216,10 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dg_members(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, group_id, quality) — CC labels joined with quality, the
-    shared body of the labels and survivor arms."""
-    d = load_table(spark, sf_dir, "documents")
+def _dg_members(d: DataFrame) -> DataFrame:
+    """(doc_id, group_id, quality) over the ``documents`` frame ``d`` —
+    CC labels joined with quality, the shared body of the labels and
+    survivor arms and of the curated pool's survivor election."""
     edges = minhash_candidate_pairs(d).select("doc_a", "doc_b")
     labels = connected_components(d, edges)
     scored = d.select("doc_id", quality_score("text").cast("double").alias("quality"))
@@ -262,11 +263,11 @@ def _dg_survivor_from(members: DataFrame) -> DataFrame:
 # Dedicated bench arms (the checkpoint-barrier rule: the semantic branch
 # hides k-means construction + checkpoints a union-filter can't prune).
 def _dg_labels_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dg_labels_from(_dg_members(spark, sf_dir))
+    return _dg_labels_from(_dg_members(load_table(spark, sf_dir, "documents")))
 
 
 def _dg_survivor_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _dg_survivor_from(_dg_members(spark, sf_dir))
+    return _dg_survivor_from(_dg_members(load_table(spark, sf_dir, "documents")))
 
 
 def _semantic_eps_arm(
@@ -901,10 +902,6 @@ def _curated_build(d: DataFrame, sf_dir: str) -> tuple[DataFrame, dict]:
     return memo("curated_pool", d.sparkSession, sf_dir, build)
 
 
-def _curated_pool_cached(d: DataFrame, sf_dir: str) -> DataFrame:
-    return _curated_build(d, sf_dir)[0]
-
-
 def _curated_build_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bench arm: one full un-memoized curation pipeline run (dedup
     groups → survivor → decontaminate → quality → mixture); the returned
@@ -991,18 +988,7 @@ def _curated_pool(
     # 1. dedup groups → quality-aware survivor (q_dedup_groups algebra;
     # the election judges RAW text — the retention policy compares the
     # near-dup copies as they arrived)
-    edges = minhash_candidate_pairs(d).select("doc_a", "doc_b")
-    labels = connected_components(d, edges)
-    scored = d.select("doc_id", quality_score("text").cast("double").alias("quality"))
-    members = labels.join(scored, "doc_id")
-    best = F.max(
-        F.struct(F.col("quality").alias("q"), (-F.col("doc_id")).alias("neg_id"))
-    ).alias("b")
-    surv = (
-        members.groupBy("group_id")
-        .agg(best)
-        .select((-F.col("b.neg_id")).alias("doc_id"))
-    )
+    surv = _dg_survivor_from(_dg_members(d)).select("doc_id")
 
     # 2. the train pool: survivors minus the held-out eval split
     surv_docs = _stage(surv.join(d.select("doc_id", "lang", "text"), "doc_id"))
@@ -1380,11 +1366,6 @@ register_arms(
     dsir=_mixture_arm(_dsir_arm),
     dsir_fast=_mixture_arm(_dsir_fast_arm),
 )
-
-
-def _lang_hits_sql(lang: str) -> str:
-    words = ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
-    return f"len(list_filter(string_split(text, ' '), t -> t IN ({words})))"
 
 
 # Retention-policy constants for q_curated_corpus' three selection arms.

@@ -781,7 +781,7 @@ def _image_sigs_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _image_all_pairs(sigs: DataFrame, method: str = "image") -> DataFrame:
+def _image_all_pairs(sigs: DataFrame) -> DataFrame:
     pairs, _audit = hamming_band_pairs(
         sigs,
         "dhash",
@@ -792,7 +792,7 @@ def _image_all_pairs(sigs: DataFrame, method: str = "image") -> DataFrame:
         carry_cols=("pix_md5",),
     )
     return pairs.select(
-        F.lit(method).alias("method"),
+        F.lit("image").alias("method"),
         "doc_a",
         "doc_b",
         "hamming",
@@ -906,7 +906,7 @@ def _audio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _image_corpus_probe(sigs: DataFrame, method: str = "image_probe") -> DataFrame:
+def _image_corpus_probe(sigs: DataFrame) -> DataFrame:
     split = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) < "8"
     bands = signature_bands(
         sigs.select("doc_id", "dhash"), "dhash", DHASH_BANDS, DHASH_BAND_BITS
@@ -935,7 +935,7 @@ def _image_corpus_probe(sigs: DataFrame, method: str = "image_probe") -> DataFra
             ).alias("best")
         )
         .select(
-            F.lit(method).alias("method"),
+            F.lit("image_probe").alias("method"),
             F.col("doc_id").alias("doc_a"),
             F.col("best.doc_b").alias("doc_b"),
             F.col("best.hamming").alias("hamming"),
@@ -989,7 +989,7 @@ register_arms(
 def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyframe-style sampling: payload → fixed 64-byte frames → keep
     every 2nd. Emitted per Arrow batch; output row count is bounded by
-    payload_bytes/(frame_len*stride) regardless of partitioning."""
+    payload_bytes/(FRAME_LEN·FRAME_STRIDE) regardless of partitioning."""
     d = load_table(spark, sf_dir, "documents")
     return sample_frames(documents_to_media(d)).orderBy("doc_id", "frame_idx")
 

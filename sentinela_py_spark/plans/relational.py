@@ -26,9 +26,9 @@ from sentinela_py_spark.plans.registry import (
 from sentinela_py_spark.tables import load_table
 
 
-def _dec(col: str | F.Column, scale: int = 2) -> F.Column:
+def _dec(col: str | F.Column) -> F.Column:
     c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal(18,{scale})")
+    return c.cast("decimal(18,2)")
 
 
 # ---------------------------------------------------------------------------

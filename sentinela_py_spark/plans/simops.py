@@ -232,7 +232,6 @@ def plan_lsh_config(
     target_bucket_size: int,
     cos_threshold: float = NEARDUP_COS,
     recall_target: float = 0.9,
-    max_tables: int = 64,
 ) -> LshSizing:
     """Compute the RIGHT (n_planes, n_tables) for a corpus instead of the
     16-bucket registry demo constants — the occupancy math documented at
@@ -265,7 +264,7 @@ def plan_lsh_config(
         n_tables = 1
     else:
         n_tables = max(1, math.ceil(math.log(1.0 - recall_target) / math.log(1.0 - q)))
-    n_tables = min(n_tables, max_tables)
+    n_tables = min(n_tables, 64)
     return LshSizing(
         n_planes=n_planes,
         n_tables=n_tables,
@@ -328,8 +327,6 @@ def embedding_neardup_multitable(
     e: DataFrame,
     n_planes: int,
     n_tables: int,
-    threshold: float = NEARDUP_COS,
-    dim: int = EMB_DIM,
 ) -> DataFrame:
     """OR over ``n_tables`` independent LSH tables: a pair is a candidate
     if it collides (multi-probe Hamming ≤ 1) in ANY table, recovering
@@ -339,7 +336,7 @@ def embedding_neardup_multitable(
     cached bucketed projection and T multiplies candidate work, not the
     pair space — the classic recall/cost dial."""
     per_table = [
-        embedding_neardup_pairs(e, make_planes(n_planes, dim=dim, table=t), threshold)
+        embedding_neardup_pairs(e, make_planes(n_planes, table=t))
         for t in range(n_tables)
     ]
     out = per_table[0]
@@ -352,7 +349,6 @@ def embedding_neardup_pairs(
     e: DataFrame,
     planes: list[list[int]] | None = None,
     threshold: float = NEARDUP_COS,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
     bucketed: DataFrame | None = None,
 ) -> DataFrame:
     """LSH-bucketed embedding near-dup pairs for an arbitrary plane count
@@ -362,10 +358,10 @@ def embedding_neardup_pairs(
     computed on survivors only, so precision is 1.0 by construction and
     recall follows the multi-probe collision law (see N_PLANES).
 
-    ``max_bucket_size`` arms the hot-bucket guard (see
+    The hot-bucket guard is armed at ``DEFAULT_MAX_BUCKET_SIZE`` (see
     ``embedding_neardup_pairs_with_audit`` for the audit frame)."""
     pairs, _ = embedding_neardup_pairs_with_audit(
-        e, planes, threshold, max_bucket_size, bucketed
+        e, planes, threshold, DEFAULT_MAX_BUCKET_SIZE, bucketed
     )
     return pairs
 
@@ -436,9 +432,6 @@ def embedding_neardup_pairs_with_audit(
 def embedding_cross_corpus_candidates(
     probe_b: DataFrame,
     store_b: DataFrame,
-    planes_count: int = N_PLANES,
-    threshold: float = NEARDUP_COS,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """`embedding_cross_corpus_candidates_with_audit` minus the audit
     frames — for callers that surface overflow accounting elsewhere (the
@@ -447,18 +440,13 @@ def embedding_cross_corpus_candidates(
     that is sound because no bucket reaches the cap at oracle scale —
     pinned by tests/test_skew_guard.py, so any future fixture growth that
     silently crossed the cap would fail the pin, not the hash check."""
-    pairs, _pa, _sa = embedding_cross_corpus_candidates_with_audit(
-        probe_b, store_b, planes_count, threshold, max_bucket_size
-    )
+    pairs, _pa, _sa = embedding_cross_corpus_candidates_with_audit(probe_b, store_b)
     return pairs
 
 
 def embedding_cross_corpus_candidates_with_audit(
     probe_b: DataFrame,
     store_b: DataFrame,
-    planes_count: int = N_PLANES,
-    threshold: float = NEARDUP_COS,
-    max_bucket_size: int | None = DEFAULT_MAX_BUCKET_SIZE,
 ) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
     """Batch twin of the streaming embedding-index probe
     (streaming/pipeline.py embedding_dedup_batch_against_corpus step 3):
@@ -471,17 +459,15 @@ def embedding_cross_corpus_candidates_with_audit(
     cosine against the stored VECTOR — so BOTH sides are hot-bucket
     capped (cap², never b², per probe key; cf. the streaming twin's
     overflow accounting). Returns ``(pairs, probe_audit, store_audit)``
-    — the two cap_buckets overflow frames (None when uncapped), so
+    — the two cap_buckets overflow frames, so
     deployments can surface exactly which buckets lost candidates (the
     never-silent-truncation policy, operators/scale.py). Pairs:
     (vec_a = probe id, vec_b = min confirmed corpus id, cos_sim_r)."""
     from sentinela_py_spark.operators.scale import cap_buckets
 
-    probe_audit = store_audit = None
-    if max_bucket_size is not None:
-        store_b, store_audit = cap_buckets(store_b, ["bucket"], max_bucket_size, ["vec_id"])
-        probe_b, probe_audit = cap_buckets(probe_b, ["bucket"], max_bucket_size, ["vec_id"])
-    xors = probe_xors(planes_count)
+    store_b, store_audit = cap_buckets(store_b, ["bucket"], DEFAULT_MAX_BUCKET_SIZE, ["vec_id"])
+    probe_b, probe_audit = cap_buckets(probe_b, ["bucket"], DEFAULT_MAX_BUCKET_SIZE, ["vec_id"])
+    xors = probe_xors(N_PLANES)
     probes = probe_b.select(
         F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"),
         F.col("norm").alias("na"),
@@ -497,7 +483,7 @@ def embedding_cross_corpus_candidates_with_audit(
     pairs = (
         probes.join(store, "probe")
         .select("vec_a", "vec_b", cos.alias("cos_sim_r"))
-        .filter(F.col("cos_sim_r") >= threshold)
+        .filter(F.col("cos_sim_r") >= NEARDUP_COS)
         .groupBy("vec_a")
         .agg(
             F.min("vec_b").alias("vec_b"),
@@ -1093,15 +1079,11 @@ def assign_cells(
 ASSIGN_LITERAL_MAX = 2**18
 
 
-def assign_literal_mode(n_cells: int, dim: int, mode: str = "auto") -> str:
+def assign_literal_mode(n_cells: int, dim: int) -> str:
     """Resolve how `assign_cells_literal` ships the codebook:
     ``"literal"`` (inline cells·dim doubles in the plan) at or below
     `ASSIGN_LITERAL_MAX` entries, ``"broadcast"`` (the `assign_cells`
-    one-row broadcast frame) above it. Explicit mode overrides."""
-    if mode != "auto":
-        if mode not in ("literal", "broadcast"):
-            raise ValueError(f"mode must be auto|literal|broadcast, got {mode!r}")
-        return mode
+    one-row broadcast frame) above it."""
     return "literal" if n_cells * dim <= ASSIGN_LITERAL_MAX else "broadcast"
 
 
@@ -1110,7 +1092,6 @@ def assign_cells_literal(
     cents: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "auto",
 ) -> DataFrame:
     """(id, vec, cell_id): the same argmax-cosine assignment as
     `assign_cells`, but against DRIVER-RESIDENT centroids inlined as
@@ -1137,7 +1118,7 @@ def assign_cells_literal(
     from sentinela_py_spark.functions.litutil import fast_lit
 
     cents = sorted(cents)
-    if assign_literal_mode(len(cents), len(cents[0][1]), mode) == "broadcast":
+    if assign_literal_mode(len(cents), len(cents[0][1])) == "broadcast":
         cents_df = e.sparkSession.createDataFrame(
             [(int(cid), [float(x) for x in v]) for cid, v in cents],
             "cell_id long, centroid array<double>",
@@ -1237,7 +1218,6 @@ def probe_cells_literal(
     nprobe: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "auto",
 ) -> DataFrame:
     """`ivf_probe_cells` against DRIVER-RESIDENT (trained) centroids —
     one row per probed cell, map-only, the literal twin of the
@@ -1255,7 +1235,7 @@ def probe_cells_literal(
     from sentinela_py_spark.functions.litutil import fast_lit
 
     cents = sorted(cents)
-    if assign_literal_mode(len(cents), len(cents[0][1]), mode) == "broadcast":
+    if assign_literal_mode(len(cents), len(cents[0][1])) == "broadcast":
         cents_df = e.sparkSession.createDataFrame(
             [(int(cid), [float(x) for x in v]) for cid, v in cents],
             "cell_id long, centroid array<double>",

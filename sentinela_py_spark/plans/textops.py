@@ -261,7 +261,6 @@ from sentinela_py_spark.operators.dedup import (  # noqa: E402
 
 
 def intra_spans_sql(
-    src: str = "documents",
     k: int = INTRA_K,
     min_span_words: int = MIN_INTRA_SPAN_WORDS,
     cap: int = MAX_GRAM_OCC,
@@ -277,7 +276,7 @@ def intra_spans_sql(
     ig AS MATERIALIZED (
       SELECT doc_id, i AS pos,
              array_to_string(list_slice(string_split(text,' '), i, i+{k}-1), ' ') AS gram
-      FROM {src},
+      FROM documents,
            UNNEST(generate_series(1, greatest(len(string_split(text,' ')) - {k} + 1, 0))) AS t(i)
     ),
     igc AS (
@@ -822,14 +821,14 @@ class CmsSizing:
     delta: float  # ...except with probability ≤ delta
 
 
-def plan_cms_config(epsilon: float, delta: float, max_depth: int = 4) -> CmsSizing:
+def plan_cms_config(epsilon: float, delta: float) -> CmsSizing:
     """Compute (w, d) from an accuracy contract instead of the 4×256 demo
     constants — the sibling of ``plan_lsh_config``/``plan_bloom_config``
     (the r4 judge's sizing-helper gap). Under the bound this module's
     sketch satisfies (overestimate ≤ 2N/w with per-row failure ½, rows
     independent): ``w = ceil(2/ε)`` and ``d = ceil(log2(1/δ))``.
 
-    ``d`` is clamped to ``max_depth`` (default 4): `_cms_bucket_spark`
+    ``d`` is clamped to 4: `_cms_bucket_spark`
     slices one 128-bit md5 into 32-bit rows, which caps d at 4 without a
     salted-digest fallback — the clamp surfaces the achievable δ rather
     than silently promising a tighter one. The registered constants are
@@ -837,7 +836,7 @@ def plan_cms_config(epsilon: float, delta: float, max_depth: int = 4) -> CmsSizi
     if not (0.0 < epsilon < 1.0) or not (0.0 < delta < 1.0):
         raise ValueError(f"epsilon/delta must be in (0, 1), got {epsilon}, {delta}")
     width = math.ceil(2.0 / epsilon)
-    depth = min(max_depth, max(1, math.ceil(math.log2(1.0 / delta))))
+    depth = min(4, max(1, math.ceil(math.log2(1.0 / delta))))
     return CmsSizing(
         width=width,
         depth=depth,

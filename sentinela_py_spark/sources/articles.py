@@ -68,12 +68,12 @@ def normalize_article_aliases(df: DataFrame) -> DataFrame:
     return out
 
 
-def normalize_city_mentions(df: DataFrame, col_name: str = "cities") -> Column:
+def normalize_city_mentions(df: DataFrame) -> Column:
     """Coalesce city-mention aliases into the canonical CITY_MENTION shape
     (reference article.py:39-51: id read from city_id|ibge_id|id|identifier,
     label from label|name|nome). Field availability is taken from the
     frame's schema so legacy shapes project without analysis errors."""
-    element = df.schema[col_name].dataType.elementType
+    element = df.schema["cities"].dataType.elementType
     names = set(element.fieldNames()) if isinstance(element, T.StructType) else set()
 
     def pick(c: Column, *candidates: str) -> Column:
@@ -100,4 +100,4 @@ def normalize_city_mentions(df: DataFrame, col_name: str = "cities") -> Column:
             F.coalesce(sources, F.array().cast("array<string>")).alias("sources"),
         )
 
-    return F.transform(F.col(col_name), shape)
+    return F.transform(F.col("cities"), shape)

@@ -39,10 +39,10 @@ def load_city_catalog(
     raw = spark.read.option("multiLine", "true").json(path)
     cols = set(raw.columns)
 
-    def opt(*names: str, default=None):
+    def opt(*names: str):
         present = [F.col(n) for n in names if n in cols]
         if not present:
-            return F.lit(default)
+            return F.lit(None)
         return F.coalesce(*present) if len(present) > 1 else present[0]
 
     lat = opt("latitude", "lat").cast("double")

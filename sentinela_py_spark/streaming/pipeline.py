@@ -11,8 +11,8 @@ services/extraction/app.py:454-486). The Spark rendering:
   → checkpointing gives at-least-once; the upsert makes replays no-ops.
 
 The reference is processing-time only; the engine also exposes the
-idiomatic event-time superset (watermark + tumbling/sliding/session
-windows) because the streaming query surface is first-class (T6).
+idiomatic event-time superset (watermark + tumbling/session windows;
+sliding windows are the batch `q_event_buckets` arm) because the streaming query surface is first-class (T6).
 """
 
 from __future__ import annotations
@@ -169,26 +169,21 @@ def run_extraction_stream(
 def windowed_event_counts(
     events: DataFrame,
     window: str = "5 minutes",
-    slide: str | None = None,
     watermark: str = "10 minutes",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
 ) -> DataFrame:
-    """Event-time tumbling/sliding window aggregation with a watermark for
+    """Event-time tumbling window aggregation with a watermark for
     late data (T6 superset; works on both batch and streaming frames)."""
-    df = events.withWatermark(ts_col, watermark) if events.isStreaming else events
-    win = F.window(ts_col, window, slide) if slide else F.window(ts_col, window)
-    return df.groupBy(win.alias("w"), F.col(key_col)).agg(
+    df = events.withWatermark("ts", watermark) if events.isStreaming else events
+    win = F.window("ts", window)
+    return df.groupBy(win.alias("w"), F.col("event_type")).agg(
         F.count("*").alias("n"), F.sum("value").alias("value_sum")
     )
 
 
-def session_windows(
-    events: DataFrame, gap: str = "30 minutes", ts_col: str = "ts", key_col: str = "user_id"
-) -> DataFrame:
+def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session windows keyed by user with an inactivity gap (T6 superset)."""
-    df = events.withWatermark(ts_col, gap) if events.isStreaming else events
-    return df.groupBy(F.session_window(F.col(ts_col), gap).alias("s"), F.col(key_col)).agg(
+    df = events.withWatermark("ts", gap) if events.isStreaming else events
+    return df.groupBy(F.session_window(F.col("ts"), gap).alias("s"), F.col("user_id")).agg(
         F.count("*").alias("n_events")
     )
 
@@ -212,15 +207,15 @@ def first_by_enqueue_seq(pdfs):
     return first
 
 
-def stateful_url_dedup(stream: DataFrame, ttl_minutes: int = 60) -> DataFrame:
+def stateful_url_dedup(stream: DataFrame) -> DataFrame:
     """Cross-batch first-wins URL dedup — the queue's in-flight set
     (pending_news_queue.py:26-32) as a custom stateful operator.
 
     `dropDuplicates` inside a batch can't suppress a URL re-enqueued in a
     LATER micro-batch; this keeps per-URL state via
     ``applyInPandasWithState`` with a processing-time TTL (the reference's
-    inflight entry is cleared on ack; here state expires after
-    ``ttl_minutes``, bounding state size the way a 100 TB stream must).
+    inflight entry is cleared on ack; here state expires after 60
+    minutes, bounding state size the way a 100 TB stream must).
     Emits each URL's first-seen row (min enqueue_seq within the batch);
     subsequent batches emit nothing for known URLs."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -233,10 +228,10 @@ def stateful_url_dedup(stream: DataFrame, ttl_minutes: int = 60) -> DataFrame:
             return
         first = first_by_enqueue_seq(pdfs)
         if state.exists:
-            state.setTimeoutDuration(ttl_minutes * 60 * 1000)
+            state.setTimeoutDuration(60 * 60 * 1000)
             return  # URL already in flight → suppress
         state.update((True,))
-        state.setTimeoutDuration(ttl_minutes * 60 * 1000)
+        state.setTimeoutDuration(60 * 60 * 1000)
         if first is not None:
             yield first
 
@@ -572,9 +567,6 @@ def image_dedup_batch_against_corpus(
     state_dir: str,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    max_hamming: int = 3,
-    max_bucket_size: int | None = 64,
-    ids_collapsed: bool = False,
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
     """One micro-batch of IMAGE near-dup rejection at ingest — the
@@ -604,9 +596,6 @@ def image_dedup_batch_against_corpus(
         signer,
         id_col=id_col,
         payload_col=payload_col,
-        max_hamming=max_hamming,
-        max_bucket_size=max_bucket_size,
-        ids_collapsed=ids_collapsed,
         write_sink=write_sink,
     )
 
@@ -617,8 +606,6 @@ def audio_dedup_batch_against_corpus(
     state_dir: str,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    max_hamming: int = 3,
-    max_bucket_size: int | None = 64,
     ids_collapsed: bool = False,
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
@@ -648,8 +635,6 @@ def audio_dedup_batch_against_corpus(
         signer,
         id_col=id_col,
         payload_col=payload_col,
-        max_hamming=max_hamming,
-        max_bucket_size=max_bucket_size,
         ids_collapsed=ids_collapsed,
         write_sink=write_sink,
     )
@@ -659,12 +644,6 @@ def video_dedup_batch_against_corpus(
     batch: DataFrame,
     epoch_id: int,
     state_dir: str,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    max_hamming: int = 3,
-    max_bucket_size: int | None = 64,
-    ids_collapsed: bool = False,
-    write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
     """One micro-batch of VIDEO near-dup rejection at ingest — the
     streaming twin of `plans.mmops.q_signature_neardup`'s video arm:
@@ -695,14 +674,8 @@ def video_dedup_batch_against_corpus(
         epoch_id,
         state_dir,
         signer,
-        id_col=id_col,
-        payload_col=payload_col,
-        max_hamming=max_hamming,
-        max_bucket_size=max_bucket_size,
-        ids_collapsed=ids_collapsed,
         n_bands=WIDE_DHASH_BANDS,
         band_bits=WIDE_DHASH_BAND_BITS,
-        write_sink=write_sink,
     )
 
 
@@ -713,8 +686,6 @@ def signature_dedup_batch_against_corpus(
     signer,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    max_hamming: int = 3,
-    max_bucket_size: int | None = 64,
     ids_collapsed: bool = False,
     n_bands: int | None = None,
     band_bits: int | None = None,
@@ -735,16 +706,16 @@ def signature_dedup_batch_against_corpus(
        machinery;
     3. WITHIN-batch: `hamming_band_pairs` over the representatives
        (4×16-bit bands tiling the 64-bit signature — the deployment
-       geometry from `plan_hamming_config`; Hamming ≤ ``max_hamming``
-       refine, doc_id-ordered hot-bucket cap with the overflow audit
-       landing at ``overflow/epoch=N``) feeds `connected_components`;
+       geometry from `plan_hamming_config`; Hamming ≤ 3 refine,
+       doc_id-ordered hot-bucket cap with the overflow audit landing at
+       ``overflow/epoch=N``) feeds `connected_components`;
        survivors are re-elected AFTER the corpus verdicts exactly as
        the MinHash screen does, so every reject's ``matched_doc`` is an
        accepted row;
     4. CROSS-corpus: representative bands equi-join the persistent
-       signature store on (band, bsig), then verify at TRUE Hamming ≤
-       ``max_hamming``. The store is pre-aggregated to one row per
-       (band, bsig, sig) with min(doc_id) — a template flood of
+       signature store on (band, bsig), then verify at TRUE Hamming ≤ 3.
+       The store is pre-aggregated to one row per (band, bsig, sig)
+       with min(doc_id) — a template flood of
        byte-identical or perceptually-identical copies collapses to ONE
        stored row exactly (they share the signature), the perceptual
        analog of `cross_corpus_candidates`' skew-immune pre-aggregation;
@@ -812,10 +783,10 @@ def signature_dedup_batch_against_corpus(
     pairs, overflow = hamming_band_pairs(
         rep_sigs.select("doc_id", "sig"),
         "sig",
-        max_hamming=max_hamming,
+        max_hamming=3,
         n_bands=n_bands,
         band_bits=band_bits,
-        max_bucket_size=max_bucket_size,
+        max_bucket_size=64,
         validate_coverage=wide,
     )
     members = connected_components(
@@ -834,7 +805,7 @@ def signature_dedup_batch_against_corpus(
         )
         vs_corpus = (
             rep_bands.join(corpus_sigs, ["band", "bsig"])
-            .filter(probe_ham <= max_hamming)
+            .filter(probe_ham <= 3)
             .groupBy("doc_id")
             .agg(F.min("corpus_doc").alias("matched_doc"))
             .withColumn("reason", F.lit("vs_corpus"))
@@ -909,8 +880,6 @@ def run_incremental_image_dedup_stream(
     checkpoint_dir: str,
     state_dir: str,
     schema=None,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
 ):
     """Streaming IMAGE near-dup rejection at ingest: every micro-batch
     of (id, binary payload) rows is perceptually hashed and joined
@@ -924,7 +893,7 @@ def run_incremental_image_dedup_stream(
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         image_dedup_batch_against_corpus(
-            batch, epoch_id, state_dir, id_col, payload_col
+            batch, epoch_id, state_dir
         )
 
     return _start_stream(
@@ -939,8 +908,6 @@ def run_incremental_audio_dedup_stream(
     checkpoint_dir: str,
     state_dir: str,
     schema=None,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
 ):
     """Streaming AUDIO near-dup rejection at ingest: every micro-batch
     of (id, binary RIFF/WAVE payload) rows is fingerprinted and joined
@@ -952,7 +919,7 @@ def run_incremental_audio_dedup_stream(
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         audio_dedup_batch_against_corpus(
-            batch, epoch_id, state_dir, id_col, payload_col
+            batch, epoch_id, state_dir
         )
 
     return _start_stream(
@@ -967,9 +934,6 @@ def run_incremental_dedup_stream(
     checkpoint_dir: str,
     state_dir: str,
     schema=None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket_size: int | None = None,
 ):
     """Streaming near-dup REJECTION AT INGEST: every micro-batch of
     documents is MinHash-banded and joined against the accumulated band
@@ -978,15 +942,14 @@ def run_incremental_dedup_stream(
     lake actually runs (dedup the firehose against the corpus, don't
     re-pair the corpus nightly). Batch semantics, replay safety, and the
     state layout are documented on `dedup_batch_against_corpus`, as is
-    ``max_bucket_size`` (the hot-bucket cap; None → the library default)
-    — deployments tune it per corpus here instead of bypassing the
-    stream driver. State size is O(corpus × N_BANDS) fixed-width rows —
-    at 100 TB the band store is a small fraction of the text it indexes,
-    and the join prunes on the band column."""
+    the hot-bucket cap (the library default). State size is O(corpus ×
+    N_BANDS) fixed-width rows — at 100 TB the band store is a small
+    fraction of the text it indexes, and the join prunes on the band
+    column."""
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         dedup_batch_against_corpus(
-            batch, epoch_id, state_dir, id_col, text_col, max_bucket_size
+            batch, epoch_id, state_dir
         )
 
     return _start_stream(
@@ -1228,8 +1191,6 @@ def run_embedding_dedup_stream(
     checkpoint_dir: str,
     state_dir: str,
     schema=None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float | None = None,
     max_bucket_size: int | None = None,
 ):
@@ -1248,7 +1209,7 @@ def run_embedding_dedup_stream(
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         embedding_dedup_batch_against_corpus(
-            batch, epoch_id, state_dir, id_col, vec_col, threshold, max_bucket_size
+            batch, epoch_id, state_dir, threshold=threshold, max_bucket_size=max_bucket_size
         )
 
     return _start_stream(
@@ -1344,9 +1305,7 @@ def decontamination_screen_batch(
     return accepted.withColumnRenamed("doc_id", id_col).withColumnRenamed("text", text_col)
 
 
-def fuzzy_eval_artifacts(
-    eval_docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> dict:
+def fuzzy_eval_artifacts(eval_docs: DataFrame) -> dict:
     """FROZEN eval-side artifacts of the fuzzy decontamination screen
     (build once at stream start, like the Bloom row): the eval split's
     MinHash band index and its distinct xxhash64-folded 3-gram shingle
@@ -1364,9 +1323,7 @@ def fuzzy_eval_artifacts(
         minhash_signatures,
     )
 
-    d = eval_docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
+    d = eval_docs.select("doc_id", "text")
     bands = (
         lsh_band_signatures(minhash_signatures(d))
         .select(F.col("doc_id").alias("e_doc"), "band", "sig")
@@ -1440,7 +1397,6 @@ def fuzzy_decon_screen_batch(
     state_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    jaccard: float | None = None,
     ids_collapsed: bool = False,
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
@@ -1456,7 +1412,7 @@ def fuzzy_decon_screen_batch(
     documents MinHash-band against the frozen eval band index
     (`fuzzy_eval_artifacts` — broadcast, the index is eval-sized), and
     band collisions are verified at whole-doc 3-gram Jaccard ≥
-    ``jaccard`` (default `plans.textops.FUZZY_DECON_JACCARD`) before a
+    `plans.textops.FUZZY_DECON_JACCARD` before a
     document is quarantined — banding alone would flag at LSH's
     false-positive rate; the ENTIRE verify stage (shingle explode,
     distinct, per-doc count, eval join) runs only on the collision
@@ -1477,7 +1433,6 @@ def fuzzy_decon_screen_batch(
     )
     from sentinela_py_spark.plans.textops import FUZZY_DECON_JACCARD
 
-    jaccard = FUZZY_DECON_JACCARD if jaccard is None else jaccard
     renamed = batch.withColumnRenamed(id_col, "doc_id").withColumnRenamed(
         text_col, "text"
     )
@@ -1489,7 +1444,7 @@ def fuzzy_decon_screen_batch(
         .distinct()
         .transform(barrier_eager)
     )
-    verified = _fuzzy_verified(b, cand, artifacts, jaccard)
+    verified = _fuzzy_verified(b, cand, artifacts, FUZZY_DECON_JACCARD)
     # eager checkpoint BEFORE the write + left_anti reuse — without it
     # the bands-join + Jaccard-verify lineage executes once per consumer
     # (the sibling screens' pattern)
@@ -1516,9 +1471,6 @@ def run_decontamination_stream(
     state_dir: str,
     eval_docs: DataFrame,
     schema=None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_hits: int = 1,
     m_bits: int | None = None,
     n_hashes: int | None = None,
 ):
@@ -1535,12 +1487,11 @@ def run_decontamination_stream(
     here, the only safe way to dial it."""
     from sentinela_py_spark.functions.bloom import eval_gram_bloom
 
-    bloom_row = eval_gram_bloom(eval_docs, text_col, n_hashes=n_hashes, m_bits=m_bits)
+    bloom_row = eval_gram_bloom(eval_docs, n_hashes=n_hashes, m_bits=m_bits)
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         decontamination_screen_batch(
-            batch, bloom_row, epoch_id, state_dir, id_col, text_col, min_hits,
-            m_bits=m_bits, n_hashes=n_hashes,
+            batch, bloom_row, epoch_id, state_dir, m_bits=m_bits, n_hashes=n_hashes
         )
 
     return _start_stream(
@@ -1551,25 +1502,23 @@ def run_decontamination_stream(
 def view_click_attribution_stream(
     views: DataFrame,
     clicks: DataFrame,
-    window_minutes: int = 60,
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Watermarked stream-stream interval join: every (view, click) pair
-    by the same user where the view precedes the click by less than
-    ``window_minutes`` — the unbounded twin of q_click_attribution.
+    by the same user where the view precedes the click by less than 60
+    minutes — the unbounded twin of q_click_attribution.
 
     Both sides carry event-time watermarks and the join condition bounds
     view-ts from BOTH directions relative to click-ts, so Spark can expire
     buffered rows once the watermark passes the interval — state stays
     O(users × window), never O(stream). Works on batch frames too (the
     watermark is a no-op there)."""
-    v = (views.withWatermark("ts", watermark) if views.isStreaming else views).alias("v")
-    c = (clicks.withWatermark("ts", watermark) if clicks.isStreaming else clicks).alias("c")
+    v = (views.withWatermark("ts", "2 hours") if views.isStreaming else views).alias("v")
+    c = (clicks.withWatermark("ts", "2 hours") if clicks.isStreaming else clicks).alias("c")
     return v.join(
         c,
         F.expr(
             f"""v.user_id = c.user_id
-            AND v.ts >= c.ts - INTERVAL {int(window_minutes)} MINUTES
+            AND v.ts >= c.ts - INTERVAL 60 MINUTES
             AND v.ts < c.ts"""
         ),
     ).select(
@@ -1588,7 +1537,6 @@ def quality_screen_batch(
     state_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    rule_min: float = 0.5,
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
     """One micro-batch of the QUALITY screen at ingest — the streaming
@@ -1618,7 +1566,7 @@ def quality_screen_batch(
         # off a rejection); the keep verdict itself is unchanged —
         # re-gating on a new signal is a model rotation, not a patch
         "word_lm_logprob",
-        ((F.col("quality") >= rule_min) & (F.col("svm_score") > 0)).alias("keep"),
+        ((F.col("quality") >= 0.5) & (F.col("svm_score") > 0)).alias("keep"),
     )
     joined = batch.join(verdict, id_col).transform(barrier_eager)
     rejected = joined.filter(~F.col("keep")).select(
@@ -1648,7 +1596,6 @@ def clip_score_verdict(
     id_col: str = "doc_id",
     image_vec_col: str = "image_embedding",
     text_vec_col: str = "embedding",
-    min_cos: float = CLIP_SCORE_MIN,
 ) -> DataFrame:
     """(id, clip_cos, keep) for paired rows carrying an image-side and a
     text-side vector — the SINGLE cosine/verdict definition shared by
@@ -1666,7 +1613,7 @@ def clip_score_verdict(
     return pairs.select(
         id_col,
         cos_r.alias("clip_cos"),
-        (cos_r >= min_cos).alias("keep"),
+        (cos_r >= CLIP_SCORE_MIN).alias("keep"),
     )
 
 
@@ -1693,12 +1640,11 @@ def clip_score_screen_batch(
     id_col: str = "doc_id",
     image_vec_col: str = "image_embedding",
     text_vec_col: str = "embedding",
-    min_cos: float = CLIP_SCORE_MIN,
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
     """One micro-batch of the CROSS-MODAL CONSISTENCY screen (the
     other load-bearing LAION screen beside image dedup): drop paired rows whose image-side and caption-side vectors
-    disagree (rounded cosine < ``min_cos``). Perceptual dedup catches
+    disagree (rounded cosine < ``CLIP_SCORE_MIN``). Perceptual dedup catches
     "same image again"; THIS screen catches "wrong caption for this
     image" — scraped alt-text that describes the page, not the picture
     — which no dedup screen can see because nothing is duplicated.
@@ -1715,14 +1661,14 @@ def clip_score_screen_batch(
     scored = batch.withColumn(
         "clip_cos", clip_cos_col(image_vec_col, text_vec_col)
     ).transform(barrier_eager)
-    rejected = scored.filter(F.col("clip_cos") < min_cos).select(id_col, "clip_cos")
+    rejected = scored.filter(F.col("clip_cos") < CLIP_SCORE_MIN).select(id_col, "clip_cos")
     _parallel_writes(
         lambda: write_epoch_partition(
             rejected, os.path.join(state_dir, "rejected"), epoch_id
         ),
         sink=write_sink,
     )
-    return scored.filter(F.col("clip_cos") >= min_cos).drop("clip_cos")
+    return scored.filter(F.col("clip_cos") >= CLIP_SCORE_MIN).drop("clip_cos")
 
 
 # Stage names of the ingest funnel, in screen order (mirrors the batch
@@ -2114,12 +2060,8 @@ def run_composed_ingest_stream(
     state_dir: str,
     eval_docs: DataFrame,
     schema=None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vec_col: str = "embedding",
     threshold: float | None = None,
     min_hits: int = 1,
-    max_bucket_size: int | None = None,
     m_bits: int | None = None,
     n_hashes: int | None = None,
     index_dir: str | None = None,
@@ -2194,17 +2136,16 @@ def run_composed_ingest_stream(
     argument above is about corpus-coupled state, none applies."""
     from sentinela_py_spark.functions.bloom import eval_gram_bloom
 
-    bloom_row = eval_gram_bloom(eval_docs, text_col, n_hashes=n_hashes, m_bits=m_bits)
+    bloom_row = eval_gram_bloom(eval_docs, n_hashes=n_hashes, m_bits=m_bits)
     # fuzzy screen: eval-side band index + shingle frame built ONCE from
     # the same eval split, frozen for the stream's lifetime
-    fz = fuzzy_eval_artifacts(eval_docs, id_col, text_col) if fuzzy else None
+    fz = fuzzy_eval_artifacts(eval_docs) if fuzzy else None
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         composed_ingest_batch(
             batch, bloom_row, epoch_id, state_dir,
-            id_col=id_col, text_col=text_col, vec_col=vec_col,
             threshold=threshold, min_hits=min_hits,
-            max_bucket_size=max_bucket_size, m_bits=m_bits, n_hashes=n_hashes,
+            m_bits=m_bits, n_hashes=n_hashes,
             index_dir=index_dir, centroids=centroids, books=books,
             quality_model=quality_model, trim_repeats=trim_repeats,
             fuzzy_eval=fz, image_payload_col=image_payload_col,
@@ -2235,8 +2176,6 @@ def encode_ann_batch(
     books: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int | None = None,
-    dim: int = 64,
 ) -> DataFrame:
     """MAP-SIDE IVF-PQ encode of raw vectors against a frozen driver-
     resident codebook: cell assignment (`assign_cells_literal`) +
@@ -2247,10 +2186,9 @@ def encode_ann_batch(
     'stream ≡ batch encode' holds by construction."""
     from sentinela_py_spark.functions.kmeans import pq_stitch_codewords
     from sentinela_py_spark.functions.litutil import fast_lit
-    from sentinela_py_spark.functions.vectors import PQ_M, pq_residual_codes
+    from sentinela_py_spark.functions.vectors import pq_residual_codes
     from sentinela_py_spark.plans.simops import assign_cells_literal
 
-    m = PQ_M if m is None else m
     seed_vecs = fast_lit([[float(x) for x in v] for v in pq_stitch_codewords(books)], 2)
     cent_lit = fast_lit([[float(x) for x in v] for _, v in sorted(centroids)], 2)
     assigned = assign_cells_literal(batch, centroids, id_col=id_col, vec_col=vec_col)
@@ -2262,8 +2200,6 @@ def encode_ann_batch(
             F.col(vec_col),
             F.element_at(cent_lit, (F.col("cell_id") + 1).cast("int")),
             seed_vecs,
-            m,
-            dim,
         ).alias("codes"),
     )
 
@@ -2276,8 +2212,6 @@ def ann_index_append_batch(
     books: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int | None = None,
-    dim: int = 64,
 ) -> None:
     """One micro-batch of ANN index MAINTENANCE — the streaming half of
     the vector lake (FAISS ``IndexIVF.add``: the codebook trains offline
@@ -2310,7 +2244,7 @@ def ann_index_append_batch(
         # this epoch's rows already live in the compacted/rebuilt base;
         # re-writing the epoch dir would double them
         return
-    encoded = encode_ann_batch(batch, centroids, books, id_col, vec_col, m, dim)
+    encoded = encode_ann_batch(batch, centroids, books, id_col, vec_col)
     encoded.repartition(F.col("cell_id")).write.mode("overwrite").partitionBy(
         "cell_id"
     ).parquet(os.path.join(index_dir, f"epoch={epoch_id}"))
@@ -2324,8 +2258,6 @@ def run_ann_index_maintenance_stream(
     centroids: list[tuple[int, list[float]]],
     books: list[list[list[float]]],
     schema=None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     compact_every: int | None = None,
 ):
     """Incremental vector-index ingest: every micro-batch encodes against
@@ -2350,7 +2282,7 @@ def run_ann_index_maintenance_stream(
         from sentinela_py_spark.functions.vectors import compact_ann_index_tree
 
         ann_index_append_batch(
-            batch, epoch_id, index_dir, centroids, books, id_col, vec_col
+            batch, epoch_id, index_dir, centroids, books
         )
         if compact_every is not None and (epoch_id + 1) % compact_every == 0:
             compact_ann_index_tree(batch.sparkSession, index_dir)

@@ -175,7 +175,6 @@ def compact_epoch_store(
     spark: SparkSession,
     store_root: str,
     keep_latest: int = 1,
-    target_files: int = 1,
 ) -> int:
     """Fold this store's epoch dirs into ``epoch=-1`` — the screen-store
     twin of `compact_ann_index_tree`. The newest ``keep_latest`` live
@@ -185,9 +184,8 @@ def compact_epoch_store(
     epoch preserved in ``src_epoch`` so post-compaction reads exclude a
     replayed epoch's own rows exactly as before. Kept epochs are
     rewritten (not copied) so every surviving file carries ``src_epoch``
-    — one pass makes the store schema-uniform. ``target_files`` bounds
-    the base file count (signature-sized stores default to 1; raise it
-    if a store ever outgrows one comfortable parquet file). Stamps the
+    — one pass makes the store schema-uniform. The base is written as
+    one file (signature-sized stores fit one parquet file). Stamps the
     marker and swaps the root; returns the ``through_epoch`` stamped.
     Searches/probes see identical rows before and after (test-pinned).
     Run on the maintenance cadence that keeps per-store file counts
@@ -219,13 +217,13 @@ def compact_epoch_store(
     base = df.filter(~F.col("epoch").isin(keep_list)) if keep_list else df
     # the writes fully materialize the reads before the old root moves,
     # so the swap never races its own input
-    base.withColumnRenamed("epoch", "src_epoch").coalesce(target_files).write.parquet(
+    base.withColumnRenamed("epoch", "src_epoch").coalesce(1).write.parquet(
         os.path.join(tmp, f"epoch={BASE_EPOCH}")
     )
     for e in keep_list:
         df.filter(F.col("epoch") == e).withColumnRenamed(
             "epoch", "src_epoch"
-        ).coalesce(target_files).write.parquet(os.path.join(tmp, f"epoch={e}"))
+        ).coalesce(1).write.parquet(os.path.join(tmp, f"epoch={e}"))
     with open(_marker_path(tmp), "w") as f:
         json.dump({"through_epoch": through}, f)
     old = store_root + ".old"
@@ -239,7 +237,6 @@ def compact_ingest_state(
     spark: SparkSession,
     state_dir: str,
     keep_latest: int = 1,
-    target_files: int = 1,
 ) -> dict[str, int]:
     """One maintenance pass over a composed-ingest state root: every
     epoch store under it (``decontam/accepted``, ``minhash/bands``, the
@@ -270,6 +267,6 @@ def compact_ingest_state(
         ):
             continue  # ANN tree — its own compactor owns it
         out[os.path.relpath(root, state_dir)] = compact_epoch_store(
-            spark, root, keep_latest=keep_latest, target_files=target_files
+            spark, root, keep_latest=keep_latest
         )
     return out

@@ -14,19 +14,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -67,9 +54,9 @@ def _canonical_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
-def ensure_min_partitions(df: DataFrame, minimum: int | None = None) -> DataFrame:
+def ensure_min_partitions(df: DataFrame) -> DataFrame:
     """Round-robin repartition iff the input has fewer partitions than
-    requested (default: the cluster's defaultParallelism).
+    the cluster's defaultParallelism.
 
     The driver's testdata parquet is written as ONE row group per table,
     so file scans are unsplittable and every downstream stage until the
@@ -78,23 +65,7 @@ def ensure_min_partitions(df: DataFrame, minimum: int | None = None) -> DataFram
     full parallelism; the guard means a well-partitioned production table
     (100 TB lakes have thousands of row groups) passes through untouched,
     with no extra shuffle."""
-    sc = df.sparkSession.sparkContext
-    minimum = minimum if minimum is not None else sc.defaultParallelism
+    minimum = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < minimum:
         return df.repartition(minimum)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table and register it as a temp view; returns the dict."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        # load_table handles the events TIMESTAMP(NANOS) quirk; a raw
-        # spark.read.parquet on events.parquet throws PARQUET_TYPE_ILLEGAL
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -1,0 +1,205 @@
+"""The package API carries no parameter that no caller sets and no public
+function that nothing uses.
+
+One AST pass over every ``.py`` file in the repository (package, bench,
+tools, benchmark harness, tests, ``__spark_entry__.py``):
+
+* a default-valued parameter of a uniquely named package function counts
+  as *set* when any call of that name passes it by keyword, passes enough
+  positional arguments to reach it, or forwards ``*args``/``**kwargs``.
+  A method's ``self``/``cls`` is skipped, and a class's ``__init__`` is
+  called by the class name. Every never-set parameter must be on
+  ``ALLOWED_UNSET`` with a one-line reason;
+* every public package function must be referenced somewhere other than
+  its own definition.
+
+Run as a script to print the counts and every violation:
+``python tests/test_api_surface.py``.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+from collections import defaultdict
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = "sentinela_py_spark"
+
+# (function, parameter) → why the parameter stays although no caller sets it.
+ALLOWED_UNSET: dict[tuple[str, str], str] = {
+    ("run_enrichment_stream", "trigger_seconds"):
+        "trigger cadence is a deployment setting",
+    ("run_extraction_stream", "trigger_seconds"):
+        "trigger cadence is a deployment setting",
+    ("load_engine", "spec"):
+        "in-code form of the NER_FACTORY_ENV deployment setting",
+    ("audit_dump_path", "base"):
+        "a filesystem path is a deployment setting",
+    ("run_composed_ingest_stream", "index_dir"):
+        "switches on the ANN index stage, whose batch body tests exercise",
+    ("run_composed_ingest_stream", "centroids"):
+        "switches on the ANN index stage, whose batch body tests exercise",
+    ("run_composed_ingest_stream", "books"):
+        "switches on the ANN index stage, whose batch body tests exercise",
+    ("run_composed_ingest_stream", "audio_payload_col"):
+        "switches on the audio screen, whose batch body tests exercise",
+    ("run_composed_ingest_stream", "clip_vec_col"):
+        "switches on the CLIP screen, whose batch body tests exercise",
+    ("run_composed_ingest_stream", "m_bits"):
+        "eval Bloom build and probe must share the filter size",
+    ("run_composed_ingest_stream", "n_hashes"):
+        "eval Bloom build and probe must share the hash count",
+    ("run_decontamination_stream", "m_bits"):
+        "eval Bloom build and probe must share the filter size",
+    ("run_decontamination_stream", "n_hashes"):
+        "eval Bloom build and probe must share the hash count",
+}
+
+
+def _py_files() -> list[Path]:
+    out = []
+    for dirpath, dirnames, filenames in os.walk(ROOT):
+        dirnames[:] = [
+            d for d in dirnames if not d.startswith(".") and d != "__pycache__"
+        ]
+        out += [Path(dirpath) / f for f in filenames if f.endswith(".py")]
+    return sorted(out)
+
+
+def _parse_all() -> dict[Path, ast.Module]:
+    return {p: ast.parse(p.read_text(), filename=str(p)) for p in _py_files()}
+
+
+def _package_defs(trees):
+    """name → [(path, def node, skip_first)] over every function and method
+    of the package; ``__init__`` is filed under its class name."""
+    defs = defaultdict(list)
+
+    def visit(node, path, cls):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, path, child.name)
+            elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                static = any(
+                    isinstance(d, ast.Name) and d.id == "staticmethod"
+                    for d in child.decorator_list
+                )
+                name = cls if (cls and child.name == "__init__") else child.name
+                defs[name].append((path, child, bool(cls) and not static))
+                visit(child, path, None)
+
+    for path, tree in trees.items():
+        if PACKAGE in path.relative_to(ROOT).parts[:1]:
+            visit(tree, path, None)
+    return defs
+
+
+def _call_name(call: ast.Call) -> str | None:
+    f = call.func
+    if isinstance(f, ast.Name):
+        return f.id
+    if isinstance(f, ast.Attribute):
+        return f.attr
+    return None
+
+
+def never_set_parameters() -> dict[tuple[str, str], str]:
+    """(function, parameter) → ``path:line`` of the definition, for every
+    default-valued parameter of a uniquely named package function that no
+    call in the repository sets."""
+    trees = _parse_all()
+    defs = _package_defs(trees)
+    calls = defaultdict(list)
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and (name := _call_name(node)):
+                calls[name].append(node)
+
+    out = {}
+    for name, entries in defs.items():
+        if len(entries) != 1:
+            continue
+        path, fn, skip_first = entries[0]
+        a = fn.args
+        positional = [*a.posonlyargs, *a.args][1 if skip_first else 0:]
+        defaulted = [p.arg for p in positional[len(positional) - len(a.defaults):]]
+        defaulted += [
+            p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+        ]
+        if not defaulted:
+            continue
+        set_names: set[str] = set()
+        for call in calls.get(name, ()):
+            if any(isinstance(x, ast.Starred) for x in call.args) or any(
+                k.arg is None for k in call.keywords
+            ):
+                set_names.update(defaulted)
+                break
+            set_names.update(p.arg for p in positional[: len(call.args)])
+            set_names.update(k.arg for k in call.keywords)
+        where = f"{path.relative_to(ROOT)}:{fn.lineno}"
+        out.update({(name, p): where for p in defaulted if p not in set_names})
+    return out
+
+
+def unreferenced_public_functions() -> dict[str, str]:
+    """name → ``path:line`` for every public module-level package function
+    whose name appears nowhere in the repository (as a name, attribute,
+    import or string) except in its own definition."""
+    trees = _parse_all()
+    refs: set[str] = set()
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                refs.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                refs.add(node.attr)
+            elif isinstance(node, ast.alias):
+                refs.add(node.name)
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                refs.add(node.value)
+    out = {}
+    for path, tree in trees.items():
+        if PACKAGE not in path.relative_to(ROOT).parts[:1]:
+            continue
+        for fn in tree.body:
+            public = isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_")
+            if public and fn.name not in refs:
+                out[fn.name] = f"{path.relative_to(ROOT)}:{fn.lineno}"
+    return out
+
+
+def test_every_never_set_parameter_is_allowed_with_a_reason():
+    unset = never_set_parameters()
+    violations = sorted(f"{w} {f}({p})" for (f, p), w in unset.items()
+                        if (f, p) not in ALLOWED_UNSET)
+    assert not violations, (
+        f"{len(violations)} default-valued parameters no caller sets; delete "
+        "them or add them to ALLOWED_UNSET with a reason:\n" + "\n".join(violations)
+    )
+    assert all(r.strip() and "\n" not in r for r in ALLOWED_UNSET.values())
+    stale = sorted(set(ALLOWED_UNSET) - set(unset))
+    assert not stale, f"allow-list entries that some caller now sets: {stale}"
+
+
+def test_every_public_function_is_referenced():
+    dead = unreferenced_public_functions()
+    assert not dead, "public functions nothing references:\n" + "\n".join(
+        f"{w} {n}" for n, w in sorted(dead.items())
+    )
+
+
+if __name__ == "__main__":
+    unset = never_set_parameters()
+    bad = {k: w for k, w in unset.items() if k not in ALLOWED_UNSET}
+    for (f, p), w in sorted(bad.items(), key=lambda kv: kv[1]):
+        print(f"{w} {f}({p})")
+    dead = unreferenced_public_functions()
+    for n, w in sorted(dead.items()):
+        print(f"{w} {n}  [unreferenced]")
+    print(f"never-set defaulted parameters: {len(unset)} "
+          f"({len(bad)} not allowed) in {len({f for f, _ in unset})} functions, "
+          f"{len({w.split(':')[0] for w in unset.values()})} files; "
+          f"unreferenced public functions: {len(dead)}")

@@ -320,10 +320,12 @@ def test_probe_cells_literal_matches_frame_path(spark):
         assert lit == frame
 
 
-def test_assign_broadcast_mode_bit_identical_to_literal(spark):
+def test_assign_broadcast_mode_bit_identical_to_literal(spark, monkeypatch):
     """Past the literal guard the assignment rides the broadcast-frame
     path — same argmax, NaN guard and tie-break, so the two modes must
-    return BIT-identical (vec_id, cell_id) assignments."""
+    return BIT-identical (vec_id, cell_id) assignments. Forcing
+    ASSIGN_LITERAL_MAX to 1 takes the broadcast path."""
+    from sentinela_py_spark.plans import simops
     from sentinela_py_spark.plans.simops import assign_cells_literal
 
     e = load_table(spark, SF_SMOKE, "embeddings")
@@ -333,11 +335,12 @@ def test_assign_broadcast_mode_bit_identical_to_literal(spark):
     ]
     lit = {
         (r["vec_id"], r["cell_id"])
-        for r in assign_cells_literal(e, cents, mode="literal").collect()
+        for r in assign_cells_literal(e, cents).collect()
     }
+    monkeypatch.setattr(simops, "ASSIGN_LITERAL_MAX", 1)
     bc = {
         (r["vec_id"], r["cell_id"])
-        for r in assign_cells_literal(e, cents, mode="broadcast").collect()
+        for r in assign_cells_literal(e, cents).collect()
     }
     assert lit == bc
 
@@ -411,10 +414,6 @@ def test_assign_guard_math_at_deployment_cell_counts():
     boundary = ASSIGN_LITERAL_MAX // 64
     assert assign_literal_mode(boundary, 64) == "literal"
     assert assign_literal_mode(boundary + 1, 64) == "broadcast"
-    assert assign_literal_mode(100_000, 64, mode="literal") == "literal"
-    assert assign_literal_mode(N_CELLS, EMB_DIM, mode="broadcast") == "broadcast"
-    with pytest.raises(ValueError):
-        assign_literal_mode(8, 64, mode="inline")
 
 
 def test_cell_cap_never_bites_at_fixture_scale(spark):

@@ -566,56 +566,55 @@ class TestAdcSearch:
         boundary = ADC_T2_LITERAL_MAX // (8 * 16)
         assert adc_t2_mode(boundary, 8, 16) == "literal"
         assert adc_t2_mode(boundary + 1, 8, 16) == "broadcast"
-        # explicit modes override the guard; junk is rejected loudly
-        assert adc_t2_mode(100_000, 8, 16, mode="literal") == "literal"
-        assert adc_t2_mode(8, 8, 16, mode="broadcast") == "broadcast"
-        with pytest.raises(ValueError):
-            adc_t2_mode(8, 8, 16, mode="inline")
 
-    def test_adc_broadcast_t2_bit_identical_to_literal(self, spark, trained_store):
+    def test_adc_broadcast_t2_bit_identical_to_literal(
+        self, spark, trained_store, monkeypatch
+    ):
         """The broadcast form derives t2 in Spark with the same ordered
         fold adc_tables runs in Python, so the two forms must return
-        BIT-identical rows — same survivors, same cosines, same ranks."""
-        from sentinela_py_spark.functions.vectors import (
-            ivf_pq_adc_topk,
-            read_ann_index,
-        )
+        BIT-identical rows — same survivors, same cosines, same ranks.
+        The fixture's t2 is literal-sized; forcing ADC_T2_LITERAL_MAX to
+        0 takes the broadcast form."""
+        from sentinela_py_spark.functions import vectors as V
 
         e, cents, books, path = trained_store
         queries = e.filter(F.col("vec_id") < 3)
 
-        def run(t2_mode):
+        def run():
             return sorted(
                 (r["query_id"], r["vec_id"], r["cell_id"], r["cosine"], r["rnk"])
-                for r in ivf_pq_adc_topk(
-                    read_ann_index(spark, path),
-                    read_ann_index(spark, path),
+                for r in V.ivf_pq_adc_topk(
+                    V.read_ann_index(spark, path),
+                    V.read_ann_index(spark, path),
                     queries,
                     cents,
                     books,
                     k=5,
                     coarse_k=20,
-                    t2_mode=t2_mode,
                 ).collect()
             )
 
-        lit_rows = run("literal")
-        assert lit_rows and run("broadcast") == lit_rows
+        lit_rows = run()
+        monkeypatch.setattr(V, "ADC_T2_LITERAL_MAX", 0)
+        assert lit_rows and run() == lit_rows
 
-    def test_adc_broadcast_cent_bit_identical_to_literal(self, spark, trained_store):
-        """cent_mode (r10): ⟨q, centroid⟩ and ‖centroid‖² derived from
-        the broadcast centroid frame use the same ordered folds as the
-        literal path on the same doubles — BIT-identical rows, at
-        nprobe 1 and 2."""
+    def test_adc_broadcast_cent_bit_identical_to_literal(
+        self, spark, trained_store, monkeypatch
+    ):
+        """⟨q, centroid⟩ and ‖centroid‖² derived from the broadcast
+        centroid frame use the same ordered folds as the literal path on
+        the same doubles — BIT-identical rows, at nprobe 1 and 2. Forcing
+        ASSIGN_LITERAL_MAX to 0 takes the broadcast form."""
         from sentinela_py_spark.functions.vectors import (
             ivf_pq_adc_topk,
             read_ann_index,
         )
+        from sentinela_py_spark.plans import simops
 
         e, cents, books, path = trained_store
         queries = e.filter(F.col("vec_id") < 3)
 
-        def run(cent_mode, nprobe):
+        def run(nprobe):
             return sorted(
                 (r["query_id"], r["vec_id"], r["cell_id"], r["cosine"], r["rnk"])
                 for r in ivf_pq_adc_topk(
@@ -627,30 +626,30 @@ class TestAdcSearch:
                     k=5,
                     coarse_k=20 * nprobe,
                     nprobe=nprobe,
-                    cent_mode=cent_mode,
                 ).collect()
             )
 
+        lit_rows = {nprobe: run(nprobe) for nprobe in (1, 2)}
+        monkeypatch.setattr(simops, "ASSIGN_LITERAL_MAX", 0)
         for nprobe in (1, 2):
-            lit_rows = run("literal", nprobe)
-            assert lit_rows and run("broadcast", nprobe) == lit_rows
+            assert lit_rows[nprobe] and run(nprobe) == lit_rows[nprobe]
 
     def test_adc_auto_engages_broadcast_cent_past_the_guard(
         self, spark, trained_store, monkeypatch
     ):
-        """Auto cent_mode actually switches at the assignment-class
-        boundary: with ASSIGN_LITERAL_MAX forced under the fixture's
-        cells·dim, the default build must route the centroid family
-        (query assignment + qdotc/cnb) through broadcast frames and
-        still return the literal path's exact rows — no cells-sized
-        literal remains in the plan."""
+        """The centroid family's guard actually switches at the
+        assignment-class boundary: with ASSIGN_LITERAL_MAX forced under
+        the fixture's cells·dim, the default build must route the
+        centroid family (query assignment + qdotc/cnb) through broadcast
+        frames and still return the literal path's exact rows — no
+        cells-sized literal remains in the plan."""
         from sentinela_py_spark.functions import vectors as V
         from sentinela_py_spark.plans import simops
 
         e, cents, books, path = trained_store
         queries = e.filter(F.col("vec_id") < 3)
 
-        def build(**kw):
+        def build():
             return V.ivf_pq_adc_topk(
                 V.read_ann_index(spark, path),
                 V.read_ann_index(spark, path),
@@ -659,12 +658,11 @@ class TestAdcSearch:
                 books,
                 k=5,
                 coarse_k=20,
-                **kw,
             )
 
         want = sorted(
             (r["query_id"], r["vec_id"], r["cell_id"], r["cosine"], r["rnk"])
-            for r in build(cent_mode="literal").collect()
+            for r in build().collect()
         )
         monkeypatch.setattr(simops, "ASSIGN_LITERAL_MAX", 0)
         auto = build()
@@ -689,7 +687,7 @@ class TestAdcSearch:
         e, cents, books, path = trained_store
         queries = e.filter(F.col("vec_id") < 3)
 
-        def build(**kw):
+        def build():
             return V.ivf_pq_adc_topk(
                 V.read_ann_index(spark, path),
                 V.read_ann_index(spark, path),
@@ -698,12 +696,11 @@ class TestAdcSearch:
                 books,
                 k=5,
                 coarse_k=20,
-                **kw,
             )
 
         want = sorted(
             (r["query_id"], r["vec_id"], r["cell_id"], r["cosine"], r["rnk"])
-            for r in build(t2_mode="literal").collect()
+            for r in build().collect()
         )
         def has_local_scan(plan):
             return "LocalTableScan" in plan or "ExistingRDD" in plan
