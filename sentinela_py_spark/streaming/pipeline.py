@@ -33,26 +33,6 @@ from sentinela_py_spark.streaming.stores import (
 )
 
 
-def read_news_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-based streaming source of NewsDocument JSON lines (the Kafka
-    topic stand-in; swap `.format("kafka")` + from_json in production)."""
-    return spark.readStream.schema(NEWS_DOCUMENT).json(path)
-
-
-def _file_stream(
-    spark: SparkSession, source_path: str, schema=None, source_format: str = "json"
-) -> DataFrame:
-    """File source that reads one file per micro-batch: json lines, or
-    parquet for binary payloads (which don't ride JSON)."""
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    reader = reader.option("maxFilesPerTrigger", 1)
-    if source_format == "parquet":
-        return reader.parquet(source_path)
-    return reader.json(source_path)
-
-
 def _start_stream(
     stream: DataFrame,
     process: Callable[[DataFrame, int], None],
@@ -74,57 +54,6 @@ def _start_stream(
     else:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
-
-
-def enrich_batch(
-    batch: DataFrame,
-    catalog_entries: Iterable[Mapping[str, Any]],
-) -> DataFrame:
-    """One micro-batch of the extraction worker: dedup in-flight URLs,
-    run the city-match pipeline, aggregate mentions per document
-    (reference extraction/service.py:59-188 condensed to the city branch)."""
-    from sentinela_py_spark.operators.cityagg import (
-        adjust_context,
-        aggregate_city_mentions,
-        select_primary_city,
-    )
-    from sentinela_py_spark.operators.matching import explode_matches, match_articles
-
-    spark = batch.sparkSession
-    catalog_entries = list(catalog_entries)
-    cat_df = spark.createDataFrame(
-        [
-            (str(e.get("ibge_id")), e.get("name"), e.get("uf"))
-            for e in catalog_entries
-            if e.get("ibge_id") and e.get("name")
-        ],
-        "ibge_id string, name string, uf string",
-    )
-    deduped = batch.dropDuplicates(["url"])  # queue in-flight dedup (T3)
-    matched = match_articles(deduped, catalog_entries, body_col="body")
-    exploded = explode_matches(matched)
-    return select_primary_city(aggregate_city_mentions(adjust_context(exploded, cat_df)))
-
-
-def run_enrichment_stream(
-    spark: SparkSession,
-    source_path: str,
-    checkpoint_dir: str,
-    catalog_entries: Iterable[Mapping[str, Any]],
-    sink: Callable[[DataFrame, int], None],
-    trigger_seconds: int | None = None,
-):
-    """Wire source → enrich → foreachBatch(sink) with checkpointing
-    (trigger modes on `_start_stream`)."""
-    catalog_entries = list(catalog_entries)
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        sink(enrich_batch(batch, catalog_entries), epoch_id)
-
-    return _start_stream(
-        read_news_stream(spark, source_path), process, checkpoint_dir, "enrich",
-        trigger_seconds,
-    )
 
 
 def run_extraction_stream(
@@ -160,10 +89,11 @@ def run_extraction_stream(
             epoch_id,
         )
 
-    return _start_stream(
-        read_news_stream(spark, source_path), process, checkpoint_dir, "extract",
-        trigger_seconds,
-    )
+    # NewsDocument JSON lines, the Kafka topic stand-in (swap in
+    # `.format("kafka")` + from_json in production); no per-trigger file
+    # cap, so every landed file rides the next micro-batch
+    stream = spark.readStream.schema(NEWS_DOCUMENT).json(source_path)
+    return _start_stream(stream, process, checkpoint_dir, "extract", trigger_seconds)
 
 
 def windowed_event_counts(
@@ -388,8 +318,8 @@ def dedup_batch_against_corpus(
     ids_collapsed: bool = False,
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
-    """One micro-batch of near-dup rejection at ingest (the foreachBatch
-    body of `run_incremental_dedup_stream`, exposed for direct testing).
+    """One micro-batch of near-dup rejection at ingest (the MinHash screen
+    `composed_ingest_batch` chains under ``minhash/``).
 
     1. collapse EXACT copies on md5(text) — a uniformly-distributed key,
        skew-proof at any copy count — and band only the representatives;
@@ -874,89 +804,6 @@ def signature_dedup_batch_against_corpus(
     return accepted_out
 
 
-def run_incremental_image_dedup_stream(
-    spark: SparkSession,
-    source_path: str,
-    checkpoint_dir: str,
-    state_dir: str,
-    schema=None,
-):
-    """Streaming IMAGE near-dup rejection at ingest: every micro-batch
-    of (id, binary payload) rows is perceptually hashed and joined
-    against the accumulated signature index of everything already
-    accepted — batch semantics, replay safety, and state layout on
-    `image_dedup_batch_against_corpus`, run at its default Hamming
-    radius and bucket cap. The source is a PARQUET stream (binary
-    payloads don't ride JSON); state is O(corpus × 4 bands) of
-    fixed-width rows — at multimodal-lake scale the signature store is
-    a vanishing fraction of the pixels it indexes."""
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        image_dedup_batch_against_corpus(
-            batch, epoch_id, state_dir
-        )
-
-    return _start_stream(
-        _file_stream(spark, source_path, schema, "parquet"),
-        process, checkpoint_dir, "imgdedup",
-    )
-
-
-def run_incremental_audio_dedup_stream(
-    spark: SparkSession,
-    source_path: str,
-    checkpoint_dir: str,
-    state_dir: str,
-    schema=None,
-):
-    """Streaming AUDIO near-dup rejection at ingest: every micro-batch
-    of (id, binary RIFF/WAVE payload) rows is fingerprinted and joined
-    against the accumulated signature index of everything already
-    accepted — batch semantics, replay safety, and state layout on
-    `audio_dedup_batch_against_corpus` (the generic signature screen
-    under the audio signer), run at its default Hamming radius and
-    bucket cap. Parquet source, same rationale as the image stream."""
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        audio_dedup_batch_against_corpus(
-            batch, epoch_id, state_dir
-        )
-
-    return _start_stream(
-        _file_stream(spark, source_path, schema, "parquet"),
-        process, checkpoint_dir, "auddedup",
-    )
-
-
-def run_incremental_dedup_stream(
-    spark: SparkSession,
-    source_path: str,
-    checkpoint_dir: str,
-    state_dir: str,
-    schema=None,
-):
-    """Streaming near-dup REJECTION AT INGEST: every micro-batch of
-    documents is MinHash-banded and joined against the accumulated band
-    index of everything already accepted — the streaming twin of the
-    batch `minhash_candidate_pairs` path, and the shape a training-data
-    lake actually runs (dedup the firehose against the corpus, don't
-    re-pair the corpus nightly). Batch semantics, replay safety, and the
-    state layout are documented on `dedup_batch_against_corpus`, as is
-    the hot-bucket cap (the library default). State size is O(corpus ×
-    N_BANDS) fixed-width rows — at 100 TB the band store is a small
-    fraction of the text it indexes, and the join prunes on the band
-    column."""
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        dedup_batch_against_corpus(
-            batch, epoch_id, state_dir
-        )
-
-    return _start_stream(
-        _file_stream(spark, source_path, schema), process, checkpoint_dir, "dedup"
-    )
-
-
 def embedding_dedup_batch_against_corpus(
     batch: DataFrame,
     epoch_id: int,
@@ -1185,38 +1032,6 @@ def embedding_dedup_batch_against_corpus(
     return accepted_out
 
 
-def run_embedding_dedup_stream(
-    spark: SparkSession,
-    source_path: str,
-    checkpoint_dir: str,
-    state_dir: str,
-    schema=None,
-    threshold: float | None = None,
-    max_bucket_size: int | None = None,
-):
-    """Streaming embedding near-dup rejection at ingest: every micro-batch
-    is LSH-bucketed, cosine-confirmed within the batch and against the
-    bucket-keyed index of everything already accepted — the streaming twin
-    of `q_embedding_neardup`, and the shape an embedding lake runs (screen
-    the firehose against the corpus; never re-pair the corpus). Semantics,
-    replay safety, state layout, and ``max_bucket_size`` (the hot-bucket
-    cap; None → the library default) are on
-    `embedding_dedup_batch_against_corpus` — deployments tune the cap per
-    corpus here instead of bypassing the stream driver. State is O(corpus)
-    index rows partitioned by epoch and pruned by the bucket join; at
-    100 TB the index holds vectors only for the probe's matching bucket,
-    not the corpus scan."""
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        embedding_dedup_batch_against_corpus(
-            batch, epoch_id, state_dir, threshold=threshold, max_bucket_size=max_bucket_size
-        )
-
-    return _start_stream(
-        _file_stream(spark, source_path, schema), process, checkpoint_dir, "vecdedup"
-    )
-
-
 def decontamination_screen_batch(
     batch: DataFrame,
     bloom_row: DataFrame,
@@ -1248,7 +1063,7 @@ def decontamination_screen_batch(
     ``m_bits``/``n_hashes`` MUST match the geometry ``bloom_row`` was
     built with (None → the library defaults) — a probe at the wrong
     modulus lands bits in the wrong words and silently breaks the
-    no-false-negative guarantee, which is why `run_decontamination_stream`
+    no-false-negative guarantee, which is why `run_composed_ingest_stream`
     owns both build and probe and threads one geometry through.
 
     Writes are epoch-keyed overwrites (``accepted/epoch=N``,
@@ -1461,41 +1276,6 @@ def fuzzy_decon_screen_batch(
     accepted = b.join(flagged, "doc_id", "left_anti")
     return accepted.withColumnRenamed("doc_id", id_col).withColumnRenamed(
         "text", text_col
-    )
-
-
-def run_decontamination_stream(
-    spark: SparkSession,
-    source_path: str,
-    checkpoint_dir: str,
-    state_dir: str,
-    eval_docs: DataFrame,
-    schema=None,
-    m_bits: int | None = None,
-    n_hashes: int | None = None,
-):
-    """Streaming train/eval decontamination: the eval split's 5-gram
-    Bloom filter is built ONCE (`functions.bloom.eval_gram_bloom`) and
-    every incoming micro-batch probes it map-only — the third ingest
-    screen beside the MinHash and embedding dedup streams, closing the
-    loop on the "runs on every ingest batch" deployment claim with
-    running code.
-
-    ``m_bits``/``n_hashes`` size the filter (None → library defaults;
-    compute them with `functions.bloom.plan_bloom_config` from the eval
-    gram count and FP target) — build and probe share the ONE geometry
-    here, the only safe way to dial it."""
-    from sentinela_py_spark.functions.bloom import eval_gram_bloom
-
-    bloom_row = eval_gram_bloom(eval_docs, n_hashes=n_hashes, m_bits=m_bits)
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        decontamination_screen_batch(
-            batch, bloom_row, epoch_id, state_dir, m_bits=m_bits, n_hashes=n_hashes
-        )
-
-    return _start_stream(
-        _file_stream(spark, source_path, schema), process, checkpoint_dir, "decon"
     )
 
 
@@ -2085,9 +1865,8 @@ def run_composed_ingest_stream(
     shape a training-data lake actually deploys (one firehose, every
     screen, one checkpoint) rather than parallel single-screen streams
     with divergent progress. The eval Bloom filter is built ONCE up
-    front (`functions.bloom.eval_gram_bloom`, as in
-    `run_decontamination_stream`); geometry is threaded through build
-    and probe. Pass ``index_dir`` +
+    front (`functions.bloom.eval_gram_bloom`); geometry is threaded
+    through build and probe. Pass ``index_dir`` +
     ``centroids`` + ``books`` to arm the ANN index-maintenance tail:
     each micro-batch's survivors are frozen-codebook-encoded and
     appended to the searchable tree (`ann_index_append_batch`). Pass
@@ -2105,7 +1884,11 @@ def run_composed_ingest_stream(
     (`streaming.stores.compact_ingest_state`) — the self-bounding shape
     that keeps per-store file counts O(K) at production epoch counts
     instead of one dir per micro-batch forever, with replay and funnel
-    attribution preserved (src_epoch rides the base).
+    attribution preserved (src_epoch rides the base). With the index
+    tail armed, the same cadence folds the ANN tree into a one-file-per-
+    cell base (`functions.vectors.compact_ann_index_tree`). External
+    readers of the tree should search between maintenance windows or
+    through a snapshot: the root swap is two renames, not atomic.
 
     DESIGN DECISION — the CROSS-document substring-level span-cut screen
     (`operators.dedup.remove_shared_spans`, stage 3 of the batch
@@ -2151,23 +1934,29 @@ def run_composed_ingest_stream(
             fuzzy_eval=fz, image_payload_col=image_payload_col,
             audio_payload_col=audio_payload_col, clip_vec_col=clip_vec_col,
         )
-        # self-bounding screen-store maintenance: fold every store's old
-        # epochs into its base on the cadence, INSIDE the foreachBatch
+        # self-bounding store maintenance: fold every store's old epochs
+        # into its base on the cadence, INSIDE the foreachBatch
         # (serialized with the writes, so the root swap never races its
-        # own writer); keep_latest=1 leaves
-        # the just-written epoch live — the only epoch a checkpointed
-        # stream can still legitimately replay with a write. The armed
-        # ANN tree compacts itself via its own cell-clustered compactor
-        # (compact_ingest_state skips trees).
+        # own writer); keep_latest=1 leaves the just-written epoch live —
+        # the only epoch a checkpointed stream can still legitimately
+        # replay with a write. compact_ingest_state skips ANN trees, so
+        # the armed index tree is folded here by its own cell-clustered
+        # compactor; a replay of an epoch it folded no-ops against its
+        # marker (`ann_index_append_batch`).
         if compact_every is not None and (epoch_id + 1) % compact_every == 0:
+            from sentinela_py_spark.functions.vectors import compact_ann_index_tree
             from sentinela_py_spark.streaming.stores import compact_ingest_state
 
             compact_ingest_state(batch.sparkSession, state_dir, keep_latest=1)
+            if index_dir is not None:
+                compact_ann_index_tree(batch.sparkSession, index_dir)
 
-    return _start_stream(
-        _file_stream(spark, source_path, schema, source_format),
-        process, checkpoint_dir, "composed",
-    )
+    # one file per micro-batch: json lines, or parquet for binary payloads
+    reader = spark.readStream.option("maxFilesPerTrigger", 1)
+    if schema is not None:
+        reader = reader.schema(schema)
+    load = reader.parquet if source_format == "parquet" else reader.json
+    return _start_stream(load(source_path), process, checkpoint_dir, "composed")
 
 
 def encode_ann_batch(
@@ -2248,45 +2037,3 @@ def ann_index_append_batch(
     encoded.repartition(F.col("cell_id")).write.mode("overwrite").partitionBy(
         "cell_id"
     ).parquet(os.path.join(index_dir, f"epoch={epoch_id}"))
-
-
-def run_ann_index_maintenance_stream(
-    spark: SparkSession,
-    source_path: str,
-    checkpoint_dir: str,
-    index_dir: str,
-    centroids: list[tuple[int, list[float]]],
-    books: list[list[list[float]]],
-    schema=None,
-    compact_every: int | None = None,
-):
-    """Incremental vector-index ingest: every micro-batch encodes against
-    the frozen codebook and appends to the epoch-partitioned index tree —
-    semantics, replay safety, and layout on `ann_index_append_batch`.
-    Compose AFTER the ingest screens (dedup/decontamination): index what
-    survived, so the store never carries rows the curation pipeline
-    already rejected.
-
-    ``compact_every=K`` runs `compact_ann_index_tree` after every K-th
-    epoch, INSIDE the foreachBatch (serialized with the appends, so the
-    swap never races its own writer) — the self-bounding deployment
-    shape: per-cell file counts stay O(K) forever instead of growing one
-    file per micro-batch. Crash-replay composes: a replayed epoch whose
-    rows were already folded no-ops against the marker, and re-running
-    the compaction itself is idempotent (folding an already-folded tree
-    rewrites the same base). External readers should search between
-    maintenance windows or through a snapshot — the root swap is two
-    renames, not atomic (see `_swap_tree_root`)."""
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        from sentinela_py_spark.functions.vectors import compact_ann_index_tree
-
-        ann_index_append_batch(
-            batch, epoch_id, index_dir, centroids, books
-        )
-        if compact_every is not None and (epoch_id + 1) % compact_every == 0:
-            compact_ann_index_tree(batch.sparkSession, index_dir)
-
-    return _start_stream(
-        _file_stream(spark, source_path, schema), process, checkpoint_dir, "annindex"
-    )

@@ -11,7 +11,9 @@ tools, benchmark harness, tests, ``__spark_entry__.py``):
   called by the class name. Every never-set parameter must be on
   ``ALLOWED_UNSET`` with a one-line reason;
 * every public package function must be referenced somewhere other than
-  its own definition.
+  its own definition;
+* a second pass leaves ``tests/`` out: every public package function only
+  tests reference must be on ``TEST_ONLY`` with a one-line reason.
 
 Run as a script to print the counts and every violation:
 ``python tests/test_api_surface.py``.
@@ -29,32 +31,59 @@ PACKAGE = "sentinela_py_spark"
 
 # (function, parameter) → why the parameter stays although no caller sets it.
 ALLOWED_UNSET: dict[tuple[str, str], str] = {
-    ("run_enrichment_stream", "trigger_seconds"):
-        "trigger cadence is a deployment setting",
     ("run_extraction_stream", "trigger_seconds"):
         "trigger cadence is a deployment setting",
     ("load_engine", "spec"):
         "in-code form of the NER_FACTORY_ENV deployment setting",
     ("audit_dump_path", "base"):
         "a filesystem path is a deployment setting",
-    ("run_composed_ingest_stream", "index_dir"):
-        "switches on the ANN index stage, whose batch body tests exercise",
-    ("run_composed_ingest_stream", "centroids"):
-        "switches on the ANN index stage, whose batch body tests exercise",
-    ("run_composed_ingest_stream", "books"):
-        "switches on the ANN index stage, whose batch body tests exercise",
-    ("run_composed_ingest_stream", "audio_payload_col"):
-        "switches on the audio screen, whose batch body tests exercise",
     ("run_composed_ingest_stream", "clip_vec_col"):
         "switches on the CLIP screen, whose batch body tests exercise",
     ("run_composed_ingest_stream", "m_bits"):
         "eval Bloom build and probe must share the filter size",
     ("run_composed_ingest_stream", "n_hashes"):
         "eval Bloom build and probe must share the hash count",
-    ("run_decontamination_stream", "m_bits"):
-        "eval Bloom build and probe must share the filter size",
-    ("run_decontamination_stream", "n_hashes"):
-        "eval Bloom build and probe must share the hash count",
+}
+
+_UNDECIDED = "undecided, ROADMAP item 7"
+
+# public function → why it stays although only tests call it.
+TEST_ONLY: dict[str, str] = {
+    "run_composed_ingest_stream": "the ingest deployment entry point",
+    "run_extraction_stream": "the reference worker, app.py:409-486",
+    "stateful_url_dedup": "the reference in-flight set, pending_news_queue.py:26-32",
+    "analyze_articles": _UNDECIDED,
+    "checkpoint_mode": _UNDECIDED,
+    "curation_funnel": f"{_UNDECIDED}; SURVEY.md row 'curation funnel datacard'",
+    "decode_media": _UNDECIDED,
+    "embedding_neardup_multitable":
+        f"{_UNDECIDED}; SURVEY.md row 'embedding cosine near-dup'",
+    "exact_neardup_pairs": _UNDECIDED,
+    "first_page_fallback_urls": f"{_UNDECIDED}; SURVEY.md S3",
+    "list_by_period": f"{_UNDECIDED}; SURVEY.md S5, F1/F2",
+    "media_features": _UNDECIDED,
+    "normalize_article_aliases": _UNDECIDED,
+    "observe_counts": f"{_UNDECIDED}; SURVEY.md K9",
+    "observe_ingest": f"{_UNDECIDED}; SURVEY.md K9, F5",
+    "pending_by_version": f"{_UNDECIDED}; SURVEY.md S4, F3, T4",
+    "person_dimension": _UNDECIDED,
+    "plan_cms_config": f"{_UNDECIDED}; SURVEY.md row 'sketch sizing planners'",
+    "plan_hamming_config": _UNDECIDED,
+    "plan_lsh_config": f"{_UNDECIDED}; SURVEY.md row 'sketch sizing planners'",
+    "resample_audio": _UNDECIDED,
+    "resize_image": f"{_UNDECIDED}; SURVEY.md row 'multimodal binary columns'",
+    "resolve_url": _UNDECIDED,
+    "salted_join": f"{_UNDECIDED}; SURVEY.md row 'skew salting'",
+    "session_windows": f"{_UNDECIDED}; SURVEY.md T6",
+    "strip_pagination": _UNDECIDED,
+    "upsert_by_key": f"{_UNDECIDED}; SURVEY.md K3, K4, K6, K7",
+    "video_dedup_batch_against_corpus": _UNDECIDED,
+    "view_click_attribution_stream": f"{_UNDECIDED}; SURVEY.md T6+ interval join",
+    "windowed_event_counts": f"{_UNDECIDED}; SURVEY.md T6",
+    "with_payload_hash": f"{_UNDECIDED}; SURVEY.md F6",
+    "write_bucketed": f"{_UNDECIDED}; SURVEY.md row 'bucketed co-located joins'",
+    "write_partitioned":
+        f"{_UNDECIDED}; SURVEY.md row 'partitioned table layout'",
 }
 
 
@@ -144,13 +173,16 @@ def never_set_parameters() -> dict[tuple[str, str], str]:
     return out
 
 
-def unreferenced_public_functions() -> dict[str, str]:
+def unreferenced_public_functions(skip_tests: bool = False) -> dict[str, str]:
     """name → ``path:line`` for every public module-level package function
     whose name appears nowhere in the repository (as a name, attribute,
-    import or string) except in its own definition."""
+    import or string) except in its own definition; with ``skip_tests``,
+    references from files under ``tests/`` do not count."""
     trees = _parse_all()
     refs: set[str] = set()
-    for tree in trees.values():
+    for path, tree in trees.items():
+        if skip_tests and path.relative_to(ROOT).parts[0] == "tests":
+            continue
         for node in ast.walk(tree):
             if isinstance(node, ast.Name):
                 refs.add(node.id)
@@ -191,6 +223,21 @@ def test_every_public_function_is_referenced():
     )
 
 
+def test_every_test_only_function_is_allowed_with_a_reason():
+    test_only = unreferenced_public_functions(skip_tests=True)
+    violations = sorted(
+        f"{w} {n}" for n, w in test_only.items() if n not in TEST_ONLY
+    )
+    assert not violations, (
+        f"{len(violations)} public functions only tests call; give them a "
+        "product caller, delete them, or add them to TEST_ONLY with a "
+        "reason:\n" + "\n".join(violations)
+    )
+    assert all(r.strip() and "\n" not in r for r in TEST_ONLY.values())
+    stale = sorted(set(TEST_ONLY) - set(test_only))
+    assert not stale, f"TEST_ONLY entries that the product now calls: {stale}"
+
+
 if __name__ == "__main__":
     unset = never_set_parameters()
     bad = {k: w for k, w in unset.items() if k not in ALLOWED_UNSET}
@@ -199,7 +246,12 @@ if __name__ == "__main__":
     dead = unreferenced_public_functions()
     for n, w in sorted(dead.items()):
         print(f"{w} {n}  [unreferenced]")
+    test_only = unreferenced_public_functions(skip_tests=True)
+    for n, w in sorted(test_only.items()):
+        if n not in TEST_ONLY:
+            print(f"{w} {n}  [test-only]")
     print(f"never-set defaulted parameters: {len(unset)} "
           f"({len(bad)} not allowed) in {len({f for f, _ in unset})} functions, "
           f"{len({w.split(':')[0] for w in unset.values()})} files; "
-          f"unreferenced public functions: {len(dead)}")
+          f"unreferenced public functions: {len(dead)}; "
+          f"test-only public functions: {len(test_only)}")

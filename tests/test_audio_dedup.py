@@ -320,30 +320,36 @@ class TestAudioDedupScreenAtIngest:
         assert self._ids(spark, f"{state}/bands/epoch=0") == {1}
 
     def test_stream_runner_wiring(self, spark, tmp_path):
-        from sentinela_py_spark.streaming.pipeline import (
-            run_incremental_audio_dedup_stream,
-        )
+        """The screen armed on the composed ingest stream
+        (``audio_payload_col``, paired clip + caption rows, one parquet
+        file per epoch): the gain twin of epoch 0's clip dies at epoch
+        1's audio probe against the corpus, its caption never reaching
+        the text screens."""
+        from sentinela_py_spark.streaming.pipeline import run_composed_ingest_stream
 
+        schema = "doc_id long, payload binary, text string, embedding array<double>"
         src = str(tmp_path / "src")
         base = _wav(BODY)
-        self._df(spark, [(1, base)]).coalesce(1).write.mode("append").parquet(src)
-        self._df(spark, [(2, _gain(base))]).coalesce(1).write.mode("append").parquet(
-            src
+        captions = {
+            1: "spark shuffles partition data across the executor fleet tonight",
+            2: "catalyst rewrites logical plans into efficient physical operators",
+        }
+        for i, clip in ((1, base), (2, _gain(base))):
+            row = (i, bytearray(clip), captions[i], [float(j == i) for j in range(64)])
+            spark.createDataFrame([row], schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+        eval_docs = spark.createDataFrame(
+            [(9000, "carbon dioxide capture requires novel sorbent materials")],
+            "doc_id long, text string",
         )
-        q = run_incremental_audio_dedup_stream(
-            spark,
-            src,
-            str(tmp_path / "ckpt"),
-            str(tmp_path / "state"),
-            schema="doc_id long, payload binary",
+        state = tmp_path / "state"
+        q = run_composed_ingest_stream(
+            spark, src, str(tmp_path / "ckpt"), str(state),
+            eval_docs=eval_docs, schema=schema,
+            audio_payload_col="payload", source_format="parquet",
         )
-        q.awaitTermination(120)
-        import glob
-
-        acc, rej = set(), set()
-        for d in glob.glob(str(tmp_path / "state" / "accepted" / "epoch=*")):
-            acc |= {r["doc_id"] for r in spark.read.parquet(d).collect()}
-        for d in glob.glob(str(tmp_path / "state" / "rejected" / "epoch=*")):
-            rej |= {r["doc_id"] for r in spark.read.parquet(d).collect()}
-        assert 1 in acc and 2 not in acc
-        assert 2 in rej
+        assert q.awaitTermination(300), "stream did not drain"
+        assert self._ids(spark, str(state / "accepted")) == {1}
+        assert self._ids(spark, str(state / "audio" / "rejected")) == {2}
+        assert 2 not in self._ids(spark, str(state / "minhash" / "bands"))

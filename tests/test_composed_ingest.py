@@ -88,15 +88,13 @@ def _read_ids(spark, path) -> set[int]:
     return {r["doc_id"] for r in spark.read.parquet(path).select("doc_id").collect()}
 
 
-def test_composed_stream_routes_each_defect_to_its_screen(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    for name, rows in (("b1.json", BATCH1), ("b2.json", BATCH2)):
-        with open(src / name, "w") as f:
-            for doc_id, text, emb in rows:
-                f.write(json.dumps({"doc_id": doc_id, "text": text, "embedding": emb}) + "\n")
+def _write_json(path, rows) -> None:
+    with open(path, "w") as f:
+        for doc_id, text, emb in rows:
+            f.write(json.dumps({"doc_id": doc_id, "text": text, "embedding": emb}) + "\n")
 
-    state = str(tmp_path / "state")
+
+def _drain(spark, src, tmp_path, state) -> None:
     q = run_composed_ingest_stream(
         spark, str(src), str(tmp_path / "ckpt"), state,
         eval_docs=_eval_docs(spark),
@@ -104,6 +102,15 @@ def test_composed_stream_routes_each_defect_to_its_screen(spark, tmp_path):
         threshold=THRESHOLD,
     )
     assert q.awaitTermination(300), "stream did not drain"
+
+
+def test_composed_stream_routes_each_defect_to_its_screen(spark, tmp_path):
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_json(src / "b1.json", BATCH1)
+    _write_json(src / "b2.json", BATCH2)
+    state = str(tmp_path / "state")
+    _drain(spark, src, tmp_path, state)
 
     # composed accepted: survivors of ALL screens, with every input column
     accepted = spark.read.parquet(os.path.join(state, "accepted"))
@@ -143,19 +150,34 @@ def test_composed_stream_equals_composed_batch(spark, tmp_path):
     """Stream ≡ batch parity: streaming the corpus in two epochs (ids
     ascending) accepts exactly the rows ONE composed batch over all rows
     accepts — incremental vs-corpus rejection and single-batch min-id
-    survivor election agree when arrival order matches id order."""
+    survivor election agree when arrival order matches id order.
+
+    The stream is restarted between its two files: the first drain sees
+    only BATCH1, then BATCH2 lands and a second drain on the SAME
+    checkpoint processes only the new file, as epoch 1, against the
+    corpus state the first drain persisted."""
     state = str(tmp_path / "batch-state")
-    bloom = _bloom_row(spark)
     out = composed_ingest_batch(
-        _df(spark, BATCH1 + BATCH2), bloom, 0, state, threshold=THRESHOLD
+        _df(spark, BATCH1 + BATCH2), _bloom_row(spark), 0, state, threshold=THRESHOLD
     )
     assert {r["doc_id"] for r in out.select("doc_id").collect()} == ACCEPT_IDS
 
-    # and epoch-by-epoch (the stream's exact per-batch calls) agrees
-    state2 = str(tmp_path / "epoch-state")
-    composed_ingest_batch(_df(spark, BATCH1), bloom, 0, state2, threshold=THRESHOLD)
-    composed_ingest_batch(_df(spark, BATCH2), bloom, 1, state2, threshold=THRESHOLD)
-    assert _read_ids(spark, os.path.join(state2, "accepted")) == ACCEPT_IDS
+    src = tmp_path / "src"
+    src.mkdir()
+    state2 = str(tmp_path / "stream-state")
+    _write_json(src / "b1.json", BATCH1)
+    _drain(spark, src, tmp_path, state2)
+    assert _read_ids(spark, os.path.join(state2, "accepted")) == {1, 5}
+    _write_json(src / "b2.json", BATCH2)
+    _drain(spark, src, tmp_path, state2)
+    acc = spark.read.parquet(os.path.join(state2, "accepted"))
+    # BATCH1 was not re-read: its survivors stay epoch 0, BATCH2's are epoch 1
+    assert {(r["doc_id"], r["epoch"]) for r in acc.collect()} == {(1, 0), (5, 0), (13, 1)}
+    mh = {
+        r["doc_id"]: r["reason"]
+        for r in spark.read.parquet(os.path.join(state2, "minhash", "rejected")).collect()
+    }
+    assert mh == {3: "within_batch", 10: "vs_corpus"}
 
 
 def test_composed_replay_reproduces_first_attempt(spark, tmp_path):

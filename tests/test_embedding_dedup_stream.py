@@ -5,12 +5,11 @@ ingest shape, streaming twin of q_embedding_neardup."""
 
 from __future__ import annotations
 
-import json
 import os
 
-import pytest
-
-from sentinela_py_spark.streaming.pipeline import run_embedding_dedup_stream
+from sentinela_py_spark.streaming.pipeline import (
+    embedding_dedup_batch_against_corpus,
+)
 from sentinela_py_spark.tables import load_table
 
 SF = "/root/testdata/sf0.01"
@@ -18,28 +17,11 @@ THRESHOLD = 0.9  # no sf0.01 pair reaches 0.9 -> batch 1 accepts everything
 DIM = 64
 
 
-def _write_batch(dirpath: str, name: str, rows: list[tuple[int, list[float]]]) -> None:
-    with open(os.path.join(dirpath, name), "w") as f:
-        for vec_id, emb in rows:
-            f.write(json.dumps({"vec_id": vec_id, "embedding": emb}) + "\n")
-
-
-@pytest.fixture()
-def dirs(tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    return str(src), str(tmp_path / "ckpt"), str(tmp_path / "state")
-
-
 def test_restart_and_replay_safety(spark, tmp_path):
     """Restart continues from the checkpoint (corpus index persists), and
     a crash-replayed epoch reproduces its first attempt — the index read
     excludes the batch's own epoch, so a batch whose writes landed but
     whose offset never committed cannot self-match on re-run."""
-    from sentinela_py_spark.streaming.pipeline import (
-        embedding_dedup_batch_against_corpus,
-    )
-
     state = str(tmp_path / "state")
     e1 = [1.0] + [0.0] * (DIM - 1)
     e2 = [0.0, 1.0] + [0.0] * (DIM - 2)
@@ -71,10 +53,6 @@ def test_duplicate_id_batch_replays_deterministically(spark, tmp_path):
     not a partition-order pick — a crash-replay seeing the same rows in
     a different arrival order and partitioning writes byte-identical
     accepted content AND vector-index content (r6 ADVICE)."""
-    from sentinela_py_spark.streaming.pipeline import (
-        embedding_dedup_batch_against_corpus,
-    )
-
     state = str(tmp_path / "state")
     va = [1.0] + [0.0] * (DIM - 1)
     vb = [0.0, 1.0] + [0.0] * (DIM - 2)
@@ -106,8 +84,9 @@ def test_duplicate_id_batch_replays_deterministically(spark, tmp_path):
     assert snapshot() == (first_acc, first_idx)
 
 
-def test_embedding_dedup_stream_end_to_end(spark, dirs):
-    src, ckpt, state = dirs
+def test_embedding_dedup_stream_end_to_end(spark, tmp_path):
+    """Four arriving files, one screen call each (epochs 0..3)."""
+    state = str(tmp_path / "state")
     base = [
         (r["vec_id"], [float(x) for x in r["embedding"]])
         for r in load_table(spark, SF, "embeddings").select("vec_id", "embedding").collect()
@@ -128,16 +107,9 @@ def test_embedding_dedup_stream_end_to_end(spark, dirs):
         e[i] = 1.0
         onehots += [(30_000 + i, e), (30_100 + i, e)]
 
-    _write_batch(src, "b1.json", base)
-    _write_batch(src, "b2.json", copies)
-    _write_batch(src, "b3.json", scaled)
-    _write_batch(src, "b4.json", onehots)
-
-    q = run_embedding_dedup_stream(
-        spark, src, ckpt, state,
-        schema="vec_id long, embedding array<float>", threshold=THRESHOLD,
-    )
-    assert q.awaitTermination(300), "stream did not drain"
+    for epoch, rows in enumerate((base, copies, scaled, onehots)):
+        batch = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        embedding_dedup_batch_against_corpus(batch, epoch, state, threshold=THRESHOLD)
 
     accepted = spark.read.parquet(os.path.join(state, "accepted"))
     rejected = spark.read.parquet(os.path.join(state, "rejected"))

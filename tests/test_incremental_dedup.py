@@ -5,12 +5,9 @@ what the batch MinHash path would keep."""
 
 from __future__ import annotations
 
-import json
 import os
 
-import pytest
-
-from sentinela_py_spark.streaming.pipeline import run_incremental_dedup_stream
+from sentinela_py_spark.streaming.pipeline import dedup_batch_against_corpus
 
 UNIQ = [
     "spark shuffles partition data across the executor fleet tonight",
@@ -20,24 +17,11 @@ UNIQ = [
 ]
 
 
-def _write_batch(dirpath: str, name: str, docs: list[tuple[int, str]]) -> None:
-    with open(os.path.join(dirpath, name), "w") as f:
-        for doc_id, text in docs:
-            f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-
-
-@pytest.fixture()
-def dirs(tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    return str(src), str(tmp_path / "ckpt"), str(tmp_path / "state")
-
-
-def _run(spark, src, ckpt, state):
-    q = run_incremental_dedup_stream(
-        spark, src, ckpt, state, schema="doc_id long, text string"
-    )
-    assert q.awaitTermination(180), "stream did not drain within 180s"
+def _run(spark, state, *batches: list[tuple[int, str]]) -> None:
+    """One screen call per arriving file, epochs 0, 1, ..."""
+    for epoch, docs in enumerate(batches):
+        batch = spark.createDataFrame(docs, "doc_id long, text string")
+        dedup_batch_against_corpus(batch, epoch, state)
 
 
 def _ids(spark, state, which: str) -> list[int]:
@@ -46,13 +30,16 @@ def _ids(spark, state, which: str) -> list[int]:
 
 
 class TestIncrementalDedup:
-    def test_within_batch_and_cross_corpus(self, spark, dirs):
-        src, ckpt, state = dirs
-        # batch 1: two distinct docs + an exact in-batch duplicate of doc 1
-        _write_batch(src, "b1.json", [(1, UNIQ[0]), (2, UNIQ[1]), (3, UNIQ[0])])
-        # batch 2: near-dup of corpus doc 2, plus a genuinely new doc
-        _write_batch(src, "b2.json", [(10, UNIQ[1]), (11, UNIQ[2])])
-        _run(spark, src, ckpt, state)
+    def test_within_batch_and_cross_corpus(self, spark, tmp_path):
+        state = str(tmp_path / "state")
+        _run(
+            spark,
+            state,
+            # batch 1: two distinct docs + an exact in-batch duplicate of doc 1
+            [(1, UNIQ[0]), (2, UNIQ[1]), (3, UNIQ[0])],
+            # batch 2: near-dup of corpus doc 2, plus a genuinely new doc
+            [(10, UNIQ[1]), (11, UNIQ[2])],
+        )
 
         assert _ids(spark, state, "accepted") == [1, 2, 11]
         rejected = {
@@ -62,26 +49,11 @@ class TestIncrementalDedup:
         assert rejected[3] == (1, "within_batch")
         assert rejected[10] == (2, "vs_corpus")
 
-    def test_band_store_holds_only_survivors(self, spark, dirs):
-        src, ckpt, state = dirs
-        _write_batch(src, "b1.json", [(1, UNIQ[0]), (2, UNIQ[0])])
-        _run(spark, src, ckpt, state)
+    def test_band_store_holds_only_survivors(self, spark, tmp_path):
+        state = str(tmp_path / "state")
+        _run(spark, state, [(1, UNIQ[0]), (2, UNIQ[0])])
         bands = spark.read.parquet(os.path.join(state, "bands"))
         assert sorted(set(r["doc_id"] for r in bands.collect())) == [1]
-
-    def test_restart_continues_from_checkpoint(self, spark, dirs):
-        src, ckpt, state = dirs
-        _write_batch(src, "b1.json", [(1, UNIQ[0])])
-        _run(spark, src, ckpt, state)
-        # second run: only the new file is processed; corpus state persists
-        _write_batch(src, "b2.json", [(2, UNIQ[0]), (3, UNIQ[3])])
-        _run(spark, src, ckpt, state)
-        assert _ids(spark, state, "accepted") == [1, 3]
-        rejected = {
-            r["doc_id"]: r["reason"]
-            for r in spark.read.parquet(os.path.join(state, "rejected")).collect()
-        }
-        assert rejected == {2: "vs_corpus"}
 
 
 class TestReplaySafety:
@@ -90,8 +62,6 @@ class TestReplaySafety:
         re-run with the SAME epoch id on restart. The store read excludes
         the batch's own epoch, so the replay must reproduce the first
         attempt exactly — not self-match and empty out the epoch."""
-        from sentinela_py_spark.streaming.pipeline import dedup_batch_against_corpus
-
         state = str(tmp_path / "state")
         batch = spark.createDataFrame(
             [(1, UNIQ[0]), (2, UNIQ[1])], ["doc_id", "text"]
@@ -113,8 +83,6 @@ class TestReplaySafety:
         a different arrival order and partitioning writes byte-identical
         accepted content AND band-store content (r6 ADVICE)."""
         import hashlib
-
-        from sentinela_py_spark.streaming.pipeline import dedup_batch_against_corpus
 
         state = str(tmp_path / "state")
         ta, tb = UNIQ[0], UNIQ[1]
@@ -149,8 +117,6 @@ class TestReplaySafety:
     def test_chain_rejects_point_at_survivor(self, spark, tmp_path):
         """Candidate chain 1-2, 2-3 (via identical text): every reject's
         matched_doc must be the ACCEPTED survivor, never another reject."""
-        from sentinela_py_spark.streaming.pipeline import dedup_batch_against_corpus
-
         state = str(tmp_path / "state")
         batch = spark.createDataFrame(
             [(1, UNIQ[0]), (2, UNIQ[0]), (3, UNIQ[0])], ["doc_id", "text"]
@@ -164,8 +130,6 @@ class TestReplaySafety:
         assert rejected == {2: 1, 3: 1}
 
     def test_custom_id_column_works(self, spark, tmp_path):
-        from sentinela_py_spark.streaming.pipeline import dedup_batch_against_corpus
-
         state = str(tmp_path / "state")
         batch = spark.createDataFrame(
             [(7, UNIQ[0]), (8, UNIQ[0])], ["news_id", "text"]

@@ -3,7 +3,8 @@ FROZEN codebook and append to the epoch-partitioned index tree — the
 FAISS IndexIVF.add contract. Pins: stream ≡ batch encode parity,
 checkpoint-replay idempotence, search-through-the-tree equality with a
 flat offline store, partition pruning across epochs, and the real
-availableNow stream wiring."""
+availableNow stream wiring (the index tail of the composed ingest
+stream)."""
 
 from __future__ import annotations
 
@@ -21,7 +22,7 @@ from sentinela_py_spark.functions.vectors import (
 )
 from sentinela_py_spark.streaming.pipeline import (
     ann_index_append_batch,
-    run_ann_index_maintenance_stream,
+    run_composed_ingest_stream,
 )
 from sentinela_py_spark.tables import load_table
 
@@ -55,6 +56,45 @@ def _slice(spark, lo, hi):
         .filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
         .select("vec_id", "embedding")
     )
+
+
+def _drain_composed(spark, tmp_path, codebook, chunks, compact_every=None) -> str:
+    """Drain the composed ingest stream with the ANN index tail armed,
+    one json file per chunk of embedding rows. Each row carries its own
+    disjoint-token caption, so every screen accepts it and the tree must
+    end up holding every row. Returns the tree path."""
+    cents, books = codebook
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, chunk in enumerate(chunks):
+        with open(src / f"batch{i}.jsonl", "w") as f:
+            for r in chunk:
+                vid = r["vec_id"]
+                row = {
+                    "doc_id": vid,
+                    "text": " ".join(f"d{vid}w{j}" for j in range(12)),
+                    "embedding": [float(x) for x in r["embedding"]],
+                }
+                f.write(json.dumps(row) + "\n")
+    tree = str(tmp_path / "tree")
+    q = run_composed_ingest_stream(
+        spark,
+        str(src),
+        str(tmp_path / "ckpt"),
+        str(tmp_path / "state"),
+        eval_docs=spark.createDataFrame(
+            [(-1, "an eval split sharing no token with any caption")],
+            "doc_id long, text string",
+        ),
+        schema="doc_id LONG, text STRING, embedding ARRAY<DOUBLE>",
+        threshold=0.9,  # no sf0.001 pair reaches it: every row survives
+        index_dir=tree,
+        centroids=cents,
+        books=books,
+        compact_every=compact_every,
+    )
+    assert q.awaitTermination(300), "stream did not drain"
+    return tree
 
 
 def _rowset(df):
@@ -124,35 +164,10 @@ class TestIndexMaintenance:
         assert "cell_id" in plan.split("PartitionFilters:")[1][:200]
 
     def test_available_now_stream_drains_into_tree(self, spark, codebook, tmp_path):
-        cents, books = codebook
-        src = tmp_path / "src"
-        src.mkdir()
         rows = _slice(spark, 0, 60).collect()
-        for i, chunk in enumerate([rows[:30], rows[30:]]):
-            with open(src / f"batch{i}.jsonl", "w") as f:
-                for r in chunk:
-                    f.write(
-                        json.dumps(
-                            {
-                                "vec_id": r["vec_id"],
-                                "embedding": [float(x) for x in r["embedding"]],
-                            }
-                        )
-                        + "\n"
-                    )
-        tree = str(tmp_path / "tree")
-        q = run_ann_index_maintenance_stream(
-            spark,
-            str(src),
-            str(tmp_path / "ckpt"),
-            tree,
-            cents,
-            books,
-            schema="vec_id LONG, embedding ARRAY<DOUBLE>",
-        )
-        q.awaitTermination(120)
+        tree = _drain_composed(spark, tmp_path, codebook, [rows[:30], rows[30:]])
         got = read_ann_index_tree(spark, tree)
-        assert sorted(r["vec_id"] for r in got.collect()) == sorted(
+        assert sorted(r["doc_id"] for r in got.collect()) == sorted(
             r["vec_id"] for r in rows
         )
         # every appended epoch landed cell-partitioned
@@ -320,43 +335,20 @@ class TestTreeCompaction:
         assert _rowset(read_ann_index_tree(spark, tree)) == before
 
     def test_stream_self_compacts_on_cadence(self, spark, codebook, tmp_path):
-        """compact_every=2: the availableNow stream drains 4 one-file
-        micro-batches, folding the tree after epochs 1 and 3 — the final
-        store holds every row, bounded at one file per cell."""
+        """compact_every=2 on the composed stream: it drains 2 one-file
+        micro-batches and folds the screen stores and the index tree
+        after epoch 1 only — the tree holds every row of both epochs in
+        one ``epoch=-1`` base, bounded at one file per cell."""
         from sentinela_py_spark.functions.vectors import tree_compacted_through
 
-        cents, books = codebook
-        src = tmp_path / "src"
-        src.mkdir()
-        rows = _slice(spark, 0, 80).collect()
-        for i in range(4):
-            with open(src / f"batch{i}.jsonl", "w") as f:
-                for r in rows[i * 20 : (i + 1) * 20]:
-                    f.write(
-                        json.dumps(
-                            {
-                                "vec_id": r["vec_id"],
-                                "embedding": [float(x) for x in r["embedding"]],
-                            }
-                        )
-                        + "\n"
-                    )
-        tree = str(tmp_path / "tree")
-        q = run_ann_index_maintenance_stream(
-            spark,
-            str(src),
-            str(tmp_path / "ckpt"),
-            tree,
-            cents,
-            books,
-            schema="vec_id LONG, embedding ARRAY<DOUBLE>",
-            compact_every=2,
+        rows = _slice(spark, 0, 40).collect()
+        tree = _drain_composed(
+            spark, tmp_path, codebook, [rows[:20], rows[20:]], compact_every=2
         )
-        q.awaitTermination(180)
         got = read_ann_index_tree(spark, tree)
-        assert sorted(r["vec_id"] for r in got.collect()) == sorted(
+        assert sorted(r["doc_id"] for r in got.collect()) == sorted(
             r["vec_id"] for r in rows
         )
         assert [p for p in os.listdir(tree) if p.startswith("epoch=")] == ["epoch=-1"]
         assert set(_cell_file_counts(tree).values()) == {1}
-        assert tree_compacted_through(tree) == 3
+        assert tree_compacted_through(tree) == 1

@@ -1,16 +1,15 @@
 """Streaming pipeline: availableNow drain of a JSON-lines news source
-through the enrichment foreachBatch, idempotent replay, and the windowed
-event-time superset."""
+through the extraction foreachBatch, in-flight URL dedup, checkpoint
+restart, the ingest decontamination screen, and the windowed event-time
+superset."""
 
 import datetime as dt
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
+from sentinela_py_spark.operators.geojob import geo_enrichment
 from sentinela_py_spark.streaming.pipeline import (
-    enrich_batch,
-    run_enrichment_stream,
     session_windows,
     windowed_event_counts,
 )
@@ -20,78 +19,16 @@ CATALOG = [
     {"ibge_id": "3550308", "name": "São Paulo", "uf": "SP"},
 ]
 
-DOCS = [
-    {
-        "url": "https://n/1",
-        "title": "Prefeito de Natal anuncia obras",
-        "body": "Natal (RN) recebe investimentos.",
-        "published_at": "2024-05-02T10:00:00.000Z",
-        "source": "portal-x",
-        "enqueue_seq": 1,
-    },
-    {
-        "url": "https://n/2",
-        "title": "Evento em São Paulo",
-        "body": "São Paulo sedia conferência.",
-        "published_at": "2024-05-02T11:00:00.000Z",
-        "source": "portal-x",
-        "enqueue_seq": 2,
-    },
-    # duplicate URL in the same batch — must be dropped (in-flight dedup)
-    {
-        "url": "https://n/1",
-        "title": "Prefeito de Natal anuncia obras",
-        "body": "Natal (RN) recebe investimentos.",
-        "published_at": "2024-05-02T10:00:00.000Z",
-        "source": "portal-x",
-        "enqueue_seq": 3,
-    },
-]
+def test_geo_enrichment_is_pure_batch_logic(spark):
+    from tests.test_geojob import CATALOG_ROWS, CATALOG_SCHEMA
 
-
-@pytest.fixture()
-def source_dir(tmp_path):
-    src = tmp_path / "stream-src"
-    src.mkdir()
-    (src / "batch1.json").write_text("\n".join(json.dumps(d) for d in DOCS))
-    return src
-
-
-def test_stream_drain_and_idempotent_replay(spark, source_dir, tmp_path):
-    results: dict[str, dict] = {}
-
-    def sink(df, epoch_id):
-        for r in df.collect():
-            results[(r["url"], r["city_id"])] = r.asDict()
-
-    q = run_enrichment_stream(
-        spark, str(source_dir), str(tmp_path / "ckpt"), CATALOG, sink
-    )
-    q.awaitTermination(120)
-
-    assert ("https://n/1", "2408102") in results
-    assert ("https://n/2", "3550308") in results
-    n1 = results[("https://n/1", "2408102")]
-    assert n1["rank"] == 1
-    # dup URL was dropped: occurrences reflect a single document's fields
-    assert n1["occurrences"] == 2  # title + body mention
-
-    # replay with same checkpoint: no new batches → no sink invocations
-    results.clear()
-    q2 = run_enrichment_stream(
-        spark, str(source_dir), str(tmp_path / "ckpt"), CATALOG, sink
-    )
-    q2.awaitTermination(120)
-    assert results == {}
-
-
-def test_enrich_batch_is_pure_batch_logic(spark):
+    catalog = spark.createDataFrame(CATALOG_ROWS, schema=CATALOG_SCHEMA)
     batch = spark.createDataFrame(
         [("https://n/9", "Natal cresce", "Obras em Natal (RN).", dt.datetime(2024, 5, 2), "p", 1)],
         "url string, title string, body string, published_at timestamp, source string, enqueue_seq long",
     )
-    out = enrich_batch(batch, CATALOG).collect()
-    assert len(out) == 1 and out[0]["city_id"] == "2408102"
+    out = geo_enrichment(batch, catalog, CATALOG).collect()
+    assert len(out) == 1 and out[0]["primary_city"]["city_id"] == "2408102"
 
 
 def test_windowed_event_counts_batch_parity(spark):
@@ -264,50 +201,64 @@ def test_watermark_drops_late_events(spark, tmp_path):
 
 def test_extraction_stream_end_to_end(spark, tmp_path):
     """§3.3 worker as a stream: one availableNow drain produces city
-    mentions, person occurrences, and version markers via foreachBatch."""
+    mentions, person occurrences, and version markers via foreachBatch;
+    a URL enqueued twice in the batch is processed once (in-flight
+    dedup), and a restart on the same checkpoint with no new file calls
+    the sink zero times."""
     from sentinela_py_spark.operators.ner import heuristic_person_engine
     from sentinela_py_spark.streaming.pipeline import run_extraction_stream
 
     src = tmp_path / "extract-src"
     src.mkdir()
-    docs = [
-        {
-            "url": "https://n/x1",
-            "title": "Prefeito de Cruzeta anuncia obras",
-            "body": "Maria Silva confirmou a visita a Natal-RN.",
-            "published_at": "2024-05-02T10:00:00.000Z",
-            "source": "p",
-            "enqueue_seq": 1,
-        }
-    ]
+    doc = {
+        "url": "https://n/x1",
+        "title": "Prefeito de Cruzeta anuncia obras",
+        "body": "Maria Silva confirmou a visita a Natal-RN.",
+        "published_at": "2024-05-02T10:00:00.000Z",
+        "source": "p",
+        "enqueue_seq": 1,
+    }
+    # the same URL re-enqueued in the same batch must be dropped
+    docs = [doc, {**doc, "enqueue_seq": 2}]
     (src / "b1.json").write_text("\n".join(json.dumps(d) for d in docs))
 
     outputs: dict[str, list] = {"cities": [], "people": [], "processed": []}
+    calls: list[int] = []
 
     def sink(frames, epoch_id):
+        calls.append(epoch_id)
         for k in outputs:
             outputs[k].extend(frames[k].collect())
 
-    q = run_extraction_stream(
-        spark,
-        str(src),
-        str(tmp_path / "ckpt-extract"),
-        [
-            {"ibge_id": "2408102", "name": "Natal", "uf": "RN"},
-            {"ibge_id": "2403251", "name": "Cruzeta", "uf": "RN"},
-        ],
-        sink,
-        engine=heuristic_person_engine,
-        ner_version="n1",
-        gazetteer_version="g1",
-    )
-    q.awaitTermination(180)
+    def drain():
+        q = run_extraction_stream(
+            spark,
+            str(src),
+            str(tmp_path / "ckpt-extract"),
+            [
+                {"ibge_id": "2408102", "name": "Natal", "uf": "RN"},
+                {"ibge_id": "2403251", "name": "Cruzeta", "uf": "RN"},
+            ],
+            sink,
+            engine=heuristic_person_engine,
+            ner_version="n1",
+            gazetteer_version="g1",
+        )
+        assert q.awaitTermination(180), "stream did not drain"
 
+    drain()
     city_keys = {r["mention_key"] for r in outputs["cities"]}
     assert {"2403251", "2408102"} <= city_keys
     assert "Maria Silva" in {r["canonical_name"] for r in outputs["people"]}
+    # the duplicate URL was dropped: one version marker, not two
+    assert [r["url"] for r in outputs["processed"]] == ["https://n/x1"]
     marker = outputs["processed"][0]
     assert marker["ner_version"] == "n1" and marker["gazetteer_version"] == "g1"
+
+    # restart on the same checkpoint, nothing new landed: no batch runs
+    calls.clear()
+    drain()
+    assert calls == []
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
@@ -386,15 +337,17 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
 
 
 def test_decontamination_stream_flags_eval_overlap(spark, tmp_path):
-    """Streaming Bloom decontamination: batch 1 mixes exact eval-doc
-    copies (must be flagged — the filter has no false negatives) with
-    synthetic unique docs; batch 2 is entirely clean. Flag decisions must
-    be a SUPERSET of the exact 5-gram join's per batch (FP-only excess)."""
-    import json
+    """Bloom decontamination at ingest, one screen call per arriving
+    file (epochs 0, 1) against a filter built once from the eval split:
+    batch 1 mixes exact eval-doc copies (must be flagged — the filter has
+    no false negatives) with synthetic unique docs; batch 2 is entirely
+    clean. Flag decisions must be a SUPERSET of the exact 5-gram join's
+    per batch (FP-only excess)."""
     import os
 
+    from sentinela_py_spark.functions.bloom import eval_gram_bloom
     from sentinela_py_spark.functions.text_stats import word_shingles
-    from sentinela_py_spark.streaming.pipeline import run_decontamination_stream
+    from sentinela_py_spark.streaming.pipeline import decontamination_screen_batch
     from sentinela_py_spark.tables import load_table
 
     d = load_table(spark, "/root/testdata/sf0.001", "documents").select("doc_id", "text")
@@ -408,20 +361,12 @@ def test_decontamination_stream_flags_eval_overlap(spark, tmp_path):
         (20_000 + i, f"zq{i}x unique synthetic filler row number {i} with no overlap tokens qz{i}")
         for i in range(30)
     ]
-    src = tmp_path / "src"
-    src.mkdir()
-    for name, rows in (("b1.json", contaminated + clean[:10]), ("b2.json", clean[10:])):
-        with open(src / name, "w") as f:
-            for doc_id, text in rows:
-                f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-
-    q = run_decontamination_stream(
-        spark, str(src), str(tmp_path / "ckpt"), str(tmp_path / "state"),
-        eval_docs=eval_docs, schema="doc_id long, text string",
-    )
-    assert q.awaitTermination(300), "stream did not drain"
-
     state = str(tmp_path / "state")
+    bloom_row = eval_gram_bloom(eval_docs)
+    for epoch, rows in enumerate((contaminated + clean[:10], clean[10:])):
+        batch = spark.createDataFrame(rows, "doc_id long, text string")
+        decontamination_screen_batch(batch, bloom_row, epoch, state)
+
     flagged = {
         r["doc_id"]: r["n_hits"]
         for r in spark.read.parquet(os.path.join(state, "flagged")).collect()

@@ -336,34 +336,21 @@ def test_incremental_dedup_stream_at_corpus_scale(spark, tmp_path):
     batch 1 seeds the corpus, batch 2 is entirely near-dup of batch 1
     (every doc rejected vs the band index), batch 3 is fresh. Verifies
     the band store answers cross-corpus rejection at corpus scale and
-    that acceptance stays exact under batch ordering."""
-    import json
+    that acceptance stays exact under batch ordering. One screen call
+    per batch, epochs 0, 1, 2."""
     import os
 
-    from sentinela_py_spark.streaming.pipeline import run_incremental_dedup_stream
+    from sentinela_py_spark.streaming.pipeline import dedup_batch_against_corpus
 
     d = load_table(spark, SF, "documents").select("doc_id", "text").collect()
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def write(name, rows):
-        with open(src / name, "w") as f:
-            for doc_id, text in rows:
-                f.write(json.dumps({"doc_id": doc_id, "text": text}) + "\n")
 
     base = [(r["doc_id"], r["text"]) for r in d]                      # 500 docs
     dupes = [(r["doc_id"] + 10_000, r["text"]) for r in d]            # all dups
     fresh = [(r["doc_id"] + 20_000, r["text"] + f" tail{r['doc_id']} unique suffix marker")
              for r in d]
-    write("b1.json", base)
-    write("b2.json", dupes)
-    write("b3.json", fresh)
-
-    q = run_incremental_dedup_stream(
-        spark, str(src), str(tmp_path / "ckpt"), str(tmp_path / "state"),
-        schema="doc_id long, text string",
-    )
-    assert q.awaitTermination(300), "stream did not drain"
+    for epoch, rows in enumerate((base, dupes, fresh)):
+        batch = spark.createDataFrame(rows, "doc_id long, text string")
+        dedup_batch_against_corpus(batch, epoch, str(tmp_path / "state"))
 
     accepted = spark.read.parquet(os.path.join(str(tmp_path / "state"), "accepted"))
     rejected = spark.read.parquet(os.path.join(str(tmp_path / "state"), "rejected"))
@@ -395,10 +382,11 @@ def test_embedding_dedup_stream_at_corpus_scale(spark, tmp_path):
     to stress the cap), and candidate-generation recall MEASURED on
     planted near-dups instead of assumed."""
     import hashlib
-    import json
     import os
 
-    from sentinela_py_spark.streaming.pipeline import run_embedding_dedup_stream
+    from sentinela_py_spark.streaming.pipeline import (
+        embedding_dedup_batch_against_corpus,
+    )
 
     cap = 256  # above every organic bucket (~125 of 2 000 base vectors
     # per 16 buckets), far below the 725-row flood bucket — only the
@@ -435,21 +423,12 @@ def test_embedding_dedup_stream_at_corpus_scale(spark, tmp_path):
         e[i % dim] = 1.0
         fresh.append((70_000 + i, e))
 
-    src = tmp_path / "src"
-    src.mkdir()
-    for name, rows in (("b1.json", base + flood), ("b2.json", planted), ("b3.json", fresh)):
-        with open(src / name, "w") as f:
-            for vec_id, emb in rows:
-                f.write(json.dumps({"vec_id": vec_id, "embedding": emb}) + "\n")
-
-    q = run_embedding_dedup_stream(
-        spark, str(src), str(tmp_path / "ckpt"), str(tmp_path / "state"),
-        schema="vec_id long, embedding array<float>",
-        threshold=0.9, max_bucket_size=cap,
-    )
-    assert q.awaitTermination(600), "stream did not drain"
-
     state = str(tmp_path / "state")
+    for epoch, rows in enumerate((base + flood, planted, fresh)):
+        batch = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        embedding_dedup_batch_against_corpus(
+            batch, epoch, state, threshold=0.9, max_bucket_size=cap
+        )
     accepted = {r["vec_id"] for r in spark.read.parquet(os.path.join(state, "accepted")).collect()}
     rejected = {
         r["vec_id"]: r["reason"]
