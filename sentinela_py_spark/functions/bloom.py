@@ -129,15 +129,14 @@ def _positions(key: Column, n_hashes: int, m_bits: int) -> list[Column]:
 
 def bloom_build(
     keys: DataFrame,
-    key_col: str = "key",
     n_hashes: int = BLOOM_K,
     m_bits: int = BLOOM_BITS,
 ) -> DataFrame:
     """ONE-row DataFrame with column ``bloom: map<long, long>`` — the
-    non-zero 32-bit words of the filter over ``keys``. Build cost is one
-    explode (|keys|·k rows) + a bit_or aggregation on ≤ m/32 words; the
-    result broadcasts."""
-    pos = F.explode(F.array(*_positions(F.col(key_col), n_hashes, m_bits))).alias("pos")
+    non-zero 32-bit words of the filter over the ``key`` column of
+    ``keys``. Build cost is one explode (|keys|·k rows) + a bit_or
+    aggregation on ≤ m/32 words; the result broadcasts."""
+    pos = F.explode(F.array(*_positions(F.col("key"), n_hashes, m_bits))).alias("pos")
     words = (
         keys.select(pos)
         .select(

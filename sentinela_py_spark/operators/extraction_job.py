@@ -8,10 +8,14 @@ disambiguate → confidence) → mention aggregation with key promotion →
 mark processed.
 
 Spark architecture: the Python-shaped steps (NER, regex spans with
-offsets, sentence lookup) run in ONE Arrow ``mapInPandas`` pass per
-document — text ships to Python exactly once; everything after the span
-rows (gazetteer join, disambiguation, aggregation, version bookkeeping)
-is DataFrame algebra. The two-pass key-promotion aggregation follows
+offsets, sentence lookup) run in Arrow passes over the documents, and
+everything after the span rows (gazetteer join, disambiguation,
+aggregation, version bookkeeping) is DataFrame algebra. Text ships to
+Python twice: ``city_mentions`` runs the city spans on the normalized
+text, ``person_occurrences`` the person spans on the combined text. One
+pass emitting both span kinds gave the same rows but saved only ~0.7
+worker CPU-s per 24-article batch on 4 cores and added one Spark job,
+so the two passes stay. The two-pass key-promotion aggregation follows
 SURVEY §7.3.4: group by surface → resolve the id → re-group by the
 promoted key.
 """
@@ -23,7 +27,7 @@ from collections.abc import Iterable, Iterator, Mapping
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -153,12 +157,20 @@ def resolve_city_mentions(mentions: DataFrame, name_index: DataFrame) -> DataFra
     )
 
 
+def _first_non_null(value: str, position: str) -> Column:
+    """The non-null ``value`` at the smallest ``position``: min_by skips
+    rows whose ordering is NULL, so the pick does not depend on row
+    order the way ``first(ignorenulls=True)`` does."""
+    return F.min_by(value, F.when(F.col(value).isNotNull(), F.col(position)))
+
+
 def aggregate_mentions(resolved: DataFrame) -> DataFrame:
     """A1 mention aggregation with key promotion (service.py:205-278,
     §7.3.4): pass 1 groups by the surface key and resolves the best
     city_id seen for that surface; pass 2 re-groups by the promoted key
     (id when any mention of the surface resolved, else the surface).
-    First-seen order is preserved via min(start)."""
+    First-seen order is preserved via min(start): ``label`` is the
+    earliest surface and ``uf_hint`` the earliest UF signal."""
     surface_key = F.lower(F.trim(F.col("surface")))
     p1 = (
         resolved.groupBy(F.col("url"), surface_key.alias("skey"))
@@ -166,7 +178,7 @@ def aggregate_mentions(resolved: DataFrame) -> DataFrame:
             F.max("resolved_city_id").alias("cid"),
             F.count("*").alias("occurrences"),
             F.min_by("surface", F.col("start")).alias("label"),
-            F.first(F.col("uf_surface"), ignorenulls=True).alias("uf_hint"),
+            _first_non_null("uf_surface", "start").alias("uf_hint"),
             F.collect_set("source_method").alias("methods"),
             F.min("start").alias("first_seen"),
             F.max("confidence").alias("confidence"),
@@ -179,7 +191,7 @@ def aggregate_mentions(resolved: DataFrame) -> DataFrame:
             F.max("cid").alias("city_id"),
             F.sum("occurrences").alias("occurrences"),
             F.min_by("label", F.col("first_seen")).alias("label"),
-            F.first("uf_hint", ignorenulls=True).alias("uf_hint"),
+            _first_non_null("uf_hint", "first_seen").alias("uf_hint"),
             F.array_distinct(F.flatten(F.collect_list("methods"))).alias("sources"),
             F.min("first_seen").alias("first_seen"),
             F.max("confidence").alias("confidence"),

@@ -8,6 +8,9 @@ aggregation → primary selection → catalog/capital/distance enrichment →
 upsert. Here each stage is the corresponding operator module, glued
 lazily — Catalyst sees a single plan, so filters prune into the scan and
 every dimension join broadcasts (SURVEY §3.3 "one DataFrame pipeline").
+The one eager barrier sits after the matcher UDF, whose rows feed both
+the ranking and the unresolved audit; one ``groupBy("url")`` then
+builds all four output columns.
 
 Output mirrors the reference's ``geo_enrichment`` payload per article:
 primary city (+catalog context +distance-to-capital), ranked mentioned
@@ -22,6 +25,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sentinela_py_spark.barrier import barrier_eager
 from sentinela_py_spark.operators.cityagg import (
     adjust_context,
     aggregate_city_mentions,
@@ -48,70 +52,61 @@ def geo_enrichment(
     """
     catalog_entries = list(catalog_entries)
     matched = match_articles(articles, catalog_entries, body_col="body")
+    # Both the ranked and the unresolved rows read the match rows: the
+    # barrier runs the matcher UDF once instead of once per consumer.
     adjusted = adjust_context(
         explode_matches(matched), catalog.select("ibge_id", "name", "uf")
+    ).transform(barrier_eager)
+    ranked = enrich_primary_with_distance(
+        select_primary_city(aggregate_city_mentions(adjusted)),
+        with_state_capital(catalog),
     )
-    ranked = select_primary_city(aggregate_city_mentions(adjusted))
 
-    full_cat = with_state_capital(catalog)
-    primary = enrich_primary_with_distance(
-        ranked.filter(F.col("rank") == 1), full_cat
-    ).select(
+    # Each row carries the output entries it contributes to, NULL where
+    # it contributes none; one groupBy then builds every output column.
+    rank = F.col("rank")
+    ranked_rows = ranked.select(
         "url",
-        F.struct(
-            F.col("city_id"),
-            F.col("name"),
-            F.col("uf"),
-            F.col("region"),
-            F.col("coords"),
-            F.col("bbox"),
-            F.col("state_capital"),
-            F.col("score"),
-            F.col("occurrences"),
+        F.when(
+            rank == 1,
+            F.struct(
+                "city_id", "name", "uf", "region", "coords", "bbox",
+                "state_capital", "score", "occurrences",
+            ),
         ).alias("primary_city"),
-        F.col("distance_from_state_capital_km"),
+        F.when(rank == 1, F.col("distance_from_state_capital_km")).alias(
+            "distance_from_state_capital_km"
+        ),
+        F.struct("rank", "city_id", "name", "uf", "score", "occurrences").alias(
+            "mentioned"
+        ),
+        F.when(
+            rank > 1,
+            F.struct(
+                "city_id", "name", "uf", "score", "occurrences",
+                F.col("suppression.reason").alias("reason"),
+                F.col("suppression.rule").alias("rule"),
+            ),
+        ).alias("eliminated"),
     )
-
-    mentioned = (
-        ranked.groupBy("url")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("rank"),
-                        F.col("city_id"),
-                        F.col("name"),
-                        F.col("uf"),
-                        F.col("score"),
-                        F.col("occurrences"),
-                    )
-                )
-            ).alias("mentioned_cities")
-        )
-    )
-
-    eliminated = ranked.filter(F.col("rank") > 1).select(
-        F.col("url"),
-        F.col("city_id"),
-        F.col("name"),
-        F.col("uf"),
-        F.col("score"),
-        F.col("occurrences"),
-        F.col("suppression.reason").alias("reason"),
-        F.col("suppression.rule").alias("rule"),
-    )
-    suppressed = (
-        eliminated.unionByName(collect_unresolved(adjusted))
-        .groupBy("url")
-        .agg(
-            F.collect_list(
-                F.struct("city_id", "name", "uf", "score", "occurrences", "reason", "rule")
-            ).alias("suppressed")
-        )
+    unresolved = collect_unresolved(adjusted)
+    unresolved_rows = unresolved.select(
+        "url",
+        F.struct(*unresolved.columns[1:])
+        .cast(ranked_rows.schema["eliminated"].dataType)
+        .alias("eliminated"),
     )
 
     return (
-        primary.join(mentioned, "url", "left")
-        .join(suppressed, "url", "left")
-        .withColumn("suppressed", F.coalesce(F.col("suppressed"), F.array()))
+        ranked_rows.unionByName(unresolved_rows, allowMissingColumns=True)
+        .groupBy("url")
+        .agg(
+            F.first("primary_city", ignorenulls=True).alias("primary_city"),
+            F.first("distance_from_state_capital_km", ignorenulls=True).alias(
+                "distance_from_state_capital_km"
+            ),
+            F.array_sort(F.collect_list("mentioned")).alias("mentioned_cities"),
+            F.collect_list("eliminated").alias("suppressed"),
+        )
+        .filter(F.col("primary_city").isNotNull())
     )

@@ -16,16 +16,39 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEDUP_KEYS = ("portal_name", "url")
 
 
+def collapse_duplicate_ids(df: DataFrame, id_field: str, *content_keys: Column) -> DataFrame:
+    """In-batch duplicate ids collapse to a DETERMINISTIC survivor: the
+    row minimizing (``content_keys``, md5 of the remaining columns'
+    JSON), NOT dropDuplicates' partition-order pick. A checkpoint replay
+    of a batch carrying one id with two payloads must write the same
+    accepted/rejected/store content as the first attempt or the
+    epoch-overwrite replay guarantee is hollow. The id comes first; the
+    other columns ride through untouched, in their original order."""
+    others = [c for c in df.columns if c != id_field]
+    surv_key = F.struct(
+        *content_keys,
+        F.md5(F.to_json(F.struct(*[F.col(c) for c in others]))),
+    )
+    return (
+        df.groupBy(id_field)
+        .agg(F.min_by(F.struct(*others), surv_key).alias("__r"))
+        .select(id_field, *[F.col(f"__r.{c}").alias(c) for c in others])
+    )
+
+
 def dedup_incoming(incoming: DataFrame) -> DataFrame:
-    """In-run first-wins dedup by URL (reference
-    servico_coleta_noticias.py:143-154 `seen_urls`)."""
-    return incoming.dropDuplicates(["url"])
+    """In-run dedup by URL (reference servico_coleta_noticias.py:143-154
+    `seen_urls`). The reference keeps the first row it sees; a batch has
+    no order that survives repartitioning, so the survivor is elected by
+    content hash instead and a URL listed twice keeps the same row
+    whatever the input order."""
+    return collapse_duplicate_ids(incoming, "url").select(*incoming.columns)
 
 
 def new_articles(incoming: DataFrame, existing: DataFrame) -> DataFrame:

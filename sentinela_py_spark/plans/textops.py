@@ -2271,7 +2271,7 @@ def q_css_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id"),
         snippet,
     )
-    pages = d.select("doc_id", html.alias("html"))
+    pages = ensure_min_partitions(d.select("doc_id", html.alias("html")))
     return extract_fields(
         pages,
         "html",

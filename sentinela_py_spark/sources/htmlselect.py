@@ -354,8 +354,6 @@ def extract_fields(df, html_col: str, selectors: dict[str, tuple[str, str | None
 
     from pyspark.sql.types import StringType, StructField, StructType
 
-    from sentinela_py_spark.tables import ensure_min_partitions
-
     key_cols = [c for c in df.columns if c != html_col]
     schema = StructType(
         [df.schema[c] for c in key_cols] + [StructField(n, StringType()) for n in selectors]
@@ -379,4 +377,4 @@ def extract_fields(df, html_col: str, selectors: dict[str, tuple[str, str | None
             out.update(extracted)
             yield pd.DataFrame(out)
 
-    return ensure_min_partitions(df).mapInPandas(run, schema)
+    return df.mapInPandas(run, schema)

@@ -123,8 +123,6 @@ def replay_listing_pages(
     ``base_url`` with real urljoin semantics."""
     import pandas as pd
 
-    from sentinela_py_spark.tables import ensure_min_partitions
-
     sel = portal["selectors"]
     base_url = portal["base_url"]
     listing_q = sel["listing_article"]["query"]
@@ -175,7 +173,7 @@ def replay_listing_pages(
                     out["summary"].append(summary)
             yield pd.DataFrame(out)
 
-    return ensure_min_partitions(pages).mapInPandas(run, schema)
+    return pages.mapInPandas(run, schema)
 
 
 def _portal_date(col: Column, portal: Mapping[str, Any]) -> Column:

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sentinela_py_spark.barrier import barrier_eager
-
+from sentinela_py_spark.operators.ingest import collapse_duplicate_ids
 from sentinela_py_spark.schemas import NEWS_DOCUMENT
 from sentinela_py_spark.streaming.stores import (
     read_epoch_store,
@@ -245,7 +245,7 @@ def _screen_input(
     renamed: DataFrame, id_field: str, content_key, ids_collapsed: bool
 ) -> DataFrame:
     """The eager barrier every screen opens with. ``ids_collapsed=False``
-    (standalone use): the deterministic `_collapse_duplicate_ids`
+    (standalone use): the deterministic `collapse_duplicate_ids`
     election runs first — one groupBy shuffle of the batch. ``True``
     (composed use): the caller guarantees unique ids — in
     `composed_ingest_batch` the FIRST screen's election is the
@@ -282,29 +282,8 @@ def _screen_input(
                     "— the caller must run the duplicate-id election first"
                 )
         return out
-    return _collapse_duplicate_ids(renamed, id_field, content_key).transform(
+    return collapse_duplicate_ids(renamed, id_field, content_key).transform(
         barrier_eager
-    )
-
-
-def _collapse_duplicate_ids(renamed: DataFrame, id_field: str, content_key) -> DataFrame:
-    """In-batch duplicate ids collapse to a DETERMINISTIC survivor — the
-    min_by election shared by all three ingest screens: survivor = the
-    row minimizing (``content_key``, md5 of the remaining columns' JSON),
-    NOT dropDuplicates' partition-order pick. A checkpoint replay of a
-    batch carrying one id with two payloads must write the same
-    accepted/rejected/store content as the first attempt or the
-    epoch-overwrite replay guarantee is hollow. Columns other than the id
-    ride through untouched, in their original order."""
-    others = [c for c in renamed.columns if c != id_field]
-    surv_key = F.struct(
-        content_key,
-        F.md5(F.to_json(F.struct(*[F.col(c) for c in others]))),
-    )
-    return (
-        renamed.groupBy(id_field)
-        .agg(F.min_by(F.struct(*others), surv_key).alias("__r"))
-        .select(id_field, *[F.col(f"__r.{c}").alias(c) for c in others])
     )
 
 
@@ -344,7 +323,7 @@ def dedup_batch_against_corpus(
        checkpoint-replayed batch reproduces its first attempt bit for bit
        instead of self-matching (see `_read_band_store`); in-batch
        duplicate IDS collapse through the deterministic
-       `_collapse_duplicate_ids` election first, so the replay guarantee
+       `collapse_duplicate_ids` election first, so the replay guarantee
        holds even for a batch carrying one doc_id with two texts.
 
     Skew guards (the two joins where one hot (band, sig) — a boilerplate
@@ -842,7 +821,7 @@ def embedding_dedup_batch_against_corpus(
        current epoch, so a checkpoint-replayed batch reproduces its first
        attempt instead of self-matching (see `_read_band_store`);
        in-batch duplicate IDS collapse through the deterministic
-       `_collapse_duplicate_ids` election first, so the replay guarantee
+       `collapse_duplicate_ids` election first, so the replay guarantee
        holds even for a batch carrying one vec_id with two vectors.
 
     Skew guards: unlike the MinHash stream, the cross-corpus probe here
@@ -1076,7 +1055,7 @@ def decontamination_screen_batch(
     n_hashes = BLOOM_K if n_hashes is None else n_hashes
     # Deterministic in-batch id collapse (min md5(text) per id, ties
     # among identical texts broken by the row's remaining columns) — see
-    # _collapse_duplicate_ids, the shared survivor election of all three
+    # collapse_duplicate_ids, the shared survivor election of all three
     # screens. Non-text columns (e.g. the embedding when this
     # screen runs inside `composed_ingest_batch`) ride through untouched.
     # ids_collapsed=True: when the image screen runs AHEAD of this
@@ -1706,7 +1685,7 @@ def composed_ingest_batch(
 
     Plan shape: the chain is pure DataFrame handoff (no re-read, no
     reconciliation join). Each screen opens with ONE eager checkpoint of
-    its input; only the first screen runs the `_collapse_duplicate_ids`
+    its input; only the first screen runs the `collapse_duplicate_ids`
     election, and every later screen opens with a plain barrier
     (``ids_collapsed=True``) because every screen preserves id
     uniqueness. Every screen's write is an epoch-keyed overwrite and

@@ -64,7 +64,15 @@ def ensure_min_partitions(df: DataFrame) -> DataFrame:
     operators (explodes, pandas UDFs, non-equi joins) call this to unlock
     full parallelism; the guard means a well-partitioned production table
     (100 TB lakes have thousands of row groups) passes through untouched,
-    with no extra shuffle."""
+    with no extra shuffle.
+
+    The repartition is not free: each extra Python task costs about
+    0.3 worker CPU-s on 4 cores whatever its rows (the worker's per-task
+    import set-up). So inputs that are small per batch and already
+    partitioned by their producer must not call it — per-batch page
+    tables in ``sources.scrape_replay``/``htmlselect.extract_fields``,
+    where one page parses in ~0.1 ms. Callers that need the spread
+    (such as ``plans.textops.q_css_extract``) call it themselves."""
     minimum = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < minimum:
         return df.repartition(minimum)

@@ -7,6 +7,8 @@ tools, benchmark harness, tests, ``__spark_entry__.py``):
 * a default-valued parameter of a uniquely named package function counts
   as *set* when any call of that name passes it by keyword, passes enough
   positional arguments to reach it, or forwards ``*args``/``**kwargs``.
+  A forward of the enclosing function's own ``**kwargs`` sets only the
+  keywords that calls of that enclosing function pass.
   A method's ``self``/``cls`` is skipped, and a class's ``__init__`` is
   called by the class name. Every never-set parameter must be on
   ``ALLOWED_UNSET`` with a one-line reason;
@@ -134,17 +136,57 @@ def _call_name(call: ast.Call) -> str | None:
     return None
 
 
-def never_set_parameters() -> dict[tuple[str, str], str]:
+def _calls_with_enclosing_def(trees):
+    """name → [(call, innermost enclosing function def or None)]."""
+    calls = defaultdict(list)
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call) and (name := _call_name(child)):
+                calls[name].append((child, fn))
+            inner = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda))
+            visit(child, child if inner else fn)
+
+    for tree in trees.values():
+        visit(tree, None)
+    return calls
+
+
+def _forwarded_keywords(call, fn, calls) -> set[str] | None:
+    """The keywords a ``**`` forward in ``call`` can carry, or ``None``
+    for "any". Only a forward of the enclosing function's own ``**kwargs``
+    is resolved, one level up: the keywords its callers pass that are not
+    its own named parameters. A ``*args`` forward, any other ``**``
+    mapping, or a caller that forwards in turn, can carry anything."""
+    if any(isinstance(x, ast.Starred) for x in call.args):
+        return None
+    forwards = [k.value for k in call.keywords if k.arg is None]
+    if not forwards:
+        return set()
+    if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        return None
+    own = fn.args
+    if own.kwarg is None or any(
+        not (isinstance(v, ast.Name) and v.id == own.kwarg.arg) for v in forwards
+    ):
+        return None
+    named = {p.arg for p in (*own.posonlyargs, *own.args, *own.kwonlyargs)}
+    out: set[str] = set()
+    for outer, _ in calls.get(fn.name, ()):
+        if any(k.arg is None for k in outer.keywords):
+            return None
+        out.update(k.arg for k in outer.keywords if k.arg not in named)
+    return out
+
+
+def never_set_parameters(trees=None) -> dict[tuple[str, str], str]:
     """(function, parameter) → ``path:line`` of the definition, for every
     default-valued parameter of a uniquely named package function that no
-    call in the repository sets."""
-    trees = _parse_all()
+    call in ``trees`` (path → parsed module; default: the repository)
+    sets."""
+    trees = _parse_all() if trees is None else trees
     defs = _package_defs(trees)
-    calls = defaultdict(list)
-    for tree in trees.values():
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Call) and (name := _call_name(node)):
-                calls[name].append(node)
+    calls = _calls_with_enclosing_def(trees)
 
     out = {}
     for name, entries in defs.items():
@@ -160,14 +202,14 @@ def never_set_parameters() -> dict[tuple[str, str], str]:
         if not defaulted:
             continue
         set_names: set[str] = set()
-        for call in calls.get(name, ()):
-            if any(isinstance(x, ast.Starred) for x in call.args) or any(
-                k.arg is None for k in call.keywords
-            ):
+        for call, enclosing in calls.get(name, ()):
+            forwarded = _forwarded_keywords(call, enclosing, calls)
+            if forwarded is None:
                 set_names.update(defaulted)
                 break
+            set_names |= forwarded
             set_names.update(p.arg for p in positional[: len(call.args)])
-            set_names.update(k.arg for k in call.keywords)
+            set_names.update(k.arg for k in call.keywords if k.arg is not None)
         where = f"{path.relative_to(ROOT)}:{fn.lineno}"
         out.update({(name, p): where for p in defaulted if p not in set_names})
     return out
@@ -214,6 +256,17 @@ def test_every_never_set_parameter_is_allowed_with_a_reason():
     assert all(r.strip() and "\n" not in r for r in ALLOWED_UNSET.values())
     stale = sorted(set(ALLOWED_UNSET) - set(unset))
     assert not stale, f"allow-list entries that some caller now sets: {stale}"
+
+
+def test_kwargs_forward_resolves_one_level():
+    """``h(**kw)`` forwarding to ``f`` sets only what calls of ``h`` pass."""
+    trees = {
+        ROOT / PACKAGE / "_synthetic_f.py": ast.parse("def f(a, b=1, c=2):\n    pass\n"),
+        ROOT / "tools" / "_synthetic_h.py": ast.parse(
+            "def h(**kw):\n    return f(0, **kw)\n\nh(b=3)\n"
+        ),
+    }
+    assert set(never_set_parameters(trees)) == {("f", "c")}
 
 
 def test_every_public_function_is_referenced():

@@ -49,7 +49,7 @@ def test_restart_and_replay_safety(spark, tmp_path):
 
 def test_duplicate_id_batch_replays_deterministically(spark, tmp_path):
     """One vec_id arriving with TWO different vectors: the survivor is
-    the min-md5(to_json(embedding)) election (_collapse_duplicate_ids),
+    the min-md5(to_json(embedding)) election (collapse_duplicate_ids),
     not a partition-order pick — a crash-replay seeing the same rows in
     a different arrival order and partitioning writes byte-identical
     accepted content AND vector-index content (r6 ADVICE)."""

@@ -97,3 +97,22 @@ def test_versioned_reprocessing_loop(spark, articles):
     assert pending_by_version(store2, "v1", "v1").count() == 0
     # NER version bump invalidates everything
     assert pending_by_version(store2, "v2", "v1").count() == 2
+
+
+def test_uf_hint_is_the_earliest_signal_whatever_the_row_order(spark):
+    # u1: one surface whose mentions carry RN at 5 and PB at 40 (pass 1);
+    # u2: two surfaces promoted to one city id, RN seen first (pass 2)
+    rows = [
+        ("u1", "Natal", None, 5, "RN", "pattern_city_uf", 0.9),
+        ("u1", "Natal", None, 40, "PB", "pattern_city_uf", 0.9),
+        ("u2", "Cidade do Natal", "2408102", 5, "RN", "pattern_city_uf", 0.9),
+        ("u2", "Natal", "2408102", 40, "PB", "pattern_city_uf", 0.9),
+    ]
+    schema = (
+        "url string, surface string, resolved_city_id string, start int, "
+        "uf_surface string, source_method string, confidence double"
+    )
+    for ordered in (rows, rows[::-1]):
+        resolved = spark.createDataFrame(ordered, schema).coalesce(1)
+        got = {r["url"]: r["uf_hint"] for r in aggregate_mentions(resolved).collect()}
+        assert got == {"u1": "RN", "u2": "RN"}

@@ -54,10 +54,15 @@ ARTICLES = [
 
 
 @pytest.fixture(scope="module")
-def enriched(spark):
+def enriched_df(spark):
     catalog = spark.createDataFrame(CATALOG_ROWS, schema=CATALOG_SCHEMA)
     articles = spark.createDataFrame(ARTICLES, ["url", "title", "body"])
-    return {r["url"]: r for r in geo_enrichment(articles, catalog, ENTRIES).collect()}
+    return geo_enrichment(articles, catalog, ENTRIES)
+
+
+@pytest.fixture(scope="module")
+def enriched(enriched_df):
+    return {r["url"]: r for r in enriched_df.collect()}
 
 
 def test_primary_city_and_distance(enriched):
@@ -88,3 +93,10 @@ def test_mentioned_and_suppressed(enriched):
 def test_article_without_cities_absent(enriched):
     # no primary row is produced for an article with no resolvable mention
     assert "https://n/geo2" not in enriched
+
+
+def test_matcher_udf_not_in_output_plan(enriched_df):
+    # the matcher UDF runs once, behind the barrier, instead of once per
+    # consumer of its rows
+    plan = enriched_df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan

@@ -78,7 +78,7 @@ class TestReplaySafety:
 
     def test_duplicate_id_batch_replays_deterministically(self, spark, tmp_path):
         """One doc_id arriving with TWO texts: the survivor is the
-        min-md5(text) election (_collapse_duplicate_ids), not a
+        min-md5(text) election (collapse_duplicate_ids), not a
         partition-order pick — so a crash-replay seeing the same rows in
         a different arrival order and partitioning writes byte-identical
         accepted content AND band-store content (r6 ADVICE)."""

@@ -83,6 +83,21 @@ def test_new_articles_anti_join(spark, store):
     assert urls == ["https://p/new1", "https://p/new2"]
 
 
+def test_new_articles_survivor_independent_of_row_order(spark, store):
+    rows = [
+        ("Portal Cidades", "https://p/x", "first title", 1),
+        ("Portal Cidades", "https://p/x", "second title", 7),
+    ]
+    kept = []
+    for ordered in (rows, rows[::-1]):
+        incoming = spark.createDataFrame(
+            ordered, "portal_name string, url string, title string, item_idx int"
+        ).coalesce(1)
+        kept.append([tuple(r) for r in new_articles(incoming, store).collect()])
+    assert len(kept[0]) == 1
+    assert kept[0] == kept[1]
+
+
 def test_list_by_period_with_city_filter(spark, store):
     rows = list_by_period(
         store, "Portal Cidades", dt.date(2024, 5, 1), dt.date(2024, 5, 31)

@@ -157,13 +157,18 @@ class TestArticleReplay:
         assert row["published_at"] is None and row["date_missing"]
 
 
+@pytest.fixture(scope="module")
+def replayed(spark):
+    listings = spark.createDataFrame([("p1", LISTING_HTML)], ["page_url", "html"])
+    articles = spark.createDataFrame(
+        [("https://diario.example/a1", A1_HTML)], ["url", "html"]
+    )
+    return scrape_replay(listings, articles, PORTAL)
+
+
 class TestComposedReplay:
-    def test_end_to_end_shape(self, spark):
-        listings = spark.createDataFrame([("p1", LISTING_HTML)], ["page_url", "html"])
-        articles = spark.createDataFrame(
-            [("https://diario.example/a1", A1_HTML)], ["url", "html"]
-        )
-        out = scrape_replay(listings, articles, PORTAL).orderBy("item_idx").collect()
+    def test_end_to_end_shape(self, replayed):
+        out = replayed.orderBy("item_idx").collect()
         assert [r["portal_name"] for r in out] == ["diario", "diario"]
         got = {r["url"]: r for r in out}
         a1 = got["https://diario.example/a1"]
@@ -173,3 +178,9 @@ class TestComposedReplay:
         missing = got["https://other.example/abs"]
         assert missing["content"] == "" and missing["content_missing"]
         assert missing["published_at"] is None and missing["date_missing"]
+
+    def test_pages_keep_their_partitioning(self, replayed):
+        # one page parses in well under a millisecond; a round-robin
+        # repartition of the page tables only adds Python tasks
+        plan = replayed._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" not in plan
