@@ -56,12 +56,6 @@ _DIR_LOCK = threading.Lock()
 _DIR_BY_APP: dict[str, str] = {}
 
 
-def checkpoint_mode() -> str:
-    """``"reliable"`` when a fault-tolerant checkpoint directory is
-    configured, else ``"local"`` (the local-mode default)."""
-    return "reliable" if os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") else "local"
-
-
 def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
     """Materialization barrier: truncate ``df``'s lineage so every
     consumer reads one materialization instead of recomputing the

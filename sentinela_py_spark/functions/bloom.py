@@ -20,9 +20,6 @@ map<long, long> of non-zero words (zero words are absent —
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -32,9 +29,6 @@ from sentinela_py_spark.functions.text_stats import word_shingles
 __all__ = [
     "BLOOM_BITS",
     "BLOOM_K",
-    "BloomSizing",
-    "bloom_fp_rate",
-    "plan_bloom_config",
     "bloom_build",
     "bloom_contains",
     "eval_gram_bloom",
@@ -42,68 +36,6 @@ __all__ = [
 
 BLOOM_BITS = 1 << 16  # 65,536 bits = 2,048 32-bit words — demo-sized (see module note)
 BLOOM_K = 4
-
-
-def bloom_fp_rate(n_keys: int, m_bits: int, n_hashes: int) -> float:
-    """p ≈ (1 − e^(−k·n/m))^k — the classic false-positive rate of an
-    m-bit, k-hash filter holding n keys."""
-    return (1.0 - math.exp(-n_hashes * n_keys / m_bits)) ** n_hashes
-
-
-@dataclass(frozen=True)
-class BloomSizing:
-    """Output of ``plan_bloom_config`` — a concrete Bloom deployment."""
-
-    m_bits: int  # power of two (the position math uses mod m)
-    n_hashes: int
-    bytes: int  # m/8 — what the broadcast ships
-    fp_rate: float  # achieved p at (m, k, n)
-
-
-def plan_bloom_config(
-    n_keys: int, target_fp: float, max_hashes: int = 8
-) -> BloomSizing:
-    """Compute (m, k) for a key count and false-positive target instead
-    of the 2^16-bit demo constant — the sibling of ``plan_lsh_config``
-    (the r4 judge's sizing-helper gap). Closed-form:
-
-    - optimal bits/key is m/n = −ln p / ln²2; m rounds UP to a power of
-      two (the 32-bit-slice position math and the oracle templates assume
-      a power-of-two modulus, and the next power of two only lowers p);
-    - optimal hash count is k = (m/n)·ln 2, clamped to [1, max_hashes]
-      (beyond 4 hashes the builder falls back to salted digests — see
-      `_positions` — doubling per-row md5 cost, so deployments often run
-      k=4 slightly above the optimal-p point: the module example's 10^9
-      grams at m=2^33 give optimal k≈6 but k=4 already holds p<2%);
-    - the achieved ``fp_rate`` is reported for the ROUNDED (m, k), so the
-      caller sees the real rate, not the textbook optimum.
-
-    Deployment example (tests pin it): n=10^9 eval grams, p≤0.03 →
-    m=2^33 (1 GiB broadcast), k=4 → p≈1.9%."""
-    if not (0.0 < target_fp < 1.0):
-        raise ValueError(f"target_fp must be in (0, 1), got {target_fp}")
-    m_opt = -n_keys * math.log(target_fp) / (math.log(2.0) ** 2)
-    m_bits = 1 << max(3, math.ceil(math.log2(m_opt)))
-    # The k clamp can cost rate: when the optimal k exceeds max_hashes
-    # (tight targets) and the power-of-two rounding of m added little
-    # headroom, the clamped k misses the target by up to ~10% (r5 ADVICE).
-    # The sizing CONTRACT is fp_rate <= target_fp, so double m until the
-    # clamped k meets it — each doubling roughly squares the per-hash
-    # miss probability, so this terminates in a few steps.
-    k = max(1, min(max_hashes, round(m_bits / n_keys * math.log(2.0))))
-    while bloom_fp_rate(n_keys, m_bits, k) > target_fp:
-        m_bits <<= 1
-        k = max(1, min(max_hashes, round(m_bits / n_keys * math.log(2.0))))
-    # k beyond 4 costs a second salted digest per key (see _positions);
-    # prefer k=4 whenever it still meets the target.
-    if k > 4 and bloom_fp_rate(n_keys, m_bits, 4) <= target_fp:
-        k = 4
-    return BloomSizing(
-        m_bits=m_bits,
-        n_hashes=k,
-        bytes=m_bits // 8,
-        fp_rate=bloom_fp_rate(n_keys, m_bits, k),
-    )
 
 
 def _positions(key: Column, n_hashes: int, m_bits: int) -> list[Column]:

@@ -16,8 +16,6 @@ import json
 from typing import Any
 
 import pandas as pd
-
-from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -54,8 +52,3 @@ def canonical_sha256_udf(col: pd.Series) -> pd.Series:
             [canonical_sha256(_to_plain(r)) for r in records], index=col.index
         )
     return col.map(lambda v: None if v is None else canonical_sha256(_to_plain(v)))
-
-
-def with_payload_hash(df: DataFrame, payload_col: Column) -> DataFrame:
-    """Attach the canonical digest of a (possibly nested) payload column."""
-    return df.withColumn("payload_hash", canonical_sha256_udf(payload_col))

@@ -38,19 +38,14 @@ training run; the fixture-scale demo uses the same algebra.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 __all__ = [
     "KMEANS_ITERS",
     "KMEANS_SCALE",
-    "IvfSizing",
-    "plan_ivf_config",
     "kmeans_seed_centroids",
     "quantized_mean_centroids",
-    "kmeans_centroids",
     "kmeans_centroids_local",
     "kmeans_cents_sql",
     "ivf_residuals",
@@ -120,55 +115,6 @@ def quantized_mean_centroids(
         ]
     )
     return agg.select(*key_cols, centroid.alias("centroid"), "n")
-
-
-@dataclass(frozen=True)
-class IvfSizing:
-    """Output of ``plan_ivf_config`` — a concrete IVF deployment."""
-
-    n_cells: int
-    expected_occupancy: float  # n / n_cells — the per-probe candidate scan
-    train_rows: int  # k-means training-sample size (~rows_per_cell·k)
-    train_frac: float  # feed to training_sample / kmeans_centroids_local
-    scan_fraction: float  # nprobe·occupancy / n — the I/O the layout saves
-
-
-def plan_ivf_config(
-    n_vectors: int,
-    target_cell_size: int,
-    nprobe: int = 1,
-) -> IvfSizing:
-    """Compute n_cells and the training-sample size for a corpus instead
-    of the 8-cell registry demo constant — completing the planner family
-    beside `plans.simops.plan_lsh_config`, `functions.bloom
-    .plan_bloom_config` and `plans.textops.plan_cms_config`:
-
-    - **occupancy** fixes the cell count: a probe scans its cell(s), so
-      ``n_cells = round(n / target_cell_size)`` bounds per-query
-      candidate work at nprobe·target (FAISS's guideline n_cells ≈ √n is
-      this with target = √n);
-    - **training** needs only ~256·k vectors (k-means
-      quality saturates there — the FAISS default trains on ≤256·k), so
-      ``train_frac`` is that over n, the value `kmeans_centroids_local`
-      takes;
-    - ``scan_fraction`` states the payoff: the fraction of the corpus a
-      query touches (with the cell-partitioned `vectors.write_ann_index`
-      layout, also the fraction of files opened).
-
-    Example (tests pin it): n=10^9, target 10^4 → 10^5 cells, train on
-    ~25.6M vectors (2.6%), a query scans 10^-5 of the corpus per probe."""
-    if min(n_vectors, target_cell_size, nprobe) <= 0:
-        raise ValueError("n_vectors, target_cell_size and nprobe must be positive")
-    n_cells = max(1, round(n_vectors / target_cell_size))
-    train_rows = min(n_vectors, 256 * n_cells)
-    occupancy = n_vectors / n_cells
-    return IvfSizing(
-        n_cells=n_cells,
-        expected_occupancy=occupancy,
-        train_rows=train_rows,
-        train_frac=train_rows / n_vectors,
-        scan_fraction=min(1.0, nprobe * occupancy / n_vectors),
-    )
 
 
 def training_sample(e: DataFrame, train_frac: float) -> DataFrame:
@@ -243,21 +189,6 @@ def kmeans_centroids_local(
         }
         cents = [(cid, upd.get(cid, old)) for cid, old in cents]
     return cents
-
-
-def kmeans_centroids(
-    e: DataFrame,
-    k: int,
-    iters: int = KMEANS_ITERS,
-    dim: int = 64,
-) -> DataFrame:
-    """(cell_id, centroid) as a lineage-free local DataFrame — the frame
-    form of `kmeans_centroids_local` for callers that feed
-    `plans.simops.assign_cells` or persist the codebook."""
-    return e.sparkSession.createDataFrame(
-        kmeans_centroids_local(e, k, iters, dim=dim),
-        "cell_id bigint, centroid array<double>",
-    )
 
 
 def ivf_residuals(
@@ -494,7 +425,7 @@ def kmeans_cents_sql(
     normsq_sql_fmt: str | None = None,
     train_frac: float = 1.0,
 ) -> str:
-    """DuckDB twin of ``kmeans_centroids`` as a chain of CTE definitions
+    """DuckDB twin of ``kmeans_centroids_local`` as a chain of CTE definitions
     (no leading WITH): ``{prefix}_cents0`` (init) →
     assignment/update/coalesce per iteration → final relation
     ``{prefix}_cents`` (cell_id, centroid). Embed inside a WITH list.

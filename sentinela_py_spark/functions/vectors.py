@@ -48,7 +48,6 @@ __all__ = [
     "write_ann_index_tree_base",
     "tree_compacted_through",
     "compact_ann_index_tree",
-    "rebuild_ann_index_tree",
 ]
 
 _LEVELS = 255  # int8 code points (codes stored shifted to [-128, 127])
@@ -487,8 +486,8 @@ def adc_tables(
 
     Sizes are cells·M·K + M·K + cells doubles — ``t3``/``cn`` stay
     literal-inlined at any cell count (M·K and 1 double per cell), but
-    ``t2`` grows as cells·M·K and at the `plan_ivf_config` deployment
-    regime (10⁵ cells × M·K) reaches ~10⁸ doubles — past literal
+    ``t2`` grows as cells·M·K and at a 10⁹-vector deployment's
+    10⁵ cells × M·K reaches ~10⁸ doubles — past literal
     inlining. `ivf_pq_adc_topk` crosses that boundary automatically
     (`adc_t2_mode`): above `ADC_T2_LITERAL_MAX` entries it skips the
     driver-side t2 entirely (``with_t2=False`` here returns ``(None,
@@ -528,7 +527,7 @@ def adc_tables(
 # frame instead of a plan literal. 2^18 doubles ≈ 2 MB of values (≈ 5 MB
 # as fast_lit's JSON text) — comfortably inside literal inlining; one
 # step past it (2048 cells at M·K = 128) the t2 literal dominates the
-# plan, and at the plan_ivf_config regime (10⁵ cells) it would be ~10⁸
+# plan, and at a 10⁹-vector deployment's 10⁵ cells it would be ~10⁸
 # doubles. The broadcast path costs one extra (tiny, cell-keyed) hash
 # join, so the guard errs toward literals only while they're genuinely
 # cheap.
@@ -563,7 +562,7 @@ def ivf_pq_adc_topk(
     with ``ivf_pq_adc_rank`` (optional mining filter + top-k cut). The
     split exists so ONE refined candidate stream can be ranked under
     several (k, exclude) settings without re-running the coarse pass
-    (r15: q_ann_ivf_topk's adc and hardneg arms share it); this wrapper
+    (q_ann_ivf_topk's adc and hardneg arms share it); this wrapper
     keeps the original single-call surface. The coarse pass
     never rebuilds a float vector and never reads one:
 
@@ -609,8 +608,8 @@ def ivf_pq_adc_topk(
     x*y``, so both forms score bit-identically (test-pinned). ``t3``
     (M·K) and the per-query LUT stay literal at any cell count.
 
-    The remaining cells-sized family is guarded the same way
-    (r10, closing the r9 boundary): ⟨q, centroid⟩ (the cells·dim matrix)
+    The remaining cells-sized family is guarded the same way:
+    ⟨q, centroid⟩ (the cells·dim matrix)
     and ``cn`` = ‖centroid‖² (cells doubles). Its auto guard is the
     ASSIGNMENT-class boundary (`plans.simops.assign_literal_mode`,
     cells·dim vs t2's cells·M·K — it crosses a factor M·K/dim later);
@@ -618,12 +617,12 @@ def ivf_pq_adc_topk(
     frame — qdotc/cnb fold map-side after a broadcast cell join on the
     k-row query frame — and the query-side cell routing itself
     (`assign_cells_literal` / `probe_cells_literal`) auto-crosses at the
-    same boundary, so at deployment cell counts (`plan_ivf_config`'s
-    10⁵-cell regime ≈ 6.4·10⁶ matrix entries) NO cells-sized literal
+    same boundary, so at deployment cell counts (a 10⁹-vector corpus's
+    10⁵ cells ≈ 6.4·10⁶ matrix entries) NO cells-sized literal
     remains anywhere in the plan. Bit-identity literal ≡ broadcast is
     pinned in TestAdcSearch at a forced boundary.
 
-    ``exclude_cos_at_or_above`` (r11) turns the search into HARD-NEGATIVE
+    ``exclude_cos_at_or_above`` turns the search into HARD-NEGATIVE
     MINING over the refine candidate stream: after the exact re-rank
     cosines are computed for the ``coarse_k`` survivors, candidates at or
     above the threshold are dropped BEFORE the top-k window — the
@@ -867,9 +866,8 @@ def write_ann_index(encoded: DataFrame, path: str) -> None:
     that want the reconstruction derive it read-side
     (`pq_codes_reconstruct`). Any extra columns ride along untouched.
     One write task per cell keeps files cell-clustered; at 10^5+ cells
-    add a second shard key inside hot cells
-    (`operators.scale.write_partitioned`'s maxRecordsPerFile
-    treatment)."""
+    add a second shard key inside hot cells (a ``maxRecordsPerFile``
+    write option)."""
     encoded.repartition(F.col("cell_id")).write.mode("overwrite").partitionBy(
         "cell_id"
     ).parquet(path)
@@ -930,7 +928,7 @@ def _tree_marker_path(path: str) -> str:
 
 def tree_compacted_through(path: str) -> int | None:
     """Highest streaming epoch folded into the tree's base by
-    `compact_ann_index_tree` / `rebuild_ann_index_tree` (None if the
+    `compact_ann_index_tree` (None if the
     tree was never compacted). `ann_index_append_batch` consults this to
     no-op a checkpoint-replayed epoch whose rows already live in the
     base — without it, replay-after-compaction would re-create the
@@ -989,41 +987,5 @@ def compact_ann_index_tree(spark, path: str) -> int:
     # the parquet write fully materializes the read before the old root
     # is touched, so the swap never races its own input
     write_ann_index_tree_base(read_ann_index_tree(spark, path), tmp)
-    _swap_tree_root(path, tmp, through)
-    return through
-
-
-def rebuild_ann_index_tree(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    books: list[list[list[float]]],
-) -> int:
-    """Re-encode an index tree against NEW codebooks and swap — the
-    offline retrain-rebuild that `ann_index_append_batch`'s frozen-
-    codebook contract defers to when the corpus drifts (FAISS: train a
-    new IndexIVF, re-add the vectors, swap the index). Only the RAW
-    vector column is trusted input: cells and codes are recomputed
-    map-side against the new centroids/codewords (the same encode the
-    append path runs), the result lands as a one-file-per-cell
-    ``epoch=-1`` base, and the marker advances past every existing epoch
-    so replayed appends encoded under the OLD codebook can never leak
-    into the rebuilt store. Returns the stamped ``through_epoch``.
-    Searches through the rebuilt tree equal a fresh one-shot encode of
-    the same vectors (test-pinned)."""
-    from sentinela_py_spark.streaming.pipeline import encode_ann_batch
-
-    epochs = _tree_epochs(path)
-    if not epochs:
-        raise ValueError(f"not an index tree (no epoch= dirs): {path}")
-    prior = tree_compacted_through(path)
-    through = max(max(epochs), prior if prior is not None else ANN_TREE_BASE_EPOCH)
-    raw = read_ann_index_tree(spark, path).select("vec_id", "embedding")
-    tmp = path + ".rebuild-tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    write_ann_index_tree_base(
-        encode_ann_batch(raw, centroids, books), tmp
-    )
     _swap_tree_root(path, tmp, through)
     return through

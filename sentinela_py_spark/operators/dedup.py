@@ -27,9 +27,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -260,13 +257,12 @@ def is_wide_signature(df: DataFrame, sig_col: str) -> bool:
 
 def _wide_band_slice_sql(sig_col: str, band_bits: int) -> str:
     """SQL expression for band ``band``'s ``band_bits``-wide slice of an
-    ``array<bigint>`` signature (r14, r13 verdict #1 — the one remaining
-    named scale boundary: `shiftright` on a single int64 capped every
-    perceptual hash at 64 bits, where `plan_hamming_config` itself
-    reports 96+ bits needed at the 10⁹-image operating point).
+    ``array<bigint>`` signature — `shiftright` on a single int64 caps
+    every perceptual hash at 64 bits, while 4 bands over 10⁹ images need
+    96+ bits to keep buckets near 64 rows.
 
     Band b covers global bits [b·bb, (b+1)·bb). The slice may STRADDLE a
-    word boundary (e.g. the planner's 4×24 geometry on a 96-bit hash:
+    word boundary (e.g. a 4×24 geometry on a 96-bit hash:
     band 2 spans bits 48..72 across words 0 and 1):
 
     - ``lo`` = the word holding the slice's first bit, logically
@@ -337,7 +333,7 @@ def signature_bands(
     persistent store, and the corpus-probe arms — one definition so the
     banding the oracle replays is the banding every consumer runs.
 
-    COVERAGE PRECONDITION (r13, ADVICE): the slices only tile the
+    COVERAGE PRECONDITION: the slices only tile the
     signature when ``n_bands * band_bits`` covers its width — a 64-bit
     signature banded with the 4×8 defaults slices only the low 32 bits,
     silently losing every pair whose differences sit in the unbanded
@@ -348,10 +344,9 @@ def signature_bands(
     < 2^coverage; full 64-bit coverage handles signed (two's-complement)
     signatures exactly, because the arithmetic shift + mask reads the
     stored bit pattern. `hamming_band_pairs(validate_coverage=True)`
-    checks this on the data; `plan_hamming_config` computes the geometry
-    for a corpus instead of defaulting it.
+    checks this on the data.
 
-    WIDE SIGNATURES (r14, r13 verdict #1): when ``sig_col`` is an
+    WIDE SIGNATURES: when ``sig_col`` is an
     ``array<bigint>`` (`is_wide_signature`), the slice is extracted by
     `_wide_band_slice_sql` — word-indexed, straddle-capable — and the
     coverage precondition generalizes to: every bit beyond
@@ -501,84 +496,6 @@ def hamming_band_pairs(
         .distinct()
     )
     return pairs, audit
-
-
-@dataclass(frozen=True)
-class HammingSizing:
-    """Output of ``plan_hamming_config`` — a concrete Hamming-band LSH
-    deployment for `hamming_band_pairs`."""
-
-    n_bands: int
-    band_bits: int
-    n_buckets_per_band: int  # 2^band_bits — the band's key space
-    expected_occupancy: float  # n_items / 2^band_bits, uniform-hash model
-    # unordered candidate pairs: n_bands * C(n,2)/2^band_bits ≈
-    # n_bands * n^2 / (2 * 2^band_bits) — the a.doc_id < b.doc_id join
-    # emits each colliding pair once (r13 ADVICE: the ordered-pair count
-    # was 2x the docstring's claim)
-    expected_candidates: float
-    occupancy_ok: bool  # expected_occupancy <= 64
-    hash_bits_needed: int  # width at which the target WOULD hold
-
-
-def plan_hamming_config(
-    n_items: int,
-    hash_bits: int,
-    max_hamming: int,
-) -> HammingSizing:
-    """Compute the Hamming-band geometry for a corpus instead of
-    defaulting it — the sibling of ``plan_lsh_config`` /
-    ``plan_bloom_config`` / ``plan_cms_config`` (r12 verdict #1: the
-    4×8 default gave a CONSTANT 1,024-key band space, so at 10⁹ images
-    every bucket held ~10⁶ rows and the hot-bucket cap truncated ≫99%).
-    Closed-form, two constraints:
-
-    - **Recall** fixes the band count: pigeonhole needs
-      ``n_bands = max_hamming + 1`` bands tiling the signature (any pair
-      within Hamming ``n_bands − 1`` leaves one band untouched). MORE
-      bands would widen the recall margin but shrink ``band_bits =
-      hash_bits // n_bands``, worsening occupancy — so the planner takes
-      the minimum band count that guarantees the threshold.
-    - **Occupancy** is then a CONSEQUENCE, not a choice: uniform-ish
-      hashes give expected bucket size n/2^band_bits and candidate work
-      n_bands · n²/(2·2^band_bits) unordered pairs. When that exceeds 64
-      the honest lever is a WIDER HASH, not more bands:
-      ``hash_bits_needed = n_bands · ceil(log2(n / 64))`` is
-      reported so the caller sizes the signature (e.g. a 256-bit pHash)
-      rather than silently leaning on the truncation cap.
-
-    Worked example (test-pinned): n=10⁹ images at Hamming ≤ 3 →
-    4 bands. A 32-bit hash (8-bit bands) puts ~3.9M rows in every
-    bucket — dead. The 64-bit dHash (16-bit bands) holds ~15k/bucket —
-    workable with capping but above a 64-row target; the planner says
-    96 hash bits (4×24) is where 64-row buckets actually hold. At
-    n=10⁶, 64 bits is comfortably inside target (~15 rows/bucket)."""
-    if max_hamming < 0 or hash_bits <= 0 or n_items <= 0:
-        raise ValueError("n_items, hash_bits must be positive; max_hamming >= 0")
-    n_bands = max_hamming + 1
-    if n_bands > hash_bits:
-        raise ValueError(
-            f"max_hamming {max_hamming} needs {n_bands} bands but the hash "
-            f"is only {hash_bits} bits wide"
-        )
-    # ceil, not floor: when n_bands doesn't divide hash_bits the slices
-    # must still COVER the signature (floor would leave the top bits
-    # unbanded — exactly the silent-recall-loss the coverage
-    # precondition forbids); the top band simply carries fewer live bits.
-    band_bits = -(-hash_bits // n_bands)
-    occupancy = n_items / float(1 << band_bits)
-    bits_per_band_needed = max(
-        1, math.ceil(math.log2(max(n_items / 64, 2.0)))
-    )
-    return HammingSizing(
-        n_bands=n_bands,
-        band_bits=band_bits,
-        n_buckets_per_band=1 << band_bits,
-        expected_occupancy=occupancy,
-        expected_candidates=n_bands * n_items * occupancy / 2.0,
-        occupancy_ok=occupancy <= 64,
-        hash_bits_needed=n_bands * bits_per_band_needed,
-    )
 
 
 def connected_components(

@@ -117,11 +117,12 @@ def pending_by_version(
 ) -> DataFrame:
     """Version-gated reprocessing predicate (S4/F3, reference
     infrastructure/extraction.py:58-75): not done, or produced by an older
-    NER/gazetteer version."""
+    NER/gazetteer version. A missing version counts as another version,
+    as Mongo's ``$ne`` matches a missing field."""
     c = F.col
     return articles.filter(
         c("ner_done").isNull()
         | (c("ner_done") == False)  # noqa: E712
-        | (c("ner_version") != ner_version)
-        | (c("gazetteer_version") != gazetteer_version)
+        | ~c("ner_version").eqNullSafe(ner_version)
+        | ~c("gazetteer_version").eqNullSafe(gazetteer_version)
     )

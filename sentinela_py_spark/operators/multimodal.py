@@ -6,9 +6,8 @@ them (payload in parquet binary, metadata queryable without decode). The
 image decode path is REAL: payloads are valid binary PPM (P6) built
 JVM-side (`documents_to_images`), parsed back by a pure-Python decoder
 (`decode_ppm`) inside the Arrow `mapInPandas` hot path
-(`media_pixel_features`), with `resize_image` as a real nearest-neighbor
-transform on the decoded pixels. Container codec libs (PIL/libav) would
-slot into the same UDF signatures for JPEG/MP4; none are needed here.
+(`media_pixel_features`). Container codec libs (PIL/libav) would slot
+into the same UDF signatures for JPEG/MP4; none are needed here.
 
 Reference parity: the reference has no binary/multimodal columns at all
 (SURVEY §1.2 — "No decimals, no intervals, no binary columns"); this is
@@ -158,21 +157,6 @@ def decode_ppm(payload: bytes) -> tuple[int, int, int, bytes]:
     if len(pixels) != n_pix:
         raise ValueError(f"PPM pixel plane truncated: {len(pixels)} != {n_pix}")
     return width, height, maxval, pixels
-
-
-def decode_media(payload: bytes, media_type: str) -> tuple[int, int, int, bytes]:
-    """Decode a media payload to raw samples. Images are binary PPM
-    (`decode_ppm`); audio payloads are RIFF/WAVE containers
-    (`decode_wav` — returns (n_samples, n_channels, max sample value,
-    sample bytes)); video is a concatenation of fixed-size frames (see
-    `sample_frames`)."""
-    if media_type == "image":
-        return decode_ppm(payload)
-    if media_type == "audio":
-        rate, channels, bits, data = decode_wav(payload)
-        block = channels * (bits // 8)
-        return len(data) // block, channels, (1 << bits) - 1, data
-    raise ValueError(f"unknown media_type {media_type!r}")
 
 
 # ---------------------------------------------------------------------------
@@ -356,15 +340,6 @@ def audio_features(wavs: DataFrame) -> DataFrame:
     )
 
 
-FEATURES_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_bytes", LongType()),
-        StructField("checksum", StringType()),
-        StructField("sum_bytes", LongType()),
-    ]
-)
-
 PIXEL_FEATURES_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -435,33 +410,6 @@ def media_pixel_features(images: DataFrame) -> DataFrame:
     )
 
 
-def media_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over the binary payload.
-
-    `mapInPandas` is the multimodal hot path: each task receives Arrow
-    record batches (bounded by arrow.maxRecordsPerBatch, not partition
-    size), computes per-payload features vectorized in pandas, and never
-    round-trips rows through Python one at a time. Features here are
-    deterministic byte statistics standing in for the decode+embed step
-    (see `decode_media`)."""
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "checksum": payloads.map(lambda b: hashlib.md5(bytes(b)).hexdigest()),
-                    "sum_bytes": payloads.map(lambda b: sum(bytes(b))).astype("int64"),
-                }
-            )
-
-    from sentinela_py_spark.tables import ensure_min_partitions
-
-    return ensure_min_partitions(media.select("doc_id", "payload")).mapInPandas(compute, FEATURES_SCHEMA)
-
-
 FRAME_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -499,12 +447,12 @@ def sample_frames(media: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Perceptual-hash image dedup (r12; widened r13): dHash over decoded
-# PPMs — the multimodal member of the dedup family (a LAION-style
-# pipeline dedups images by perceptual hash before any text stage). The
-# pieces compose what already exists: decode_ppm → nearest-neighbor
-# downsample (the resize_image index map) → 64-bit difference hash →
-# the shared Hamming-band machinery (operators.dedup.hamming_band_pairs).
+# Perceptual-hash image dedup: dHash over decoded PPMs — the multimodal
+# member of the dedup family (a LAION-style pipeline dedups images by
+# perceptual hash before any text stage). The pieces compose what
+# already exists: decode_ppm → nearest-neighbor downsample → 64-bit
+# difference hash → the shared Hamming-band machinery
+# (operators.dedup.hamming_band_pairs).
 # ---------------------------------------------------------------------------
 
 # dHash grid: 9 gray columns × 8 rows → 8 horizontal differences per row
@@ -518,9 +466,9 @@ DHASH_COLS, DHASH_ROWS = 9, 8
 
 # Deployment band geometry for the 64-bit hash: 4 bands × 16 bits tile
 # the signature exactly (full pigeonhole recall at Hamming ≤ 3) and give
-# 65,536 values per band — see operators.dedup.plan_hamming_config for
-# the occupancy math that picks this point (and says when a wider hash
-# is needed instead).
+# 65,536 values per band. Pigeonhole recall at Hamming ≤ h needs h + 1
+# bands; a uniform hash then puts n / 2^band_bits rows in each bucket,
+# which is what says when a wider hash is needed instead.
 DHASH_BANDS, DHASH_BAND_BITS = 4, 16
 
 # Dedup-image corpus dims: ≥ 16 px wide/tall so every one of the 9 grid
@@ -667,11 +615,10 @@ def dhash64_of(payload: bytes) -> tuple[int, str]:
 WIDE_DHASH_COLS, WIDE_DHASH_ROWS = 17, 16  # 16 diffs × 16 rows = 256 bits
 WIDE_DHASH_WORDS = (WIDE_DHASH_ROWS * (WIDE_DHASH_COLS - 1)) // 64  # 4
 
-# 256-bit deployment band geometry: plan_hamming_config(n, 256, 3) →
-# 4 bands × 64 bits — each band is exactly ONE signed word, 2^64 keys
-# per band. This is the operating point the planner itself named at the
-# 10⁹-image regime (the 64-bit hash leaves ~15k rows/bucket there; 96+
-# bits are needed, and 256 comfortably holds the 64-row target).
+# 256-bit deployment band geometry at Hamming ≤ 3: 4 bands × 64 bits —
+# each band is exactly ONE signed word, 2^64 keys per band. At the
+# 10⁹-image regime the 64-bit hash leaves ~15k rows/bucket (10⁹ / 2^16);
+# 96+ bits are needed, and 256 comfortably holds a 64-row target.
 WIDE_DHASH_BANDS, WIDE_DHASH_BAND_BITS = 4, 64
 
 WIDE_DHASH_SCHEMA = StructType(
@@ -984,53 +931,8 @@ def image_dhash(images: DataFrame) -> DataFrame:
     )
 
 
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """Nearest-neighbor resize of a binary-PPM (P6) image, pure Python:
-    decode, index-map each target pixel to its source pixel, re-encode.
-    Deterministic (no filtering kernels), so resized payloads are
-    hash-stable across engines and runs."""
-    src_w, src_h, maxval, pix = decode_ppm(payload)
-    if maxval > 255:
-        raise ValueError("16-bit PPM resize not supported")
-    rows = []
-    for y in range(height):
-        sy = y * src_h // height
-        row = bytearray()
-        for x in range(width):
-            sx = x * src_w // width
-            off = (sy * src_w + sx) * 3
-            row += pix[off : off + 3]
-        rows.append(bytes(row))
-    header = f"P6\n{width} {height}\n{maxval}\n".encode()
-    return header + b"".join(rows)
-
-
-def resample_audio(payload: bytes, factor: int) -> bytes:
-    """Integer-factor decimation of a RIFF/WAVE payload, pure Python:
-    decode, keep every `factor`-th sample frame (all channels together),
-    re-encode with the sample rate divided accordingly. Deterministic (no
-    filtering kernels), so resampled payloads are hash-stable across
-    engines and runs — the audio twin of `resize_image`."""
-    import struct
-
-    if factor < 1:
-        raise ValueError(f"factor must be >= 1, got {factor}")
-    rate, channels, bits, data = decode_wav(payload)
-    if rate % factor != 0:
-        raise ValueError(f"rate {rate} not divisible by factor {factor}")
-    block = channels * (bits // 8)
-    frames = [data[i : i + block] for i in range(0, len(data), block)]
-    kept = b"".join(frames[::factor])
-    new_rate = rate // factor
-    header = b"RIFF" + struct.pack("<I", len(kept) + 36) + b"WAVEfmt "
-    header += struct.pack("<IHHIIHH", 16, 1, channels, new_rate,
-                          new_rate * block, block, bits)
-    header += b"data" + struct.pack("<I", len(kept))
-    return header + kept
-
-
 # ---------------------------------------------------------------------------
-# Audio fingerprint near-dup (r13, r12 verdict #4): the audio member of
+# Audio fingerprint near-dup: the audio member of
 # the dedup family — a chromaprint-shaped frame-energy fingerprint over
 # decode_wav, feeding the same Hamming-band machinery as dHash/SimHash.
 # ---------------------------------------------------------------------------
@@ -1038,28 +940,27 @@ def resample_audio(payload: bytes, factor: int) -> bytes:
 # 65 time frames → 64 energy-delta sign bits: the temporal analog of
 # dHash's 9-column rows (one extra frame so every bit is a DIFFERENCE).
 #
-# WIDTH ADJUDICATION (r14, r13 verdict #1 done-criteria): 64 bits is
-# the right AUDIO operating point, unlike images, for two reasons.
+# WIDTH ADJUDICATION: 64 bits is the right AUDIO operating point,
+# unlike images, for two reasons.
 # (1) The workload asymmetry is real: multimodal lakes carry orders of
 # magnitude fewer distinct audio/video clips than images (LAION-scale
 # image sets are 10⁹+; AudioSet-scale clip sets are 10⁶-10⁷), and
-# plan_hamming_config(10⁷, 64, 3) sits comfortably inside the 64-row
-# bucket target (~153 rows/bucket only at 10⁹). (2) Each audio bit is
+# 10⁷ clips over 4 × 16-bit bands leave ~153 rows per bucket
+# (10⁷ / 2^16), against ~15k for 10⁹ images. (2) Each audio bit is
 # a WHOLE-CLIP temporal comparison — frames average thousands of
 # samples, so bits saturate in informativeness long before a denser
 # grid would help; dHash bits by contrast are single-pixel-pair
 # comparisons whose count meaningfully grows with grid size. If a
 # corpus ever does need more: the wide `array<bigint>` banding path
-# (operators.dedup, r14) makes a 129-frame/128-bit fingerprint a
-# signer-level change (emit 2 words) with ZERO new join machinery —
-# the decision is a planner output, not an architecture change.
+# (operators.dedup) makes a 129-frame/128-bit fingerprint a
+# signer-level change (emit 2 words) with ZERO new join machinery.
 # Bit f compares frame means by CROSS-MULTIPLICATION —
 # e[f]·len[f+1] < e[f+1]·len[f] — integer-exact on any engine AND
 # exactly invariant under a uniform +k gain shift (the +k·len terms
 # cancel), the invariance a perceptual audio fingerprint buys over
 # hashing the container bytes. Bit 63 wraps two's-complement exactly as
-# dhash64_of does, and the 4×16-bit deployment band geometry is shared
-# (plan_hamming_config(n, 64, max_hamming=3) picks it for both).
+# dhash64_of does, and the 4×16-bit deployment band geometry (Hamming
+# ≤ 3 over 64 bits) is shared by both.
 AFP_FRAMES = 65
 AFP_MIN_SAMPLES = 2 * AFP_FRAMES  # every frame carries >= 2 samples
 

@@ -34,13 +34,12 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType
 
 from sentinela_py_spark.functions.textnorm import (
     find_sentence_containing,
     normalize_person_name,
 )
-from sentinela_py_spark.schemas import ENTITY_SPAN, PERSON_OCCURRENCE
+from sentinela_py_spark.schemas import PERSON_OCCURRENCE
 
 NER_FACTORY_ENV = "EXTRACTION_NER_FACTORY"
 
@@ -93,43 +92,6 @@ def _is_engine(obj: object) -> bool:
     # A factory returns an engine; an engine takes text directly. Mirror
     # the reference's duck-typing: callables named *_engine are engines.
     return callable(obj) and getattr(obj, "__name__", "").endswith("_engine")
-
-
-def analyze_articles(
-    articles: DataFrame,
-    engine: NEREngine | None = None,
-) -> DataFrame:
-    """Run the NER engine over article text: Arrow batches in, one
-    ``spans array<struct>`` column out (U1). The engine reference is
-    captured in the UDF closure — for a heavyweight model, make the
-    factory cache per-process (module-level singleton) so each executor
-    loads it once."""
-    eng = engine if engine is not None else load_engine()
-    span_type = ArrayType(_span_struct())
-
-    @F.pandas_udf(span_type)
-    def run(texts: pd.Series) -> pd.Series:
-        return texts.map(
-            lambda t: [
-                {
-                    "label": s.get("label"),
-                    "text": s.get("text"),
-                    "start": int(s.get("start", 0)),
-                    "end": int(s.get("end", 0)),
-                    "score": float(s.get("score", 0.0)),
-                    "method": s.get("method"),
-                }
-                for s in eng(t or "")
-            ]
-        )
-
-    return articles.withColumn("spans", run(F.col("body")))
-
-
-def _span_struct():
-    from pyspark.sql.types import StructType
-
-    return StructType([f for f in ENTITY_SPAN.fields if f.name != "url"])
 
 
 def person_occurrences(

@@ -1,69 +1,15 @@
-"""Scale-out join strategies: bucketed co-located joins and skew salting.
+"""Skew guard for LSH band/bucket self-joins.
 
-None of this exists in the reference (single-process, row-at-a-time —
-SURVEY §4.1); these are the Spark-native mechanisms the engine relies on
-at 100 TB, made concrete and testable:
-
-- **Bucketing** pre-shuffles a table ONCE at write time
-  (``bucketBy(n, key)``); two tables bucketed on the join key by the same
-  bucket count then join with zero Exchange on either side — the
-  recurring-join answer (fact tables joined every run should never pay
-  the shuffle twice).
-- **Salting** splits a hot key across ``n_salts`` sub-keys so one
-  executor doesn't receive the whole key's rows. AQE's skew-join split
-  (enabled in session.py) handles moderate skew automatically; explicit
-  salting is the deterministic fallback for extreme single-key skew
-  (e.g. the empty-string URL, the null portal).
+The reference has nothing like it (single-process, row-at-a-time —
+SURVEY §4.1). AQE's skew-join split (enabled in session.py) handles
+moderate skew in ordinary joins; inside one LSH bucket the candidate
+pairs grow quadratically, so the only answer is to bound the bucket.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame, table_name: str, bucket_key: str, n_buckets: int = 32, sort_cols: list[str] | None = None
-) -> None:
-    """Persist as a bucketed (+ optionally sorted) managed table. Joins
-    and aggregations on ``bucket_key`` between same-bucketed tables then
-    plan without any Exchange (verified in tests/test_scale.py)."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_key)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
-
-
-def salt_column(n_salts: int, *distinct_cols: str | Column) -> Column:
-    """Deterministic salt in [0, n_salts): xxhash64 of row-distinguishing
-    columns (NOT the join key — the point is to spread one key's rows)."""
-    return F.pmod(F.xxhash64(*distinct_cols), F.lit(n_salts)).cast("int")
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    distinct_cols: list[str] | None = None,
-) -> DataFrame:
-    """Equi-join resilient to a pathologically hot key.
-
-    The big side gets a deterministic salt from row-distinguishing
-    columns; the small side is replicated ``n_salts`` times (explode of a
-    literal range — cost: |small| × n_salts rows, which is why the salted
-    side must be the small one). The join key becomes (key, salt), so a
-    hot key's rows spread over ``n_salts`` reducers. Result is identical
-    to the unsalted join (asserted in tests)."""
-    distinct_cols = distinct_cols or [c for c in big.columns if c != key][:1]
-    if not distinct_cols:
-        raise ValueError("big side needs at least one non-key column to derive a salt")
-    b = big.withColumn("__salt", salt_column(n_salts, *distinct_cols))
-    s = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    out = b.join(s, on=[key, "__salt"], how="inner")
-    return out.drop("__salt")
 
 
 # Registered-query default for the hot-bucket guard below: far above any
@@ -144,26 +90,3 @@ def cap_buckets(
     return kept, audit
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    target_file_rows: int | None = None,
-) -> None:
-    """Persist with hive-style directory partitioning — the physical
-    layout SURVEY §4.1 maps the reference's secondary indexes onto:
-    `articles` partitioned by (portal_name, published_date) makes the
-    period/portal scans (F1/S5) partition-PRUNED reads instead of index
-    lookups, and MERGE-style rewrites touch only the affected partitions.
-
-    ``target_file_rows`` bounds rows per output file: rows are clustered
-    per partition value (one write task per directory, no small-files
-    spray from N tasks) and the writer splits any hot partition's task
-    output every ``target_file_rows`` rows via ``maxRecordsPerFile`` —
-    right-sized files with no extra pass over the input."""
-    partition_cols = ["portal_name", "published_date"]
-    out = df
-    writer_opts: dict[str, str] = {}
-    if target_file_rows:
-        out = df.repartition(*[F.col(c) for c in partition_cols])
-        writer_opts["maxRecordsPerFile"] = str(int(target_file_rows))
-    out.write.options(**writer_opts).mode("overwrite").partitionBy(*partition_cols).parquet(path)

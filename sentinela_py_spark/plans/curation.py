@@ -944,7 +944,8 @@ def _curated_pool(
     decontaminate → rule+model quality gate → temperature-mix, all
     deterministic and oracle-checkable (see q_sequence_packing).
     Pass a dict as ``stages`` to receive every intermediate stage frame
-    (`curation_funnel` builds the retention datacard from them).
+    (q_sequence_packing's funnel arm builds the retention datacard from
+    them, `_funnel_rows`).
 
     ``checkpoint=False`` skips the stage-4/5 boundary checkpoint so the
     WHOLE pipeline is one visible plan — the plan-census tool pins that
@@ -1070,10 +1071,9 @@ def _curated_pool(
 
 def _funnel_rows(stages: dict[str, DataFrame]) -> DataFrame:
     """Build the (stage_idx, stage, n_docs, n_tokens) funnel frame from
-    an already-threaded `_curated_pool` stages dict — shared by the
-    standalone `curation_funnel` and q_sequence_packing's funnel arm
-    (which reads the memoized stages so the bench never runs the
-    pipeline twice). The final row (stage_idx = 7, ``span_cut_capped``)
+    an already-threaded `_curated_pool` stages dict — q_sequence_packing's
+    funnel arm, which reads the memoized stages so the bench never runs
+    the pipeline twice. The final row (stage_idx = 7, ``span_cut_capped``)
     is the intra occurrence-guard AUDIT, not a retention stage: n_docs =
     docs whose degenerate repetition was truncated at the guard,
     n_tokens = gram occurrences the cap dropped — a production datacard
@@ -1114,25 +1114,6 @@ def _funnel_rows(stages: dict[str, DataFrame]) -> DataFrame:
     for f in frames[1:]:
         out = out.unionByName(f)
     return out.orderBy("stage_idx")
-
-
-def curation_funnel(d: DataFrame) -> DataFrame:
-    """(stage_idx, stage, n_docs, n_tokens) — the retention funnel of the
-    composed curation pipeline, one row per stage in chain order: the
-    audit a production run publishes with its dataset (where did the
-    corpus go, and how many tokens did each screen cost?). Built from
-    the SAME stage frames `_curated_pool` executes (not a re-derivation
-    that could drift), so the span-cut row shows the token shrink with
-    an unchanged doc count, the quality row shows doc drops, and the
-    final row is exactly the packed pool — plus the ``span_cut_capped``
-    audit row (see `_funnel_rows`). Each stage prices one count
-    aggregate over the progressively-checkpointed chain — 8 small jobs,
-    no extra corpus passes beyond what the pipeline already
-    materializes. Driver-checked as q_sequence_packing's funnel arm
-    (r10): the oracle replays every stage count plus the cap audit."""
-    stages: dict[str, DataFrame] = {}
-    _curated_pool(d, stages=stages)
-    return _funnel_rows(stages)
 
 
 register_arms(

@@ -356,9 +356,9 @@ def _dhash_sql_parts() -> tuple[list[str], str]:
 
 def _signature_neardup_sql() -> str:
     """DuckDB replay of the FULL perceptual-signature near-dup family
-    (r14 §8 fold of q_image_neardup + q_audio_neardup, per the r13
-    verdict: both modalities already shared one screen body and one
-    band machinery — now they share one registry slot), four
+    (the §8 fold of q_image_neardup + q_audio_neardup: both
+    modalities already shared one screen body and one band machinery —
+    now they share one registry slot), four
     method-tagged arms over one generated CTE chain:
 
     ``image``: payload build (both planted variant families) →
@@ -368,11 +368,11 @@ def _signature_neardup_sql() -> str:
     algebra — md5-split corpus half pre-aggregated to one row per
     (band, bsig, dhash), probe half joined on the band slice and
     verified at true Hamming, the match picked ATOMICALLY as the
-    lexicographic-min (hamming, corpus_doc) pair (r13 ADVICE).
-    ``image_wide`` (r14, r13 verdict #1): the SAME images through the
+    lexicographic-min (hamming, corpus_doc) pair.
+    ``image_wide``: the SAME images through the
     256-bit wide dHash — 17×16 gray grid → FOUR signed int64 words →
     the aligned 4×64 band geometry (each band IS one word; the
-    `plan_hamming_config` operating point for the 10⁹-image regime) →
+    operating point for the 10⁹-image regime) →
     cap → self-join → Hamming ≤ 3 refined as the SUM of per-word
     bit_count(xor) — replaying `operators.dedup.wide_hamming` and the
     wide `signature_bands` path end-to-end.
@@ -653,19 +653,19 @@ def _signature_neardup_sql() -> str:
     "q_signature_neardup",
     oracle=_signature_neardup_sql(),
     survey_ref=(
-        "multimodal dedup (r14 §8 fold of q_image_neardup [r12] + "
-        "q_audio_neardup [r13] — one perceptual-signature family, one slot): "
+        "multimodal dedup (§8 fold of q_image_neardup + "
+        "q_audio_neardup — one perceptual-signature family, one slot): "
         "FOUR method-tagged arms over the shared Hamming-band machinery "
         "(operators.dedup.hamming_band_pairs). `image`: decode_ppm → 9×8 gray "
         "grid → 64-bit dHash → 4×16-bit bands; `image_probe`: the streaming "
         "screen's cross-corpus probe algebra (store pre-aggregated per (band, "
         "bsig, sig), true-Hamming verify, atomic struct-min election); "
-        "`image_wide` (r14, r13 verdict #1): 17×16 grid → 256-bit dHash as "
+        "`image_wide`: 17×16 grid → 256-bit dHash as "
         "array<bigint> → the WIDE banding path at the aligned 4×64 geometry — "
-        "the plan_hamming_config operating point for 10⁹ images, closing the "
+        "the operating point for 10⁹ images, closing the "
         "64-bit signature ceiling; `audio`: decode_wav → 65 frame energies → "
         "64 cross-multiplied sign bits (gain-invariant) → the same 4×16 "
-        "bands; `video` (r14): concatenated-PPM frame streams demuxed, "
+        "bands; `video`: concatenated-PPM frame streams demuxed, "
         "4 nearest-neighbor-sampled frames dHashed into one array<bigint> "
         "signature (word f = frame f's 64-bit dHash) through the SAME wide "
         "4×64 banding — a band collision is one perceptually-identical "
@@ -679,39 +679,39 @@ def q_signature_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-signature near-duplicate pairs across modalities — the
     LAION-style first dedup stage a multimodal lake runs before any text
     screen: (method, doc_a, doc_b, hamming, exact_dup), four
-    method-tagged arms over ONE shared band machinery (r14 fold: image
-    and audio already shared `signature_dedup_batch_against_corpus` and
+    method-tagged arms over ONE shared band machinery (image and audio
+    already shared `signature_dedup_batch_against_corpus` and
     `hamming_band_pairs`; their registry slots fold with them).
 
     ``image``: every image pair within Hamming ≤ 3 of each other's
-    64-bit dHash that shares ≥ 1 of four 16-bit hash bands (r13
-    geometry — `plan_hamming_config` computes the operating point).
+    64-bit dHash that shares ≥ 1 of four 16-bit hash bands (pigeonhole
+    recall at Hamming ≤ 3 needs 4 bands).
 
-    ``image_probe`` (r12): the dedup-at-ingest probe as batch algebra —
+    ``image_probe``: the dedup-at-ingest probe as batch algebra —
     the md5-split 'accepted' half acts as the persistent signature
     store, pre-aggregated to one row per (band, bsig, dhash) exactly as
     `streaming.pipeline.image_dedup_batch_against_corpus` builds it (a
     template flood collapses to ONE stored row); each probe image
     reports its (hamming, corpus_doc)-min match, elected atomically.
 
-    ``image_wide`` (r14, r13 verdict #1 — the wide-signature path): the
+    ``image_wide`` (the wide-signature path): the
     SAME images hashed at 17×16 → 256 bits carried as FOUR signed int64
     words (`dhash256_of`), banded at the aligned 4×64 geometry through
     `operators.dedup.signature_bands`' wide dispatch, refined by
     `wide_hamming` (per-word bit_count(xor) summed). This is the
-    operating point `plan_hamming_config` names for the 10⁹-image
+    operating point for the 10⁹-image
     regime, where the 64-bit hash leaves ~15k rows per bucket and the
     cap truncates recall — 2^64 keys per band keeps expected occupancy
     ≪ 1 with full pigeonhole recall at Hamming ≤ 3.
 
-    ``audio`` (r13): every clip pair within Hamming ≤ 3 of each other's
+    ``audio``: every clip pair within Hamming ≤ 3 of each other's
     64-bit frame-energy fingerprint — re-encoded twins (same PCM, new
     sample rate) at Hamming 0 with exact_dup = true (the dup a file
     byte-hash MISSES), gain twins at Hamming 0 with exact_dup = false
     (the cross-multiplication invariance), noise twins while their
     flipped sign bits stay ≤ 3.
 
-    ``video`` (r14): the third perceptual modality — concatenated-PPM
+    ``video``: the third perceptual modality — concatenated-PPM
     frame streams (`documents_to_dedup_videos`; frame f's pixel source
     is the text rotated by f chars) demuxed by `split_ppm_stream`, 4
     nearest-neighbor-sampled frames each 64-bit-dHashed into ONE
@@ -811,9 +811,9 @@ def _image_wide_pairs_from(sigs: DataFrame) -> DataFrame:
 
 
 def _image_wide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 256-bit wide-dHash arm (r14): same corpus, 17×16 grid, FOUR
+    """The 256-bit wide-dHash arm: same corpus, 17×16 grid, FOUR
     signed int64 words through the wide `hamming_band_pairs` dispatch at
-    the aligned 4×64 `plan_hamming_config` geometry. (Standalone
+    the aligned 4×64 geometry. (Standalone
     builder — prices the arm including its own decode; the composed
     query rides `_image_wide_pairs_from`'s fused pass instead.)"""
     d = load_table(spark, sf_dir, "documents")
@@ -1493,7 +1493,7 @@ def q_multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id, matched_doc), one row per input row of the paired corpus —
     'image_dedup' rejects (brightness twins at Hamming 0, noise twins
     within the threshold, pixel-exact copies via their representative),
-    'clip' rejects (r14 — the MISCAPTION family: base docs ≡ 11 mod 16
+    'clip' rejects (the MISCAPTION family: base docs ≡ 11 mod 16
     carry their successor's vector image-side, the alt-text-describes-
     another-page pair that passes every dedup screen because nothing is
     duplicated; caught by the cross-modal cosine screen before its
@@ -1517,7 +1517,7 @@ def q_multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (100 TB): identical to the component queries — the
     image stage is one Arrow decode pass + the banded self-join at the
-    plan_hamming_config geometry; the caption stage collapses exact
+    4×16-bit band geometry; the caption stage collapses exact
     copies BEFORE banding (skew-proof at any copy count) and bands only
     representatives; both caps are doc_id-ordered and oracle-replayed,
     and neither binds on this corpus (test-pinned)."""

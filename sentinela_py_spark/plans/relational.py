@@ -1186,7 +1186,6 @@ def q_asof_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r11: the algebra (Spark AND SQL sides) moved to functions/hist.py so
 # the CCNet ppl-tertile cutoffs (plans/textops.py) reuse ONE definition.
 from sentinela_py_spark.functions.hist import (  # noqa: E402
-    HIST_BINS as _HIST_BINS,
     hist_cums_sql as _hist_cums_sql,
     hist_est_sql as _hist_est_sql,
     hist_quantile_est as _hist_quantile_est,
@@ -1342,8 +1341,8 @@ def q_customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     survey_ref=(
         "event-time interval join + interval anti complement (attributed=false rows are "
-        "the NOT EXISTS set) — J6 family over event time; streaming twin: "
-        "streaming/pipeline.py::view_click_attribution_stream"
+        "the NOT EXISTS set) — J6 family over event time; batch only, as the "
+        "reference has no event time (SURVEY T6)"
     ),
     tags=("join", "range", "anti", "events"),
 )

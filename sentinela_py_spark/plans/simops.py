@@ -190,89 +190,22 @@ N_PLANES = 4
 N_CELLS = 8
 
 
-def _plane(p: int, dim: int = EMB_DIM) -> list[int]:
+def _plane(p: int) -> list[int]:
     """Deterministic ±1 hyperplane p (md5-seeded, engine-independent —
     generated once in Python and embedded as literals on both sides)."""
-    return [1 if hashlib.md5(f"plane-{p}-{j}".encode()).digest()[0] & 1 else -1 for j in range(dim)]
+    return [1 if hashlib.md5(f"plane-{p}-{j}".encode()).digest()[0] & 1 else -1 for j in range(EMB_DIM)]
 
 
-def make_planes(n_planes: int, dim: int = EMB_DIM, table: int = 0) -> list[list[int]]:
+def make_planes(n_planes: int) -> list[list[int]]:
     """``n_planes`` deterministic ±1 hyperplanes — pass to
     ``lsh_bucket``/``embedding_neardup_pairs`` to run a 2^n_planes-bucket
-    config (see the occupancy math at N_PLANES). ``table`` seeds an
-    INDEPENDENT plane set: OR-ing candidates over T tables raises pair
-    recall from q to 1 − (1 − q)^T — the standard lever when a high plane
-    count (needed to keep buckets small) crushes single-table recall."""
-    offset = table * 10_000
-    return [_plane(offset + p, dim) for p in range(n_planes)]
+    config (see the occupancy math at N_PLANES)."""
+    return [_plane(p) for p in range(n_planes)]
 
 
 PLANES = make_planes(N_PLANES)
 
 NEARDUP_COS = 0.4
-
-
-from dataclasses import dataclass  # noqa: E402
-
-
-@dataclass(frozen=True)
-class LshSizing:
-    """Output of ``plan_lsh_config`` — a concrete hyperplane-LSH deployment."""
-
-    n_planes: int  # P: sign bits per table → 2^P buckets
-    n_tables: int  # T: independent OR-ed tables
-    n_buckets: int  # 2^P
-    expected_occupancy: float  # n / 2^P
-    per_table_recall: float  # q: P(multi-probe collision in ONE table) at the threshold
-    recall: float  # 1 − (1 − q)^T
-
-
-def plan_lsh_config(
-    n_vectors: int,
-    target_bucket_size: int,
-    cos_threshold: float = NEARDUP_COS,
-    recall_target: float = 0.9,
-) -> LshSizing:
-    """Compute the RIGHT (n_planes, n_tables) for a corpus instead of the
-    16-bucket registry demo constants — the occupancy math documented at
-    ``N_PLANES``, closed-form:
-
-    - **Occupancy** fixes the plane count: uniform-ish embeddings give
-      expected bucket size n/2^P and candidate work Σ occ² ≈ n²/2^P, so
-      ``P = ceil(log2(n / target_bucket_size))`` bounds per-bucket work at
-      the target (the hot-bucket cap handles the adversarial tail).
-    - **Recall** then fixes the table count: each plane collides for a
-      pair at angle θ with p = 1 − θ/π (Goemans–Williamson), and
-      multi-probe Hamming ≤ 1 accepts ≤1 differing bit, so one table
-      catches q = p^P + P·p^(P−1)(1−p). Raising P to keep buckets small
-      crushes q; OR-ing T independent tables recovers
-      1 − (1 − q)^T ≥ recall_target with
-      ``T = ceil(log(1 − recall_target) / log(1 − q))``.
-
-    Recall here is CANDIDATE-GENERATION recall at exactly
-    ``cos_threshold`` (the worst pair the deployment promises to find —
-    closer pairs collide strictly more often); precision is always 1.0
-    because survivors are scored with true cosine. Feed ``n_planes`` /
-    ``n_tables`` to ``make_planes`` / ``embedding_neardup_multitable``.
-    Verified against a 10⁵-row corpus in tests/test_stress_scale.py."""
-    import math
-
-    n_planes = max(1, math.ceil(math.log2(max(n_vectors / max(target_bucket_size, 1), 2.0))))
-    p = 1.0 - math.acos(min(max(cos_threshold, -1.0), 1.0)) / math.pi
-    q = p**n_planes + n_planes * p ** (n_planes - 1) * (1.0 - p)
-    if q >= 1.0:
-        n_tables = 1
-    else:
-        n_tables = max(1, math.ceil(math.log(1.0 - recall_target) / math.log(1.0 - q)))
-    n_tables = min(n_tables, 64)
-    return LshSizing(
-        n_planes=n_planes,
-        n_tables=n_tables,
-        n_buckets=2**n_planes,
-        expected_occupancy=n_vectors / 2**n_planes,
-        per_table_recall=q,
-        recall=1.0 - (1.0 - q) ** n_tables,
-    )
 
 
 def _signed_dot(vec: Column, plane: list[int]) -> Column:
@@ -321,28 +254,6 @@ def _bucket_sql(vec: str) -> str:
 # over the N_PLANES sign bits). For a fixed candidate the probe values are
 # distinct, so a pair can match on at most one probe — no dedup shuffle needed.
 PROBE_XORS = probe_xors(N_PLANES)
-
-
-def embedding_neardup_multitable(
-    e: DataFrame,
-    n_planes: int,
-    n_tables: int,
-) -> DataFrame:
-    """OR over ``n_tables`` independent LSH tables: a pair is a candidate
-    if it collides (multi-probe Hamming ≤ 1) in ANY table, recovering
-    recall 1 − (1 − q)^T from a single table's q. Each table is its own
-    bucket equi-join; the union dedups pairs once at the end (a pair can
-    surface from several tables). At 100 TB the T joins run over the same
-    cached bucketed projection and T multiplies candidate work, not the
-    pair space — the classic recall/cost dial."""
-    per_table = [
-        embedding_neardup_pairs(e, make_planes(n_planes, table=t))
-        for t in range(n_tables)
-    ]
-    out = per_table[0]
-    for t in per_table[1:]:
-        out = out.unionByName(t)
-    return out.dropDuplicates(["vec_a", "vec_b"]).orderBy("vec_a", "vec_b")
 
 
 def embedding_neardup_pairs(
@@ -1017,8 +928,8 @@ def _centroid_row(
     broadcast, so their equivalence at nprobe=1 (test-pinned) can never
     drift on the centroid side. Centroids here are the UNTRAINED
     first-n_cells placeholder (kept for the layout-only arms/oracles);
-    the deployment path trains them — `functions.kmeans.kmeans_centroids`
-    feeds `assign_cells` below."""
+    the deployment path trains them with
+    `functions.kmeans.kmeans_centroids_local`."""
     return centroid_row_of(
         (e if centroid_source is None else centroid_source)
         .filter(F.col("vec_id") < n_cells)
@@ -1072,7 +983,7 @@ def assign_cells(
 # assignment analog of functions/vectors.ADC_T2_LITERAL_MAX (same
 # boundary class: a plan literal is rebuilt into every query tree and
 # re-shipped with every task binary, fine at 2¹⁸ doubles ≈ 2 MB, absurd
-# at the plan_ivf_config deployment regime of 10⁵ cells × 64 dims =
+# at a 10⁹-vector deployment's 10⁵ cells × 64 dims =
 # 6.4·10⁶). Past it the assignment auto-routes through the broadcast
 # (cell_id, centroid) FRAME path (`assign_cells`) — one broadcast
 # exchange instead of a plan-embedded matrix, bit-identical scores.

@@ -807,43 +807,6 @@ CMS_W = 256
 import math  # noqa: E402
 
 from sentinela_py_spark.barrier import barrier, barrier_eager
-from dataclasses import dataclass  # noqa: E402
-
-
-@dataclass(frozen=True)
-class CmsSizing:
-    """Output of ``plan_cms_config`` — a concrete Count-Min deployment."""
-
-    width: int  # counters per row (w)
-    depth: int  # hash rows (d)
-    bytes_per_group: int  # d·w·8 — the sketch state per group key
-    epsilon: float  # overestimate ≤ epsilon·N, where N = total count
-    delta: float  # ...except with probability ≤ delta
-
-
-def plan_cms_config(epsilon: float, delta: float) -> CmsSizing:
-    """Compute (w, d) from an accuracy contract instead of the 4×256 demo
-    constants — the sibling of ``plan_lsh_config``/``plan_bloom_config``
-    (the r4 judge's sizing-helper gap). Under the bound this module's
-    sketch satisfies (overestimate ≤ 2N/w with per-row failure ½, rows
-    independent): ``w = ceil(2/ε)`` and ``d = ceil(log2(1/δ))``.
-
-    ``d`` is clamped to 4: `_cms_bucket_spark`
-    slices one 128-bit md5 into 32-bit rows, which caps d at 4 without a
-    salted-digest fallback — the clamp surfaces the achievable δ rather
-    than silently promising a tighter one. The registered constants are
-    the ε=1/128, δ=1/16 point (tests pin the round-trip)."""
-    if not (0.0 < epsilon < 1.0) or not (0.0 < delta < 1.0):
-        raise ValueError(f"epsilon/delta must be in (0, 1), got {epsilon}, {delta}")
-    width = math.ceil(2.0 / epsilon)
-    depth = min(4, max(1, math.ceil(math.log2(1.0 / delta))))
-    return CmsSizing(
-        width=width,
-        depth=depth,
-        bytes_per_group=depth * width * 8,
-        epsilon=2.0 / width,
-        delta=0.5**depth,
-    )
 
 
 def _cms_bucket_spark(tok, r: int):
@@ -2365,8 +2328,8 @@ BPE_CPT_HI = 1.60
     """,
     survey_ref=(
         "tokenize: BPE encode — broadcast-merge-table leftmost-greedy replay "
-        "(operators/bpe.py bpe_encode, the map-only inference path of the "
-        "distributed Sennrich trainer bpe_train); oracle = chained "
+        "(operators/bpe.py bpe_encode, the map-only inference path of a "
+        "Sennrich BPE tokenizer); oracle = chained "
         "sentinel-delimited replace() per word in rank order; + tokenizer-"
         "fertility quality signal (chars/token band — the CCNet/Gopher-style "
         "filter a curation pass applies after tokenization)"

@@ -10,9 +10,9 @@ services/extraction/app.py:454-486). The Spark rendering:
   → foreachBatch: city-extraction pipeline + idempotent upsert sink
   → checkpointing gives at-least-once; the upsert makes replays no-ops.
 
-The reference is processing-time only; the engine also exposes the
-idiomatic event-time superset (watermark + tumbling/session windows;
-sliding windows are the batch `q_event_buckets` arm) because the streaming query surface is first-class (T6).
+The reference is processing-time only, and so are these streams (T6);
+event-time windows and sessions are the batch `q_event_buckets` and
+`q_user_sessions` queries.
 """
 
 from __future__ import annotations
@@ -94,28 +94,6 @@ def run_extraction_stream(
     # cap, so every landed file rides the next micro-batch
     stream = spark.readStream.schema(NEWS_DOCUMENT).json(source_path)
     return _start_stream(stream, process, checkpoint_dir, "extract", trigger_seconds)
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Event-time tumbling window aggregation with a watermark for
-    late data (T6 superset; works on both batch and streaming frames)."""
-    df = events.withWatermark("ts", watermark) if events.isStreaming else events
-    win = F.window("ts", window)
-    return df.groupBy(win.alias("w"), F.col("event_type")).agg(
-        F.count("*").alias("n"), F.sum("value").alias("value_sum")
-    )
-
-
-def session_windows(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Session windows keyed by user with an inactivity gap (T6 superset)."""
-    df = events.withWatermark("ts", gap) if events.isStreaming else events
-    return df.groupBy(F.session_window(F.col("ts"), gap).alias("s"), F.col("user_id")).agg(
-        F.count("*").alias("n_events")
-    )
 
 
 def first_by_enqueue_seq(pdfs):
@@ -549,45 +527,6 @@ def audio_dedup_batch_against_corpus(
     )
 
 
-def video_dedup_batch_against_corpus(
-    batch: DataFrame,
-    epoch_id: int,
-    state_dir: str,
-) -> DataFrame:
-    """One micro-batch of VIDEO near-dup rejection at ingest — the
-    streaming twin of `plans.mmops.q_signature_neardup`'s video arm:
-    arriving frame streams are demuxed and per-frame dHashed
-    into one WIDE array<bigint> signature
-    (`operators.multimodal.video_dhash` — word f = sampled frame f's
-    64-bit hash, plus the sampled-planes md5), and the generic screen
-    runs at the aligned 4×64 WIDE geometry: exact-content collapse,
-    wide-banded within-batch components (a band collision = one
-    perceptually identical sampled frame), cross-corpus probe with the
-    wide Hamming verify, epoch-keyed state — the same store/replay
-    discipline as the image and audio screens, through the same body."""
-    from sentinela_py_spark.operators.multimodal import (
-        video_dhash,
-        WIDE_DHASH_BAND_BITS,
-        WIDE_DHASH_BANDS,
-    )
-
-    def signer(frame: DataFrame) -> DataFrame:
-        return video_dhash(frame).select(
-            "doc_id",
-            F.col("vhash").alias("sig"),
-            F.col("pix_md5").alias("content_md5"),
-        )
-
-    return signature_dedup_batch_against_corpus(
-        batch,
-        epoch_id,
-        state_dir,
-        signer,
-        n_bands=WIDE_DHASH_BANDS,
-        band_bits=WIDE_DHASH_BAND_BITS,
-    )
-
-
 def signature_dedup_batch_against_corpus(
     batch: DataFrame,
     epoch_id: int,
@@ -596,12 +535,10 @@ def signature_dedup_batch_against_corpus(
     id_col: str = "doc_id",
     payload_col: str = "payload",
     ids_collapsed: bool = False,
-    n_bands: int | None = None,
-    band_bits: int | None = None,
     write_sink: _DeferredWrites | None = None,
 ) -> DataFrame:
     """The GENERIC perceptual-signature near-dup screen (one body for
-    the image, audio and video twins), with the store/replay discipline of
+    the image and audio twins), with the store/replay discipline of
     `dedup_batch_against_corpus`. ``signer`` maps a (doc_id, payload)
     frame to (doc_id, sig: long, content_md5) — one Arrow pass, NULL
     sig rows for undecodable payloads.
@@ -614,8 +551,8 @@ def signature_dedup_batch_against_corpus(
        any copy count) and only representatives enter the band
        machinery;
     3. WITHIN-batch: `hamming_band_pairs` over the representatives
-       (4×16-bit bands tiling the 64-bit signature — the deployment
-       geometry from `plan_hamming_config`; Hamming ≤ 3 refine,
+       (4×16-bit bands tiling the 64-bit signature — pigeonhole recall
+       at Hamming ≤ 3; Hamming ≤ 3 refine,
        doc_id-ordered hot-bucket cap with the overflow audit landing at
        ``overflow/epoch=N``) feeds `connected_components`;
        survivors are re-elected AFTER the corpus verdicts exactly as
@@ -633,15 +570,7 @@ def signature_dedup_batch_against_corpus(
        ``rejected/epoch=N`` with matched_doc + reason. Epoch-keyed
        writes ride `streaming.stores.write_epoch_partition` and the
        store read excludes the live epoch, so a checkpoint-replayed
-       batch reproduces its first attempt — across compactions too.
-
-    ``n_bands``/``band_bits`` default to the 64-bit deployment
-    geometry (4×16); a WIDE signer (array<bigint> ``sig`` — e.g. a
-    256-bit dHash or per-frame video signature) must pass its own
-    geometry (e.g. 4×64), which the shared `signature_bands` wide
-    dispatch then slices — the 4×16 default on a wide signature would
-    band only the low word and silently lose cross-word recall, so the
-    geometry is validated against the signature type up front."""
+       batch reproduces its first attempt — across compactions too."""
     from sentinela_py_spark.operators.dedup import (
         connected_components,
         hamming_band_pairs,
@@ -651,9 +580,6 @@ def signature_dedup_batch_against_corpus(
         DHASH_BAND_BITS,
         DHASH_BANDS,
     )
-
-    n_bands = DHASH_BANDS if n_bands is None else n_bands
-    band_bits = DHASH_BAND_BITS if band_bits is None else band_bits
 
     spark = batch.sparkSession
     bands_dir = os.path.join(state_dir, "bands")
@@ -679,24 +605,17 @@ def signature_dedup_batch_against_corpus(
         "doc_id",
         "left_semi",
     )
-    from sentinela_py_spark.operators.dedup import is_wide_signature, wide_hamming
-
-    wide = is_wide_signature(sigs, "sig")
     rep_bands = signature_bands(
-        rep_sigs.select("doc_id", "sig"), "sig", n_bands, band_bits
+        rep_sigs.select("doc_id", "sig"), "sig", DHASH_BANDS, DHASH_BAND_BITS
     ).transform(barrier_eager)
     # 3. within-batch components over the Hamming-refined band pairs
-    # (wide signatures validate band coverage on the data — one
-    # O(1)-row aggregate per batch; the never-silent guard against a
-    # wide signer banded at a narrow geometry)
     pairs, overflow = hamming_band_pairs(
         rep_sigs.select("doc_id", "sig"),
         "sig",
         max_hamming=3,
-        n_bands=n_bands,
-        band_bits=band_bits,
+        n_bands=DHASH_BANDS,
+        band_bits=DHASH_BAND_BITS,
         max_bucket_size=64,
-        validate_coverage=wide,
     )
     members = connected_components(
         rep_sigs.select("doc_id"), pairs.select("doc_a", "doc_b")
@@ -707,11 +626,7 @@ def signature_dedup_batch_against_corpus(
         corpus_sigs = store.groupBy("band", "bsig", F.col("sig").alias("c_sig")).agg(
             F.min("doc_id").alias("corpus_doc")
         )
-        probe_ham = (
-            wide_hamming("sig", "c_sig")
-            if wide
-            else F.bit_count(F.col("sig").bitwiseXOR(F.col("c_sig")))
-        )
+        probe_ham = F.bit_count(F.col("sig").bitwiseXOR(F.col("c_sig")))
         vs_corpus = (
             rep_bands.join(corpus_sigs, ["band", "bsig"])
             .filter(probe_ham <= 3)
@@ -1035,8 +950,8 @@ def decontamination_screen_batch(
     False-positive discipline: the filter admits no false NEGATIVES, so
     every genuinely contaminated doc is caught; a clean doc is flagged at
     ≈ the filter's per-gram FP rate compounded over its grams — size m
-    with `functions.bloom.plan_bloom_config` (or raise ``min_hits``) to
-    keep the quarantine precision acceptable, and re-screen the flagged
+    for the eval gram count (p ≈ (1 − e^(−k·n/m))^k, `functions.bloom`)
+    or raise ``min_hits`` to keep the quarantine precision acceptable, and re-screen the flagged
     slice with the exact join offline (it is tiny by construction).
 
     ``m_bits``/``n_hashes`` MUST match the geometry ``bloom_row`` was
@@ -1258,37 +1173,6 @@ def fuzzy_decon_screen_batch(
     )
 
 
-def view_click_attribution_stream(
-    views: DataFrame,
-    clicks: DataFrame,
-) -> DataFrame:
-    """Watermarked stream-stream interval join: every (view, click) pair
-    by the same user where the view precedes the click by less than 60
-    minutes — the unbounded twin of q_click_attribution.
-
-    Both sides carry event-time watermarks and the join condition bounds
-    view-ts from BOTH directions relative to click-ts, so Spark can expire
-    buffered rows once the watermark passes the interval — state stays
-    O(users × window), never O(stream). Works on batch frames too (the
-    watermark is a no-op there)."""
-    v = (views.withWatermark("ts", "2 hours") if views.isStreaming else views).alias("v")
-    c = (clicks.withWatermark("ts", "2 hours") if clicks.isStreaming else clicks).alias("c")
-    return v.join(
-        c,
-        F.expr(
-            f"""v.user_id = c.user_id
-            AND v.ts >= c.ts - INTERVAL 60 MINUTES
-            AND v.ts < c.ts"""
-        ),
-    ).select(
-        F.col("c.event_id").alias("click_id"),
-        F.col("v.event_id").alias("view_id"),
-        F.col("c.user_id").alias("user_id"),
-        F.col("v.ts").alias("view_ts"),
-        F.col("c.ts").alias("click_ts"),
-    )
-
-
 def quality_screen_batch(
     batch: DataFrame,
     model: dict,
@@ -1308,7 +1192,7 @@ def quality_screen_batch(
     reference distribution is the curated corpus, not whatever arrived
     this minute). Exactly the frozen-codebook contract the ANN
     maintenance tail uses; retrain offline and restart the stream to
-    rotate models, as `rebuild_ann_index_tree` rotates codebooks.
+    rotate models.
 
     STATELESS across batches (no store to desynchronize): rejected rows
     land at ``rejected/epoch=N`` with their scores (epoch-keyed
@@ -1468,7 +1352,7 @@ def ingest_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
     datacard of a composed-ingest deployment, derived purely from the
     screens' own persisted state (no recompute, no new state): where did
     each micro-batch's documents go, and which screen took them? The
-    streaming twin of `plans.curation.curation_funnel` — a lake
+    streaming twin of q_sequence_packing's funnel arm — a lake
     operator reads this off the state root to monitor ingest health
     (a screen suddenly rejecting everything is a data incident, and
     this is the frame that shows it per epoch).
@@ -1948,10 +1832,10 @@ def encode_ann_batch(
     """MAP-SIDE IVF-PQ encode of raw vectors against a frozen driver-
     resident codebook: cell assignment (`assign_cells_literal`) +
     residual-PQ codes (`pq_residual_codes`) — zero shuffles, the encode
-    rides the input scan. The single encode definition shared by the
-    streaming append path (`ann_index_append_batch`) and the offline
-    retrain-rebuild (`functions.vectors.rebuild_ann_index_tree`), so
-    'stream ≡ batch encode' holds by construction."""
+    rides the input scan. The streaming append path
+    (`ann_index_append_batch`) encodes through it, and so does an
+    offline base build, so 'stream ≡ batch encode' holds by
+    construction."""
     from sentinela_py_spark.functions.kmeans import pq_stitch_codewords
     from sentinela_py_spark.functions.litutil import fast_lit
     from sentinela_py_spark.functions.vectors import pq_residual_codes
@@ -1997,8 +1881,8 @@ def ann_index_append_batch(
        base at ``epoch=-1`` in the same layout). The write is an
        epoch-keyed OVERWRITE, so a checkpoint-replayed batch reproduces
        its first attempt instead of duplicating rows — and an epoch
-       already folded into the base by `compact_ann_index_tree` /
-       `rebuild_ann_index_tree` (the ``_compaction.json`` marker) is
+       already folded into the base by `compact_ann_index_tree` (the
+       ``_compaction.json`` marker) is
        SKIPPED outright, so replay stays idempotent across compactions;
     3. readers (`functions.vectors.read_ann_index_tree`) see base + every
        appended epoch as one frame, and cell_id stays a partition column

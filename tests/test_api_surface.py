@@ -47,45 +47,34 @@ ALLOWED_UNSET: dict[tuple[str, str], str] = {
         "eval Bloom build and probe must share the hash count",
 }
 
-_UNDECIDED = "undecided, ROADMAP item 7"
-
-# public function → why it stays although only tests call it.
+# public function → why it stays although only tests call it: a
+# capability of the reference (its SURVEY.md row and the reference's
+# file:line), or the reference implementation a test compares a product
+# path against.
 TEST_ONLY: dict[str, str] = {
     "run_composed_ingest_stream": "the ingest deployment entry point",
     "run_extraction_stream": "the reference worker, app.py:409-486",
     "stateful_url_dedup": "the reference in-flight set, pending_news_queue.py:26-32",
-    "analyze_articles": _UNDECIDED,
-    "checkpoint_mode": _UNDECIDED,
-    "curation_funnel": f"{_UNDECIDED}; SURVEY.md row 'curation funnel datacard'",
-    "decode_media": _UNDECIDED,
-    "embedding_neardup_multitable":
-        f"{_UNDECIDED}; SURVEY.md row 'embedding cosine near-dup'",
-    "exact_neardup_pairs": _UNDECIDED,
-    "first_page_fallback_urls": f"{_UNDECIDED}; SURVEY.md S3",
-    "list_by_period": f"{_UNDECIDED}; SURVEY.md S5, F1/F2",
-    "media_features": _UNDECIDED,
-    "normalize_article_aliases": _UNDECIDED,
-    "observe_counts": f"{_UNDECIDED}; SURVEY.md K9",
-    "observe_ingest": f"{_UNDECIDED}; SURVEY.md K9, F5",
-    "pending_by_version": f"{_UNDECIDED}; SURVEY.md S4, F3, T4",
-    "person_dimension": _UNDECIDED,
-    "plan_cms_config": f"{_UNDECIDED}; SURVEY.md row 'sketch sizing planners'",
-    "plan_hamming_config": _UNDECIDED,
-    "plan_lsh_config": f"{_UNDECIDED}; SURVEY.md row 'sketch sizing planners'",
-    "resample_audio": _UNDECIDED,
-    "resize_image": f"{_UNDECIDED}; SURVEY.md row 'multimodal binary columns'",
-    "resolve_url": _UNDECIDED,
-    "salted_join": f"{_UNDECIDED}; SURVEY.md row 'skew salting'",
-    "session_windows": f"{_UNDECIDED}; SURVEY.md T6",
-    "strip_pagination": _UNDECIDED,
-    "upsert_by_key": f"{_UNDECIDED}; SURVEY.md K3, K4, K6, K7",
-    "video_dedup_batch_against_corpus": _UNDECIDED,
-    "view_click_attribution_stream": f"{_UNDECIDED}; SURVEY.md T6+ interval join",
-    "windowed_event_counts": f"{_UNDECIDED}; SURVEY.md T6",
-    "with_payload_hash": f"{_UNDECIDED}; SURVEY.md F6",
-    "write_bucketed": f"{_UNDECIDED}; SURVEY.md row 'bucketed co-located joins'",
-    "write_partitioned":
-        f"{_UNDECIDED}; SURVEY.md row 'partitioned table layout'",
+    "list_by_period": "SURVEY S5/F1/F2/O1, mongo_article_repository.py:44-75",
+    "pending_by_version": "SURVEY S4/F3, infrastructure/extraction.py:58-75",
+    "upsert_by_key":
+        "SURVEY K3/K4, mongo_article_cities_writer.py:18-38, geo_enrichment_job.py:282-311",
+    "normalize_article_aliases": "SURVEY F8, infrastructure/extraction.py:115-147",
+    "first_page_fallback_urls": "SURVEY S3, scraper.py:337-469",
+    "person_dimension": "SURVEY J8, infrastructure/extraction.py:171-207",
+    "observe_ingest":
+        "SURVEY K9, the per-batch elapsed_ms summary, city_extraction_job.py:30-66,199-230",
+    "observe_counts":
+        "SURVEY K9, the per-batch elapsed_ms summary, city_extraction_job.py:30-66,199-230",
+    "city_catalog_df": "SURVEY S9, city_matching/build_cache.py:184-204",
+    "get_portal": "SURVEY S10, portal_service_client.py:50-66",
+    "audit_dump_path": "SURVEY K8, cli.py:597-618",
+    "dump_audit_html": "SURVEY K8, scraper.py:363-373",
+    "catalog_checksum": "SURVEY M14, build_cache.py:207-209",
+    "exact_neardup_pairs":
+        "test reference: the exact twin test_semdedup compares the LSH pairs against",
+    "pq_residual_reconstruct_vecs":
+        "test reference: test_vectors compares pq_codes_reconstruct against it bit for bit",
 }
 
 
@@ -215,17 +204,35 @@ def never_set_parameters(trees=None) -> dict[tuple[str, str], str]:
     return out
 
 
-def unreferenced_public_functions(skip_tests: bool = False) -> dict[str, str]:
+def _export_lists(tree: ast.Module) -> set[int]:
+    """ids of the nodes inside a module's ``__all__ = [...]`` assignment."""
+    return {
+        id(n)
+        for stmt in tree.body
+        if isinstance(stmt, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "__all__" for t in stmt.targets)
+        for n in ast.walk(stmt.value)
+    }
+
+
+def unreferenced_public_functions(
+    skip_tests: bool = False, trees=None
+) -> dict[str, str]:
     """name → ``path:line`` for every public module-level package function
-    whose name appears nowhere in the repository (as a name, attribute,
-    import or string) except in its own definition; with ``skip_tests``,
-    references from files under ``tests/`` do not count."""
-    trees = _parse_all()
+    whose name appears nowhere in ``trees`` (path → parsed module; default:
+    the repository) as a name, attribute, import or string, except in its
+    own definition and in a module's ``__all__`` list, which exports a
+    name but does not use it; with ``skip_tests``, references from files
+    under ``tests/`` do not count."""
+    trees = _parse_all() if trees is None else trees
     refs: set[str] = set()
     for path, tree in trees.items():
         if skip_tests and path.relative_to(ROOT).parts[0] == "tests":
             continue
+        exports = _export_lists(tree)
         for node in ast.walk(tree):
+            if id(node) in exports:
+                continue
             if isinstance(node, ast.Name):
                 refs.add(node.id)
             elif isinstance(node, ast.Attribute):
@@ -267,6 +274,16 @@ def test_kwargs_forward_resolves_one_level():
         ),
     }
     assert set(never_set_parameters(trees)) == {("f", "c")}
+
+
+def test_export_list_is_not_a_reference():
+    """A name listed in ``__all__`` and used nowhere else is unreferenced."""
+    trees = {
+        ROOT / PACKAGE / "_synthetic_m.py": ast.parse(
+            '__all__ = ["f"]\n\n\ndef f():\n    ...\n'
+        ),
+    }
+    assert set(unreferenced_public_functions(trees=trees)) == {"f"}
 
 
 def test_every_public_function_is_referenced():

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sentinela_py_spark.functions.bloom import BLOOM_BITS, bloom_build, bloom_contains
+from sentinela_py_spark.functions.bloom import bloom_build, bloom_contains
 
 
 def _member_set(spark, keys, probes, **kw):
@@ -53,63 +53,6 @@ def test_decontamination_bloom_arm_is_superset_of_exact(spark):
     bloom = {r["doc_id"]: r["n_shared_ngrams"] for r in rows if r["method"] == "bloom"}
     assert set(exact) <= set(bloom)  # no false negatives
     assert all(bloom[d] >= n for d, n in exact.items())  # per-doc counts dominate
-
-
-def test_plan_bloom_config_pins_the_deployment_example():
-    """The module docstring's deployment math, now computed: 10^9 eval
-    grams at p ≤ 3% → an m=2^33 (1 GiB) filter, and k=4 (not the
-    textbook k=6) already achieves ~1.9% while keeping the one-digest
-    position construction (k ≤ 4 slices of a single md5)."""
-    from sentinela_py_spark.functions.bloom import plan_bloom_config
-
-    s = plan_bloom_config(10**9, 0.03)
-    assert s.m_bits == 1 << 33
-    assert s.bytes == (1 << 33) // 8  # 1 GiB
-    assert s.n_hashes == 4
-    assert 0.015 < s.fp_rate < 0.03
-
-
-def test_plan_bloom_config_meets_target_across_scales():
-    from sentinela_py_spark.functions.bloom import bloom_fp_rate, plan_bloom_config
-
-    for n in (10**3, 10**6, 10**9, 10**11):
-        for p in (0.1, 0.03, 0.01, 0.001, 0.0001):
-            s = plan_bloom_config(n, p)
-            # the sizing CONTRACT: achieved rate meets the target even
-            # when the k clamp bites (m doubles until it does — the r5
-            # ADVICE case was tight targets where the clamped k missed
-            # by ~10% and the old test encoded the miss)
-            assert s.fp_rate <= p, (n, p, s)
-            assert s.fp_rate == bloom_fp_rate(n, s.m_bits, s.n_hashes)
-            assert s.m_bits & (s.m_bits - 1) == 0  # power of two
-            assert 1 <= s.n_hashes <= 8
-
-
-def test_plan_bloom_config_clamped_k_still_meets_target():
-    """Force the clamp: max_hashes=2 at a tight target needs more bits
-    per key than the optimum for that k — the planner must double m
-    until the CLAMPED k meets the contract, not report a miss."""
-    from sentinela_py_spark.functions.bloom import plan_bloom_config
-
-    s = plan_bloom_config(10**6, 0.001, max_hashes=2)
-    assert s.n_hashes <= 2
-    assert s.fp_rate <= 0.001
-
-
-def test_plan_cms_config_roundtrips_the_registered_constants():
-    """CMS_D×CMS_W = the ε=1/128, δ=1/16 point of the sketch's stated
-    bound (overestimate ≤ 2N/w at probability 1 − 2^−d), and the
-    '8 KB per language' docstring claim is the computed state size."""
-    from sentinela_py_spark.plans.textops import CMS_D, CMS_W, plan_cms_config
-
-    s = plan_cms_config(epsilon=2 / 256, delta=2**-4)
-    assert (s.width, s.depth) == (CMS_W, CMS_D)
-    assert s.bytes_per_group == 8192
-    # depth clamps at 4 (one md5 digest = four 32-bit rows): a tighter
-    # delta is NOT silently promised — the achievable one is reported
-    tight = plan_cms_config(epsilon=0.01, delta=1e-9)
-    assert tight.depth == 4 and tight.delta == 2**-4
-    assert tight.width == 200
 
 
 def test_fuzzy_decon_arm_flags_edited_copies_not_phrase_overlap(spark):

@@ -1,17 +1,14 @@
-"""Distributed BPE trainer vs a pure-Python reference implementation of
-the classic Sennrich algorithm — merge sequence, counts, and final
-segmentation must agree exactly, and training must be deterministic
-across partitionings."""
+"""BPE encode (operators/bpe.py) vs a pure-Python reference of the
+classic Sennrich trainer: encoding the training text with the learned
+merge table reproduces the trained segmentation word for word."""
 
 from __future__ import annotations
 
 from collections import Counter
 
 import pytest
-from pyspark.sql import functions as F
 
-from sentinela_py_spark.operators.bpe import apply_merge, bpe_train
-from sentinela_py_spark.tables import load_table
+from sentinela_py_spark.operators.bpe import bpe_encode
 
 CORPUS = (
     "low low low low low lower lower newest newest newest newest newest newest "
@@ -55,41 +52,11 @@ def corpus_df(spark):
     return spark.createDataFrame([(1, CORPUS)], ["doc_id", "text"])
 
 
-def test_matches_reference_merges_and_segmentation(spark, corpus_df):
-    merges, vocab = bpe_train(corpus_df, n_merges=8)
-    ref_merges, ref_vocab = _ref_bpe(CORPUS, 8)
-    assert merges == ref_merges
-    got = {r["word"]: r["syms"] for r in vocab.collect()}
-    assert got == ref_vocab
-    # segmentation is a true partition of each word
-    assert all("".join(syms) == w for w, syms in got.items())
-
-
-def test_training_is_partitioning_invariant(spark):
-    docs = [(i, CORPUS) for i in range(8)]
-    one = spark.createDataFrame(docs, ["doc_id", "text"]).coalesce(1)
-    many = spark.createDataFrame(docs, ["doc_id", "text"]).repartition(8)
-    m1, _ = bpe_train(one, n_merges=6)
-    m2, _ = bpe_train(many, n_merges=6)
-    assert m1 == m2
-
-
-def test_apply_merge_greedy_nonoverlapping(spark):
-    df = spark.createDataFrame([(["a", "a", "a"],), (["a", "b", "a", "b"],)], ["syms"])
-    rows = df.select(apply_merge(F.col("syms"), "a", "a").alias("m1"),
-                     apply_merge(F.col("syms"), "a", "b").alias("m2")).collect()
-    assert rows[0]["m1"] == ["aa", "a"]  # leftmost wins in aaa
-    assert rows[1]["m2"] == ["ab", "ab"]
-
-
 def test_encode_reproduces_trained_segmentation(spark, corpus_df):
     """Encoding the training text with the learned merge table must
     reproduce the trained vocab segmentation word for word; unseen words
     segment with whatever learned subwords apply."""
-    from sentinela_py_spark.operators.bpe import bpe_encode
-
-    merges, vocab = bpe_train(corpus_df, n_merges=8)
-    trained = {r["word"]: r["syms"] for r in vocab.collect()}
+    merges, trained = _ref_bpe(CORPUS, 8)
     enc = bpe_encode(corpus_df, merges).collect()[0]["bpe_tokens"]
     want = [s for w in CORPUS.split() for s in trained[w]]
     assert enc == want
@@ -100,17 +67,3 @@ def test_encode_reproduces_trained_segmentation(spark, corpus_df):
     # learned subwords appear where their pairs exist
     learned = {a + b for (_, a, b, _) in merges}
     assert any(t in learned for t in toks)
-
-
-def test_corpus_scale_smoke(spark):
-    """5 merges over the sf0.001 documents table: every merge's pair count
-    is positive and non-increasing, and the vocab segmentation still
-    partitions each word."""
-    d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    merges, vocab = bpe_train(d, n_merges=5)
-    assert len(merges) == 5
-    cnts = [c for (_, _, _, c) in merges]
-    assert all(c > 0 for c in cnts)
-    assert cnts == sorted(cnts, reverse=True)
-    sample = vocab.limit(50).collect()
-    assert all("".join(r["syms"]) == r["word"] for r in sample)

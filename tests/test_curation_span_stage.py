@@ -205,19 +205,28 @@ def test_oracle_replays_the_cut_bit_for_bit(spark, planted_dir):
     assert any(r[m] == "curated" for r in srows)
 
 
+def _funnel_by_stage(rows) -> dict:
+    """q_sequence_packing's funnel-arm rows keyed by stage name: ``shard``
+    carries the stage index and ``seq_tokens`` the stage's token count."""
+    from sentinela_py_spark.plans.curation import FUNNEL_STAGES
+
+    names = [*FUNNEL_STAGES, "span_cut_capped"]
+    return {names[r["shard"]]: r for r in rows if r["method"] == "funnel"}
+
+
 def test_curation_funnel_reports_every_stage(spark, planted_dir):
     """The funnel datacard over the planted corpus: doc counts drop
     exactly where the pipeline says they do (eval split at train_pool,
     quality at the gate), token counts shrink exactly at the span cut
     (both repeated passages), and the final row is the packed pool."""
-    from sentinela_py_spark.plans.curation import FUNNEL_STAGES, curation_funnel
-    from sentinela_py_spark.tables import load_table
+    from sentinela_py_spark.plans.curation import FUNNEL_STAGES
+    from sentinela_py_spark.plans.registry import ARMS
 
-    d = load_table(spark, planted_dir, "documents")
-    rows = {r["stage"]: r for r in curation_funnel(d).collect()}
-    assert [r[0] for r in sorted(
-        ((r["stage_idx"], r["stage"]) for r in rows.values())
-    )] == list(range(len(FUNNEL_STAGES) + 1))  # + the cap-audit row
+    funnel = ARMS["q_sequence_packing"]["funnel"](spark, planted_dir).collect()
+    assert sorted(r["shard"] for r in funnel) == list(
+        range(len(FUNNEL_STAGES) + 1)
+    )  # + the cap-audit row
+    rows = _funnel_by_stage(funnel)
 
     n_total = len(ROWS)
     assert rows["input"]["n_docs"] == n_total
@@ -226,7 +235,7 @@ def test_curation_funnel_reports_every_stage(spark, planted_dir):
     # span cut: SAME docs, fewer tokens — the two cross-doc copies of
     # PASSAGE and the within-doc repeat of IPASSAGE are gone
     assert rows["span_cut"]["n_docs"] == rows["train_pool"]["n_docs"]
-    shrink = rows["train_pool"]["n_tokens"] - rows["span_cut"]["n_tokens"]
+    shrink = rows["train_pool"]["seq_tokens"] - rows["span_cut"]["seq_tokens"]
     assert shrink == 2 * len(PASSAGE.split()) + len(IPASSAGE.split())
     assert rows["decontaminated"]["n_docs"] == rows["span_cut"]["n_docs"]
     # quality gate drops the doc whose quality depended on the padding
@@ -235,19 +244,16 @@ def test_curation_funnel_reports_every_stage(spark, planted_dir):
     assert rows["mixture_sampled"]["n_docs"] == rows["quality_gated"]["n_docs"]
     # the intra occurrence guard never bites here (IPASSAGE repeats twice)
     cap_row = rows["span_cut_capped"]
-    assert (cap_row["n_docs"], cap_row["n_tokens"]) == (0, 0)
+    assert (cap_row["n_docs"], cap_row["seq_tokens"]) == (0, 0)
 
 
 def test_curation_funnel_publishes_capped_spam_docs(spark, tmp_path):
     """A degenerate spam doc (one gram × ~100 occurrences) engages the
-    intra occurrence guard; the funnel's audit row PUBLISHES it (r9
-    verdict item #8 — the audit was previously discarded at the span
-    stage), and the registered oracle replays the whole query — capped
-    span algebra AND audit counts — bit for bit on the cap-biting
-    corpus (the igc/spangc keep-first replay, r10)."""
+    intra occurrence guard; the funnel arm's audit row PUBLISHES it,
+    and the registered oracle replays the whole query — capped span
+    algebra AND audit counts — bit for bit on the cap-biting corpus
+    (the igc/spangc keep-first replay)."""
     from sentinela_py_spark.operators.dedup import DEFAULT_MAX_GRAM_OCCURRENCES
-    from sentinela_py_spark.plans.curation import curation_funnel
-    from sentinela_py_spark.tables import load_table
 
     n_spam = 100 + 8 - 1  # 100 identical 8-grams
     spam_id, keep_id = _pick_ids(2, eval_split=False, start=1000)
@@ -266,18 +272,15 @@ def test_curation_funnel_publishes_capped_spam_docs(spark, tmp_path):
         ),
         os.path.join(d_dir, "documents.parquet"),
     )
-    d = load_table(spark, d_dir, "documents")
-    frows = {r["stage"]: r for r in curation_funnel(d).collect()}
-    cap_row = frows["span_cut_capped"]
-    assert cap_row["n_docs"] == 1
-    assert cap_row["n_tokens"] == 100 - DEFAULT_MAX_GRAM_OCCURRENCES
-
     q = QUERIES["q_sequence_packing"]
     sdf = q.spark(spark, d_dir)
+    collected = sdf.collect()
+    cap_row = _funnel_by_stage(collected)["span_cut_capped"]
+    assert cap_row["n_docs"] == 1
+    assert cap_row["seq_tokens"] == 100 - DEFAULT_MAX_GRAM_OCCURRENCES
+
     cols = sorted(sdf.columns)
-    srows = sorted(
-        (tuple(r[c] for c in cols) for r in sdf.collect()), key=_nskey
-    )
+    srows = sorted((tuple(r[c] for c in cols) for r in collected), key=_nskey)
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM read_parquet("

@@ -143,6 +143,16 @@ class TestHammingBandPairs:
         # untouched); 4 flips spread one per band miss by design. A
         # bit-63 signature is NEGATIVE (two's-complement long) and must
         # band/join/refine identically.
+        from sentinela_py_spark.operators.multimodal import (
+            DHASH_BAND_BITS,
+            DHASH_BANDS,
+        )
+        from sentinela_py_spark.plans.mmops import IMG_NEARDUP_MAX_HAMMING
+
+        # the deployment constants are this geometry: pigeonhole needs
+        # max_hamming + 1 bands, tiling all 64 bits
+        assert DHASH_BANDS == IMG_NEARDUP_MAX_HAMMING + 1 == 4
+        assert DHASH_BANDS * DHASH_BAND_BITS == 64
         base = 0x123456789ABCDEF0
         neg = base | -(1 << 63)  # bit 63 set → negative long
         sigs = self._sigs(
@@ -172,67 +182,6 @@ class TestHammingBandPairs:
         )
         r = pairs.collect()[0]
         assert (r["a_pix_md5"], r["b_pix_md5"]) == ("m1", "m2")
-
-
-class TestPlanHammingConfig:
-    """The sizing planner (r13, r12 verdict #1 + missing #3): the
-    computation that would have surfaced the 1,024-bucket ceiling of the
-    old 32-bit/4×8 default — occupancy is a consequence of (corpus,
-    hash width, recall threshold), never a default."""
-
-    def test_worked_example_one_billion_images(self):
-        from sentinela_py_spark.operators.dedup import plan_hamming_config
-
-        # the r12 geometry: 32-bit hash at 10⁹ images → ~3.9M rows in
-        # EVERY band bucket; the cap=64 guard would truncate ≫99%
-        s32 = plan_hamming_config(10**9, 32, max_hamming=3)
-        assert (s32.n_bands, s32.band_bits, s32.n_buckets_per_band) == (4, 8, 256)
-        assert s32.expected_occupancy == pytest.approx(10**9 / 256)
-        assert not s32.occupancy_ok
-        # the r13 geometry: 64-bit dHash → ~15k/bucket — workable with
-        # capping, still above a 64-row target...
-        s64 = plan_hamming_config(10**9, 64, max_hamming=3)
-        assert (s64.n_bands, s64.band_bits, s64.n_buckets_per_band) == (4, 16, 65536)
-        assert s64.expected_occupancy == pytest.approx(10**9 / 65536)
-        assert not s64.occupancy_ok
-        # ...and the planner names the honest lever: a 96-bit hash
-        # (4×24) is where 64-row buckets actually hold at 10⁹
-        assert s64.hash_bits_needed == 96
-        s96 = plan_hamming_config(10**9, 96, max_hamming=3)
-        assert s96.occupancy_ok and s96.expected_occupancy < 64
-
-    def test_megascale_fits_the_64_bit_hash(self):
-        from sentinela_py_spark.operators.dedup import plan_hamming_config
-
-        s = plan_hamming_config(10**6, 64, max_hamming=3)
-        assert s.occupancy_ok
-        assert s.expected_occupancy == pytest.approx(10**6 / 65536)
-        # unordered pairs (r13 ADVICE): half the ordered-probe count
-        assert s.expected_candidates == pytest.approx(4 * 10**6 * 10**6 / 65536 / 2)
-
-    def test_deployment_constants_are_the_planned_point(self):
-        # the 4×16 constants every consumer imports ARE the planner's
-        # operating point for the 64-bit hash at the Hamming-3 threshold
-        # — geometry can't silently drift from the computation again
-        from sentinela_py_spark.operators.dedup import plan_hamming_config
-        from sentinela_py_spark.operators.multimodal import (
-            DHASH_BAND_BITS,
-            DHASH_BANDS,
-        )
-        from sentinela_py_spark.plans.mmops import IMG_NEARDUP_MAX_HAMMING
-
-        s = plan_hamming_config(10**6, 64, max_hamming=IMG_NEARDUP_MAX_HAMMING)
-        assert (s.n_bands, s.band_bits) == (DHASH_BANDS, DHASH_BAND_BITS)
-
-    def test_recall_fixes_the_band_count(self):
-        from sentinela_py_spark.operators.dedup import plan_hamming_config
-
-        assert plan_hamming_config(1000, 64, max_hamming=0).n_bands == 1
-        assert plan_hamming_config(1000, 64, max_hamming=7).n_bands == 8
-        with pytest.raises(ValueError):
-            plan_hamming_config(1000, 4, max_hamming=7)  # 8 bands > 4 bits
-        with pytest.raises(ValueError):
-            plan_hamming_config(0, 64, max_hamming=3)
 
 
 class TestImageNeardupQuery:
@@ -452,20 +401,6 @@ class TestWideDhash:
         assert all(-(1 << 63) <= w < 1 << 63 for w in w0)
         other, _ = dhash256_of(_ppm(18, 17, b"zebra yak xerus wombat vole "))
         assert other != w0
-
-    def test_wide_planner_operating_point_holds_at_1e9(self):
-        # the r13 verdict's named boundary: at 10^9 images the planner
-        # reports 96+ bits needed; 256 bits at the aligned 4×64 geometry
-        # is comfortably inside target — and now carriable (array<bigint>)
-        from sentinela_py_spark.operators.dedup import plan_hamming_config
-        from sentinela_py_spark.operators.multimodal import (
-            WIDE_DHASH_BAND_BITS,
-            WIDE_DHASH_BANDS,
-        )
-
-        s = plan_hamming_config(10**9, 256, max_hamming=3)
-        assert (s.n_bands, s.band_bits) == (WIDE_DHASH_BANDS, WIDE_DHASH_BAND_BITS)
-        assert s.occupancy_ok and s.expected_occupancy < 1e-9
 
     def test_wide_arm_catches_bright_twins_and_spares_distinct(
         self, spark, neardup_rows

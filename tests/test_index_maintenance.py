@@ -295,45 +295,6 @@ class TestTreeCompaction:
         assert "PartitionFilters: [" in plan
         assert "cell_id" in plan.split("PartitionFilters:")[1][:200]
 
-    def test_rebuild_reencodes_against_new_codebooks(self, spark, codebook, tmp_path):
-        from sentinela_py_spark.functions.vectors import (
-            rebuild_ann_index_tree,
-            tree_compacted_through,
-        )
-        from sentinela_py_spark.streaming.pipeline import encode_ann_batch
-
-        cents, books = codebook
-        tree = str(tmp_path / "tree")
-        ann_index_append_batch(_slice(spark, 0, 120), 0, tree, cents, books)
-        ann_index_append_batch(_slice(spark, 120, 200), 1, tree, cents, books)
-
-        # a drifted-corpus retrain: different centroids AND codewords
-        rows = (
-            load_table(spark, SF_DIR, "embeddings")
-            .filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 50 + K))
-            .orderBy("vec_id")
-            .collect()
-        )
-        vecs = [[float(x) for x in r["embedding"]] for r in rows]
-        cents_b = [(i, vecs[i]) for i in range(8)]
-        d = DIM // M
-        books_b = [[v[mi * d : (mi + 1) * d] for v in vecs[:K]] for mi in range(M)]
-
-        assert rebuild_ann_index_tree(spark, tree, cents_b, books_b) == 1
-        assert tree_compacted_through(tree) == 1
-
-        # the rebuilt store IS the one-shot encode of the raw vectors
-        # under the NEW codebook — cells and codes recomputed, not copied
-        want = _rowset(encode_ann_batch(_slice(spark, 0, 200), cents_b, books_b))
-        assert _rowset(read_ann_index_tree(spark, tree)) == want
-
-        # an old-codebook replayed epoch can never leak into the rebuilt
-        # store; the next fresh epoch encodes under whatever the caller
-        # passes (the maintenance stream now carries the new codebook)
-        before = _rowset(read_ann_index_tree(spark, tree))
-        ann_index_append_batch(_slice(spark, 120, 200), 1, tree, cents, books)
-        assert _rowset(read_ann_index_tree(spark, tree)) == before
-
     def test_stream_self_compacts_on_cadence(self, spark, codebook, tmp_path):
         """compact_every=2 on the composed stream: it drains 2 one-file
         micro-batches and folds the screen stores and the index tree

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from sentinela_py_spark.functions.hashing import canonical_sha256, with_payload_hash
+from sentinela_py_spark.functions.hashing import canonical_sha256, canonical_sha256_udf
 from sentinela_py_spark.operators.ingest import (
     list_by_period,
     new_articles,
@@ -187,7 +187,7 @@ def test_canonical_hash_matches_python_json(spark):
     assert canonical_sha256(payload) == expected
 
     df = spark.createDataFrame([(payload["fields"],)], "payload struct<b:long,a:array<long>>")
-    hashed = with_payload_hash(df, F.col("payload")).collect()[0]["payload_hash"]
+    hashed = df.select(canonical_sha256_udf(F.col("payload"))).first()[0]
     assert hashed == canonical_sha256({"b": 1, "a": [1, 2]})
 
 
@@ -198,8 +198,9 @@ def test_pending_by_version(spark):
             ("u2", False, "v1", "g1"),
             ("u3", True, "v1", "g1"),
             ("u4", True, "v0", "g1"),
+            ("u5", True, None, "g1"),  # done, but under no recorded version
         ],
         "url string, ner_done boolean, ner_version string, gazetteer_version string",
     )
     pending = {r["url"] for r in pending_by_version(df, "v1", "g1").collect()}
-    assert pending == {"u1", "u2", "u4"}
+    assert pending == {"u1", "u2", "u4", "u5"}

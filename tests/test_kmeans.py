@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from sentinela_py_spark.functions.kmeans import (
     KMEANS_ITERS,
     kmeans_cents_sql,
-    kmeans_centroids,
     kmeans_centroids_local,
     pq_stitch_codewords,
     pq_train_codebooks_local,
@@ -74,6 +73,14 @@ def _clustered_corpus(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
+def _cents_frame(e, k: int, **kw):
+    """(cell_id, centroid) frame of the trained codebook, for
+    `assign_cells`."""
+    return e.sparkSession.createDataFrame(
+        kmeans_centroids_local(e, k, **kw), "cell_id bigint, centroid array<double>"
+    )
+
+
 def _occupancy_ratio(assigned, k: int) -> float:
     counts = [r["n"] for r in assigned.groupBy("cell_id").agg(F.count("*").alias("n")).collect()]
     return max(counts) / (sum(counts) / k)
@@ -84,7 +91,7 @@ def test_trained_centroids_balance_clustered_corpus(spark):
     placeholder_ratio = _occupancy_ratio(ivf_assign(e, 8), 8)
     assert placeholder_ratio > 5.0  # the bulk lands in ~one cell
 
-    cents = kmeans_centroids(e, 8, iters=KMEANS_ITERS, dim=DIM)
+    cents = _cents_frame(e, 8, iters=KMEANS_ITERS, dim=DIM)
     trained_ratio = _occupancy_ratio(assign_cells(e, cents), 8)
     assert trained_ratio < 3.0
     assert trained_ratio < placeholder_ratio / 2
@@ -123,20 +130,17 @@ def test_kmeans_iters_saturate_by_the_module_constant(spark):
 @pytest.mark.slow
 def test_kmeans_deterministic_across_partitionings(spark):
     e = load_table(spark, SF_SMOKE, "embeddings")
-    a = kmeans_centroids(e, N_CELLS, dim=64).collect()
-    b = kmeans_centroids(e.repartition(13), N_CELLS, dim=64).collect()
-    ca = {r["cell_id"]: r["centroid"] for r in a}
-    cb = {r["cell_id"]: r["centroid"] for r in b}
+    ca = dict(kmeans_centroids_local(e, N_CELLS, dim=64))
+    cb = dict(kmeans_centroids_local(e.repartition(13), N_CELLS, dim=64))
     assert ca == cb  # bit-exact: integer sums leave no accumulation order
 
 
 def test_kmeans_matches_duckdb_bit_for_bit(spark):
-    spark_cents = {
-        r["cell_id"]: r["centroid"]
-        for r in kmeans_centroids(
+    spark_cents = dict(
+        kmeans_centroids_local(
             load_table(spark, SF_SMOKE, "embeddings"), N_CELLS, dim=64
-        ).collect()
-    }
+        )
+    )
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW embeddings AS SELECT * FROM "
@@ -401,8 +405,8 @@ def test_probe_guard_engages_at_forced_boundary(spark, monkeypatch):
 
 def test_assign_guard_math_at_deployment_cell_counts():
     """The guard inlines codebook-scale matrices and broadcasts past
-    ASSIGN_LITERAL_MAX — in particular at the plan_ivf_config regime
-    (10^5 cells × 64 dims = 6.4M doubles, past literal inlining)."""
+    ASSIGN_LITERAL_MAX — in particular at a 10^9-vector deployment's
+    10^5 cells × 64 dims = 6.4M doubles, past literal inlining."""
     from sentinela_py_spark.plans.simops import (
         ASSIGN_LITERAL_MAX,
         EMB_DIM,
@@ -424,7 +428,7 @@ def test_cell_cap_never_bites_at_fixture_scale(spark):
         e = load_table(spark, sf, "embeddings")
         for assigned in (
             ivf_assign(e),
-            assign_cells(e, kmeans_centroids(e, N_CELLS, dim=64)),
+            assign_cells(e, _cents_frame(e, N_CELLS, dim=64)),
         ):
             _kept, audit = capped_cell_candidates(assigned)
             assert audit.count() == 0
@@ -456,19 +460,3 @@ def test_cell_cap_bounds_hot_cell_with_audit(spark):
 
 def test_ivf_max_cell_size_default_sane():
     assert IVF_MAX_CELL_SIZE >= 1024
-
-
-def test_plan_ivf_config_pins_the_deployment_example():
-    from sentinela_py_spark.functions.kmeans import plan_ivf_config
-
-    s = plan_ivf_config(10**9, 10**4)
-    assert s.n_cells == 10**5
-    assert s.expected_occupancy == 10**4
-    assert s.train_rows == 256 * 10**5  # 25.6M — FAISS's ~256/cell guideline
-    assert 0.02 < s.train_frac < 0.03
-    assert s.scan_fraction == 10**-5
-    # small-corpus degeneracies: never more cells than rows, train_frac <= 1
-    tiny = plan_ivf_config(100, 10)
-    assert tiny.n_cells == 10 and tiny.train_rows == 100 and tiny.train_frac == 1.0
-    wide = plan_ivf_config(10**9, 10**4, nprobe=4)
-    assert wide.scan_fraction == 4 * 10**-5

@@ -1,5 +1,5 @@
 """Multimodal plumbing: binary payload schema, Arrow batch path, frame
-sampling layout, and the REAL binary-PPM decode/resize path."""
+sampling layout, and the REAL binary-PPM and WAV decode paths."""
 
 from __future__ import annotations
 
@@ -14,15 +14,12 @@ from sentinela_py_spark.operators.multimodal import (
     FRAME_STRIDE,
     MEDIA_SCHEMA,
     audio_features,
-    decode_media,
     decode_ppm,
     decode_wav,
     documents_to_images,
     documents_to_media,
     documents_to_wavs,
-    media_features,
     media_pixel_features,
-    resize_image,
     sample_frames,
 )
 
@@ -50,15 +47,6 @@ def test_media_schema_and_metadata(media):
     assert rows[1]["meta"]["n_bytes"] == 240
     assert rows[1]["meta"]["n_frames"] == 4
     assert rows[0]["meta"]["width"] == 16 and rows[0]["meta"]["height"] == 9
-
-
-def test_media_features_arrow_path(media):
-    feats = {r["doc_id"]: r for r in media_features(media).collect()}
-    text = "hello world " * 20
-    assert feats[1]["n_bytes"] == 240
-    assert feats[1]["checksum"] == hashlib.md5(text.encode()).hexdigest()
-    assert feats[1]["sum_bytes"] == sum(text.encode())
-    assert feats[2]["n_bytes"] == 1 and feats[2]["sum_bytes"] == ord("x")
 
 
 def test_frame_sampling_layout(media):
@@ -99,11 +87,9 @@ def test_decode_ppm_roundtrip():
 
 def test_decode_rejects_malformed():
     with pytest.raises(ValueError, match="not a binary PPM"):
-        decode_media(b"\x89PNG", "image")
+        decode_ppm(b"\x89PNG")
     with pytest.raises(ValueError, match="truncated"):
         decode_ppm(b"P6\n4 4\n255\n\x00\x00")  # pixel plane too short
-    with pytest.raises(ValueError, match="unknown media_type"):
-        decode_media(b"anything", "video")
 
 
 def _wav_bytes(data: bytes, rate: int = 8000, channels: int = 1, bits: int = 8) -> bytes:
@@ -119,11 +105,6 @@ def _wav_bytes(data: bytes, rate: int = 8000, channels: int = 1, bits: int = 8) 
         + struct.pack("<I", len(data))
         + data
     )
-
-
-def test_decode_media_audio_walks_wav_container():
-    n, ch, maxval, samples = decode_media(_wav_bytes(b"\x01\x02\x03"), "audio")
-    assert (n, ch, maxval, samples) == (3, 1, 255, b"\x01\x02\x03")
 
 
 class TestWavCodec:
@@ -215,18 +196,6 @@ class TestAudioPath:
         assert feats[2]["n_samples"] is None
 
 
-def test_resize_image_nearest_neighbor():
-    # 2x1 image: red pixel then blue pixel; upscale to 4x1 duplicates each
-    pix = b"\xff\x00\x00" + b"\x00\x00\xff"
-    out = resize_image(_ppm(2, 1, pix), 4, 1)
-    w, h, maxval, decoded = decode_ppm(out)
-    assert (w, h) == (4, 1)
-    assert decoded == b"\xff\x00\x00" * 2 + b"\x00\x00\xff" * 2
-    # downscale back: picks source pixels 0 and 2
-    back = decode_ppm(resize_image(out, 2, 1))[3]
-    assert back == pix
-
-
 def test_documents_to_images_are_valid_ppm(spark):
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     rows = {r["doc_id"]: r for r in documents_to_images(docs).collect()}
@@ -275,34 +244,3 @@ def test_metadata_query_prunes_payload(media):
     meta_only = media.select("doc_id", "media_type", F.col("meta.n_bytes"))
     explained = meta_only._jdf.queryExecution().optimizedPlan().toString()
     assert "payload" not in explained
-
-
-def test_resample_audio_decimates_and_reencodes():
-    import io
-    import wave as stdwave
-
-    from sentinela_py_spark.operators.multimodal import decode_wav, resample_audio
-
-    # 8 kHz mono 8-bit, samples 0..99
-    data = bytes(range(100))
-    src = (
-        b"RIFF" + (len(data) + 36).to_bytes(4, "little") + b"WAVEfmt "
-        + (16).to_bytes(4, "little") + (1).to_bytes(2, "little")
-        + (1).to_bytes(2, "little") + (8000).to_bytes(4, "little")
-        + (8000).to_bytes(4, "little") + (1).to_bytes(2, "little")
-        + (8).to_bytes(2, "little") + b"data" + len(data).to_bytes(4, "little")
-    ) + data
-    out = resample_audio(src, 4)
-    rate, channels, bits, kept = decode_wav(out)
-    assert (rate, channels, bits) == (2000, 1, 8)
-    assert kept == bytes(range(0, 100, 4))
-    # stdlib wave agrees the container is valid
-    w = stdwave.open(io.BytesIO(out))
-    assert w.getframerate() == 2000 and w.getnframes() == 25
-    # identity factor is a byte-identical round-trip of the data plane
-    assert decode_wav(resample_audio(src, 1))[3] == data
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="divisible"):
-        resample_audio(src, 3)

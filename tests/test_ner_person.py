@@ -1,5 +1,4 @@
-"""NER adapter (U1), person branch (J8/M2/M3), metrics (K9/A7), URL
-utilities (M15)."""
+"""NER adapter (U1), person branch (J8/M2/M3), metrics (K9/A7)."""
 
 from __future__ import annotations
 
@@ -9,9 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sentinela_py_spark.functions.metrics import observe_counts, observe_ingest
-from sentinela_py_spark.functions.urls import resolve_url, strip_pagination
 from sentinela_py_spark.operators.ner import (
-    analyze_articles,
     heuristic_person_engine,
     load_engine,
     noop_engine,
@@ -37,8 +34,7 @@ def articles(spark):
 def test_noop_engine_default(monkeypatch, articles):
     monkeypatch.delenv("EXTRACTION_NER_FACTORY", raising=False)
     assert load_engine() is noop_engine
-    spans = analyze_articles(articles, noop_engine).select(F.size("spans")).collect()
-    assert all(r[0] == 0 for r in spans)
+    assert person_occurrences(articles, noop_engine).count() == 0
 
 
 def test_factory_loading(monkeypatch):
@@ -48,20 +44,10 @@ def test_factory_loading(monkeypatch):
     assert load_engine() is heuristic_person_engine
 
 
-def test_analyze_articles_spans(articles):
-    rows = {
-        r["url"]: r["spans"]
-        for r in analyze_articles(articles, heuristic_person_engine).collect()
-    }
-    texts = [s["text"] for s in rows["https://ex.com/a1"]]
-    assert "Carlos Alberto de Souza" in texts
-    assert "Maria Silva" in texts
-    assert rows["https://ex.com/a2"] == []
-    assert rows["https://ex.com/a3"] == []
-
-
 def test_person_occurrences_branch(articles):
     occ = person_occurrences(articles, heuristic_person_engine).collect()
+    # no spans from a body without names, nor from a null body
+    assert {r["url"] for r in occ} == {"https://ex.com/a1"}
     by_name = {r["canonical_name"]: r for r in occ}
     # reference normalization capitalizes connectors too ("de" -> "De"),
     # normalization.py:101-115
@@ -94,24 +80,3 @@ def test_observe_metrics(spark):
     observed2, m2 = observe_counts(df.filter(F.col("title") == "t"))
     observed2.count()
     assert m2.summary()["rows"] == 1
-
-
-def test_url_utils(spark):
-    df = spark.createDataFrame(
-        [
-            ("https://ex.com/news?page=3", "https://ex.com/x/y/", "z.html"),
-            ("https://ex.com/news/pagina/2/", "https://ex.com/x/y/", "/root.html"),
-            ("https://ex.com/news-2", "https://ex.com/x/y/", "https://other.com/a"),
-        ],
-        ["listing", "base", "href"],
-    )
-    out = df.select(
-        strip_pagination(F.col("listing")).alias("stripped"),
-        resolve_url(F.col("base"), F.col("href")).alias("resolved"),
-    ).collect()
-    assert out[0]["stripped"] == "https://ex.com/news"
-    assert out[1]["stripped"] == "https://ex.com/news/pagina"
-    assert out[2]["stripped"] == "https://ex.com/news"
-    assert out[0]["resolved"] == "https://ex.com/x/y/z.html"
-    assert out[1]["resolved"] == "https://ex.com/root.html"
-    assert out[2]["resolved"] == "https://other.com/a"

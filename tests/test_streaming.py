@@ -1,7 +1,6 @@
 """Streaming pipeline: availableNow drain of a JSON-lines news source
 through the extraction foreachBatch, in-flight URL dedup, checkpoint
-restart, the ingest decontamination screen, and the windowed event-time
-superset."""
+restart, and the ingest decontamination screen."""
 
 import datetime as dt
 import json
@@ -9,10 +8,6 @@ import json
 from pyspark.sql import functions as F
 
 from sentinela_py_spark.operators.geojob import geo_enrichment
-from sentinela_py_spark.streaming.pipeline import (
-    session_windows,
-    windowed_event_counts,
-)
 
 CATALOG = [
     {"ibge_id": "2408102", "name": "Natal", "uf": "RN"},
@@ -29,25 +24,6 @@ def test_geo_enrichment_is_pure_batch_logic(spark):
     )
     out = geo_enrichment(batch, catalog, CATALOG).collect()
     assert len(out) == 1 and out[0]["primary_city"]["city_id"] == "2408102"
-
-
-def test_windowed_event_counts_batch_parity(spark):
-    events = spark.createDataFrame(
-        [
-            (1, dt.datetime(2024, 1, 1, 0, 1), 10, "click", 1.0, "{}"),
-            (2, dt.datetime(2024, 1, 1, 0, 3), 10, "click", 2.0, "{}"),
-            (3, dt.datetime(2024, 1, 1, 0, 7), 11, "view", 3.0, "{}"),
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    rows = windowed_event_counts(events, window="5 minutes").orderBy("w").collect()
-    assert [(r["event_type"], r["n"], r["value_sum"]) for r in rows] == [
-        ("click", 2, 3.0),
-        ("view", 1, 3.0),
-    ]
-
-    sessions = session_windows(events, gap="10 minutes").collect()
-    assert {(r["user_id"], r["n_events"]) for r in sessions} == {(10, 2), (11, 1)}
 
 
 def test_stateful_url_dedup_across_batches(spark, tmp_path):
@@ -136,69 +112,6 @@ def test_first_by_enqueue_seq_min_across_arrow_chunks():
     assert first_by_enqueue_seq(iter([pd.DataFrame(columns=["url"])])) is None
 
 
-def test_watermark_drops_late_events(spark, tmp_path):
-    """Append-mode windowed aggregation with a 10-minute watermark: an
-    event arriving after its window passed the watermark must NOT change
-    the already-emitted window result (T6 late-data policy)."""
-    from sentinela_py_spark.streaming.pipeline import windowed_event_counts
-
-    import os
-    import time
-
-    src = tmp_path / "wm-src"
-    src.mkdir()
-    files = {
-        # batch 0: two in-window clicks + the watermark-advancing event
-        "b1.json": [
-            {"event_id": 1, "ts": "2024-01-01T10:00:30.000Z", "user_id": 1, "event_type": "click", "value": 1.0, "props": "{}"},
-            {"event_id": 2, "ts": "2024-01-01T10:03:00.000Z", "user_id": 1, "event_type": "click", "value": 1.0, "props": "{}"},
-            {"event_id": 3, "ts": "2024-01-01T10:16:00.000Z", "user_id": 2, "event_type": "view", "value": 1.0, "props": "{}"},
-        ],
-        # batch 1: watermark (from batch 0) reaches 10:06 -> the
-        # 10:00-10:05 window closes and is emitted here
-        "b2.json": [
-            {"event_id": 4, "ts": "2024-01-01T10:17:00.000Z", "user_id": 2, "event_type": "view", "value": 1.0, "props": "{}"},
-        ],
-        # batch 2: LATE event for the already-closed window -> dropped
-        "b3.json": [
-            {"event_id": 5, "ts": "2024-01-01T10:01:00.000Z", "user_id": 3, "event_type": "click", "value": 9.0, "props": "{}"},
-            {"event_id": 6, "ts": "2024-01-01T10:31:00.000Z", "user_id": 2, "event_type": "view", "value": 1.0, "props": "{}"},
-        ],
-    }
-    now = time.time()
-    for i, (name, rows) in enumerate(files.items()):
-        p = src / name
-        p.write_text("\n".join(json.dumps(d) for d in rows))
-        # deterministic mtimes fix the file (= micro-batch) ordering
-        os.utime(p, (now - 300 + i * 10, now - 300 + i * 10))
-
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(str(src))
-    )
-    q = (
-        windowed_event_counts(stream, window="5 minutes", watermark="10 minutes")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("wm_counts")
-        .option("checkpointLocation", str(tmp_path / "ckpt-wm"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    rows = spark.sql(
-        "SELECT w.start AS ws, event_type, n, value_sum FROM wm_counts"
-    ).collect()
-    closed = [r for r in rows if r["ws"] == dt.datetime(2024, 1, 1, 10, 0)]
-    assert len(closed) == 1
-    # late event 5 (value 9.0) did not leak into the closed window
-    assert closed[0]["n"] == 2 and closed[0]["value_sum"] == 2.0
-
-
 def test_extraction_stream_end_to_end(spark, tmp_path):
     """§3.3 worker as a stream: one availableNow drain produces city
     mentions, person occurrences, and version markers via foreachBatch;
@@ -259,81 +172,6 @@ def test_extraction_stream_end_to_end(spark, tmp_path):
     calls.clear()
     drain()
     assert calls == []
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream interval join (view→click attribution):
-    the streamed pairs must equal the batch join over the same rows, and
-    the physical plan must be a real stream-stream join (two watermarked
-    sides), not a collected snapshot."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from sentinela_py_spark.streaming.pipeline import view_click_attribution_stream
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-        ]
-    )
-    rows = [
-        # user 1: view 09:30 → click 10:00 (attributed), view 11:30 (after click, no)
-        {"event_id": 1, "ts": "2024-05-02T09:30:00.000Z", "user_id": 1, "event_type": "view"},
-        {"event_id": 2, "ts": "2024-05-02T10:00:00.000Z", "user_id": 1, "event_type": "click"},
-        {"event_id": 3, "ts": "2024-05-02T11:30:00.000Z", "user_id": 1, "event_type": "view"},
-        # user 2: view 05:00 → click 10:00 is OUTSIDE the 60-min window
-        {"event_id": 4, "ts": "2024-05-02T05:00:00.000Z", "user_id": 2, "event_type": "view"},
-        {"event_id": 5, "ts": "2024-05-02T10:00:00.000Z", "user_id": 2, "event_type": "click"},
-        # user 3: two views inside the window → two pairs for one click
-        {"event_id": 6, "ts": "2024-05-02T09:10:00.000Z", "user_id": 3, "event_type": "view"},
-        {"event_id": 7, "ts": "2024-05-02T09:50:00.000Z", "user_id": 3, "event_type": "view"},
-        {"event_id": 8, "ts": "2024-05-02T10:05:00.000Z", "user_id": 3, "event_type": "click"},
-    ]
-    src = tmp_path / "attr-src"
-    src.mkdir()
-    (src / "b1.json").write_text("\n".join(json.dumps(d) for d in rows))
-
-    stream = spark.readStream.schema(schema).json(str(src))
-    joined = view_click_attribution_stream(
-        stream.filter("event_type = 'view'"), stream.filter("event_type = 'click'")
-    )
-    assert joined.isStreaming
-    # a real stream-stream join: BOTH sides carry event-time watermarks
-    analyzed = joined._jdf.queryExecution().analyzed().toString()
-    assert analyzed.count("EventTimeWatermark") == 2, analyzed
-
-    got: list[tuple] = []
-    q = (
-        joined.writeStream.foreachBatch(
-            lambda df, _eid: got.extend(
-                (r["click_id"], r["view_id"], r["user_id"]) for r in df.collect()
-            )
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt-attr"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "stream did not drain within 180s"
-
-    assert sorted(got) == [(2, 1, 1), (8, 6, 3), (8, 7, 3)]
-
-    # batch twin over the same rows produces the same pairs
-    batch = spark.createDataFrame(
-        [(d["event_id"], d["ts"].replace("Z", "+00:00"), d["user_id"], d["event_type"]) for d in rows],
-        "event_id long, ts string, user_id long, event_type string",
-    ).selectExpr("event_id", "cast(ts as timestamp) ts", "user_id", "event_type")
-    b = view_click_attribution_stream(
-        batch.filter("event_type = 'view'"), batch.filter("event_type = 'click'")
-    )
-    assert sorted((r["click_id"], r["view_id"], r["user_id"]) for r in b.collect()) == sorted(got)
 
 
 def test_decontamination_stream_flags_eval_overlap(spark, tmp_path):

@@ -195,123 +195,6 @@ def test_scaled_lsh_configs_hold_recall_contract(spark):
     assert all(r["n_shared_bands"] == 8 for r in rows)
 
 
-def test_multitable_lsh_amplifies_recall(spark):
-    """OR over T independent tables recovers recall 1 − (1 − q)^T: at 8
-    planes a single table measures q ≈ 0.15 on the cos≥0.4 set; 4 tables
-    predict ≈ 0.48 and measure 0.49 — the law the docstring sells, pinned.
-    Precision stays 1.0 (true cosine scores every candidate)."""
-    from sentinela_py_spark.plans.simops import (
-        embedding_neardup_multitable,
-        exact_neardup_pairs,
-    )
-
-    e = load_table(spark, SF, "embeddings")
-    exact = {(r.vec_a, r.vec_b) for r in exact_neardup_pairs(e).collect()}
-    multi = {(r.vec_a, r.vec_b) for r in embedding_neardup_multitable(e, 8, 4).collect()}
-    assert multi <= exact  # precision 1.0 across tables
-    assert len(multi & exact) / len(exact) >= 0.40  # ~3x the 1-table floor
-
-
-def test_plan_lsh_config_edge_cases():
-    """Closed-form sizing math stays sane at the edges: a corpus smaller
-    than the target bucket still gets ≥1 plane; identical-vector
-    threshold (cos 1.0 → per-plane collision certainty) needs exactly one
-    table; more vectors at fixed occupancy monotonically add planes; a
-    high plane count at a loose threshold gets its recall back with more
-    tables, never fewer."""
-    from sentinela_py_spark.plans.simops import plan_lsh_config
-
-    tiny = plan_lsh_config(10, target_bucket_size=1000)
-    assert tiny.n_planes == 1 and tiny.n_tables >= 1
-
-    certain = plan_lsh_config(1_000_000, 1_000, cos_threshold=1.0)
-    assert certain.per_table_recall == 1.0 and certain.n_tables == 1
-
-    p_small = plan_lsh_config(10**6, 1_000).n_planes
-    p_big = plan_lsh_config(10**9, 1_000).n_planes
-    assert p_small < p_big
-
-    loose = plan_lsh_config(10**9, 1_000, cos_threshold=0.4, recall_target=0.9)
-    tight = plan_lsh_config(10**9, 1_000, cos_threshold=0.9, recall_target=0.9)
-    assert loose.n_planes == tight.n_planes  # occupancy fixes P, not the threshold
-    assert loose.n_tables >= tight.n_tables  # farther pairs need more tables
-    assert loose.recall >= 0.9 or loose.n_tables == 64  # met or capped
-
-
-def test_occupancy_sized_lsh_holds_recall_at_1e5_rows(spark):
-    """`plan_lsh_config` computes (n_planes, n_tables) from corpus size +
-    target occupancy + recall target instead of the registry demo
-    constants — prove the computed config on a 10⁵-row synthetic corpus:
-
-    - the sizing math lands where the docstring promises (11 planes /
-      2048 buckets / 4 tables for n=10⁵, occupancy 64, recall 0.9 at
-      cos 0.9; 20 planes for the documented n=10¹⁰ deployment example);
-    - MEASURED mean bucket occupancy matches the n/2^P prediction;
-    - MEASURED candidate-generation recall on planted near-dup pairs at
-      the threshold clears the recall target (collision ⇔ some table's
-      bucket codes differ in ≤1 bit — exactly the multi-probe criterion
-      the pair join uses, so pair recall = this collision rate; the
-      cosine refine has precision 1.0 and removes nothing true).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from sentinela_py_spark.plans.simops import lsh_bucket, make_planes, plan_lsh_config
-
-    cfg = plan_lsh_config(100_000, target_bucket_size=64, cos_threshold=0.9, recall_target=0.9)
-    assert (cfg.n_planes, cfg.n_buckets, cfg.n_tables) == (11, 2048, 4)
-    assert cfg.recall >= 0.9
-    assert plan_lsh_config(10_000_000_000, 10_000).n_planes == 20  # docstring example
-
-    rng = np.random.RandomState(7)
-    n, dim, n_seed = 100_000, 16, 400
-    base = rng.normal(size=(n, dim))
-    dups = base[:n_seed] + 0.45 * rng.normal(size=(n_seed, dim))
-    cos = (base[:n_seed] * dups).sum(1) / (
-        np.linalg.norm(base[:n_seed], axis=1) * np.linalg.norm(dups, axis=1)
-    )
-    # ground truth: the planted pairs actually at/above the threshold
-    planted = [(int(i), int(n + i)) for i in range(n_seed) if cos[i] >= 0.9]
-    assert len(planted) > 200  # enough mass for a tight recall estimate
-
-    pdf = pd.DataFrame(
-        {
-            "vec_id": np.concatenate([np.arange(n), np.arange(n, n + n_seed)]),
-            "embedding": [r.tolist() for r in np.vstack([base, dups])],
-        }
-    )
-    df = spark.createDataFrame(pdf).repartition(16)
-    cols = [
-        lsh_bucket(F.col("embedding"), make_planes(cfg.n_planes, dim=dim, table=t)).alias(f"b{t}")
-        for t in range(cfg.n_tables)
-    ]
-    buckets = df.select("vec_id", *cols).cache()
-
-    sizes = [r["count"] for r in buckets.groupBy("b0").count().collect()]
-    mean_occ = sum(sizes) / len(sizes)
-    assert cfg.expected_occupancy / 2 <= mean_occ <= cfg.expected_occupancy * 2
-
-    pp = spark.createDataFrame(planted, "a long, b long")
-    ba = buckets.select(
-        F.col("vec_id").alias("a"),
-        *[F.col(f"b{t}").alias(f"ba{t}") for t in range(cfg.n_tables)],
-    )
-    bb = buckets.select(
-        F.col("vec_id").alias("b"),
-        *[F.col(f"b{t}").alias(f"bb{t}") for t in range(cfg.n_tables)],
-    )
-    hit = (
-        sum(
-            (F.bit_count(F.col(f"ba{t}").bitwiseXOR(F.col(f"bb{t}"))) <= 1).cast("int")
-            for t in range(cfg.n_tables)
-        )
-        > 0
-    )
-    hits = pp.join(ba, "a").join(bb, "b").select(hit.cast("int").alias("h")).agg(F.sum("h")).first()[0]
-    buckets.unpersist()
-    assert hits / len(planted) >= 0.9  # the recall target, measured
-
-
 def test_connected_components_collapse_dup_groups(spark, skewed_corpus):
     """Pairs → groups at 10×: every 10-copy group must land in ONE
     component (identical docs share all bands, so the pair edges always

@@ -554,7 +554,7 @@ class TestAdcSearch:
     def test_adc_t2_guard_crosses_at_deployment_cell_counts(self):
         """The auto guard inlines t2 while it's codebook-scale and ships
         it as a broadcast frame past ADC_T2_LITERAL_MAX entries — in
-        particular at the plan_ivf_config regime (10^5 cells) whose
+        particular at a 10^9-vector deployment's 10^5 cells, whose
         ~10^8-double t2 is past literal inlining."""
         from sentinela_py_spark.functions.vectors import (
             ADC_T2_LITERAL_MAX,

@@ -21,7 +21,6 @@ from sentinela_py_spark.operators.multimodal import (
     NOISE_ID_OFFSET,
     VID_SAMPLE_FRAMES,
     dhash64_of,
-    documents_to_dedup_videos,
     split_ppm_stream,
     video_dhash,
     video_dhash256_of,
@@ -121,91 +120,3 @@ class TestVideoArm:
         assert all(r["hamming"] <= 3 for r in video_rows)
         base_pairs = [r for r in video_rows if r["doc_b"] < BRIGHT_ID_OFFSET]
         assert len(base_pairs) < 10
-
-
-class TestVideoScreenAtIngest:
-    """Streaming twin (r14): the generic signature screen at the WIDE
-    4×64 geometry. Pins routing (brightness-twin within-batch eviction,
-    cross-epoch corpus probe via the wide Hamming verify), epoch-keyed
-    band-store shape (array sig rides parquet), and replay determinism
-    — the same discipline the image/audio screens pin at 4×16."""
-
-    def _df(self, spark, rows):
-        return spark.createDataFrame(
-            [(i, bytearray(p)) for i, p in rows], "doc_id long, payload binary"
-        )
-
-    # slow (52 s): multi-epoch video screen e2e; the within-batch and
-    # unit demux/hash tests keep default coverage.
-    @pytest.mark.slow
-    def test_routing_probe_and_replay(self, spark, tmp_path):
-        from sentinela_py_spark.streaming.pipeline import (
-            video_dedup_batch_against_corpus,
-        )
-
-        def bright(ppm: bytes) -> bytes:
-            hdr = ppm.index(b"255\n") + 4
-            return ppm[:hdr] + bytes(b + 1 for b in ppm[hdr:])
-
-        state = str(tmp_path / "state")
-        vid_a = _vid(*FRAMES)
-        vid_twin = _vid(*[bright(f) for f in FRAMES])
-        vid_b = _vid(
-            _ppm(17, 19, b"a wholly different first frame here "),
-            *FRAMES[1:],
-        )
-        # epoch 0: base + its brightness twin -> twin evicted in-batch
-        out0 = video_dedup_batch_against_corpus(
-            self._df(spark, [(1, vid_a), (2, vid_twin)]), 0, state
-        )
-        assert {r["doc_id"] for r in out0.collect()} == {1}
-        # epoch 1: a re-encode of 1 (same twin) dies vs the corpus; a
-        # video sharing 3 of 4 frames with 1 (one frame replaced) shares
-        # a band but fails the wide Hamming refine unless truly near —
-        # frame replacement flips ~a full word, so it SURVIVES
-        out1 = video_dedup_batch_against_corpus(
-            self._df(spark, [(10, vid_twin), (11, vid_b)]), 1, state
-        )
-        assert {r["doc_id"] for r in out1.collect()} == {11}
-        import os
-
-        rej = {
-            r["doc_id"]: (r["matched_doc"], r["reason"])
-            for r in spark.read.parquet(os.path.join(state, "rejected")).collect()
-        }
-        assert rej == {2: (1, "within_batch"), 10: (1, "vs_corpus")}
-        # the band store carries the ARRAY signature per (band, bsig)
-        bands = spark.read.parquet(os.path.join(state, "bands"))
-        row = bands.first()
-        assert isinstance(row["sig"], list) and len(row["sig"]) == 4
-        # replay of epoch 1 reproduces the first attempt
-        again = video_dedup_batch_against_corpus(
-            self._df(spark, [(10, vid_twin), (11, vid_b)]), 1, state
-        )
-        assert {r["doc_id"] for r in again.collect()} == {11}
-
-    def test_narrow_geometry_on_wide_signature_raises(self, spark, tmp_path):
-        """The r14 coverage guard: binding a wide signer at the narrow
-        default geometry must raise (silently banding only the low word
-        would lose cross-word recall), not run."""
-        import pytest as _pytest
-
-        from sentinela_py_spark.operators.multimodal import video_dhash
-        from sentinela_py_spark.streaming.pipeline import (
-            signature_dedup_batch_against_corpus,
-        )
-
-        def signer(frame):
-            from pyspark.sql import functions as F
-
-            return video_dhash(frame).select(
-                "doc_id",
-                F.col("vhash").alias("sig"),
-                F.col("pix_md5").alias("content_md5"),
-            )
-
-        with _pytest.raises(ValueError, match="band coverage"):
-            signature_dedup_batch_against_corpus(
-                self._df(spark, [(1, _vid(*FRAMES))]), 0,
-                str(tmp_path / "s"), signer,
-            )
